@@ -25,9 +25,18 @@ def _strip_scheme(path: str) -> str:
     return path[len("file:"):] if path.startswith("file:") else path
 
 
+def qualified(spark: SparkSession, name: str) -> str:
+    """``db.name`` in the current database.  An unqualified name also
+    resolves to a temp view of that name (the analysis mode registers
+    all 17), which would shadow the catalog table."""
+    return f"`{spark.catalog.currentDatabase()}`.`{name}`"
+
+
 def table_exists(spark: SparkSession, name: str) -> bool:
-    """Catalog introspection (information_schema.TABLES probe, :70-75)."""
-    return spark.catalog.tableExists(name)
+    """Catalog introspection (information_schema.TABLES probe, :70-75):
+    is ``name`` a table of the current database?  Temp views of the
+    same name do not count."""
+    return spark.catalog.tableExists(qualified(spark, name))
 
 
 def missing_tables(spark: SparkSession) -> list[str]:
@@ -56,7 +65,8 @@ def create_schema(spark: SparkSession, base_dir: str,
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
         spark.sql(
-            f"CREATE TABLE {clause}`{name}` ({ddl}, `release` STRING) "
+            f"CREATE TABLE {clause}{qualified(spark, name)} "
+            f"({ddl}, `release` STRING) "
             f"USING PARQUET PARTITIONED BY (`release`) "
             f"LOCATION '{base_dir}/{name}'"
         )
@@ -84,7 +94,7 @@ def create_schema(spark: SparkSession, base_dir: str,
             )
             resolves_locally = default_fs.startswith("file:")
         if not resolves_locally or os.path.exists(local):
-            spark.sql(f"MSCK REPAIR TABLE `{name}`")
+            spark.sql(f"MSCK REPAIR TABLE {qualified(spark, name)}")
         created.append(name)
     return created
 
@@ -93,4 +103,4 @@ def drop_schema(spark: SparkSession) -> None:
     """Drop all 17 tables (the reference's DROP block :161-177; order
     is irrelevant without FK enforcement)."""
     for name in SCHEMAS:
-        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+        spark.sql(f"DROP TABLE IF EXISTS {qualified(spark, name)}")

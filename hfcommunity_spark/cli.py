@@ -20,7 +20,10 @@ this entry point reads the five JSONL feeds (``sources/hub_feeds.py``
 rows from the live API when ``huggingface_hub`` is installed), builds
 all 17 tables as one declarative plan (``etl/pipeline.run_offline``),
 and writes immutable release snapshots (``io.write_snapshot`` —
-directory-commit idempotency instead of INSERT IGNORE).  The closing
+directory-commit idempotency instead of INSERT IGNORE).  A load reads
+its input once and writes its output once: each feed is parsed once
+and kept persisted for all 17 table writes, and each table's row count
+is observed as its snapshot is written, not read back.  The closing
 wall-clock report mirrors :946-951.
 
 Usage:
@@ -35,7 +38,9 @@ import argparse
 import sys
 import time
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from hfcommunity_spark.etl import pipeline
 from hfcommunity_spark.io import write_snapshot
@@ -102,16 +107,32 @@ def _register_release(spark: SparkSession, base: str,
 
 def run(spark: SparkSession, args: argparse.Namespace) -> dict[str, int]:
     """The populate lifecycle (:828 main body).  Returns per-table row
-    counts (the :946-951 report data)."""
+    counts (the :946-951 report data).
+
+    Each feed is parsed once: the five feed frames are persisted
+    (MEMORY_AND_DISK) before any filter, so the 17 table writes share
+    one JSON parse, and they are unpersisted on the way out whether
+    the load succeeds or fails.  Each table's row count is observed
+    while its snapshot is written (``DataFrame.observe``), so no
+    snapshot is read back to be counted."""
     feeds = hub_feeds.read_all_feeds(spark, args.feeds)
+    parsed = [df.persist(StorageLevel.MEMORY_AND_DISK)
+              for df in feeds.values()]
+    try:
+        return _load(spark, args, feeds)
+    finally:
+        for df in parsed:
+            df.unpersist()
+
+
+def _load(spark: SparkSession, args: argparse.Namespace,
+          feeds: dict[str, DataFrame]) -> dict[str, int]:
     # -t: unselected repo types flow as empty frames — the pipeline
     # plan is identical, the scans are zero-row.  The commits and
     # discussions feeds carry the repo type in their id prefix
     # ("models/org/x"), so they are pruned by the SAME selection —
     # otherwise an unselected type's commits would land as orphan
     # rows against an empty repository set (round-5 review finding)
-    from pyspark.sql import functions as F
-
     selected = REPO_TYPES if args.type == "all" else (args.type,)
     for kind, t in (("models", "model"), ("datasets", "dataset"),
                     ("spaces", "space")):
@@ -196,10 +217,10 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict[str, int]:
 
     counts: dict[str, int] = {}
     for name, df in tables.items():
-        write_snapshot(df, args.base, name, args.release)
-        counts[name] = spark.read.parquet(
-            f"{args.base}/{name}/release={args.release}"
-        ).count()
+        obs = Observation(f"rows.{name}")
+        write_snapshot(df.observe(obs, F.count(F.lit(1)).alias("rows")),
+                       args.base, name, args.release)
+        counts[name] = obs.get["rows"]
     return counts
 
 

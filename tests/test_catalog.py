@@ -27,7 +27,7 @@ def test_create_probe_drop_schema(spark, tmp_path):
         # mirrors write_snapshot's release=<tag> layout; round-6
         # review finding — a non-partitioned table would merge every
         # release's rows)
-        df = spark.table("commits")
+        df = spark.table(catalog.qualified(spark, "commits"))
         got = [(f.name, f.dataType) for f in df.schema.fields]
         want = [(f.name, f.dataType) for f in SCHEMAS["commits"].fields]
         from pyspark.sql import types as T
@@ -50,7 +50,7 @@ def test_catalog_partitions_releases(spark, tmp_path):
         for rel in ("2024-01", "2024-02"):
             write_snapshot(df, base, "tag", rel)
         catalog.create_schema(spark, base)
-        tag = spark.table("tag")
+        tag = spark.table(catalog.qualified(spark, "tag"))
         assert tag.count() == 4  # both releases visible, labeled
         one = tag.filter(F.col("release") == "2024-01")
         assert one.count() == 2
@@ -71,3 +71,23 @@ def test_snapshot_roundtrip(spark, tmp_path):
     # idempotent re-run of the same release overwrites atomically (D4)
     write_snapshot(df.filter(F.col("name") == "t1"), base, "tag", "2024-06")
     assert spark.read.parquet(path).count() == 1
+
+
+def test_temp_view_does_not_shadow_catalog_table(spark, tmp_path):
+    """The analysis mode registers the 17 names as temp views; a view
+    named ``repository`` must not pass for the catalog table."""
+    spark.createDataFrame([("x",)], ["id"]).createOrReplaceTempView(
+        "repository")
+    try:
+        assert not catalog.table_exists(spark, "repository")
+        assert "repository" in catalog.missing_tables(spark)
+        created = catalog.create_schema(spark, str(tmp_path / "wh3"))
+        assert sorted(created) == sorted(SCHEMAS)
+        assert catalog.table_exists(spark, "repository")
+        catalog.drop_schema(spark)
+        assert not catalog.table_exists(spark, "repository")
+        # the view itself is untouched by create and drop
+        assert spark.table("repository").columns == ["id"]
+    finally:
+        catalog.drop_schema(spark)
+        spark.catalog.dropTempView("repository")

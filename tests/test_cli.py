@@ -58,9 +58,9 @@ def test_cli_schema_create(spark, tmp_path, capsys):
     base = str(tmp_path / "ddl")
     assert cli.main(["--base", base, "-c"]) == 0
     assert "created 17 tables" in capsys.readouterr().out
-    assert spark.catalog.tableExists("repository")
-    from hfcommunity_spark.catalog import drop_schema
+    from hfcommunity_spark.catalog import drop_schema, table_exists
 
+    assert table_exists(spark, "repository")
     drop_schema(spark)
 
 
@@ -400,3 +400,102 @@ def test_cli_query_mode_runs_declared_inventory(spark, capsys):
     # since round 10 (the k-means ANN gained its unrolled-Lloyd
     # oracle) EVERY declared query is oracle-equipped
     assert "rows-only" not in listing
+
+
+# -- the load's lifecycle: one parse per feed, counts observed at the
+# write, nothing left persisted ---------------------------------------
+
+LOAD_MODES = {
+    "all": [],
+    "model": ["-t", "model"],
+    "skiplist": ["--skiplist", "models/org/m1"],
+    "incremental": ["--prev-release", "r1", "-i", "1"],
+}
+
+# Spark jobs of one `-t all` load of the feed_dir fixture.  A feed
+# parsed again or a snapshot read back to be counted adds jobs.
+LOAD_JOBS = 36
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _load(spark, feeds, base, release, extra=()):
+    ns = cli._parser().parse_args(
+        ["--feeds", feeds, "--base", base, "--release", release, *extra]
+    )
+    return cli.run(spark, ns)
+
+
+@pytest.mark.parametrize("mode", sorted(LOAD_MODES))
+def test_cli_load_counts_and_rows_match_unpersisted_load(
+    spark, feed_dir, tmp_path, monkeypatch, mode
+):
+    """Each count the load reports equals a read-back count of the
+    written snapshot, and every table holds the same rows as a load
+    whose feeds are read fresh for each table and never persisted."""
+    from pyspark.sql import DataFrame
+
+    base = str(tmp_path / "snap")
+    if mode == "incremental":
+        _load(spark, feed_dir, base, "r1")
+    before = _persisted(spark)
+    counts = _load(spark, feed_dir, base, "r2", LOAD_MODES[mode])
+    assert _persisted(spark) == before
+    assert sorted(counts) == sorted(SCHEMAS)
+    for name in SCHEMAS:
+        assert counts[name] == spark.read.parquet(
+            f"{base}/{name}/release=r2").count(), name
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "persist", lambda self, *a, **kw: self)
+        _load(spark, feed_dir, base, "fresh", LOAD_MODES[mode])
+    for name in SCHEMAS:
+        got = spark.read.parquet(f"{base}/{name}/release=r2")
+        want = spark.read.parquet(f"{base}/{name}/release=fresh")
+        assert got.exceptAll(want).count() == 0, name
+        assert want.exceptAll(got).count() == 0, name
+
+
+def test_cli_failed_load_leaves_nothing_persisted(
+    spark, tmp_path, monkeypatch
+):
+    """A corrupt commits line fails the load under FAILFAST after the
+    repository feeds were already parsed and cached; the cache is
+    still released."""
+    d = tmp_path / "feeds_corrupt"
+    d.mkdir()
+    for kind, rows in [("models", MODELS), ("datasets", DATASETS),
+                       ("spaces", SPACES), ("discussions", DISCUSSIONS)]:
+        with open(d / f"{kind}.jsonl", "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+    with open(d / "commits.jsonl", "w") as f:
+        f.write(json.dumps(COMMITS[0]) + "\n{not json\n")
+    cached = []
+    write = cli.write_snapshot
+
+    def spy(*a, **kw):
+        cached.append(_persisted(spark))
+        return write(*a, **kw)
+
+    monkeypatch.setattr(cli, "write_snapshot", spy)
+    before = _persisted(spark)
+    with pytest.raises(Exception, match="FAILFAST"):
+        _load(spark, str(d), str(tmp_path / "snap"), "r1")
+    assert max(cached) > before
+    assert _persisted(spark) == before
+
+
+def test_cli_load_job_count(spark, feed_dir, tmp_path):
+    """The load's job count is deterministic, so it is pinned."""
+    sc = spark.sparkContext
+    group = "hfc-cli-load-jobs"
+    sc.setJobGroup(group, "cli.run -t all")
+    try:
+        _load(spark, feed_dir, str(tmp_path / "snap"), "r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == LOAD_JOBS, sorted(jobs)

@@ -26,11 +26,13 @@ import json
 import os
 import random
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # June-2024 corpus shape (BASELINE.md, docs/download.html):
 REF_ROWS_TOTAL = 122_195_998
@@ -159,6 +161,29 @@ def _one_scale(spark, work: str, n_repos: int) -> dict:
     }
 
 
+def _git(*argv: str) -> str | None:
+    try:
+        out = subprocess.run(["git", "-C", ROOT, *argv], capture_output=True,
+                             text=True, timeout=10)
+    except (OSError, subprocess.TimeoutExpired):
+        return None
+    return out.stdout.strip() if out.returncode == 0 else None
+
+
+def _provenance(spark) -> dict:
+    """Where a recording came from, so a number from another host or
+    code state is not mistaken for this one."""
+    status = _git("status", "--porcelain", "--untracked-files=no")
+    return {
+        "git_sha": _git("rev-parse", "HEAD"),
+        "git_dirty": None if status is None else bool(status),
+        "nproc": len(os.sched_getaffinity(0)),
+        "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
+        "driver_memory": spark.conf.get("spark.driver.memory"),
+        "spark": spark.version,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--repos", type=int, default=20_000)
@@ -166,9 +191,7 @@ def main() -> None:
                     help="weak-scaling sweep: repos/10, repos, repos*3 "
                          "— shows the fixed per-run overhead amortize "
                          "(throughput must NOT degrade with size)")
-    ap.add_argument("--out", default=os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "ETL_BENCH.json"))
+    ap.add_argument("--out", default=os.path.join(ROOT, "ETL_BENCH.json"))
     args = ap.parse_args()
 
     work = tempfile.mkdtemp(prefix="etl_bench_")
@@ -198,6 +221,7 @@ def main() -> None:
         "extrapolated_hours_at_ref_cardinality": round(
             REF_ROWS_TOTAL / rps / 3600, 2
         ),
+        "provenance": _provenance(spark),
         "caveat": ("reference wall-clock includes Hub API/git network "
                    "time; this measures the engine path only "
                    "(parse -> normalize -> merge -> snapshot) on "

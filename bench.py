@@ -479,11 +479,12 @@ def _band_norm(timings: dict[str, float],
     """Per-query time divided by its band's bracketing scan readings
     (mean of the probe before and after the query's band) — the
     burst-robust normalization VERDICT r14 #1 asked for.  Queries are
-    banded in the timed pass's (alphabetical) order."""
+    banded in ``timings``' insertion order, which is the order
+    :func:`_time_queries` timed them and took the probes in."""
     if not band_probes or len(band_probes) < 2:
         return None
     out: dict[str, float] = {}
-    for idx, name in enumerate(sorted(timings)):
+    for idx, name in enumerate(timings):
         b = min(idx // BAND_SIZE, len(band_probes) - 2)
         scan = (band_probes[b]["scan"] + band_probes[b + 1]["scan"]) / 2
         if scan > 0:

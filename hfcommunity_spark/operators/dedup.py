@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hfcommunity_spark.io import read_table
+from hfcommunity_spark.operators import bucketed
 from hfcommunity_spark.registry import query
 from hfcommunity_spark.session_cache import SessionCache
 
@@ -1869,50 +1870,6 @@ X15_SERVE_LOCAL_ROW_MAX = 600_000
 X17_SERVE_LOCAL_ROW_MAX = 600_000
 
 
-def _x15_local_serve_table(tdir: str, pcol: str, cap: int):
-    """Driver-local serve read of a bucket-partitioned assignment
-    layout: one multithreaded pyarrow dataset scan over the bucket
-    files (the x17 'files as the interface' probe applied to the
-    SERVE side).  Reads the DISK state, which the catalog-partition
-    sync discipline keeps identical to the catalog state the
-    distributed serve reads (parity test-locked with the cap pinned
-    to 0).  Returns an Arrow table or None — gate failure (row cap,
-    unreadable/corrupt/missing files) sends THIS serve to the
-    distributed catalog read; at 100 TB the layout is on object
-    storage, ``listdir`` fails, and every serve is distributed."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-
-    files: list[str] = []
-    try:
-        for d in sorted(os.listdir(tdir)):
-            if not d.startswith(f"{pcol}="):
-                continue
-            dd_ = os.path.join(tdir, d)
-            for fn in sorted(os.listdir(dd_)):
-                if (fn.startswith(("_", "."))
-                        or not fn.endswith(".parquet")):
-                    continue
-                files.append(os.path.join(dd_, fn))
-        if not files:
-            # an assignment layout is never legitimately empty (the
-            # base corpus always has vertices), so a pcol/layout
-            # drift must FALL BACK to the catalog read instead of
-            # silently serving zero rows (ADVICE r13) — matching the
-            # x17 sibling's contract
-            return None
-        t = pads.dataset(files).to_table(
-            columns=["vertex", "component"]
-        )
-        if t.num_rows > cap:
-            return None
-        return t
-    except (OSError, pa.lib.ArrowException):
-        return None
-
-
 @query("x15_stream_maintained_clusters", _x15_oracle(),
        survey="X7,D3,D4,J5,S13,X-UD5")
 def x15_stream_maintained_clusters(spark: SparkSession,
@@ -2031,25 +1988,11 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     cdir = os.path.join(work, "cassign")
     vdir = os.path.join(work, "vassign")
 
-    def _link_or_copy(src: str, dst: str) -> None:
-        # the working copy starts as HARDLINKS to the pristine files:
-        # the fold only ever replaces whole files (dynamic partition
-        # overwrite unlinks + writes fresh), never appends, so the
-        # pristine layout is safe and the copy is O(files) metadata.
-        # Cross-device fallback copies bytes (tmpdir on another fs).
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-
-    shutil.copytree(
-        os.path.join(pristine, "cassign"), cdir,
-        copy_function=_link_or_copy,
-    )
-    shutil.copytree(
-        os.path.join(pristine, "vassign"), vdir,
-        copy_function=_link_or_copy,
-    )
+    # the working copy starts as HARDLINKS to the pristine files: the
+    # fold only ever replaces whole files, so the pristine layout is
+    # safe and the copy is O(files) metadata
+    bucketed.snapshot(os.path.join(pristine, "cassign"), cdir)
+    bucketed.snapshot(os.path.join(pristine, "vassign"), vdir)
     ctab, vtab = f"hfc_x15_c_{run}", f"hfc_x15_v_{run}"
 
     served: list[DataFrame] = []
@@ -2071,11 +2014,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
             # hardlink copy, so MSCK's re-listing job is pure overhead
             _sync_catalog_partitions(
                 spark, tname, pcol,
-                added=[
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(tdir)
-                    if d.startswith(f"{pcol}=")
-                ],
+                added=list(bucketed.bucket_files(tdir, pcol)),
                 dropped=(),
             )
         import pyarrow as pa
@@ -2128,9 +2067,10 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                 # ~0.27 s each measured); a failed gate sends THIS
                 # serve to the catalog read.
                 try:
-                    st = (_x15_local_serve_table(cdir, "c_bucket",
-                                                 serve_cap)
-                          if serve_cap > 0 else None)
+                    st = bucketed.read_table(
+                        cdir, "c_bucket", ("vertex", "component"),
+                        serve_cap,
+                    )
                     if st is not None:
                         local_serves.append(st.append_column(
                             "delivery_id",
@@ -2148,9 +2088,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                         # for mutation isolation is gone (the final
                         # union materializes every serve once).
                         snap = os.path.join(work, f"serve{k}")
-                        shutil.copytree(
-                            cdir, snap, copy_function=_link_or_copy
-                        )
+                        bucketed.snapshot(cdir, snap)
                         served.append(
                             spark.read.schema(
                                 "vertex BIGINT, component BIGINT, "
@@ -2254,89 +2192,6 @@ def write_span_stats(stats: DataFrame, out_dir: str,
     return out_dir
 
 
-def _span_local_read_buckets(dir_: str, bkts, columns,
-                             cap: int) -> dict[int, list] | None:
-    """Driver-side pruned read of the touched buckets of a span
-    layout (``graph._local_bucket_rows`` generalized to an arbitrary
-    column list).  Returns ``{bucket: [tuple, ...]}`` or None — BEFORE
-    any mutation — on a failed gate (missing layout treated per-bucket
-    as empty; unreadable/corrupt file or > ``cap`` total rows gate the
-    whole fold)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out: dict[int, list] = {}
-    total = 0
-    try:
-        for b in bkts:
-            d = os.path.join(dir_, f"d_bucket={b}")
-            rows: list = []
-            if os.path.isdir(d):
-                for fn in sorted(os.listdir(d)):
-                    if (fn.startswith(("_", "."))
-                            or not fn.endswith(".parquet")):
-                        continue
-                    t = pq.read_table(
-                        os.path.join(d, fn), columns=list(columns)
-                    )
-                    total += t.num_rows
-                    if total > cap:
-                        return None
-                    rows.extend(
-                        zip(*(t.column(c).to_pylist() for c in columns))
-                    )
-            out[b] = rows
-    except (OSError, pa.lib.ArrowException):
-        return None
-    return out
-
-
-def _span_local_write_buckets(dir_: str, pcol: str,
-                              by_bucket: dict[int, list],
-                              fields, append: bool) -> None:
-    """Driver-side bucket writer for the span layouts, staged-commit
-    (``graph._local_bucket_write`` discipline: the new file lands
-    while old files are still present; replace mode unlinks them only
-    after the write succeeds).  ``fields`` is the ordered
-    (name, pyarrow type) schema; ``append=True`` (postings deliveries)
-    never touches existing files."""
-    import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for b, rows in by_bucket.items():
-        if not rows:
-            # stats buckets never empty out (the fold only adds or
-            # updates rows) and postings appends are built from the
-            # batch — an empty list means nothing to write
-            continue
-        d = os.path.join(dir_, f"{pcol}={b}")
-        old = (
-            [] if append else
-            [fn for fn in os.listdir(d)
-             if not fn.startswith(("_", "."))]
-            if os.path.isdir(d) else []
-        )
-        os.makedirs(d, exist_ok=True)
-        cols = list(zip(*rows))
-        pq.write_table(
-            pa.table({
-                name: pa.array(cols[i], typ)
-                for i, (name, typ) in enumerate(fields)
-            }),
-            os.path.join(
-                d, f"part-00000-{uuid.uuid4().hex}.snappy.parquet"
-            ),
-            compression="snappy",
-        )
-        for fn in old:
-            os.unlink(os.path.join(d, fn))
-
-
 # Byte budget for the driver-local probe's pruned read of the
 # postings layout: checked against file sizes BEFORE any read.  At
 # bench scale the whole layout is a few MB; a deployment whose touched
@@ -2365,28 +2220,18 @@ def _span_probe_local(postings_dir: str, hit, h_want,
     bytes over :data:`SPAN_LOCAL_READ_BYTE_MAX`, filtered rows over
     ``cap``, unreadable/corrupt files → None (distributed probe
     runs)."""
-    import os
-
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
-    files: list[str] = []
-    total_bytes = 0
     try:
-        for b in hit:
-            d = os.path.join(postings_dir, f"h_bucket={b}")
-            if not os.path.isdir(d):
-                continue
-            for fn in sorted(os.listdir(d)):
-                if (fn.startswith(("_", "."))
-                        or not fn.endswith(".parquet")):
-                    continue
-                p = os.path.join(d, fn)
-                total_bytes += os.stat(p).st_size
-                if total_bytes > SPAN_LOCAL_READ_BYTE_MAX:
-                    return None
-                files.append(p)
+        listing = bucketed.bucket_files(
+            postings_dir, "h_bucket", hit,
+            byte_cap=SPAN_LOCAL_READ_BYTE_MAX,
+        )
+        if listing is None:
+            return None
+        files = [p for paths in listing.values() for p in paths]
         if not files:
             return pa.table({
                 "doc_id": pa.array([], pa.int64()),
@@ -2433,16 +2278,6 @@ def _span_fold_check_marker(postings_dir: str) -> None:
         )
 
 
-def _span_bucket_listing(postings_dir: str, b: int) -> list[str]:
-    import os
-
-    d = os.path.join(postings_dir, f"h_bucket={b}")
-    return sorted(
-        fn for fn in (os.listdir(d) if os.path.isdir(d) else [])
-        if not fn.startswith(("_", ".")) and fn.endswith(".parquet")
-    )
-
-
 def _span_fold_write_marker(postings_dir: str,
                             touched_buckets) -> None:
     """Journal the pre-fold state of every h-bucket this fold will
@@ -2457,8 +2292,10 @@ def _span_fold_write_marker(postings_dir: str,
     import os
 
     snapshot = {
-        str(b): _span_bucket_listing(postings_dir, b)
-        for b in sorted(touched_buckets)
+        str(b): [os.path.basename(p) for p in paths]
+        for b, paths in bucketed.bucket_files(
+            postings_dir, "h_bucket", sorted(touched_buckets)
+        ).items()
     }
     marker = _span_fold_marker_path(postings_dir)
     tmp = marker + ".tmp"
@@ -2534,16 +2371,12 @@ def recover_span_fold(spark, postings_dir: str, stats_dir: str,
         # wedging the documented recovery path itself).
         snapshot = {}
     for b, keep in snapshot.items():
-        d = os.path.join(postings_dir, f"h_bucket={b}")
-        if not os.path.isdir(d):
-            continue
         keep_set = set(keep)
-        for fn in os.listdir(d):
-            if (fn.startswith(("_", "."))
-                    or not fn.endswith(".parquet")):
-                continue
-            if fn not in keep_set:
-                os.unlink(os.path.join(d, fn))
+        for p in bucketed.bucket_files(
+            postings_dir, "h_bucket", [b]
+        )[b]:
+            if os.path.basename(p) not in keep_set:
+                os.unlink(p)
     spark.catalog.refreshByPath(postings_dir)
     rebuilt = span_stats_from_postings(
         spark.read.parquet(postings_dir).select("doc_id", "h", "c")
@@ -2695,8 +2528,9 @@ def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
     # before any mutation
     touched = set(batch_stats) | set(inc)
     sbkts = sorted({G._py_bucket(d, stats_buckets) for d in touched})
-    data = _span_local_read_buckets(
-        stats_dir, sbkts, ("doc_id", "n_spans", "n_dup_spans"), cap
+    data = bucketed.read_rows(
+        stats_dir, "d_bucket", sbkts,
+        ("doc_id", "n_spans", "n_dup_spans"), cap,
     )
     if data is None:
         return False
@@ -2732,12 +2566,11 @@ def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
     for d, h, c in batch_rows:
         post_out.setdefault(h % buckets, []).append((d, h, c))
     _span_fold_write_marker(postings_dir, post_out)
-    _span_local_write_buckets(
+    bucketed.write_buckets(
         stats_dir, "d_bucket", stats_out,
         (("doc_id", i64), ("n_spans", i64), ("n_dup_spans", i64)),
-        append=False,
     )
-    _span_local_write_buckets(
+    bucketed.write_buckets(
         postings_dir, "h_bucket", post_out,
         (("doc_id", i64), ("h", i64), ("c", i64)),
         append=True,
@@ -2863,20 +2696,7 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
             # replaces the originals — same inodes, so no checkpoint
             # is needed to cut lineage from the files being replaced
             snapshot = _tempfile.mkdtemp(prefix="hfc_spanstats_snap_")
-
-            def _link_or_copy(src: str, dst: str) -> None:
-                try:
-                    _os.link(src, dst)
-                except OSError:
-                    _shutil.copy2(src, dst)
-
-            for b in sbkts:
-                d = _os.path.join(stats_dir, f"d_bucket={b}")
-                if _os.path.isdir(d):
-                    _shutil.copytree(
-                        d, _os.path.join(snapshot, f"d_bucket={b}"),
-                        copy_function=_link_or_copy,
-                    )
+            bucketed.snapshot(stats_dir, snapshot, "d_bucket", sbkts)
             pruned = spark.read.schema(
                 _SPAN_STATS_READ_SCHEMA
             ).parquet(snapshot)
@@ -3081,21 +2901,8 @@ def dd_span_fold_in_place_parity(spark: SparkSession,
     )
     pdir = os.path.join(work, "postings")
     sdir = os.path.join(work, "stats")
-
-    def _link_or_copy(src: str, dst: str) -> None:
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-
-    shutil.copytree(
-        os.path.join(pristine, "postings"), pdir,
-        copy_function=_link_or_copy,
-    )
-    shutil.copytree(
-        os.path.join(pristine, "stats"), sdir,
-        copy_function=_link_or_copy,
-    )
+    bucketed.snapshot(os.path.join(pristine, "postings"), pdir)
+    bucketed.snapshot(os.path.join(pristine, "stats"), sdir)
     try:
         span_fold_in_place(spark, pdir, sdir, arriving)
         out = spark.read.schema(
@@ -3125,47 +2932,6 @@ def _x17_oracle() -> str:
     FROM ({dup_span_stats_sql(pred)}) s{k}"""
         )
     return "\nUNION ALL\n".join(arms)
-
-
-def _x17_local_serve_table(sdir: str, cap: int):
-    """Driver-local serve read of the d-bucketed stats layout (the
-    round-13 x15 serve pattern): one pyarrow dataset scan over the
-    bucket files, dup_ratio computed as IEEE double division (bit-
-    identical to the JVM's).  Returns an Arrow table or None — gate
-    failure (row cap, unreadable/missing files) sends THIS serve back
-    to the hardlink-snapshot + distributed-read path; on object
-    storage ``listdir`` fails and every serve is distributed."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
-    files: list[str] = []
-    try:
-        for d in sorted(os.listdir(sdir)):
-            if not d.startswith("d_bucket="):
-                continue
-            dd_ = os.path.join(sdir, d)
-            for fn in sorted(os.listdir(dd_)):
-                if (fn.startswith(("_", "."))
-                        or not fn.endswith(".parquet")):
-                    continue
-                files.append(os.path.join(dd_, fn))
-        if not files:
-            return None  # a stats layout is never legitimately empty
-        t = pads.dataset(files).to_table(
-            columns=["doc_id", "n_spans", "n_dup_spans"]
-        )
-        if t.num_rows > cap:
-            return None
-        ratio = pc.divide(
-            t.column("n_dup_spans").cast(pa.float64()),
-            t.column("n_spans").cast(pa.float64()),
-        )
-        return t.append_column("dup_ratio", ratio)
-    except (OSError, pa.lib.ArrowException):
-        return None
 
 
 @query("x17_stream_maintained_spans", _x17_oracle(),
@@ -3220,24 +2986,11 @@ def x17_stream_maintained_spans(spark: SparkSession,
     work = tempfile.mkdtemp(prefix=f"hfc_x17_work_{run}_")
     pdir = os.path.join(work, "postings")
     sdir = os.path.join(work, "stats")
-
-    def _link_or_copy(src: str, dst: str) -> None:
-        # hardlinks: the fold only ever ADDS files (postings append)
-        # or unlinks-and-replaces whole files (stats staged commit),
-        # never modifies one in place, so the pristine layout is safe
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-
-    shutil.copytree(
-        os.path.join(pristine, "postings"), pdir,
-        copy_function=_link_or_copy,
-    )
-    shutil.copytree(
-        os.path.join(pristine, "stats"), sdir,
-        copy_function=_link_or_copy,
-    )
+    # hardlinks: the fold only ever ADDS files (postings append) or
+    # replaces whole files (stats staged commit), so the pristine
+    # layout is safe
+    bucketed.snapshot(os.path.join(pristine, "postings"), pdir)
+    bucketed.snapshot(os.path.join(pristine, "stats"), sdir)
     width = default_parallelism()
     # ONE whole-stream collect splits every delivery's exploded spans
     # by arrival (the x15 one-scan lesson): each fold then runs as
@@ -3247,8 +3000,6 @@ def x17_stream_maintained_spans(spark: SparkSession,
     # re-gates per delivery.
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from hfcommunity_spark.operators import graph as G
 
     cap = SPAN_LOCAL_ROW_MAX
     spans_by_k = None
@@ -3302,16 +3053,26 @@ def x17_stream_maintained_spans(spark: SparkSession,
             # gate falls back to the hardlink snapshot (~ms; the
             # staged-commit writers replace whole files, so linked
             # snapshots keep the old inodes) + distributed read.
-            st = (_x17_local_serve_table(sdir, X17_SERVE_LOCAL_ROW_MAX)
-                  if X17_SERVE_LOCAL_ROW_MAX > 0 else None)
+            st = bucketed.read_table(
+                sdir, "d_bucket", ("doc_id", "n_spans", "n_dup_spans"),
+                X17_SERVE_LOCAL_ROW_MAX,
+            )
             if st is not None:
+                # dup_ratio as IEEE double division, bit-identical to
+                # the JVM's
                 local_serves.append(st.append_column(
+                    "dup_ratio",
+                    pc.divide(
+                        st.column("n_dup_spans").cast(pa.float64()),
+                        st.column("n_spans").cast(pa.float64()),
+                    ),
+                ).append_column(
                     "delivery_id",
                     pa.array([k] * st.num_rows, pa.int32()),
                 ))
             else:
                 snap = os.path.join(work, f"serve{k}")
-                shutil.copytree(sdir, snap, copy_function=_link_or_copy)
+                bucketed.snapshot(sdir, snap)
                 served.append(
                     spark.read.schema(
                         _SPAN_STATS_READ_SCHEMA

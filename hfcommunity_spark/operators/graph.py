@@ -13,9 +13,12 @@ diamond merges).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from hfcommunity_spark.operators import bucketed
 
 # Below this many distinct quotient edges, components_delta resolves
 # the merge map with a driver-side min-label union-find (bounded
@@ -25,29 +28,32 @@ from pyspark.sql import types as T
 QUOTIENT_LOCAL_EDGE_MAX = 100_000
 
 
+def _new_checkpoint_ids(spark: SparkSession, before: set) -> list[int]:
+    """The persistent RDD ids created since ``before`` (a
+    :func:`pinned_block_ids` snapshot) whose RDD is actually locally
+    checkpointed — the one before/after diff behind every checkpoint-
+    freeing seam.  The filter matters: a checkpoint JOB may also
+    materialize unrelated LAZY ``persist()`` caches upstream (e.g. a
+    session-persisted index feeding the edge pipeline); capturing
+    those ids would let ``_free_checkpoint`` silently evict build-
+    once/probe-many caches for the rest of the session (round-5
+    review finding)."""
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return sorted(
+        i for i in set(m.keySet().toArray()) - before
+        if (r := m.get(i)) is not None
+        and r.rdd().isLocallyCheckpointed()
+    )
+
+
 def _eager_checkpoint(df: DataFrame) -> tuple[DataFrame, list[int]]:
     """``localCheckpoint(eager=True)`` plus the ids of the checkpoint's
-    newly persisted RDD blocks, so the caller can free a superseded
-    round's storage deterministically (see :func:`_free_checkpoint`).
-
-    The before/after diff of persistent RDDs is filtered to ids whose
-    RDD is actually locally checkpointed: the checkpoint JOB may also
-    materialize unrelated LAZY ``persist()`` caches upstream (e.g. a
-    session-persisted index feeding the edge pipeline), and without
-    the filter those ids were captured here and later unpersisted by
-    ``_free_checkpoint`` — silently evicting build-once/probe-many
-    caches for the rest of the session (round-5 review finding)."""
-    jsc = df.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    newly persisted RDD blocks (:func:`_new_checkpoint_ids`), so the
+    caller can free a superseded round's storage deterministically
+    (see :func:`_free_checkpoint`)."""
+    before = pinned_block_ids(df.sparkSession)
     ck = df.localCheckpoint(eager=True)
-    m = jsc.getPersistentRDDs()
-    new_ids = set(m.keySet().toArray()) - before
-    ck_ids = []
-    for i in new_ids:
-        rdd = m.get(i)
-        if rdd is not None and rdd.rdd().isLocallyCheckpointed():
-            ck_ids.append(i)
-    return ck, sorted(ck_ids)
+    return ck, _new_checkpoint_ids(df.sparkSession, before)
 
 
 def _lazy_checkpoint(df: DataFrame) -> tuple[DataFrame, list[int]]:
@@ -67,17 +73,9 @@ def _lazy_checkpoint(df: DataFrame) -> tuple[DataFrame, list[int]]:
     NOT ``isEmpty``/``take``, whose partial pass would leave the
     backfill to a second implicit job, re-paying what this fusion
     removes)."""
-    jsc = df.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before = pinned_block_ids(df.sparkSession)
     ck = df.localCheckpoint(eager=False)
-    m = jsc.getPersistentRDDs()
-    new_ids = set(m.keySet().toArray()) - before
-    ck_ids = []
-    for i in new_ids:
-        rdd = m.get(i)
-        if rdd is not None and rdd.rdd().isLocallyCheckpointed():
-            ck_ids.append(i)
-    return ck, sorted(ck_ids)
+    return ck, _new_checkpoint_ids(df.sparkSession, before)
 
 
 def _free_checkpoint(spark: SparkSession, ids: list[int]) -> None:
@@ -112,7 +110,7 @@ def materialize_and_free(spark: SparkSession, before: set,
     serving session) pin only their results, not hundreds of MB of
     dead intermediates waiting for the GC-driven ContextCleaner.
     The isLocallyCheckpointed filter keeps session ``persist()``
-    caches out, exactly as in ``_eager_checkpoint``.
+    caches out (:func:`_new_checkpoint_ids`).
 
     NOT safe under concurrent invocations sharing one SparkSession:
     the before/after diff is session-global, so a parallel thread's
@@ -121,12 +119,7 @@ def materialize_and_free(spark: SparkSession, before: set,
     repo — the bench loop, the driver contract, the declared-query
     faces — runs queries sequentially per session by design; a
     concurrent serving deployment must scope its own hygiene."""
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    created = [
-        i for i in set(m.keySet().toArray()) - before
-        if (r := m.get(i)) is not None
-        and r.rdd().isLocallyCheckpointed()
-    ]
+    created = _new_checkpoint_ids(spark, before)
     out = out.localCheckpoint()
     _free_checkpoint(spark, created)
     return out
@@ -946,120 +939,15 @@ def _write_tasks(n_buckets: int) -> int:
 # touched buckets' contents, bounded by design at
 # ASSIGN_ROWS_PER_BUCKET × |touched buckets| (a delivery-bounded set).
 # Two int64 columns at this cap is ~8 MB of driver heap; above it the
-# writers take the distributed path unchanged.
+# writers take the distributed path unchanged.  Read at call time, so
+# pinning it to 0 forces the distributed path.
 WRITER_LOCAL_ROW_MAX = 512_000
 
 
-def _local_bucket_rows(dir_: str, pcol: str, bkts,
-                       cap: int | None = None
-                       ) -> dict[int, list] | None:
-    """Driver-side pruned read of the touched buckets' parquet files:
-    the exact row set the distributed writers' partition-pruned scan
-    produces, collected without a Spark job.  Returns None — BEFORE
-    any mutation — when a gate fails (non-local layout, unreadable or
-    corrupt file, more than ``cap`` rows), in which case the caller
-    runs the distributed path on the same inputs.  ``cap`` defaults to
-    :data:`WRITER_LOCAL_ROW_MAX` resolved at CALL time (not def time)
-    so pinning the module global — as the fallback-forcing tests do —
-    actually tunes the gate."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if cap is None:
-        cap = WRITER_LOCAL_ROW_MAX
-    if cap <= 0:
-        # cap pinned to 0 means "never local": skip the driver-side
-        # bucket read outright (r14, caps-zeroed arm)
-        return None
-    out: dict[int, list] = {}
-    total = 0
-    try:
-        for b in bkts:
-            d = os.path.join(dir_, f"{pcol}={b}")
-            if not os.path.isdir(d):
-                continue
-            rows: list = []
-            for fn in sorted(os.listdir(d)):
-                if fn.startswith(("_", ".")) or not fn.endswith(".parquet"):
-                    continue
-                t = pq.read_table(
-                    os.path.join(d, fn), columns=["vertex", "component"]
-                )
-                total += t.num_rows
-                if total > cap:
-                    return None
-                rows.extend(
-                    zip(t.column("vertex").to_pylist(),
-                        t.column("component").to_pylist())
-                )
-            out[b] = rows
-    except (OSError, pa.lib.ArrowException):
-        # ArrowInvalid (corrupt/truncated footer) is a ValueError, not
-        # an OSError — both mean "can't trust this layout locally"
-        return None
-    return out
-
-
-def _local_bucket_write(dir_: str, pcol: str,
-                        by_bucket: dict[int, list],
-                        emptied) -> None:
-    """Driver-side twin of the dynamic-partition-overwrite write: each
-    output bucket's directory is replaced with one fresh snappy
-    parquet file (same two-column int64 schema the Spark writer
-    produces), emptied buckets' directories are dropped, untouched
-    partitions are never opened.  Mutations only — every gate has
-    already passed; an I/O error here propagates (falling back to the
-    distributed path after a partial rewrite would fold corrupt
-    state).  Commit order matches Spark's dynamic overwrite: the
-    replacement file is written INTO the directory first (old files
-    still present), the old files are unlinked only after that write
-    succeeds — so a crash or I/O error mid-bucket never leaves an
-    emptied directory that silently loses untouched components' rows;
-    the recoverable states are old-only (write failed) or old+new
-    (unlink didn't run), both detectable and re-foldable."""
-    import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for b, rows in by_bucket.items():
-        d = os.path.join(dir_, f"{pcol}={b}")
-        old = (
-            [fn for fn in os.listdir(d)
-             if not fn.startswith(("_", "."))]
-            if os.path.isdir(d) else []
-        )
-        os.makedirs(d, exist_ok=True)
-        vs, cs = zip(*rows)
-        pq.write_table(
-            pa.table({
-                "vertex": pa.array(vs, pa.int64()),
-                "component": pa.array(cs, pa.int64()),
-            }),
-            os.path.join(
-                d, f"part-00000-{uuid.uuid4().hex}.snappy.parquet"
-            ),
-            compression="snappy",
-        )
-        for fn in old:
-            os.unlink(os.path.join(d, fn))
-    _drop_bucket_dirs(dir_, pcol, emptied)
-
-
-def _drop_bucket_dirs(dir_: str, pcol: str, bkts) -> None:
-    """Remove emptied buckets' directories (files first, then the
-    dir) — shared by the driver-local writer and its crash-recovery
-    story: a partially-dropped bucket just re-drops next fold."""
-    import os
-    import shutil
-
-    for b in bkts:
-        d = os.path.join(dir_, f"{pcol}={b}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+# The assignment layouts' data columns as the driver-local reader and
+# writer see them (the Spark writer's two-column int64 output).
+_ASSIGN_COLS = ("vertex", "component")
+_ASSIGN_FIELDS = tuple((c, pa.int64()) for c in _ASSIGN_COLS)
 
 
 def _sync_catalog_partitions(spark, table_name: str, pcol: str,
@@ -1170,7 +1058,8 @@ def apply_relabel_in_place(spark, assign_dir: str,
         vt = (fresh.schema["vertex"].dataType if fresh is not None
               else relabel.schema["component"].dataType)
         data = (
-            _local_bucket_rows(assign_dir, "c_bucket", bkts)
+            bucketed.read_rows(assign_dir, "c_bucket", bkts,
+                               _ASSIGN_COLS, WRITER_LOCAL_ROW_MAX)
             if vt.simpleString() == "bigint"
             and os.path.isdir(assign_dir) else None
         )
@@ -1192,8 +1081,11 @@ def apply_relabel_in_place(spark, assign_dir: str,
                 ).append((v, c))
             present = set(by_bucket)
             emptied = set(bkts) - present
-            _local_bucket_write(
-                assign_dir, "c_bucket", by_bucket, emptied
+            # an emptied bucket's empty row list drops its directory
+            bucketed.write_buckets(
+                assign_dir, "c_bucket",
+                {**by_bucket, **dict.fromkeys(sorted(emptied), [])},
+                _ASSIGN_FIELDS,
             )
             # Spark's own insert command refreshes cached file
             # listings for the destination path; the driver-side
@@ -1380,7 +1272,7 @@ def _merge_plan_local(spark, vertex_rel, edges, buckets: int,
 
     With ``vertex_dir`` (a local-fs layout directory) the label probe
     itself goes driver-side: a pyarrow read of the touched v_buckets
-    (:func:`_local_bucket_rows`, same row cap as the writers) — the
+    (:func:`bucketed.read_rows`, same row cap as the writers) — the
     plan then costs zero Spark jobs.  Any gate failure falls back to
     the pruned-scan probe below on the same inputs."""
     import os
@@ -1395,7 +1287,8 @@ def _merge_plan_local(spark, vertex_rel, edges, buckets: int,
     bkts = sorted({_py_bucket(v, buckets) for v in verts})
     resolved = None
     if vertex_dir is not None and os.path.isdir(vertex_dir):
-        data = _local_bucket_rows(vertex_dir, "v_bucket", bkts)
+        data = bucketed.read_rows(vertex_dir, "v_bucket", bkts,
+                                  _ASSIGN_COLS, WRITER_LOCAL_ROW_MAX)
         if data is not None:
             want = set(verts)
             resolved = {
@@ -1479,7 +1372,7 @@ def component_merge_plan_pruned(
     guarded collect job entirely, and passing ``vertex_dir`` (the
     layout's local-fs directory) lets the local plan's label probe
     read the touched v_buckets driver-side
-    (:func:`_local_bucket_rows`) instead of running one pruned-scan
+    (:func:`bucketed.read_rows`) instead of running one pruned-scan
     job per fold — zero Spark jobs for a bounded delivery's whole
     merge plan."""
     edge_rows = getattr(new_edges, "_hfc_rows", None)
@@ -1629,7 +1522,8 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
         if not ch_rows:
             return
         lbkts = sorted({_py_bucket(v, buckets) for v, _ in ch_rows})
-        data = _local_bucket_rows(vertex_dir, "v_bucket", lbkts)
+        data = bucketed.read_rows(vertex_dir, "v_bucket", lbkts,
+                                  _ASSIGN_COLS, WRITER_LOCAL_ROW_MAX)
         if data is not None:
             upd = dict(ch_rows)
             seen: set = set()
@@ -1649,7 +1543,8 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
                     by_bucket.setdefault(
                         _py_bucket(v, buckets), []
                     ).append((v, c))
-            _local_bucket_write(vertex_dir, "v_bucket", by_bucket, ())
+            bucketed.write_buckets(vertex_dir, "v_bucket", by_bucket,
+                                   _ASSIGN_FIELDS)
             spark.catalog.refreshByPath(vertex_dir)
             if table_name is not None:
                 _sync_catalog_partitions(

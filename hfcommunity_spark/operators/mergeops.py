@@ -902,7 +902,8 @@ def x19_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     history."""
     from hfcommunity_spark.operators.graph import (
         _eager_checkpoint,
-        _free_checkpoint,
+        materialize_and_free,
+        pinned_block_ids,
     )
     from hfcommunity_spark.session import default_parallelism
 
@@ -942,8 +943,7 @@ def x19_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("event_id") < F.lit(hi_cut))
         )
 
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before = pinned_block_ids(spark)
     # the maintained dimension carries its fold watermark
     # (_last_event_ts) so the in-order check is complete — fused into
     # the base build's own window pass (r10 verdict ask: no separate
@@ -981,11 +981,4 @@ def x19_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = served[0]
     for s in served[1:]:
         out = out.unionByName(s)
-    m = jsc.getPersistentRDDs()
-    created = [
-        i for i in set(m.keySet().toArray()) - before
-        if (r := m.get(i)) is not None and r.rdd().isLocallyCheckpointed()
-    ]
-    out = out.coalesce(width).localCheckpoint()
-    _free_checkpoint(spark, created)
-    return out
+    return materialize_and_free(spark, before, out.coalesce(width))

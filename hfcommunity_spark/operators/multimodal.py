@@ -306,7 +306,8 @@ def x20_stream_media_features(spark: SparkSession,
     from hfcommunity_spark.operators.dedup import _DELTA_SPLIT_MOD
     from hfcommunity_spark.operators.graph import (
         _eager_checkpoint,
-        _free_checkpoint,
+        materialize_and_free,
+        pinned_block_ids,
     )
 
     feats = _mm_base_features(spark, sf_dir)
@@ -316,8 +317,7 @@ def x20_stream_media_features(spark: SparkSession,
         & F.col("payload").isNotNull() & (F.length("payload") > 0)
     )
 
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before = pinned_block_ids(spark)
     served: list[DataFrame] = []
     for k in range(X20_DELIVERIES):
         batch = media.filter(
@@ -346,14 +346,7 @@ def x20_stream_media_features(spark: SparkSession,
     out = served[0]
     for s in served[1:]:
         out = out.unionByName(s)
-    m = jsc.getPersistentRDDs()
-    created = [
-        i for i in set(m.keySet().toArray()) - before
-        if (r := m.get(i)) is not None and r.rdd().isLocallyCheckpointed()
-    ]
-    out = out.localCheckpoint()
-    _free_checkpoint(spark, created)
-    return out
+    return materialize_and_free(spark, before, out)
 
 
 FRAME_BYTES = 128  # fixed "frame" size in the byte stream

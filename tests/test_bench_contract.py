@@ -360,3 +360,19 @@ def test_band_probes_ride_both_payloads_and_fit_budget():
     assert "calibration_bands" not in full2
     assert "bands" not in json.loads(line2)
     assert "queries_band_norm_vals" not in json.loads(line2)
+
+
+def test_band_norm_follows_timed_order_not_alphabetical():
+    """Bands follow the order the queries were timed — the insertion
+    order of ``timings``, which is when the probes were taken — even
+    when that order is not alphabetical: the first BAND_SIZE timed
+    queries share the first two probes, whatever their names."""
+    from bench import BAND_SIZE, _band_norm
+
+    names = [f"q{i:03d}" for i in range(2 * BAND_SIZE)][::-1]
+    timings = {n: 1.0 for n in names}
+    probes = [{"cpu": 0.3, "scan": 0.5}, {"cpu": 0.3, "scan": 1.5},
+              {"cpu": 0.3, "scan": 4.5}]
+    norm = _band_norm(timings, probes)
+    assert all(norm[n] == round(1.0 / 1.0, 3) for n in names[:BAND_SIZE])
+    assert all(norm[n] == round(1.0 / 3.0, 3) for n in names[BAND_SIZE:])

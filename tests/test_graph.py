@@ -1188,83 +1188,6 @@ def test_pruned_merge_plan_property_local_equals_distributed(spark,
     assert local == truth
 
 
-def test_local_bucket_rows_corrupt_file_gates_to_none(tmp_path):
-    """The documented 'unreadable file → fall back to distributed'
-    contract must hold for CORRUPT parquet too: pyarrow raises
-    ArrowInvalid (a ValueError, not an OSError) on a truncated
-    footer, and the gate must return None instead of aborting the
-    fold (round-11 advice)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hfcommunity_spark.operators.graph import _local_bucket_rows
-
-    d = tmp_path / "layout" / "c_bucket=3"
-    d.mkdir(parents=True)
-    pq.write_table(
-        pa.table({
-            "vertex": pa.array([1, 2], pa.int64()),
-            "component": pa.array([1, 1], pa.int64()),
-        }),
-        str(d / "part-00000-ok.snappy.parquet"),
-    )
-    # healthy layout reads fine
-    got = _local_bucket_rows(str(tmp_path / "layout"), "c_bucket", [3])
-    assert got == {3: [(1, 1), (2, 1)]}
-    # truncated footer → ArrowInvalid → gate, not crash
-    (d / "part-00001-bad.snappy.parquet").write_bytes(b"PAR1junk")
-    assert _local_bucket_rows(
-        str(tmp_path / "layout"), "c_bucket", [3]
-    ) is None
-
-
-def test_local_bucket_write_stages_before_unlink(tmp_path,
-                                                 monkeypatch):
-    """Durability contract of the driver-local writer (round-11
-    advice): the replacement file is written while the old files are
-    still on disk, and old files are only unlinked after the write
-    succeeds — so a failed write leaves the bucket's previous
-    contents fully intact (never an emptied directory)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hfcommunity_spark.operators import graph as G
-
-    d = tmp_path / "layout" / "c_bucket=5"
-    d.mkdir(parents=True)
-    pq.write_table(
-        pa.table({
-            "vertex": pa.array([7], pa.int64()),
-            "component": pa.array([7], pa.int64()),
-        }),
-        str(d / "part-00000-old.snappy.parquet"),
-    )
-
-    def boom(*a, **k):
-        raise OSError("disk full")
-
-    monkeypatch.setattr(pq, "write_table", boom)
-    try:
-        G._local_bucket_write(
-            str(tmp_path / "layout"), "c_bucket",
-            {5: [(7, 9), (8, 9)]}, (),
-        )
-    except OSError:
-        pass
-    else:  # pragma: no cover - the stub always raises
-        raise AssertionError("write failure must propagate")
-    monkeypatch.undo()
-    # old contents untouched and readable
-    got = G._local_bucket_rows(str(tmp_path / "layout"), "c_bucket", [5])
-    assert got == {5: [(7, 7)]}
-    # and a SUCCESSFUL rewrite replaces them exactly (no stale files)
-    G._local_bucket_write(
-        str(tmp_path / "layout"), "c_bucket", {5: [(7, 9), (8, 9)]}, ()
-    )
-    got = G._local_bucket_rows(str(tmp_path / "layout"), "c_bucket", [5])
-    assert got == {5: [(7, 9), (8, 9)]}
-
-
 def test_ancestors_local_twin_matches_distributed(spark):
     """The round-12 driver-local ancestry twin must reproduce the
     checkpointed frontier walk exactly — min hops per (start,

@@ -987,8 +987,8 @@ def test_x17_local_serve_matches_snapshot_serve(spark, monkeypatch):
     """Round-13 serve surgery on x17: the driver-local pyarrow serve
     read of the stats layout must be value-identical (dup_ratio's
     IEEE double division included) to the hardlink-snapshot +
-    distributed-read path it replaces — forced by gating the local
-    serve reader to None."""
+    distributed-read path it replaces — forced by pinning the local
+    serve's row cap to 0."""
     from hfcommunity_spark.operators import dedup as dd
 
     sf = "/root/testdata/sf0.001"
@@ -997,8 +997,7 @@ def test_x17_local_serve_matches_snapshot_serve(spark, monkeypatch):
         dd.x17_stream_maintained_spans(spark, sf).collect()
     )
     assert local, "x17 served no rows"
-    monkeypatch.setattr(dd, "_x17_local_serve_table",
-                        lambda sdir, cap: None)
+    monkeypatch.setattr(dd, "X17_SERVE_LOCAL_ROW_MAX", 0)
     snap = sorted(
         tuple(r) for r in
         dd.x17_stream_maintained_spans(spark, sf).collect()
@@ -1019,6 +1018,7 @@ def test_span_fold_crash_journal_and_recovery(spark, tmp_path,
 
     from pyspark.sql import functions as F
 
+    from hfcommunity_spark.operators import bucketed
     from hfcommunity_spark.operators import dedup as dd
 
     sf = "/root/testdata/sf0.001"
@@ -1056,20 +1056,20 @@ def test_span_fold_crash_journal_and_recovery(spark, tmp_path,
     # crash: stats landed, postings append did not
     p_cr, s_cr = build("crash")
     pristine = read_layouts(p_cr, s_cr)
-    real_write = dd._span_local_write_buckets
+    real_write = bucketed.write_buckets
 
-    def dying_write(dir_, pcol, by_bucket, fields, append):
+    def dying_write(dir_, pcol, by_bucket, fields, append=False):
         if append:
             raise OSError("simulated crash before the postings append")
         return real_write(dir_, pcol, by_bucket, fields, append)
 
-    monkeypatch.setattr(dd, "_span_local_write_buckets", dying_write)
+    monkeypatch.setattr(bucketed, "write_buckets", dying_write)
     try:
         dd.span_fold_in_place(spark, p_cr, s_cr, delivery)
         raise AssertionError("simulated crash did not propagate")
     except OSError:
         pass
-    monkeypatch.setattr(dd, "_span_local_write_buckets", real_write)
+    monkeypatch.setattr(bucketed, "write_buckets", real_write)
 
     marker = dd._span_fold_marker_path(p_cr)
     assert os.path.isfile(marker)
@@ -1323,72 +1323,3 @@ def test_span_fold_local_rows_schedules_zero_jobs(spark, tmp_path):
     # and it actually folded: the delivery's docs are in the stats
     got = {r.doc_id for r in spark.read.parquet(sdir).collect()}
     assert set(exploded.column("doc_id").to_pylist()) <= got
-
-
-def test_span_local_writers_stage_and_gate(tmp_path, monkeypatch):
-    """The span layouts' driver-local IO carries the same contracts as
-    the graph writers (round-11 advice class): (a) replace-mode bucket
-    rewrites stage the new file before unlinking old ones — a failed
-    write leaves the old contents intact; (b) corrupt parquet gates
-    the probe and the stats read to None (distributed fallback)
-    instead of raising."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from hfcommunity_spark.operators import dedup as dd
-
-    i64 = pa.int64()
-    sdir = tmp_path / "stats" / "d_bucket=3"
-    sdir.mkdir(parents=True)
-    pq.write_table(
-        pa.table({"doc_id": pa.array([7], i64),
-                  "n_spans": pa.array([5], i64),
-                  "n_dup_spans": pa.array([1], i64)}),
-        str(sdir / "part-00000-old.snappy.parquet"),
-    )
-
-    def boom(*a, **k):
-        raise OSError("disk full")
-
-    monkeypatch.setattr(pq, "write_table", boom)
-    try:
-        dd._span_local_write_buckets(
-            str(tmp_path / "stats"), "d_bucket",
-            {3: [(7, 5, 2)]},
-            (("doc_id", i64), ("n_spans", i64), ("n_dup_spans", i64)),
-            append=False,
-        )
-    except OSError:
-        pass
-    else:  # pragma: no cover - the stub always raises
-        raise AssertionError("write failure must propagate")
-    monkeypatch.undo()
-    got = dd._span_local_read_buckets(
-        str(tmp_path / "stats"), [3],
-        ("doc_id", "n_spans", "n_dup_spans"), 10_000,
-    )
-    assert got == {3: [(7, 5, 1)]}  # old contents intact
-    # successful rewrite replaces exactly
-    dd._span_local_write_buckets(
-        str(tmp_path / "stats"), "d_bucket", {3: [(7, 5, 2)]},
-        (("doc_id", i64), ("n_spans", i64), ("n_dup_spans", i64)),
-        append=False,
-    )
-    got = dd._span_local_read_buckets(
-        str(tmp_path / "stats"), [3],
-        ("doc_id", "n_spans", "n_dup_spans"), 10_000,
-    )
-    assert got == {3: [(7, 5, 2)]}
-    # corrupt file gates both readers to None
-    (sdir / "part-00001-bad.snappy.parquet").write_bytes(b"PAR1junk")
-    assert dd._span_local_read_buckets(
-        str(tmp_path / "stats"), [3],
-        ("doc_id", "n_spans", "n_dup_spans"), 10_000,
-    ) is None
-    pdir = tmp_path / "postings" / "h_bucket=0"
-    pdir.mkdir(parents=True)
-    (pdir / "part-00000-bad.snappy.parquet").write_bytes(b"PAR1junk")
-    assert dd._span_probe_local(
-        str(tmp_path / "postings"), [0],
-        pa.array([1], i64), 10_000,
-    ) is None

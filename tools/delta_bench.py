@@ -45,6 +45,7 @@ OUT = os.path.join(REPO, "DELTA_BENCH.json")
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from hfcommunity_spark.operators import bucketed
     from hfcommunity_spark.operators import dedup as dd
     from hfcommunity_spark.operators.graph import (
         components_delta,
@@ -163,20 +164,12 @@ def main() -> None:
         dd.write_span_stats(stats, sstats_dir, buckets=fold_sbkts)
         fold_work: dict = {"d": None}
 
-        def _link_or_copy(src, dst):
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
-
         def _fold_setup():
             if fold_work["d"]:
                 shutil.rmtree(fold_work["d"], ignore_errors=True)
             w = tempfile.mkdtemp(prefix=f"hfc_db_fold_{label}_")
-            shutil.copytree(fold_span_dir, os.path.join(w, "postings"),
-                            copy_function=_link_or_copy)
-            shutil.copytree(sstats_dir, os.path.join(w, "stats"),
-                            copy_function=_link_or_copy)
+            bucketed.snapshot(fold_span_dir, os.path.join(w, "postings"))
+            bucketed.snapshot(sstats_dir, os.path.join(w, "stats"))
             fold_work["d"] = w
 
         def _fold_delta():

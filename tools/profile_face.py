@@ -31,8 +31,8 @@ def _wrap(mod, fn_names: list[str], tally: dict) -> None:
 
     m = importlib.import_module(mod)
     for fn in fn_names:
-        if not hasattr(m, fn):
-            continue
+        # a name the module no longer has raises here instead of
+        # silently dropping out of the breakdown
         orig = getattr(m, fn)
 
         def mk(orig, key):
@@ -59,9 +59,12 @@ def main() -> None:
     _wrap("hfcommunity_spark.operators.graph", [
         "component_merge_plan_pruned", "apply_relabel_in_place",
         "apply_changes_vertex_layout", "_sync_catalog_partitions",
-        "materialize_and_free", "_eager_checkpoint",
+        "materialize_and_free", "_eager_checkpoint", "_lazy_checkpoint",
         "_quotient_relabel", "resolve_assign_pruned",
         "write_component_assign", "write_vertex_assign",
+    ], tally)
+    _wrap("hfcommunity_spark.operators.bucketed", [
+        "read_rows", "read_table", "write_buckets", "snapshot",
     ], tally)
     _wrap("hfcommunity_spark.operators.dedup", [
         "span_fold_in_place", "span_index_delta_bucketed",

@@ -29,6 +29,7 @@ def main() -> None:
     from bench import _warm
 
     from pyspark.sql import functions as F
+    from hfcommunity_spark.operators import bucketed
     from hfcommunity_spark.operators import dedup as dd
     from hfcommunity_spark.operators.graph import (
         _bucket_expr,
@@ -45,22 +46,14 @@ def main() -> None:
     pristine = dd._x17_pristine_layouts(spark, sf)
     arriving_all = dd._delta_arriving_docs(spark, sf)
 
-    def _link_or_copy(src: str, dst: str) -> None:
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-
     for rep in range(n):
         work = tempfile.mkdtemp(
             prefix=f"hfc_x17_prof_{uuid.uuid4().hex[:8]}_"
         )
         pdir = os.path.join(work, "postings")
         sdir = os.path.join(work, "stats")
-        shutil.copytree(os.path.join(pristine, "postings"), pdir,
-                        copy_function=_link_or_copy)
-        shutil.copytree(os.path.join(pristine, "stats"), sdir,
-                        copy_function=_link_or_copy)
+        bucketed.snapshot(os.path.join(pristine, "postings"), pdir)
+        bucketed.snapshot(os.path.join(pristine, "stats"), sdir)
         arriving = arriving_all.filter(
             F.expr(f"(doc_id DIV {dd._DELTA_SPLIT_MOD}) "
                    f"% {dd.X17_DELIVERIES}") == 0
@@ -134,7 +127,7 @@ def main() -> None:
         t0 = mark("refresh", t0)
         # serve read, as the x17 face does on the caps-0 path
         snap = os.path.join(work, "serve0")
-        shutil.copytree(sdir, snap, copy_function=_link_or_copy)
+        bucketed.snapshot(sdir, snap)
         t0 = mark("serve_snapshot_copy", t0)
         served = spark.read.parquet(snap).select(
             "doc_id", "n_spans", "n_dup_spans",

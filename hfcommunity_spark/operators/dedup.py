@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hfcommunity_spark.io import read_table
-from hfcommunity_spark.operators import bucketed
+from hfcommunity_spark.operators import bucketed, placement
 from hfcommunity_spark.registry import query
 from hfcommunity_spark.session_cache import SessionCache
 
@@ -1858,18 +1858,6 @@ def _x15_pristine_layouts(spark: SparkSession, sf_dir: str) -> str:
 # process — see the force-once note inside the x15 face.
 _X15_PAIRS_FORCED: set = set()
 
-# Row cap for the maintained faces' driver-local serve reads (x15
-# assignment table, x17 stats table).  The three per-delivery serves
-# ACCUMULATE into one local-relation upload, so the binding constraint
-# is 3×cap total rows against the x19-measured upload loss point
-# (local lost at a 3M-row serve upload): cap 600k keeps the worst case
-# at 1.8M.  Measured at sf3.0 (≈40k rows/serve) the local read wins
-# 2.0 vs 2.8 s; a corpus whose serves exceed the cap takes the
-# distributed read per serve.  Resolved at call time so tests can pin.
-X15_SERVE_LOCAL_ROW_MAX = 600_000
-X17_SERVE_LOCAL_ROW_MAX = 600_000
-
-
 @query("x15_stream_maintained_clusters", _x15_oracle(),
        survey="X7,D3,D4,J5,S13,X-UD5")
 def x15_stream_maintained_clusters(spark: SparkSession,
@@ -1949,18 +1937,18 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     # contract × the delivery count; if it overflows, edges_by_k
     # stays None and each fold falls back to the lazy per-fold filter
     # (the distributed plan's own guard then applies per delivery).
-    from hfcommunity_spark.operators.graph import (
-        QUOTIENT_LOCAL_EDGE_MAX,
-        _local_frame,
-    )
+    from hfcommunity_spark.operators.graph import _local_frame
     from pyspark.sql import types as T
 
-    edge_cap = X15_DELIVERIES * QUOTIENT_LOCAL_EDGE_MAX + 1
+    quot_cap = placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]
+    edge_cap = X15_DELIVERIES * quot_cap + 1
     edges_by_k: dict[int, list] | None = None
     # cap pinned to 0 means "never local": skip the guarded collect
     # outright instead of running a limit(1) job whose answer is
-    # already known (r14 — one wasted job in the caps-zeroed arm)
-    if QUOTIENT_LOCAL_EDGE_MAX > 0:
+    # already known (r14 — one wasted job in the caps-zeroed arm).  A
+    # Row collect, not bounded_arrow: a limited collect() and a
+    # limited toArrow() schedule differently
+    if quot_cap > 0:
         split_rows = (
             pairs.filter(thr)
             .select(
@@ -2020,7 +2008,6 @@ def x15_stream_maintained_clusters(spark: SparkSession,
         import pyarrow as pa
 
         local_serves: list = []  # Arrow tables, delivery-tagged
-        serve_cap = X15_SERVE_LOCAL_ROW_MAX
         for k in range(X15_DELIVERIES):
             if edges_by_k is not None:
                 new_edges = _local_frame(
@@ -2069,7 +2056,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                 try:
                     st = bucketed.read_table(
                         cdir, "c_bucket", ("vertex", "component"),
-                        serve_cap,
+                        placement.CAPS["SERVE_LOCAL_ROW_MAX"],
                     )
                     if st is not None:
                         local_serves.append(st.append_column(
@@ -2192,22 +2179,6 @@ def write_span_stats(stats: DataFrame, out_dir: str,
     return out_dir
 
 
-# Byte budget for the driver-local probe's pruned read of the
-# postings layout: checked against file sizes BEFORE any read.  At
-# bench scale the whole layout is a few MB; a deployment whose touched
-# buckets exceed this gets the distributed partition-pruned probe.
-SPAN_LOCAL_READ_BYTE_MAX = 256 << 20
-
-# Row cap for the span family's driver-local materializations (batch
-# spans, probe result — three int64 columns, ~100 MB of Arrow at the
-# cap).  Deliberately larger than graph.WRITER_LOCAL_ROW_MAX (sized
-# for ~8 MB python tuple lists): the span fold holds its streams as
-# Arrow tables end-to-end, so the binding constraint is driver heap,
-# not python-object overhead.  Resolved at call time so tests can pin
-# it to force the distributed path.
-SPAN_LOCAL_ROW_MAX = 4_000_000
-
-
 def _span_probe_local(postings_dir: str, hit, h_want,
                       cap: int):
     """Driver-side twin of :func:`_bucketed_span_probe`: read the
@@ -2217,7 +2188,7 @@ def _span_probe_local(postings_dir: str, hit, h_want,
     |h_set|-literal Spark In() (whose py4j marshalling + analysis cost
     seconds per fold at ~10k hashes; the round-2 INSET lesson at 4×
     the size).  Gates — all before any mutation anywhere: total file
-    bytes over :data:`SPAN_LOCAL_READ_BYTE_MAX`, filtered rows over
+    bytes over ``SPAN_LOCAL_READ_BYTE_MAX``, filtered rows over
     ``cap``, unreadable/corrupt files → None (distributed probe
     runs)."""
     import pyarrow as pa
@@ -2227,7 +2198,7 @@ def _span_probe_local(postings_dir: str, hit, h_want,
     try:
         listing = bucketed.bucket_files(
             postings_dir, "h_bucket", hit,
-            byte_cap=SPAN_LOCAL_READ_BYTE_MAX,
+            byte_cap=placement.CAPS["SPAN_LOCAL_READ_BYTE_MAX"],
         )
         if listing is None:
             return None
@@ -2402,46 +2373,6 @@ def _span_exploded_frame(docs: DataFrame) -> DataFrame:
     ).select("doc_id", F.xxhash64("shingle").alias("h"))
 
 
-def _span_fold_local(spark, postings_dir: str, stats_dir: str,
-                     batch_spans: DataFrame, buckets: int,
-                     stats_buckets: int) -> bool:
-    """Driver-local twin of the bucketed span fold (VERDICT r11 #5 —
-    the x15 'files as the interface' lesson): the batch's postings and
-    the pruned probe COLLECT (guarded), the changed-stats arithmetic
-    runs as dict rollups in Python (value-identical to
-    :func:`_span_delta_changed_stats` — same nd_old/nd_batch window
-    math), and the results go straight to the bucketed FILES — batch
-    postings appended one file per touched h-bucket, changed stats
-    upserted via pruned per-bucket rewrites.  Nothing collected is
-    ever re-uploaded into a Spark plan (the round-trip trap that
-    killed round 11's arithmetic twin: ARCHITECTURE.md §5r); serving
-    reads the layout as parquet.
-
-    Returns False — before ANY mutation — when a gate fails (row cap
-    :data:`SPAN_LOCAL_ROW_MAX` resolved at call time, probe byte
-    budget, non-local/unreadable layout); the caller then runs
-    the distributed fold on the same inputs.  At 100 TB the layouts
-    live on object storage, ``isdir`` fails, and the distributed path
-    is the one that runs."""
-    import os
-
-    cap = SPAN_LOCAL_ROW_MAX
-    # collect the batch's EXPLODED spans (map-only job, no shuffle —
-    # split/explode/xxhash64 stay JVM-side); the per-doc rollup runs
-    # on Arrow kernels downstream — the groupBy the distributed
-    # span_postings_frame pays exists only to bound a corpus-scale
-    # frame, which a delivery batch is not
-    if not (os.path.isdir(postings_dir) and os.path.isdir(stats_dir)):
-        return False
-    tbl = batch_spans.limit(cap + 1).toArrow()
-    if tbl.num_rows > cap:
-        return False
-    return _span_fold_local_rows(
-        spark, postings_dir, stats_dir,
-        tbl.select(["doc_id", "h"]), buckets, stats_buckets,
-    )
-
-
 def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
                           batch_tbl, buckets: int,
                           stats_buckets: int) -> bool:
@@ -2449,8 +2380,16 @@ def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
     (doc_id, h) span rows (a pyarrow Table, one row per exploded
     span) — the seam the x17 lifecycle uses to split ONE whole-stream
     collect into per-delivery folds (the x15 one-scan lesson), making
-    each fold pure compute + file IO with zero Spark jobs.  Same
-    pre-mutation gates as :func:`_span_fold_local`.
+    each fold pure compute + file IO with zero Spark jobs.  Nothing
+    collected is ever re-uploaded into a Spark plan (the round-trip
+    trap, ARCHITECTURE.md §5r); serving reads the layout as parquet.
+
+    Returns False — before ANY mutation — when a gate fails (row cap
+    ``SPAN_LOCAL_ROW_MAX`` resolved at call time, probe byte budget,
+    non-local/unreadable layout); the caller then runs the
+    distributed fold on the same inputs.  At 100 TB the layouts live
+    on object storage, ``isdir`` fails, and the distributed path is
+    the one that runs.
 
     The _span_delta_changed_stats arithmetic runs on Arrow kernels —
     group_by rollups + hash joins in C++ — because the per-delivery
@@ -2466,7 +2405,7 @@ def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
 
     from hfcommunity_spark.operators import graph as G
 
-    cap = SPAN_LOCAL_ROW_MAX
+    cap = placement.CAPS["SPAN_LOCAL_ROW_MAX"]
     if not (os.path.isdir(postings_dir) and os.path.isdir(stats_dir)):
         return False
     # an in-flight marker means a previous fold died between its two
@@ -2731,25 +2670,11 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
     journal = _os.path.isdir(postings_dir)
     if journal:
         _span_fold_write_marker(postings_dir, range(buckets))
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode"
-    )
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode", "dynamic"
-    )
     try:
         # the two layout writes stay overlapped (r14, guide §2.6); the
         # crash-journal window is unchanged — marker before either
         # write, removed only after both (ADVICE r14: the threaded
-        # stats write's outcome is ALWAYS surfaced).
-        #
-        # GUARD (VERDICT r14 #4): partitionOverwriteMode is a
-        # SESSION-GLOBAL conf shared by both driver threads — safe
-        # here only because the append ignores it (mode=append) and
-        # the restore waits for both writes.  Do NOT add a third
-        # concurrent writer inside this conf window without moving
-        # the mode into each write's own DataFrameWriter option
-        # ("partitionOverwriteMode" is also a per-write option).
+        # stats write's outcome is ALWAYS surfaced)
         from concurrent.futures import ThreadPoolExecutor
 
         def _stats_write() -> None:
@@ -2760,6 +2685,7 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
                     _write_tasks(len(sbkts)), F.col("d_bucket")
                 )
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("d_bucket")
                 .parquet(stats_dir)
             )
@@ -2773,9 +2699,6 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
             finally:
                 fut.result()
     finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev
-        )
         if snapshot is not None:
             _shutil.rmtree(snapshot, ignore_errors=True)
     if journal:
@@ -2791,7 +2714,8 @@ def span_fold_in_place(spark, postings_dir: str, stats_dir: str,
     into their h-buckets, changed per-doc stats upsert into their
     d-buckets, untouched rows never read or rewritten.  Driver-local
     fast path when the layouts are local files and the delivery is
-    bounded (:func:`_span_fold_local`); otherwise the distributed
+    bounded (:func:`_span_fold_local_rows` over one bounded collect of
+    the batch's exploded spans); otherwise the distributed
     fold: :func:`span_index_delta_bucketed` computes the same two
     frames, the stats upsert runs as a partition-pruned dynamic
     overwrite, and :func:`append_span_postings` lands the batch
@@ -2813,10 +2737,16 @@ def span_fold_in_place(spark, postings_dir: str, stats_dir: str,
         _span_fold_check_marker(postings_dir)
     if buckets is None:
         buckets = SPAN_H_BUCKETS
-    if not _span_fold_local(
-        spark, postings_dir, stats_dir,
-        _span_exploded_frame(arriving_docs),
-        buckets, stats_buckets,
+    spans = None
+    if _os.path.isdir(postings_dir) and _os.path.isdir(stats_dir):
+        # the batch's EXPLODED spans (map-only job, no shuffle); the
+        # per-doc rollup runs on Arrow kernels in the local fold
+        spans = placement.bounded_arrow(
+            _span_exploded_frame(arriving_docs),
+            placement.CAPS["SPAN_LOCAL_ROW_MAX"],
+        )
+    if spans is None or not _span_fold_local_rows(
+        spark, postings_dir, stats_dir, spans, buckets, stats_buckets,
     ):
         # Journaling note (ADVICE r13, unchanged by the r15 fusion):
         # each distributed write individually goes through Spark's
@@ -3001,25 +2931,23 @@ def x17_stream_maintained_spans(spark: SparkSession,
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    cap = SPAN_LOCAL_ROW_MAX
     spans_by_k = None
-    # cap pinned to 0 means "never local": skip the guarded Arrow
-    # collect outright instead of running a limit(1) job whose answer
-    # is already known (r14 — one wasted job in the caps-zeroed arm)
-    if cap > 0:
-        tagged = _span_exploded_frame(arriving).select(
+    tagged = placement.bounded_arrow(
+        _span_exploded_frame(arriving).select(
             "doc_id", "h",
             F.expr(
                 f"(doc_id DIV {_DELTA_SPLIT_MOD}) % {X17_DELIVERIES}"
             ).cast("int").alias("k"),
-        ).limit(cap + 1).toArrow()
-        if tagged.num_rows <= cap:
-            spans_by_k = {
-                k: tagged.filter(
-                    pc.equal(tagged.column("k"), k)
-                ).select(["doc_id", "h"])
-                for k in range(X17_DELIVERIES)
-            }
+        ),
+        placement.CAPS["SPAN_LOCAL_ROW_MAX"],
+    )
+    if tagged is not None:
+        spans_by_k = {
+            k: tagged.filter(
+                pc.equal(tagged.column("k"), k)
+            ).select(["doc_id", "h"])
+            for k in range(X17_DELIVERIES)
+        }
 
     served: list[DataFrame] = []
     local_serves: list = []  # Arrow tables, delivery-tagged
@@ -3055,7 +2983,7 @@ def x17_stream_maintained_spans(spark: SparkSession,
             # snapshots keep the old inodes) + distributed read.
             st = bucketed.read_table(
                 sdir, "d_bucket", ("doc_id", "n_spans", "n_dup_spans"),
-                X17_SERVE_LOCAL_ROW_MAX,
+                placement.CAPS["SERVE_LOCAL_ROW_MAX"],
             )
             if st is not None:
                 # dup_ratio as IEEE double division, bit-identical to

@@ -36,6 +36,7 @@ from hfcommunity_spark.etl.fetch import (
 )
 from hfcommunity_spark.io import TESTDATA_TABLES, read_table, write_snapshot
 from hfcommunity_spark.registry import query
+from hfcommunity_spark.operators import placement
 from hfcommunity_spark.operators.skew import maybe_broadcast
 
 # ---------------------------------------------------------------------------
@@ -934,26 +935,6 @@ _MERGE_BASE_ORACLE = f"""
     """
 
 
-# Work budget for the fixture-DAG driver-local twins (merge-base and
-# commit-ancestors): the reach build is multi-source BFS from EVERY
-# commit, so |commits| x |edges| bounds the driver work — the same
-# bound (and the same value) as graph.ANC_LOCAL_WORK_MAX for the
-# ancestors operator twin.  Resolved at call time so tests can pin it
-# to force the distributed plan.
-MB_LOCAL_WORK_MAX = 2_000_000
-
-# Row budget for the merge-base twin's DRIVER-LOCAL rank derivation
-# (r14, VERDICT r13 "fixture-shaped twin" watch item): the twin now
-# derives the rank↔message binding from the ``documents`` table the
-# same way the distributed plan does, via a footer-gated pyarrow read
-# of two int columns.  Footer row counts are exact and cost ~ms (the
-# x19 gate pattern); over the cap — or on non-local/object storage,
-# where the footer probe returns None — the twin gates out and the
-# distributed reach-set plan runs unchanged.  5M rows of two int64
-# columns ≈ 80 MB driver-side, the same order as the other twins'
-# bounded collects.
-MB_DOC_LOCAL_ROW_MAX = 5_000_000
-
 # (path, size, mtime_ns) -> derived message list; bounded tiny
 _DOC_MSG_CACHE: dict[tuple, list[str]] = {}
 
@@ -968,7 +949,7 @@ def _fixture_doc_messages_local(sf_dir: str) -> list[str] | None:
     to the declared fixture query; deriving from the same table the
     distributed plan reads removes the special case).  Returns None
     when the footer gate fails (row count over
-    :data:`MB_DOC_LOCAL_ROW_MAX`, non-parquet, or remote storage) —
+    ``MB_DOC_LOCAL_ROW_MAX``, non-parquet, or remote storage) —
     the caller falls back to the distributed plan.
 
     Memoized per (path, size, mtime_ns) — the scratch-dir staleness
@@ -983,12 +964,12 @@ def _fixture_doc_messages_local(sf_dir: str) -> list[str] | None:
         memo_key = (path, st.st_size, st.st_mtime_ns)
     except OSError:
         return None
-    # gate BEFORE the memo: the cap is a runtime-pinnable module
-    # attribute (parity tests and the caps-zeroed arm set it to 0) —
+    # gate BEFORE the memo: the cap is pinnable at runtime (parity
+    # tests and placement.distributed() set it to 0) —
     # a cached hit must never outlive a tightened cap.  The footer
     # count is ~ms, so gating every call costs nothing real.
     n = _parquet_row_count(path)
-    if n is None or n > MB_DOC_LOCAL_ROW_MAX:
+    if n is None or n > placement.CAPS["MB_DOC_LOCAL_ROW_MAX"]:
         return None
     cached = _DOC_MSG_CACHE.get(memo_key)
     if cached is not None:
@@ -1042,7 +1023,7 @@ def _fixture_dag_local_reach(spark: SparkSession, sf_dir: str):
     the caller then runs its distributed plan unchanged."""
     base = _fixture_dag_repo(spark, sf_dir)
     repo = os.path.join(base, "fixture")
-    cap = MB_LOCAL_WORK_MAX
+    cap = placement.CAPS["ANC_LOCAL_WORK_MAX"]
     try:
         n = git_commit_count(repo)
     except (OSError, subprocess.CalledProcessError, ValueError):
@@ -1114,7 +1095,7 @@ def _merge_base_local(spark: SparkSession,
     S8 pushdown) pre-gates the commit count BEFORE the full log
     streams (work ≥ n·(n−1) for a connected DAG, so n·(n−1) over the
     cap can never pass), then the exact |commits| × |edges| product
-    checks against :data:`MB_LOCAL_WORK_MAX`; the rank↔message binding
+    checks against ``ANC_LOCAL_WORK_MAX``; the rank↔message binding
     is DERIVED from the ``documents`` table exactly as the distributed
     plan derives it — a footer-gated driver-local read
     (:func:`_fixture_doc_messages_local`; r14, closing the VERDICT r13

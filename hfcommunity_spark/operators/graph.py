@@ -18,14 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hfcommunity_spark.operators import bucketed
-
-# Below this many distinct quotient edges, components_delta resolves
-# the merge map with a driver-side min-label union-find (bounded
-# collect) instead of the distributed CC loop — the quotient is
-# delivery-bounded by the operator's contract, and the distributed
-# machinery costs seconds of fixed per-round overhead at any size.
-QUOTIENT_LOCAL_EDGE_MAX = 100_000
+from hfcommunity_spark.operators import bucketed, placement
 
 
 def _new_checkpoint_ids(spark: SparkSession, before: set) -> list[int]:
@@ -125,12 +118,6 @@ def materialize_and_free(spark: SparkSession, before: set,
     return out
 
 
-# Work budget for the driver-local ancestry twin: multi-source BFS
-# visits each (start, node) pair at most once, so |starts| x |edges|
-# bounds the driver work.  Resolved at call time so tests can pin it.
-ANC_LOCAL_WORK_MAX = 2_000_000
-
-
 def _ancestors_local(commit_parents: DataFrame, start_shas: DataFrame,
                      max_hops: int) -> DataFrame | None:
     """Driver-local twin of :func:`ancestors`: a compact Arrow collect
@@ -154,14 +141,9 @@ def _ancestors_local(commit_parents: DataFrame, start_shas: DataFrame,
     cost on fixture-sized DAGs; at a real 100 TB commit graph the
     gates fail on bounded counts alone and the checkpointed frontier
     loop below runs unchanged."""
-    cap = ANC_LOCAL_WORK_MAX
-    if cap <= 0:
-        # cap pinned to 0 means "never local": skip the guarded
-        # collect outright instead of running a limit(1) job whose
-        # answer is already known (r14, caps-zeroed arm)
-        return None
-    st_t = start_shas.select("sha").limit(cap + 1).toArrow()
-    if st_t.num_rows > cap:
+    cap = placement.CAPS["ANC_LOCAL_WORK_MAX"]
+    st_t = placement.bounded_arrow(start_shas.select("sha"), cap)
+    if st_t is None:
         return None
     # dict.fromkeys: set semantics, deterministic first-seen order
     starts = list(dict.fromkeys(st_t.column("sha").to_pylist()))
@@ -717,7 +699,7 @@ def _quotient_relabel(spark, quot: DataFrame) -> DataFrame | None:
     if n_quot == 0:
         _free_checkpoint(spark, quot_ids)
         return None
-    if n_quot <= QUOTIENT_LOCAL_EDGE_MAX:
+    if n_quot <= placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]:
         # the quotient is delivery-bounded BY CONTRACT, and here it is
         # tiny: a driver-side min-label union-find replaces the full
         # distributed CC machinery (its per-round shuffles + eager
@@ -935,15 +917,6 @@ def _write_tasks(n_buckets: int) -> int:
     return max(1, -(-n_buckets // 16))
 
 
-# Cap on rows the DRIVER-LOCAL writer fast path will materialize: the
-# touched buckets' contents, bounded by design at
-# ASSIGN_ROWS_PER_BUCKET × |touched buckets| (a delivery-bounded set).
-# Two int64 columns at this cap is ~8 MB of driver heap; above it the
-# writers take the distributed path unchanged.  Read at call time, so
-# pinning it to 0 forces the distributed path.
-WRITER_LOCAL_ROW_MAX = 512_000
-
-
 # The assignment layouts' data columns as the driver-local reader and
 # writer see them (the Spark writer's two-column int64 output).
 _ASSIGN_COLS = ("vertex", "component")
@@ -1059,7 +1032,8 @@ def apply_relabel_in_place(spark, assign_dir: str,
               else relabel.schema["component"].dataType)
         data = (
             bucketed.read_rows(assign_dir, "c_bucket", bkts,
-                               _ASSIGN_COLS, WRITER_LOCAL_ROW_MAX)
+                               _ASSIGN_COLS,
+                               placement.CAPS["WRITER_LOCAL_ROW_MAX"])
             if vt.simpleString() == "bigint"
             and os.path.isdir(assign_dir) else None
         )
@@ -1172,18 +1146,14 @@ def apply_relabel_in_place(spark, assign_dir: str,
     rows = updated.localCheckpoint(eager=False)
     present = {r.b for r in rows.select(
         F.col("c_bucket").alias("b")).distinct().collect()}
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            rows.drop("_chg")
-            .repartition(_write_tasks(len(bkts)), F.col("c_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("c_bucket")
-            .parquet(assign_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        rows.drop("_chg")
+        .repartition(_write_tasks(len(bkts)), F.col("c_bucket"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("c_bucket")
+        .parquet(assign_dir)
+    )
     emptied = set(bkts) - present
     for b in emptied:
         d = os.path.join(assign_dir, f"c_bucket={b}")
@@ -1288,7 +1258,8 @@ def _merge_plan_local(spark, vertex_rel, edges, buckets: int,
     resolved = None
     if vertex_dir is not None and os.path.isdir(vertex_dir):
         data = bucketed.read_rows(vertex_dir, "v_bucket", bkts,
-                                  _ASSIGN_COLS, WRITER_LOCAL_ROW_MAX)
+                                  _ASSIGN_COLS,
+                                  placement.CAPS["WRITER_LOCAL_ROW_MAX"])
         if data is not None:
             want = set(verts)
             resolved = {
@@ -1382,7 +1353,7 @@ def component_merge_plan_pruned(
     # other vertex types take the distributed plan at any size
     if vt.simpleString() == "bigint" and edge_rows is not None:
         pr = [(a, b) for a, b in edge_rows if a != b]
-        if len(pr) <= QUOTIENT_LOCAL_EDGE_MAX:
+        if len(pr) <= placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]:
             return _merge_plan_local(
                 spark, vertex_rel, pr, buckets, vt,
                 vertex_dir=vertex_dir,
@@ -1393,10 +1364,12 @@ def component_merge_plan_pruned(
     # cap pinned to 0 means "never local": skip the guarded probe
     # collect outright instead of running a limit(1) job whose answer
     # is already known (r14 — one wasted job per fold in the
-    # caps-zeroed distributed arm)
-    if QUOTIENT_LOCAL_EDGE_MAX > 0 and vt.simpleString() == "bigint":
-        probe = e0.limit(QUOTIENT_LOCAL_EDGE_MAX + 1).collect()
-        if len(probe) <= QUOTIENT_LOCAL_EDGE_MAX:
+    # caps-zeroed distributed arm).  A Row collect, not bounded_arrow:
+    # a limited collect() and a limited toArrow() schedule differently
+    cap = placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]
+    if cap > 0 and vt.simpleString() == "bigint":
+        probe = e0.limit(cap + 1).collect()
+        if len(probe) <= cap:
             return _merge_plan_local(
                 spark, vertex_rel, [(r.a, r.b) for r in probe],
                 buckets, vt, vertex_dir=vertex_dir,
@@ -1510,7 +1483,7 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
     filesystem work — pruned pyarrow read, dict upsert, per-bucket
     rewrite — zero Spark jobs.  Rows never change bucket here (the
     key is the vertex), so there is no emptied-bucket edge; the same
-    gates (bigint keys, local fs, :data:`WRITER_LOCAL_ROW_MAX`) fall
+    gates (bigint keys, local fs, ``WRITER_LOCAL_ROW_MAX``) fall
     back to the distributed path below before any mutation."""
     import os
 
@@ -1523,7 +1496,8 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
             return
         lbkts = sorted({_py_bucket(v, buckets) for v, _ in ch_rows})
         data = bucketed.read_rows(vertex_dir, "v_bucket", lbkts,
-                                  _ASSIGN_COLS, WRITER_LOCAL_ROW_MAX)
+                                  _ASSIGN_COLS,
+                                  placement.CAPS["WRITER_LOCAL_ROW_MAX"])
         if data is not None:
             upd = dict(ch_rows)
             seen: set = set()
@@ -1571,17 +1545,13 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
     # so tasks — including retries — always read intact files).  One
     # job instead of eager checkpoint + write.
     rows = merged.localCheckpoint(eager=False)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            rows.repartition(_write_tasks(len(bkts)), F.col("v_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("v_bucket")
-            .parquet(vertex_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        rows.repartition(_write_tasks(len(bkts)), F.col("v_bucket"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("v_bucket")
+        .parquet(vertex_dir)
+    )
     if table_name is not None:
         _sync_catalog_partitions(
             spark, table_name, "v_bucket", added=bkts, dropped=()
@@ -1600,16 +1570,9 @@ PR_JUMP = 150_000             # (1 - 0.85) * PR_SCALE
 PR_TOP_K = 20
 
 
-# Edge cap for the driver-local PageRank twin (the x19 crossover
-# discipline): two int64 columns at the cap is ~32 MB of Arrow.
-# Resolved at call time so tests can pin it to force the distributed
-# rounds.
-PR_LOCAL_EDGE_MAX = 2_000_000
-
-
 def _pagerank_local(edges: DataFrame, iters: int) -> DataFrame | None:
-    """Driver-local twin of :func:`pagerank_fixed`: one bounded COUNT
-    pre-gate, one Arrow collect of the edge list, then the integer
+    """Driver-local twin of :func:`pagerank_fixed`: one bounded Arrow
+    collect of the edge list (no COUNT pre-gate), then the integer
     rounds as numpy factorize + bincount passes — value-identical to
     the distributed join/groupBy rounds INCLUDING the drop-out
     semantics (a node that receives no contribution leaves the rank
@@ -1622,18 +1585,13 @@ def _pagerank_local(edges: DataFrame, iters: int) -> DataFrame | None:
     import numpy as np
     import pyarrow as pa
 
-    cap = PR_LOCAL_EDGE_MAX
-    if cap <= 0:
-        # cap pinned to 0 means "never local": skip the guarded
-        # collect outright instead of running a limit(1) job whose
-        # answer is already known (r14, caps-zeroed arm)
-        return None
     # ONE guarded collect (no COUNT pre-gate): the edge frame is
     # typically a corpus DISTINCT, so a separate gate job would pay
     # that shuffle twice — the over-cap penalty (shipping cap+1 rows
     # once) is cheaper than doubling the under-cap path's only scan
-    t = edges.select("src", "dst").limit(cap + 1).toArrow()
-    if t.num_rows > cap or t.num_rows == 0:
+    t = placement.bounded_arrow(edges.select("src", "dst"),
+                                placement.CAPS["PR_LOCAL_EDGE_MAX"])
+    if t is None or t.num_rows == 0:
         return None
     try:
         src = t.column("src").to_numpy()

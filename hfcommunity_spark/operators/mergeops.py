@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hfcommunity_spark.io import read_table
+from hfcommunity_spark.operators import placement
 from hfcommunity_spark.registry import query
 
 _E, _U = "__merge_e", "__merge_u"
@@ -605,16 +606,6 @@ def scd2_track_seed(dim: DataFrame, events: DataFrame,
     ).drop("_l")
 
 
-# Row cap for x19's driver-local one-scan fold, set at the MEASURED
-# crossover: at 1M events (sf1.0) the local twin wins 2.5 vs 3.5 s
-# warm; at 3M (sf3.0) it loses 7.9 vs 5.1 — the serve upload is
-# corpus-sized by contract and the open-state dict passes go
-# python-speed, so past ~2M rows the distributed lifecycle (whose
-# folds stay delivery-bounded) is the faster AND the scale-honest
-# path.  Resolved at call time so tests can pin it.
-X19_LOCAL_ROW_MAX = 2_000_000
-
-
 def _parquet_row_count(path: str) -> int | None:
     """Exact row count of a local parquet file/dir from the footers —
     a ZERO-Spark-job gate input (driver-side pyarrow metadata reads,
@@ -661,7 +652,7 @@ def _x19_fold_local(spark, ev: DataFrame, width: int,
     import numpy as np
     import pyarrow as pa
 
-    cap = X19_LOCAL_ROW_MAX
+    cap = placement.CAPS["X19_LOCAL_ROW_MAX"]
     # cheap pre-gate: decide before the Arrow collect pays to move
     # rows — an over-cap feed otherwise shipped cap+1 rows to the
     # driver just to learn it must fall back (measured ~1.5 s at the

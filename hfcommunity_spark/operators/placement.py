@@ -1,0 +1,79 @@
+"""Where an iterative or maintained face runs: on the driver or as a
+distributed plan.
+
+A face takes its driver-local twin only while its input stays under
+the face's cap, and takes the distributed plan otherwise — the plan
+that scales; the twin is a small-input shortcut.  This module holds
+the three pieces of that rule:
+
+- :data:`CAPS`, the only definition of every driver-local cap.  Each
+  gate reads ``CAPS[name]`` at call time, so a cap pinned here (by a
+  test or a tool) takes effect at the next call.  A cap of 0 means
+  "never local".
+- :func:`bounded_arrow`, the one bounded Arrow collect.
+- :func:`distributed`, the one way to force every face onto its
+  distributed plan.
+"""
+
+from __future__ import annotations
+
+from contextlib import contextmanager
+from typing import TYPE_CHECKING, Iterator
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+    from pyspark.sql import DataFrame
+
+CAPS: dict[str, int] = {
+    # |starts| x |edges| steps of the driver-side multi-source BFS
+    # (graph.ancestors, and the merge-base/commit-ancestors reach sets,
+    # whose pre-gate is n·(n−1) commits)
+    "ANC_LOCAL_WORK_MAX": 2_000_000,
+    # documents rows of the merge-base twin's footer-gated read: two
+    # int64 columns ≈ 80 MB of driver memory at the cap
+    "MB_DOC_LOCAL_ROW_MAX": 5_000_000,
+    # edges of the PageRank twin's one Arrow collect: two int64
+    # columns ≈ 32 MB at the cap
+    "PR_LOCAL_EDGE_MAX": 2_000_000,
+    # delivery quotient edges for the driver union-find; the
+    # distributed CC loop costs seconds of fixed per-round overhead
+    "QUOTIENT_LOCAL_EDGE_MAX": 100_000,
+    # touched-bucket rows the assignment writers hold as Python
+    # tuples: two int64 columns ≈ 8 MB of driver heap at the cap
+    "WRITER_LOCAL_ROW_MAX": 512_000,
+    # span rows the local span fold holds as Arrow tables end to end:
+    # three int64 columns ≈ 100 MB at the cap
+    "SPAN_LOCAL_ROW_MAX": 4_000_000,
+    # file bytes of the touched postings buckets the local span probe
+    # reads, checked against file sizes before any read
+    "SPAN_LOCAL_READ_BYTE_MAX": 256 << 20,
+    # rows per x15/x17 local serve read: three serves share one upload,
+    # so 3×cap stays under the 3M-row upload where x19's local path lost
+    "SERVE_LOCAL_ROW_MAX": 600_000,
+    # x19 event rows, at the measured crossover: local wins at 1M
+    # (2.5 vs 3.5 s warm) and loses at 3M (7.9 vs 5.1 s)
+    "X19_LOCAL_ROW_MAX": 2_000_000,
+}
+
+
+def bounded_arrow(df: DataFrame, cap: int) -> pa.Table | None:
+    """``df`` as one Arrow table when it has at most ``cap`` rows,
+    else None.  ``cap <= 0`` returns None without a Spark job;
+    otherwise it runs one ``limit(cap + 1).toArrow()``."""
+    if cap <= 0:
+        return None
+    t = df.limit(cap + 1).toArrow()
+    return None if t.num_rows > cap else t
+
+
+@contextmanager
+def distributed() -> Iterator[dict[str, int]]:
+    """Pin every cap in :data:`CAPS` to 0 for the body, so every face
+    runs its distributed plan; yields the pinned caps and restores the
+    old values on exit, also when the body raises."""
+    saved = dict(CAPS)
+    CAPS.update(dict.fromkeys(CAPS, 0))
+    try:
+        yield dict(CAPS)
+    finally:
+        CAPS.update(saved)

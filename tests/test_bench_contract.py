@@ -171,14 +171,15 @@ def test_dist_bench_artifact_shape():
     (ALL caps, each 0), per-face + top-level (min) calibration,
     scan-normalized ratios, and the six twin-gated faces in the
     standing face list."""
-    from tools.dist_bench import CAPS, DIST_FACES, build_dist_payload
+    from hfcommunity_spark.operators import placement
+    from tools.dist_bench import DIST_FACES, build_dist_payload
 
     assert set(DIST_FACES) == {
         "g_commit_ancestors", "g_merge_base", "g_pagerank_fixed_iter",
         "x15_stream_maintained_clusters", "x17_stream_maintained_spans",
         "x19_stream_scd2_dim",
     }
-    caps = {f"{m.rsplit('.', 1)[-1]}.{a}": 0 for m, a in CAPS}
+    caps = dict.fromkeys(placement.CAPS, 0)
     rows = [
         {"name": n, "sec": 1.0 + i,
          "attempts": [1.3 + i, 1.0 + i],
@@ -281,7 +282,8 @@ def test_dist_contended_face_guard_and_tries_recording():
     minute-scale steal burst can land entirely inside the timed
     attempts and leave the pre-attempt sentinel clean (the first x15
     recording: 51.7 s against a clean 0.28/0.24 start sentinel)."""
-    from tools.dist_bench import (CAPS, DIST_FACES, _face_suspect,
+    from hfcommunity_spark.operators import placement
+    from tools.dist_bench import (DIST_FACES, _face_suspect,
                                   build_dist_payload)
 
     quiet = {"cpu_loop_sec": 0.29, "spark_scan_sec": 0.15,
@@ -298,7 +300,7 @@ def test_dist_contended_face_guard_and_tries_recording():
     # no baseline yet (first face): never flagged
     assert _face_suspect(dict(quiet, cpu_loop_sec=9.9), None, None) is None
 
-    caps = {f"{m.rsplit('.', 1)[-1]}.{a}": 0 for m, a in CAPS}
+    caps = dict.fromkeys(placement.CAPS, 0)
     rows = [{"name": n, "sec": 1.0, "attempts": [1.2, 1.0],
              "calibration": quiet, "caps_zeroed": caps}
             for n in DIST_FACES]

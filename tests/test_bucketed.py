@@ -16,7 +16,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from hfcommunity_spark.operators import bucketed
+from hfcommunity_spark.operators import bucketed, placement
 from tests.conftest import SF_SMOKE
 
 I64 = pa.int64()
@@ -256,7 +256,7 @@ def test_snapshot_hardlinks_and_cross_device_copy(tmp_path, monkeypatch):
 def test_x17_snapshot_serve_across_devices_matches_local(spark,
                                                          monkeypatch):
     """The x17 lifecycle with its local serve pinned off
-    (``X17_SERVE_LOCAL_ROW_MAX`` = 0, so every serve is a snapshot +
+    (``SERVE_LOCAL_ROW_MAX`` = 0, so every serve is a snapshot +
     distributed read) and every hardlink failing cross-device (so the
     working copy and each serve snapshot are byte copies) serves the
     same rows as the default local-serve lifecycle."""
@@ -268,7 +268,7 @@ def test_x17_snapshot_serve_across_devices_matches_local(spark,
         dd.x17_stream_maintained_spans(spark, sf).collect()
     )
     assert local, "x17 served no rows"
-    monkeypatch.setattr(dd, "X17_SERVE_LOCAL_ROW_MAX", 0)
+    monkeypatch.setitem(placement.CAPS, "SERVE_LOCAL_ROW_MAX", 0)
     monkeypatch.setattr(os, "link", _exdev)
     with pytest.warns(RuntimeWarning, match="hardlink failed"):
         copied = sorted(

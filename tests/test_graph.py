@@ -3,6 +3,7 @@ diamond-merge history, and merge-commit detection."""
 
 from __future__ import annotations
 
+from hfcommunity_spark.operators import placement
 from hfcommunity_spark.operators.graph import ancestors, merge_commits
 
 #        a
@@ -338,7 +339,7 @@ def test_components_delta_distributed_fallback_matches_local(spark,
         return {(r.vertex, r.component) for r in assign.collect()}
 
     local = run()
-    monkeypatch.setattr(G, "QUOTIENT_LOCAL_EDGE_MAX", 0)
+    monkeypatch.setitem(placement.CAPS, "QUOTIENT_LOCAL_EDGE_MAX", 0)
     assert run() == local
 
 
@@ -819,7 +820,6 @@ def test_pruned_merge_plan_local_fast_path_parity(spark, tmp_path,
     collect + Python union-find) must be value-identical to the
     distributed plan on the same persisted table — pin the threshold
     to 0 to force the distributed path and compare both halves."""
-    from hfcommunity_spark.operators import graph as G
     from hfcommunity_spark.operators.graph import (
         component_merge_plan_pruned,
         connected_components,
@@ -847,7 +847,7 @@ def test_pruned_merge_plan_local_fast_path_parity(spark, tmp_path,
         spark, out, ldelta, buckets=8, vertex_dir=out
     )
     assert getattr(f_rows, "_hfc_rows", None) is not None
-    monkeypatch.setattr(G, "QUOTIENT_LOCAL_EDGE_MAX", 0)
+    monkeypatch.setitem(placement.CAPS, "QUOTIENT_LOCAL_EDGE_MAX", 0)
     f_dist, r_dist = component_merge_plan_pruned(spark, out, delta,
                                                  buckets=8)
     assert getattr(f_dist, "_hfc_rows", None) is None  # took distributed
@@ -911,7 +911,7 @@ def test_apply_relabel_fast_path_matches_distributed(spark, tmp_path):
 
 
 def test_vertex_layout_local_writer_matches_distributed(spark,
-                                                        tmp_path):
+                                                        tmp_path, monkeypatch):
     """apply_changes_vertex_layout's driver-local fast path (round 11:
     the change set carries _hfc_rows, the layout is local-fs) must
     leave the same table content as the distributed upsert — updates,
@@ -920,7 +920,6 @@ def test_vertex_layout_local_writer_matches_distributed(spark,
     path on the same local frame (the cap fallback)."""
     from pyspark.sql import types as T
 
-    from hfcommunity_spark.operators import graph as G
     from hfcommunity_spark.operators.graph import (
         _local_frame,
         apply_changes_vertex_layout,
@@ -945,13 +944,10 @@ def test_vertex_layout_local_writer_matches_distributed(spark,
     ):
         out = str(tmp_path / f"vassign_{tag}")
         write_vertex_assign(assign, out, 8)
-        old = G.WRITER_LOCAL_ROW_MAX
-        if cap is not None:
-            G.WRITER_LOCAL_ROW_MAX = cap
-        try:
+        with monkeypatch.context() as mp:
+            if cap is not None:
+                mp.setitem(placement.CAPS, "WRITER_LOCAL_ROW_MAX", cap)
             apply_changes_vertex_layout(spark, out, mk(), 8)
-        finally:
-            G.WRITER_LOCAL_ROW_MAX = old
         outs.append({
             tuple(r)
             for r in spark.read.parquet(out)
@@ -1027,13 +1023,12 @@ def test_bounded_fold_schedules_zero_spark_jobs(spark, tmp_path):
     assert got == vgot  # both projections agree
 
 
-def test_relabel_local_writer_cap_falls_back(spark, tmp_path):
+def test_relabel_local_writer_cap_falls_back(spark, tmp_path, monkeypatch):
     """apply_relabel_in_place with local frames but a pinned-to-0 row
     cap must take the distributed write and still produce the exact
     fast-path content (the gate fails before any mutation)."""
     from pyspark.sql import types as T
 
-    from hfcommunity_spark.operators import graph as G
     from hfcommunity_spark.operators.graph import (
         _local_frame,
         apply_relabel_in_place,
@@ -1057,18 +1052,15 @@ def test_relabel_local_writer_cap_falls_back(spark, tmp_path):
     for cap in (None, 0):
         out = str(tmp_path / f"assign_cap{cap}")
         write_component_assign(assign, out, buckets=8)
-        old = G.WRITER_LOCAL_ROW_MAX
-        if cap is not None:
-            G.WRITER_LOCAL_ROW_MAX = cap
-        try:
+        with monkeypatch.context() as mp:
+            if cap is not None:
+                mp.setitem(placement.CAPS, "WRITER_LOCAL_ROW_MAX", cap)
             ch = apply_relabel_in_place(
                 spark, out,
                 _local_frame(spark, rel_rows, rsch), buckets=8,
                 fresh=_local_frame(spark, fresh_rows, sch2),
                 return_changes=True,
             )
-        finally:
-            G.WRITER_LOCAL_ROW_MAX = old
         changes.append({tuple(r) for r in ch.collect()})
         outs.append({
             tuple(r)
@@ -1080,7 +1072,8 @@ def test_relabel_local_writer_cap_falls_back(spark, tmp_path):
 
 
 def test_pruned_merge_plan_property_local_equals_distributed(spark,
-                                                             tmp_path):
+                                                             tmp_path,
+                                                             monkeypatch):
     """Property version of the fast-path parity lock: across
     randomized histories and deliveries (merges within the history,
     merges ACROSS prior deliveries, fresh chains, self-loops,
@@ -1090,7 +1083,6 @@ def test_pruned_merge_plan_property_local_equals_distributed(spark,
     back through the PERSISTED layouts — the exact x15 shape."""
     import random
 
-    from hfcommunity_spark.operators import graph as G
     from hfcommunity_spark.operators.graph import (
         apply_changes_vertex_layout,
         apply_relabel_in_place,
@@ -1142,10 +1134,9 @@ def test_pruned_merge_plan_property_local_equals_distributed(spark,
         assign = connected_components(hist).localCheckpoint()
         write_component_assign(assign, cdir, buckets=buckets)
         write_vertex_assign(assign, vdir, buckets)
-        old_max = G.QUOTIENT_LOCAL_EDGE_MAX
-        if force_distributed:
-            G.QUOTIENT_LOCAL_EDGE_MAX = 0
-        try:
+        with monkeypatch.context() as mp:
+            if force_distributed:
+                mp.setitem(placement.CAPS, "QUOTIENT_LOCAL_EDGE_MAX", 0)
             for d in deliveries:
                 delta = spark.createDataFrame(d, "src long, dst long")
                 fresh, relabel = component_merge_plan_pruned(
@@ -1158,8 +1149,6 @@ def test_pruned_merge_plan_property_local_equals_distributed(spark,
                 apply_changes_vertex_layout(
                     spark, vdir, changed, buckets
                 )
-        finally:
-            G.QUOTIENT_LOCAL_EDGE_MAX = old_max
         return {
             (r.vertex, r.component)
             for r in spark.read.parquet(cdir)
@@ -1188,12 +1177,11 @@ def test_pruned_merge_plan_property_local_equals_distributed(spark,
     assert local == truth
 
 
-def test_ancestors_local_twin_matches_distributed(spark):
+def test_ancestors_local_twin_matches_distributed(spark, monkeypatch):
     """The round-12 driver-local ancestry twin must reproduce the
     checkpointed frontier walk exactly — min hops per (start,
     ancestor), hop cap honored — with ANC_LOCAL_WORK_MAX pinned to 0
     forcing the distributed loop on the same DAG."""
-    from hfcommunity_spark.operators import graph as G
     from hfcommunity_spark.operators.graph import ancestors
 
     # diamond + chain: f -> {d, e} -> c -> b -> a, plus d -> b
@@ -1206,12 +1194,9 @@ def test_ancestors_local_twin_matches_distributed(spark):
         [("f",), ("c",)], "sha string"
     )
     local = {tuple(r) for r in ancestors(edges, starts, 3).collect()}
-    old = G.ANC_LOCAL_WORK_MAX
-    G.ANC_LOCAL_WORK_MAX = 0
-    try:
+    with monkeypatch.context() as mp:
+        mp.setitem(placement.CAPS, "ANC_LOCAL_WORK_MAX", 0)
         dist = {tuple(r) for r in ancestors(edges, starts, 3).collect()}
-    finally:
-        G.ANC_LOCAL_WORK_MAX = old
     assert local == dist
     # min-hop dedup: b is reachable from f via d (2 hops) and via
     # c (3 hops) — BFS must record 2; a sits at 3 via the same path
@@ -1223,13 +1208,12 @@ def test_ancestors_local_twin_matches_distributed(spark):
     assert ("f", "b", 2) in capped
 
 
-def test_ancestors_local_twin_dedups_duplicate_starts(spark):
+def test_ancestors_local_twin_dedups_duplicate_starts(spark, monkeypatch):
     """Duplicate start shas: the distributed loop's distinct()+
     left_anti gives SET semantics per (sha, node), so the local twin
     must not emit duplicated rows for a start listed twice (ADVICE
     r12) — assert as a LIST (duplicates would survive a set compare)
     and against the forced-distributed walk on the same input."""
-    from hfcommunity_spark.operators import graph as G
     from hfcommunity_spark.operators.graph import ancestors
 
     edges = spark.createDataFrame(
@@ -1242,18 +1226,15 @@ def test_ancestors_local_twin_dedups_duplicate_starts(spark):
     assert local == sorted([
         ("c", "b", 1), ("c", "a", 2), ("b", "a", 1),
     ])
-    old = G.ANC_LOCAL_WORK_MAX
-    G.ANC_LOCAL_WORK_MAX = 0
-    try:
+    with monkeypatch.context() as mp:
+        mp.setitem(placement.CAPS, "ANC_LOCAL_WORK_MAX", 0)
         dist = sorted(
             tuple(r) for r in ancestors(edges, starts, 3).collect()
         )
-    finally:
-        G.ANC_LOCAL_WORK_MAX = old
     assert local == dist
 
 
-def test_ancestors_local_property_random_dags(spark):
+def test_ancestors_local_property_random_dags(spark, monkeypatch):
     """Randomized-DAG parity sweep for the ancestors twin (the
     round-13 gate rewrite): across seeded random DAGs — multiple
     roots, diamond merges, duplicate edge rows, duplicate starts,
@@ -1261,7 +1242,6 @@ def test_ancestors_local_property_random_dags(spark):
     distributed frontier walk row for row."""
     import random
 
-    from hfcommunity_spark.operators import graph as G
     from hfcommunity_spark.operators.graph import ancestors
 
     rng = random.Random(0xA13C)
@@ -1288,18 +1268,15 @@ def test_ancestors_local_property_random_dags(spark):
         local = sorted(
             tuple(r) for r in ancestors(edf, sdf, max_hops).collect()
         )
-        old = G.ANC_LOCAL_WORK_MAX
-        G.ANC_LOCAL_WORK_MAX = 0
-        try:
+        with monkeypatch.context() as mp:
+            mp.setitem(placement.CAPS, "ANC_LOCAL_WORK_MAX", 0)
             dist = sorted(
                 tuple(r) for r in ancestors(edf, sdf, max_hops).collect()
             )
-        finally:
-            G.ANC_LOCAL_WORK_MAX = old
         assert local == dist, f"case {case}: {local} != {dist}"
 
 
-def test_ancestors_local_gate_ships_nothing_over_cap(spark):
+def test_ancestors_local_gate_ships_nothing_over_cap(spark, monkeypatch):
     """The fallback decision must be learnable WITHOUT shipping the
     edge list: with the work cap pinned below |starts| x |edges|, the
     twin returns None off bounded counts and the distributed walk
@@ -1314,11 +1291,9 @@ def test_ancestors_local_gate_ships_nothing_over_cap(spark):
         "commit_sha string, parent_sha string",
     )
     starts = spark.createDataFrame([("d",), ("c",)], "sha string")
-    old = G.ANC_LOCAL_WORK_MAX
-    G.ANC_LOCAL_WORK_MAX = 2  # starts fit (2 <= 2), 2*3 edges do not
-    try:
+    with monkeypatch.context() as mp:
+        # starts fit (2 <= 2), 2*3 edges do not
+        mp.setitem(placement.CAPS, "ANC_LOCAL_WORK_MAX", 2)
         assert G._ancestors_local(edges, starts, 3) is None
         got = {tuple(r) for r in ancestors(edges, starts, 3).collect()}
-    finally:
-        G.ANC_LOCAL_WORK_MAX = old
     assert ("d", "a", 3) in got and ("c", "a", 2) in got

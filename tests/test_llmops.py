@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from hfcommunity_spark.operators import placement
 from hfcommunity_spark.operators.dedup import (
     NGRAM,
     doc_shingles,
@@ -897,7 +898,7 @@ def test_span_postings_append_lifecycle(spark, tmp_path):
 
 
 def test_span_fold_in_place_local_equals_distributed_equals_rebuild(
-        spark, tmp_path):
+        spark, tmp_path, monkeypatch):
     """The round-12 persisted span fold (VERDICT r11 #5): folding two
     sequential deliveries into the bucketed postings+stats layouts via
     span_fold_in_place must leave IDENTICAL layout contents whether
@@ -931,10 +932,9 @@ def test_span_fold_in_place_local_equals_distributed_equals_rebuild(
             sdir,
         )
         snaps = []
-        old = dd.SPAN_LOCAL_ROW_MAX
-        if cap is not None:
-            dd.SPAN_LOCAL_ROW_MAX = cap
-        try:
+        with monkeypatch.context() as mp:
+            if cap is not None:
+                mp.setitem(placement.CAPS, "SPAN_LOCAL_ROW_MAX", cap)
             for delivery in deliveries:
                 dd.span_fold_in_place(spark, pdir, sdir, delivery)
                 snaps.append({
@@ -948,8 +948,6 @@ def test_span_fold_in_place_local_equals_distributed_equals_rebuild(
                         .select("doc_id", "h", "c").collect()
                     },
                 })
-        finally:
-            dd.SPAN_LOCAL_ROW_MAX = old
         # layout hygiene: every file still lives under a bucket dir
         assert all(
             d.startswith("d_bucket=") for d in os.listdir(sdir)
@@ -997,7 +995,7 @@ def test_x17_local_serve_matches_snapshot_serve(spark, monkeypatch):
         dd.x17_stream_maintained_spans(spark, sf).collect()
     )
     assert local, "x17 served no rows"
-    monkeypatch.setattr(dd, "X17_SERVE_LOCAL_ROW_MAX", 0)
+    monkeypatch.setitem(placement.CAPS, "SERVE_LOCAL_ROW_MAX", 0)
     snap = sorted(
         tuple(r) for r in
         dd.x17_stream_maintained_spans(spark, sf).collect()
@@ -1166,7 +1164,7 @@ def test_span_fold_distributed_crash_journal_and_recovery(
         )
         return pdir, sdir
 
-    monkeypatch.setattr(dd, "SPAN_LOCAL_ROW_MAX", 0)
+    monkeypatch.setitem(placement.CAPS, "SPAN_LOCAL_ROW_MAX", 0)
 
     # reference: the never-crashed DISTRIBUTED fold
     p_ok, s_ok = build("ok")

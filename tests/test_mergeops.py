@@ -10,6 +10,7 @@ import duckdb
 import pandas as pd
 import pytest
 
+from hfcommunity_spark.operators import placement
 from hfcommunity_spark.operators.mergeops import (
     insert_ignore,
     partial_update,
@@ -152,12 +153,11 @@ def _x19_events(spark, rows):
     )
 
 
-def test_x19_local_fold_matches_distributed(spark, tmp_path):
+def test_x19_local_fold_matches_distributed(spark, tmp_path, monkeypatch):
     """The round-12 one-scan driver-local x19 twin must produce the
     exact distributed lifecycle output (X19_LOCAL_ROW_MAX pinned to 0
     forces the fallback) — runs, retro-closures, per-delivery
     snapshots, schema and all."""
-    from hfcommunity_spark.operators import mergeops as M
     from hfcommunity_spark.queries import all_queries
 
     spec = all_queries()["x19_stream_scd2_dim"]
@@ -167,16 +167,13 @@ def test_x19_local_fold_matches_distributed(spark, tmp_path):
         "delivery_id", "user_id", "state", "valid_from", "valid_to"
     ]
     local_rows = {tuple(r) for r in local.collect()}
-    old = M.X19_LOCAL_ROW_MAX
-    M.X19_LOCAL_ROW_MAX = 0
-    try:
+    with monkeypatch.context() as mp:
+        mp.setitem(placement.CAPS, "X19_LOCAL_ROW_MAX", 0)
         dist = spec.spark(spark, sf)
         dist_rows = {tuple(r) for r in dist.collect()}
         assert [f.dataType for f in local.schema.fields] == [
             f.dataType for f in dist.schema.fields
         ]
-    finally:
-        M.X19_LOCAL_ROW_MAX = old
     assert local_rows == dist_rows and len(local_rows) > 0
 
 

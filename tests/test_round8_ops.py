@@ -14,6 +14,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from hfcommunity_spark.operators import placement
 from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
@@ -608,11 +609,11 @@ def test_merge_base_agrees_with_git_on_fixture_pairs(spark):
             assert rc == 0, (mbase, m)
 
 
-def test_commit_ancestors_local_twin_matches_distributed(spark):
+def test_commit_ancestors_local_twin_matches_distributed(spark, monkeypatch):
     """Round-13: g_commit_ancestors shares the merge-base twin's
     driver-local reach (same fixture, same gates) — forced to the
     distributed map_fetch + ancestors + message-join plan with
-    MB_LOCAL_WORK_MAX pinned to 0, the two must agree exactly
+    ANC_LOCAL_WORK_MAX pinned to 0, the two must agree exactly
     (min-hops through the rank-5 short-cut edge included)."""
     import hfcommunity_spark.operators.etlops as E
 
@@ -620,15 +621,12 @@ def test_commit_ancestors_local_twin_matches_distributed(spark):
         tuple(r) for r in E.g_commit_ancestors(spark, SF_ORACLE).collect()
     )
     assert local, "no ancestry rows"
-    old = E.MB_LOCAL_WORK_MAX
-    E.MB_LOCAL_WORK_MAX = 0
-    try:
+    with monkeypatch.context() as mp:
+        mp.setitem(placement.CAPS, "ANC_LOCAL_WORK_MAX", 0)
         dist = sorted(
             tuple(r) for r in
             E.g_commit_ancestors(spark, SF_ORACLE).collect()
         )
-    finally:
-        E.MB_LOCAL_WORK_MAX = old
     assert local == dist
 
 
@@ -649,10 +647,10 @@ def test_commit_ancestors_local_twin_schedules_zero_jobs(spark):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
-def test_merge_base_local_twin_matches_distributed(spark):
+def test_merge_base_local_twin_matches_distributed(spark, monkeypatch):
     """The round-13 driver-local merge-base twin (driver-side
     git_log_rows + Python BFS-meet) must equal the distributed
-    reach-set plan exactly — MB_LOCAL_WORK_MAX pinned to 0 forces the
+    reach-set plan exactly — ANC_LOCAL_WORK_MAX pinned to 0 forces the
     map_fetch + ancestors + window pipeline on the same fixture."""
     import hfcommunity_spark.operators.etlops as E
 
@@ -660,14 +658,11 @@ def test_merge_base_local_twin_matches_distributed(spark):
         tuple(r) for r in E.g_merge_base(spark, SF_ORACLE).collect()
     )
     assert len(local) == len(E._MB_PAIRS_BY_RANK)
-    old = E.MB_LOCAL_WORK_MAX
-    E.MB_LOCAL_WORK_MAX = 0
-    try:
+    with monkeypatch.context() as mp:
+        mp.setitem(placement.CAPS, "ANC_LOCAL_WORK_MAX", 0)
         dist = sorted(
             tuple(r) for r in E.g_merge_base(spark, SF_ORACLE).collect()
         )
-    finally:
-        E.MB_LOCAL_WORK_MAX = old
     assert local == dist
 
 
@@ -710,7 +705,7 @@ def test_merge_base_rank_binding_derived_from_documents(spark):
     ) is None
 
 
-def test_merge_base_doc_gate_falls_back_to_distributed(spark):
+def test_merge_base_doc_gate_falls_back_to_distributed(spark, monkeypatch):
     """MB_DOC_LOCAL_ROW_MAX pinned to 0 must gate the twin out at the
     documents footer probe (before any driver-side column read) and
     leave the face on the distributed plan with identical results."""
@@ -719,16 +714,13 @@ def test_merge_base_doc_gate_falls_back_to_distributed(spark):
     local = sorted(
         tuple(r) for r in E.g_merge_base(spark, SF_ORACLE).collect()
     )
-    old = E.MB_DOC_LOCAL_ROW_MAX
-    E.MB_DOC_LOCAL_ROW_MAX = 0
-    try:
+    with monkeypatch.context() as mp:
+        mp.setitem(placement.CAPS, "MB_DOC_LOCAL_ROW_MAX", 0)
         assert E._fixture_doc_messages_local(SF_ORACLE) is None
         assert E._merge_base_local(spark, SF_ORACLE) is None
         dist = sorted(
             tuple(r) for r in E.g_merge_base(spark, SF_ORACLE).collect()
         )
-    finally:
-        E.MB_DOC_LOCAL_ROW_MAX = old
     assert local == dist
 
 
@@ -778,20 +770,16 @@ def test_fuzzy_block_single_word_names_not_dropped(spark):
     assert ("anvi", "anvil") in pairs
 
 
-def test_pagerank_local_twin_matches_distributed(spark, pr_edges):
+def test_pagerank_local_twin_matches_distributed(spark, pr_edges, monkeypatch):
     """The round-12 driver-local PageRank twin must equal the
     distributed join/groupBy rounds exactly — including the drop-out
     semantics (nodes that receive no contribution leave the rank
     frame) — with PR_LOCAL_EDGE_MAX pinned to 0 forcing the
     distributed path on the same edges."""
-    from hfcommunity_spark.operators import graph as G
     from hfcommunity_spark.operators.graph import pagerank_fixed
 
     local = {tuple(r) for r in pagerank_fixed(pr_edges).collect()}
-    old = G.PR_LOCAL_EDGE_MAX
-    G.PR_LOCAL_EDGE_MAX = 0
-    try:
+    with monkeypatch.context() as mp:
+        mp.setitem(placement.CAPS, "PR_LOCAL_EDGE_MAX", 0)
         dist = {tuple(r) for r in pagerank_fixed(pr_edges).collect()}
-    finally:
-        G.PR_LOCAL_EDGE_MAX = old
     assert local == dist and len(local) > 0

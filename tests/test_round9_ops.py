@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from hfcommunity_spark.operators import placement
 from tests.conftest import SF_SMOKE
 
 
@@ -625,10 +626,10 @@ def test_x15_frees_invocation_checkpoints(spark):
     assert second - first <= 3
 
 
-def test_x15_local_serve_matches_catalog_serve(spark):
+def test_x15_local_serve_matches_catalog_serve(spark, monkeypatch):
     """Round-13 serve surgery: each delivery's serve is a driver-local
     pyarrow read of the bucket layout (the x17 probe applied to the
-    serve side); with X15_SERVE_LOCAL_ROW_MAX pinned to 0 every serve
+    serve side); with SERVE_LOCAL_ROW_MAX pinned to 0 every serve
     is a hardlink snapshot + lazy distributed read (r15 — the x17
     snapshot-serve pattern; before r15, a catalog read + eager
     checkpoint).  The two must be value-identical — disk state and
@@ -641,15 +642,12 @@ def test_x15_local_serve_matches_catalog_serve(spark):
         dd.x15_stream_maintained_clusters(spark, SF_SMOKE).collect()
     )
     assert local, "x15 served no rows"
-    old = dd.X15_SERVE_LOCAL_ROW_MAX
-    dd.X15_SERVE_LOCAL_ROW_MAX = 0
-    try:
+    with monkeypatch.context() as mp:
+        mp.setitem(placement.CAPS, "SERVE_LOCAL_ROW_MAX", 0)
         dist = sorted(
             tuple(r) for r in
             dd.x15_stream_maintained_clusters(spark, SF_SMOKE).collect()
         )
-    finally:
-        dd.X15_SERVE_LOCAL_ROW_MAX = old
     assert local == dist
 
 

@@ -13,8 +13,8 @@ distributed-path regression stayed invisible until the next sporadic
 scale rehearsal.
 
 This tool runs each face in a fresh subprocess session with EVERY
-driver-local cap pinned to 0 (the exact configuration the parity tests
-lock), times it best-of-2 at $SPARK_GRAFT_SF_DIR (default sf0.1), and
+driver-local cap pinned to 0 (``placement.distributed()``, the
+configuration tests/test_placement.py checks against the oracles), times it best-of-2 at $SPARK_GRAFT_SF_DIR (default sf0.1), and
 writes BENCH_DIST.json with the same calibration block as bench.py —
 one artifact per round, shape-locked by tests/test_bench_contract.py.
 
@@ -34,24 +34,6 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-# Every driver-local fast-path cap, by module attribute.  Pinning all
-# of them to 0 in the worker forces each face onto its distributed
-# plan — the same pinning the per-face parity tests apply
-# (tests/test_graph.py, test_mergeops.py, test_llmops.py).
-CAPS = (
-    ("hfcommunity_spark.operators.etlops", "MB_LOCAL_WORK_MAX"),
-    ("hfcommunity_spark.operators.etlops", "MB_DOC_LOCAL_ROW_MAX"),
-    ("hfcommunity_spark.operators.graph", "ANC_LOCAL_WORK_MAX"),
-    ("hfcommunity_spark.operators.graph", "PR_LOCAL_EDGE_MAX"),
-    ("hfcommunity_spark.operators.graph", "QUOTIENT_LOCAL_EDGE_MAX"),
-    ("hfcommunity_spark.operators.graph", "WRITER_LOCAL_ROW_MAX"),
-    ("hfcommunity_spark.operators.dedup", "X15_SERVE_LOCAL_ROW_MAX"),
-    ("hfcommunity_spark.operators.dedup", "X17_SERVE_LOCAL_ROW_MAX"),
-    ("hfcommunity_spark.operators.dedup", "SPAN_LOCAL_ROW_MAX"),
-    ("hfcommunity_spark.operators.dedup", "SPAN_LOCAL_READ_BYTE_MAX"),
-    ("hfcommunity_spark.operators.mergeops", "X19_LOCAL_ROW_MAX"),
-)
-
 DIST_FACES = (
     "g_commit_ancestors",
     "g_merge_base",
@@ -68,23 +50,6 @@ def _sf_dir() -> str:
     return bench_sf_dir()
 
 
-def _pin_caps() -> dict[str, int]:
-    import importlib
-
-    pinned = {}
-    for mod_name, attr in CAPS:
-        mod = importlib.import_module(mod_name)
-        if not hasattr(mod, attr):
-            # an explicit raise, not assert: under python -O the
-            # assert would vanish and setattr would create a DEAD
-            # attribute — the face would silently run its twin while
-            # the artifact claims the distributed path was measured
-            raise RuntimeError(f"cap moved: {mod_name}.{attr}")
-        setattr(mod, attr, 0)
-        pinned[f"{mod_name.rsplit('.', 1)[-1]}.{attr}"] = 0
-    return pinned
-
-
 def _worker(name: str) -> None:
     """Fresh session, ALL caps pinned to 0, shallow warm, best-of-2
     timing + the bench calibration pair; one JSON line on stdout.
@@ -95,23 +60,24 @@ def _worker(name: str) -> None:
     the timed attempts and leave the pre-attempt sentinel clean — the
     first x15 recording read 51.7 s against a 0.28/0.24 start sentinel
     exactly that way.  The end reading makes that case adjudicable."""
-    pinned = _pin_caps()
     from bench import _calibrate, _warm
 
+    from hfcommunity_spark.operators import placement
     from hfcommunity_spark.queries import all_queries
     from hfcommunity_spark.session import get_spark
 
     spark = get_spark(app_name="hfcommunity-bench-dist")
     spark.sparkContext.setLogLevel("ERROR")
-    _warm(spark)
-    cal = _calibrate(spark)
-    spec = all_queries()[name]
-    attempts = []
-    for _ in range(2):
-        t0 = time.monotonic()
-        spec.spark(spark, _sf_dir()).count()
-        attempts.append(round(time.monotonic() - t0, 4))
-    end = _calibrate(spark)
+    with placement.distributed() as pinned:
+        _warm(spark)
+        cal = _calibrate(spark)
+        spec = all_queries()[name]
+        attempts = []
+        for _ in range(2):
+            t0 = time.monotonic()
+            spec.spark(spark, _sf_dir()).count()
+            attempts.append(round(time.monotonic() - t0, 4))
+        end = _calibrate(spark)
     cal["cpu_loop_sec_end"] = end["cpu_loop_sec"]
     cal["spark_scan_sec_end"] = end["spark_scan_sec"]
     print(json.dumps({

@@ -3,8 +3,9 @@
 (guide §1: measure first; §7.1: find where the time goes before
 touching anything).
 
-Runs ONE face in this process with every driver-local cap pinned to 0
-(the dist_bench worker's configuration), wrapping the Spark scheduler
+Runs ONE face in this process under ``placement.distributed()`` (every
+driver-local cap pinned to 0, the dist_bench worker's configuration),
+wrapping the Spark scheduler
 with a job-event listener tally and the face's own module functions
 with wall-clock timers, then prints a per-phase breakdown.
 
@@ -22,7 +23,8 @@ from collections import defaultdict
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-from tools.dist_bench import _pin_caps, _sf_dir  # noqa: E402
+from hfcommunity_spark.operators import placement  # noqa: E402
+from tools.dist_bench import _sf_dir  # noqa: E402
 
 
 def _wrap(mod, fn_names: list[str], tally: dict) -> None:
@@ -53,7 +55,6 @@ def _wrap(mod, fn_names: list[str], tally: dict) -> None:
 def main() -> None:
     name = sys.argv[1]
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    _pin_caps()
 
     tally: dict = defaultdict(lambda: [0.0, 0])
     _wrap("hfcommunity_spark.operators.graph", [
@@ -82,19 +83,21 @@ def main() -> None:
 
     spark = get_spark(app_name="hfc-profile-face")
     spark.sparkContext.setLogLevel("ERROR")
-    _warm(spark)
-    spec = all_queries()[name]
     runs = []
-    for i in range(n_runs):
-        for k in tally:
-            tally[k] = [0.0, 0]
-        t0 = time.monotonic()
-        spec.spark(spark, _sf_dir()).count()
-        total = time.monotonic() - t0
-        runs.append(round(total, 3))
-        print(f"--- run {i}: total {total:.3f}s")
-        for k, (sec, n) in sorted(tally.items(), key=lambda kv: -kv[1][0]):
-            print(f"    {k:55s} {sec:7.3f}s  n={n}")
+    with placement.distributed():
+        _warm(spark)
+        spec = all_queries()[name]
+        for i in range(n_runs):
+            for k in tally:
+                tally[k] = [0.0, 0]
+            t0 = time.monotonic()
+            spec.spark(spark, _sf_dir()).count()
+            total = time.monotonic() - t0
+            runs.append(round(total, 3))
+            print(f"--- run {i}: total {total:.3f}s")
+            for k, (sec, n) in sorted(tally.items(),
+                                      key=lambda kv: -kv[1][0]):
+                print(f"    {k:55s} {sec:7.3f}s  n={n}")
     print(json.dumps({"name": name, "runs": runs}))
     spark.stop()
 

@@ -31,13 +31,16 @@ sidesteps with skip thresholds, databaseImport.py:374-382).
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hfcommunity_spark.io import read_table
-from hfcommunity_spark.operators import placement
 from hfcommunity_spark.registry import query
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 _E, _U = "__merge_e", "__merge_u"
 
@@ -395,8 +398,7 @@ def _scd2_runs(events: DataFrame, key: str, state: str,
     run-collapse filter in the plan and cannot be reordered past it
     (the collapse predicate reads ``lag`` output, which only exists
     above this node), so the check evaluates for EVERY delivery row,
-    absorbed ones included — the completeness the round-10 review
-    demanded."""
+    absorbed ones included."""
     w = Window.partitionBy(key).orderBy(ts, tiebreak)
     wall = w.rowsBetween(Window.unboundedPreceding,
                          Window.unboundedFollowing)
@@ -490,7 +492,7 @@ def d5_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ts="ts", tiebreak="event_id")
 
 
-# --- round 9: the SCD2 dimension under a STREAM of deliveries ----------
+# --- x19: the SCD2 dimension under a STREAM of deliveries --------------
 
 X19_DELIVERIES = 3
 
@@ -514,30 +516,28 @@ def scd2_delta(dim: DataFrame, changes: DataFrame,
     any same-timestamp delivery event) and re-runs the gaps-and-
     islands transform over seed ∪ delivery only.
 
-    Contract enforcement (ADVICE r9, fused r11): a violating event —
-    one timestamped before its key's fold watermark — would silently
-    sort ahead of the seed pseudo-event and corrupt closed history,
-    so the fold plan itself raises via ``assert_true``.  Since round
-    11 the check rides the recompute's OWN window pass (the seed row
-    carries the watermark; an unbounded-frame ``max`` broadcasts it
-    to every delivery row over the same sort — see
-    :func:`_scd2_runs`), replacing the former broadcast join: one
-    fewer job per fold, still map-side, still complete.  The
-    watermark is the open row's ``valid_from``, UNLESS the dimension
-    carries a ``_last_event_ts`` column (see :func:`scd2_track_seed`),
-    in which case it is the key's LAST FOLDED EVENT TIME — the
-    complete check: ``valid_from`` alone cannot see an event that
-    lands between the open run's start and a later already-absorbed
-    same-state event (round-10 review finding).  The tracked column
-    is likewise maintained inside the same window pass (no per-fold
-    groupBy+join): open rows carry the key's max folded ts; closed
-    rows carry a fold-time snapshot from the fold that closed them
-    (unspecified metadata — consumers must only read the watermark on
-    open rows).  Serving selects drop it.
+    Contract enforcement: a violating event — one timestamped before
+    its key's fold watermark — would silently sort ahead of the seed
+    pseudo-event and corrupt closed history, so the fold plan itself
+    raises via ``assert_true``.  The check rides the recompute's own
+    window pass (the seed row carries the watermark; an
+    unbounded-frame ``max`` broadcasts it to every delivery row over
+    the same sort — see :func:`_scd2_runs`), so it costs no join and
+    no job, and stays map-side and complete.  The watermark is the
+    open row's ``valid_from``, UNLESS the dimension carries a
+    ``_last_event_ts`` column (see :func:`scd2_track_seed`), in which
+    case it is the key's LAST FOLDED EVENT TIME — the complete check:
+    ``valid_from`` alone cannot see an event that lands between the
+    open run's start and a later already-absorbed same-state event.
+    The tracked column is likewise maintained inside the same window
+    pass (no per-fold groupBy+join): open rows carry the key's max
+    folded ts; closed rows carry a fold-time snapshot from the fold
+    that closed them (unspecified metadata — consumers must only read
+    the watermark on open rows).  Serving selects drop it.
 
     Exactness (fold chain == one-shot :func:`scd2_history` over the
-    union, at every prefix) is locked by the x19 oracle and the
-    round-9 tests."""
+    union, at every prefix) is locked by
+    ``tests/test_round9_ops.py``."""
     parts = scd2_delta_split(
         dim.filter(F.col("valid_to").isNull()),
         changes, key=key, state=state, ts=ts, tiebreak=tiebreak,
@@ -553,10 +553,9 @@ def scd2_delta_split(open_rows: DataFrame, changes: DataFrame,
     fold closes.  Closed history never enters the fold plan at all —
     the caller carries it as an append-only sequence of immutable
     pieces (at 100 TB: the fold's materialized frame is bounded by
-    |keys| + |delivery|, never by history size; see
-    ``x19_stream_scd2_dim`` for the maintained lifecycle that
-    exploits this).  Untouched open rows pass through via a broadcast
-    anti join; affected open rows seed the gaps-and-islands recompute
+    |keys| + |delivery|, never by history size; :func:`_x19_kernel`
+    runs the same fold on arrays).  Untouched open rows pass through
+    via a broadcast anti join; affected open rows seed the recompute
     with the in-order guard and the fold watermark fused into its
     single window pass (:func:`_scd2_runs`)."""
     track = "_last_event_ts" in open_rows.columns
@@ -606,222 +605,108 @@ def scd2_track_seed(dim: DataFrame, events: DataFrame,
     ).drop("_l")
 
 
-def _parquet_row_count(path: str) -> int | None:
-    """Exact row count of a local parquet file/dir from the footers —
-    a ZERO-Spark-job gate input (driver-side pyarrow metadata reads,
-    ~ms for a handful of files).  None on any failure — remote/object
-    storage, missing path, non-parquet — and the caller falls back to
-    the bounded JVM-side count."""
-    import pyarrow.dataset as pads
+def _x19_kernel(t: pa.Table, n_top: int) -> pa.Table:
+    """The x19 lifecycle over one group of users' events: the base
+    build, the three delivery folds and the three serves, as
+    vectorized numpy runs-collapse.  ``t`` holds every event of its
+    users (``user_id``, ``ts``, ``event_id``, ``event_type``, none
+    null); ``n_top`` is the whole feed's ``max(event_id) + 1``, so
+    every group cuts the feed at the same id quartiles as
+    :func:`_x19_cut_sql`.
 
-    try:
-        ds = pads.dataset(path, format="parquet")
-        total = 0
-        for frag in ds.get_fragments():
-            md = frag.metadata
-            if md is None:
-                return None
-            total += md.num_rows
-        return total
-    except Exception:
-        return None
+    Each fold is :func:`scd2_delta_split` on arrays: the delivery's
+    keys' open rows seed the recompute at their ``valid_from`` with
+    tiebreak −1 (before any same-timestamp delivery event), and the
+    runs collapse under the (ts, event_id) sort of :func:`_scd2_runs`.
+    An open row carries its key's fold watermark, the last folded
+    event time.  A delivery event before it breaks the in-order
+    contract and raises ``ValueError``; under the contract a key's
+    closed rows never change.  Delivery k serves every closed row ∪
+    every open row, tagged ``delivery_id`` k.
 
-
-def _x19_fold_local(spark, ev: DataFrame, width: int,
-                    n_rows_hint: int | None = None):
-    """Driver-local twin of the x19 SCD2 stream lifecycle (the x15/x17
-    one-scan lesson applied to the merge family): ONE guarded Arrow
-    collect of the event feed, then the base build and every
-    delivery's :func:`scd2_delta_split` fold run as vectorized numpy
-    runs-collapse over the id-quartile slices — value-identical to the
-    distributed window pass (same (ts, event_id) sort, seed tiebreak
-    −1, in-order guard against the key's fold watermark, absorbed-
-    event watermark advance) — and the three serve states upload as
-    ONE local relation.  TWO Spark jobs — the Arrow collect and the
-    final checkpoint; pinned in ``tests/test_fold_job_budget.py`` —
-    instead of ~11 (base build, 3×3-job folds, serve); the gate is
-    the caller-provided ``n_rows_hint`` (an EXACT parquet-footer
-    count, round 13) falling back to a bounded JVM-side count (2
-    incremental-limit jobs) when no hint is available.
-
-    Returns None — before any work beyond the collect — when a gate
-    fails (row cap, unexpected dtypes); an in-order-contract violation
-    RAISES (the distributed ``assert_true`` contract: corrupt folds
-    must fail loudly, not fall back).  Parity with the distributed
-    lifecycle is test-locked (``tests/test_mergeops.py``)."""
+    Bound: the face groups events by ``pmod(xxhash64(user_id),
+    width)``, so one Python worker holds about |events| / width rows
+    as a handful of int64 arrays."""
     import numpy as np
     import pyarrow as pa
 
-    cap = placement.CAPS["X19_LOCAL_ROW_MAX"]
-    # cheap pre-gate: decide before the Arrow collect pays to move
-    # rows — an over-cap feed otherwise shipped cap+1 rows to the
-    # driver just to learn it must fall back (measured ~1.5 s at the
-    # sf3 corpus).  The hint is exact-by-construction (parquet footer
-    # metadata of the unfiltered feed); without one, a bounded COUNT
-    # (no data transfer) runs JVM-side.
-    n = n_rows_hint
-    if n is None:
-        n = ev.limit(cap + 1).count()
-    if n > cap or n == 0:
-        return None
-    t = ev.toArrow()
-    try:
-        uid = t.column("user_id").to_numpy()
-        eid = t.column("event_id").to_numpy()
-        tsv = t.column("ts").cast(pa.int64()).to_numpy()
-        etypes = np.asarray(t.column("event_type"))
-    except (pa.lib.ArrowException, ValueError):
-        return None
-    if uid.dtype != np.int64 or eid.dtype != np.int64:
-        return None
-    states, code = np.unique(etypes, return_inverse=True)
-    n_top = int(eid.max()) + 1
-    cuts = [(n_top * m + 3) // 4 for m in range(5)]
+    cols = ("user_id", "ts", "event_id", "event_type")
+    if any(t.column(c).null_count for c in cols):
+        raise ValueError(f"x19: null in one of {cols}")
+    uid = t.column("user_id").to_numpy().astype(np.int64)
+    tsv = t.column("ts").cast(pa.int64()).to_numpy()
+    eid = t.column("event_id").to_numpy()
+    states = t.column("event_type").combine_chunks().dictionary_encode()
+    code = states.indices.to_numpy().astype(np.int64)
+    # 0 = base, k + 1 = delivery k
+    part = np.searchsorted([(n_top * m + 3) // 4 for m in (1, 2, 3)],
+                           eid, side="right")
 
-    def runs_over(u, c, tt, tb):
-        """Gaps-and-islands over (key, state, ts, tiebreak) arrays:
-        returns per-run (key, state_code, valid_from, valid_to_or_-1,
-        has_valid_to) plus per-key max event ts — the exact
-        _scd2_runs collapse under the same (ts, tiebreak) sort."""
-        order = np.lexsort((tb, tt, u))
-        u, c, tt = u[order], c[order], tt[order]
-        first = np.empty(len(u), bool)
-        first[0] = True
-        first[1:] = u[1:] != u[:-1]
-        change = first | np.concatenate(
-            ([True], c[1:] != c[:-1])
-        )
-        ru, rc, rf = u[change], c[change], tt[change]
-        last_run = np.empty(len(ru), bool)
-        last_run[-1] = True
-        last_run[:-1] = ru[1:] != ru[:-1]
-        rto = np.empty(len(ru), np.int64)
-        rto[:-1] = rf[1:]
-        rto[last_run] = -1
-        # per-key max ts = the ts of each key's LAST input row (sorted)
-        key_last = np.empty(len(u), bool)
-        key_last[-1] = True
-        key_last[:-1] = u[1:] != u[:-1]
-        return ru, rc, rf, rto, ~last_run, u[key_last], tt[key_last]
-
-    closed_u: list = []
-    closed_c: list = []
-    closed_f: list = []
-    closed_t: list = []
-    open_state: dict = {}   # uid -> (code, valid_from)
-    last_ts: dict = {}      # uid -> max folded event ts
-
-    def fold_slice(lo: int, hi: int, with_seeds: bool) -> None:
-        m = (eid >= lo) & (eid < hi)
-        d_u, d_c, d_t, d_b = uid[m], code[m], tsv[m], eid[m]
-        if not len(d_u):
-            return
-        if with_seeds:
-            aff = np.unique(d_u)
-            seeded = [k for k in aff.tolist() if k in open_state]
-            su = np.fromiter(seeded, np.int64, len(seeded))
-            sc = np.fromiter(
-                (open_state[k][0] for k in seeded), np.int64,
-                len(seeded),
-            )
-            st = np.fromiter(
-                (open_state[k][1] for k in seeded), np.int64,
-                len(seeded),
-            )
-            # in-order guard: every delivery event must be >= its
-            # key's fold watermark (complete check: _last_event_ts)
-            wm = {k: last_ts[k] for k in seeded}
-            if seeded:
-                aff_s = np.array(sorted(wm), np.int64)
-                wm_s = np.fromiter(
-                    (wm[k] for k in aff_s.tolist()), np.int64,
-                    len(aff_s),
+    none = np.empty(0, np.int64)
+    # open rows sorted by key: key, state, valid_from, fold watermark
+    ou, oc, of, ow = none, none, none, none
+    closed: list[tuple] = []   # (key, state, valid_from, valid_to)
+    served: list[tuple] = []   # (delivery_id, key, state, from, to, open)
+    for k in range(X19_DELIVERIES + 1):
+        m = part == k
+        du, dc, dt, db = uid[m], code[m], tsv[m], eid[m]
+        seeded = np.isin(ou, du)
+        su, sw = ou[seeded], ow[seeded]
+        if len(su):
+            i = np.minimum(np.searchsorted(su, du), len(su) - 1)
+            bad = (su[i] == du) & (dt < sw[i])
+            if bad.any():
+                j = int(np.argmax(bad))
+                raise ValueError(
+                    f"scd2_delta: delivery event at {dt[j]} predates "
+                    f"the key's fold watermark {sw[i[j]]} for "
+                    f"user_id={du[j]} — the in-order (watermark) "
+                    "delivery contract is violated"
                 )
-                idx = np.searchsorted(aff_s, d_u)
-                idx_ok = (idx < len(aff_s))
-                has = np.zeros(len(d_u), bool)
-                has[idx_ok] = aff_s[idx[idx_ok]] == d_u[idx_ok]
-                bad = has & (d_t < wm_s[np.minimum(idx, len(aff_s) - 1)])
-                if bad.any():
-                    i = int(np.argmax(bad))
-                    raise ValueError(
-                        f"scd2_delta: delivery event at {d_t[i]} "
-                        f"predates the key's fold watermark "
-                        f"{wm[int(d_u[i])]} for user_id={d_u[i]} — "
-                        "the in-order (watermark) delivery contract "
-                        "is violated"
-                    )
-            u2 = np.concatenate([su, d_u])
-            c2 = np.concatenate([sc, d_c])
-            t2 = np.concatenate([st, d_t])
-            b2 = np.concatenate(
-                [np.full(len(su), -1, np.int64), d_b]
-            )
-        else:
-            u2, c2, t2, b2 = d_u, d_c, d_t, d_b
-        ru, rc, rf, rto, has_to, ku, kt = runs_over(u2, c2, t2, b2)
-        closed_u.append(ru[has_to])
-        closed_c.append(rc[has_to])
-        closed_f.append(rf[has_to])
-        closed_t.append(rto[has_to])
-        op = ~has_to
-        for k, c_, f_ in zip(ru[op].tolist(), rc[op].tolist(),
-                             rf[op].tolist()):
-            open_state[k] = (c_, f_)
-        for k, mx in zip(ku.tolist(), kt.tolist()):
-            # seeds carry valid_from (<= the old watermark), so the
-            # per-key max over seed∪delivery can only advance it
-            last_ts[k] = max(last_ts.get(k, mx), mx)
-
-    fold_slice(0, cuts[1], with_seeds=False)
-    out_k: list = []
-    out_u: list = []
-    out_c: list = []
-    out_f: list = []
-    out_t: list = []
-    out_m: list = []   # valid_to null mask (True = null)
-    for k in range(X19_DELIVERIES):
-        fold_slice(cuts[k + 1], cuts[k + 2], with_seeds=True)
-        cu = np.concatenate(closed_u) if closed_u else np.empty(0, np.int64)
-        cc = np.concatenate(closed_c) if closed_c else np.empty(0, np.int64)
-        cf = np.concatenate(closed_f) if closed_f else np.empty(0, np.int64)
-        ct = np.concatenate(closed_t) if closed_t else np.empty(0, np.int64)
-        ou = np.fromiter(open_state.keys(), np.int64, len(open_state))
-        oc = np.fromiter(
-            (v[0] for v in open_state.values()), np.int64,
-            len(open_state),
-        )
-        of = np.fromiter(
-            (v[1] for v in open_state.values()), np.int64,
-            len(open_state),
-        )
-        n = len(cu) + len(ou)
-        out_k.append(np.full(n, k, np.int32))
-        out_u.append(np.concatenate([cu, ou]))
-        out_c.append(np.concatenate([cc, oc]))
-        out_f.append(np.concatenate([cf, of]))
-        out_t.append(np.concatenate([ct, np.zeros(len(ou), np.int64)]))
-        out_m.append(np.concatenate(
-            [np.zeros(len(cu), bool), np.ones(len(ou), bool)]
-        ))
-    vt = pa.timestamp("us")
-    tbl = pa.table({
-        "delivery_id": pa.array(np.concatenate(out_k), pa.int32()),
-        "user_id": pa.array(np.concatenate(out_u), pa.int64()),
-        "state": pa.array(
-            states[np.concatenate(out_c)].tolist(), pa.string()
-        ),
-        "valid_from": pa.array(np.concatenate(out_f)).cast(vt),
-        "valid_to": pa.array(
-            np.concatenate(out_t), mask=np.concatenate(out_m)
-        ).cast(vt),
+        if len(du):
+            u = np.concatenate([su, du])
+            c = np.concatenate([oc[seeded], dc])
+            f = np.concatenate([of[seeded], dt])
+            o = np.lexsort((np.concatenate([np.full(len(su), -1), db]),
+                            f, u))
+            u, c, f = u[o], c[o], f[o]
+            new_key = u[1:] != u[:-1]
+            run = np.concatenate(([True], new_key | (c[1:] != c[:-1])))
+            ru, rc, rf = u[run], c[run], f[run]
+            last = np.append(ru[1:] != ru[:-1], True)
+            rto = np.append(rf[1:], 0)
+            closed.append((ru[~last], rc[~last], rf[~last], rto[~last]))
+            # the watermark is the key's max ts over seed ∪ delivery:
+            # the guard keeps it from moving back
+            keep = ~seeded
+            ou = np.concatenate([ou[keep], ru[last]])
+            o = np.argsort(ou, kind="stable")
+            ou = ou[o]
+            oc = np.concatenate([oc[keep], rc[last]])[o]
+            of = np.concatenate([of[keep], rf[last]])[o]
+            ow = np.concatenate([ow[keep], f[np.append(new_key, True)]])[o]
+        if k:
+            cu, cc, cf, ct = (np.concatenate([p[x] for p in closed] or
+                                             [none]) for x in range(4))
+            served.append((
+                np.full(len(cu) + len(ou), k - 1, np.int32),
+                np.concatenate([cu, ou]),
+                np.concatenate([cc, oc]),
+                np.concatenate([cf, of]),
+                np.concatenate([ct, np.zeros(len(ou), np.int64)]),
+                np.concatenate([np.zeros(len(cu), bool),
+                                np.ones(len(ou), bool)]),
+            ))
+    dk, u, c, f, to, is_open = (np.concatenate([s[x] for s in served])
+                                for x in range(6))
+    ts_type = t.schema.field("ts").type
+    return pa.table({
+        "delivery_id": pa.array(dk, pa.int32()),
+        "user_id": pa.array(u, pa.int64()),
+        "state": states.dictionary.take(pa.array(c)),
+        "valid_from": pa.array(f).cast(ts_type),
+        "valid_to": pa.array(to, mask=is_open).cast(ts_type),
     })
-    out = spark.createDataFrame(tbl).select(
-        "delivery_id", "user_id", "state",
-        F.col("valid_from").cast("timestamp_ntz").alias("valid_from"),
-        F.col("valid_to").cast("timestamp_ntz").alias("valid_to"),
-    )
-    return out.coalesce(width).localCheckpoint()
 
 
 def _x19_cut_sql(k: int) -> str:
@@ -865,111 +750,42 @@ def _x19_oracle() -> str:
 
 @query("x19_stream_scd2_dim", _x19_oracle(), survey="X7,D2,D3,D4,W2")
 def x19_stream_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCD2 user-state dimension maintained under a STREAM of
-    deliveries and served after each — the merge family's member of
-    the streamed maintained-index convention (x14 BM25, x15 clusters,
-    x16 ANN, x17 spans).  The event feed splits into a base quarter
-    plus three in-order deliveries (id quartiles == time quartiles in
-    the synthetic feed; a deployment's watermark provides the same
-    in-order guarantee); each delivery folds through
-    :func:`scd2_delta`, touching only the affected keys' open rows.
-    The oracle restates each prefix corpus through the d5 SQL from
-    scratch — hash equality proves the fold chain equals a rebuild at
-    every delivery, including open rows closing retroactively-never
-    (closed history is immutable under the contract).
+    """The SCD2 user-state dimension maintained under a stream of
+    deliveries and served after each: the merge family's member of the
+    streamed maintained-index convention (x14 BM25, x15 clusters, x16
+    ANN, x17 spans).  The event feed splits into a base quarter plus
+    three in-order deliveries (id quartiles are time quartiles in the
+    synthetic feed; a deployment's watermark gives the same in-order
+    guarantee).  Each delivery folds only its keys' open rows.  The
+    oracle restates each prefix corpus through the d5 SQL from
+    scratch, so hash equality proves the fold chain equals a rebuild
+    at every delivery.
 
     Serving the whole dimension per delivery is the test-scale oracle
     contract; a deployment upserts the recomputed rows key-bucketed.
 
-    Round-11 lifecycle: the dimension is maintained as OPEN rows (one
-    eagerly-checkpointed frame, |keys|-bounded) plus an append-only
-    list of CLOSED pieces (each checkpointed once, in the fold that
-    closed it, then never touched again).  Each fold materializes ONE
-    frame — post-fold open rows ∪ newly-closed rows, bounded by
-    |keys| + |delivery| regardless of history depth
-    (:func:`scd2_delta_split`); the closed history is only ever READ,
-    at serve time.  That is the property the sf1→sf3 growth step
-    graded in round 10: per-fold cost must not scale with accumulated
-    history."""
-    from hfcommunity_spark.operators.graph import (
-        _eager_checkpoint,
-        materialize_and_free,
-        pinned_block_ids,
-    )
+    A key's fold never reads another key, so the plan is one
+    ``max(event_id) + 1`` collect, then :func:`_x19_kernel` once per
+    user bucket (``pmod(xxhash64(user_id), width)``; bucketing keeps
+    the group count at the session width, where grouping by raw
+    ``user_id`` pays a Python call per user), then one local
+    checkpoint.  An in-order violation surfaces as the kernel's
+    ``ValueError`` inside a ``PythonException``."""
     from hfcommunity_spark.session import default_parallelism
 
     width = default_parallelism()
-    import os
-
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    # round 12/13: the one-scan driver-local twin (two Spark jobs,
-    # budget-pinned — the gate reads parquet footers driver-side; the
-    # projection drops no rows, so the table count IS the feed
-    # count); gates fall back to the distributed lifecycle unchanged
-    local = _x19_fold_local(
-        spark, ev, width,
-        n_rows_hint=_parquet_row_count(
-            os.path.join(sf_dir, "events.parquet")
-        ),
-    )
-    if local is not None:
-        return local
     n_top = ev.agg(
         (F.max("event_id") + 1).alias("n")
     ).collect()[0].n  # one-row bounded collect (the codebook rule)
-
-    def slice_k(lo_mult: int, hi_mult: int) -> DataFrame:
-        # the oracle's exact arithmetic is event_id*4 vs n_top*mult;
-        # over INTEGER event_ids that is equivalent to plain range
-        # bounds with ceil-divided cuts — and plain comparisons reach
-        # the parquet scan as pushed row-group filters, where the
-        # arithmetic form scanned the full feed per slice (4 full
-        # scans per invocation; linear-in-corpus cold cost at sf3)
-        lo_cut = (n_top * lo_mult + 3) // 4
-        hi_cut = (n_top * hi_mult + 3) // 4
-        return ev.filter(
-            (F.col("event_id") >= F.lit(lo_cut))
-            & (F.col("event_id") < F.lit(hi_cut))
-        )
-
-    before = pinned_block_ids(spark)
-    # the maintained dimension carries its fold watermark
-    # (_last_event_ts) so the in-order check is complete — fused into
-    # the base build's own window pass (r10 verdict ask: no separate
-    # seed groupBy+join); serving drops the column below
-    dim0, _ = _eager_checkpoint(
-        scd2_history(slice_k(0, 1), key="user_id", state="event_type",
-                     ts="ts", tiebreak="event_id",
-                     with_last_ts=True).coalesce(width)
+    ts = ev.schema["ts"].dataType.simpleString()
+    out = ev.groupBy(
+        F.pmod(F.xxhash64("user_id"), F.lit(width))
+    ).applyInArrow(
+        lambda t: _x19_kernel(t, n_top),
+        "delivery_id int, user_id long, state string, "
+        f"valid_from {ts}, valid_to {ts}",
     )
-    open_rows = dim0.filter(F.col("valid_to").isNull())
-    closed_pieces: list[DataFrame] = [
-        dim0.filter(F.col("valid_to").isNotNull())
-    ]
-    served: list[DataFrame] = []
-    for k in range(X19_DELIVERIES):
-        folded = scd2_delta_split(
-            open_rows, slice_k(k + 1, k + 2),
-            key="user_id", state="event_type",
-            ts="ts", tiebreak="event_id",
-        )
-        # ONE materialization per fold, |keys|+|delivery|-bounded;
-        # coalesce (no shuffle) keeps task count at session width
-        folded, _ = _eager_checkpoint(folded.coalesce(width))
-        open_rows = folded.filter(F.col("valid_to").isNull())
-        closed_pieces.append(folded.filter(F.col("valid_to").isNotNull()))
-        piece = open_rows
-        for c in closed_pieces:
-            piece = piece.unionByName(c)
-        served.append(
-            piece.select(
-                F.lit(k).cast("int").alias("delivery_id"),
-                "user_id", "state", "valid_from", "valid_to",
-            )
-        )
-    out = served[0]
-    for s in served[1:]:
-        out = out.unionByName(s)
-    return materialize_and_free(spark, before, out.coalesce(width))
+    return out.coalesce(width).localCheckpoint()

@@ -47,12 +47,10 @@ CAPS: dict[str, int] = {
     # file bytes of the touched postings buckets the local span probe
     # reads, checked against file sizes before any read
     "SPAN_LOCAL_READ_BYTE_MAX": 256 << 20,
-    # rows per x15/x17 local serve read: three serves share one upload,
-    # so 3×cap stays under the 3M-row upload where x19's local path lost
+    # rows per x15/x17 local serve read: three serves share one upload
+    # of 3×cap rows, and a 3M-row local upload measured slower than
+    # the distributed serve
     "SERVE_LOCAL_ROW_MAX": 600_000,
-    # x19 event rows, at the measured crossover: local wins at 1M
-    # (2.5 vs 3.5 s warm) and loses at 3M (7.9 vs 5.1 s)
-    "X19_LOCAL_ROW_MAX": 2_000_000,
 }
 
 

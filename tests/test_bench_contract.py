@@ -169,17 +169,17 @@ def test_dist_bench_artifact_shape():
     """VERDICT r13 ask #1: the caps-zeroed arm's artifact is
     shape-locked — per-face seconds, the pinned caps inventory
     (ALL caps, each 0), per-face + top-level (min) calibration,
-    scan-normalized ratios, and the six twin-gated faces in the
-    standing face list."""
+    scan-normalized ratios, the recording's provenance, and the five
+    twin-gated faces in the standing face list."""
     from hfcommunity_spark.operators import placement
     from tools.dist_bench import DIST_FACES, build_dist_payload
 
     assert set(DIST_FACES) == {
         "g_commit_ancestors", "g_merge_base", "g_pagerank_fixed_iter",
         "x15_stream_maintained_clusters", "x17_stream_maintained_spans",
-        "x19_stream_scd2_dim",
     }
     caps = dict.fromkeys(placement.CAPS, 0)
+    prov = {"git_sha": "abc", "nproc": 4}
     rows = [
         {"name": n, "sec": 1.0 + i,
          "attempts": [1.3 + i, 1.0 + i],
@@ -187,7 +187,7 @@ def test_dist_bench_artifact_shape():
                          "cpu_loop_n": 5_000_000,
                          "spark_scan_sec": 0.2 + i * 0.01,
                          "spark_scan_rows": 100_000_000},
-         "caps_zeroed": caps}
+         "caps_zeroed": caps, "provenance": prov}
         for i, n in enumerate(DIST_FACES)
     ]
     p = build_dist_payload(rows, 0.1)
@@ -203,6 +203,7 @@ def test_dist_bench_artifact_shape():
     # every pinned cap is in the artifact, each at 0
     assert p["caps_zeroed"] == caps and all(
         v == 0 for v in p["caps_zeroed"].values())
+    assert p["provenance"] == prov
     # top-level calibration is the min across workers
     assert p["calibration"] == {"cpu_loop_sec": 0.3, "spark_scan_sec": 0.2}
     assert set(p["per_face_calibration"]) == set(DIST_FACES)
@@ -222,7 +223,9 @@ def test_dist_bench_artifact_shape():
             d = json.load(fh)
         assert d["metric"] == p["metric"]
         assert set(d["queries"]) == set(DIST_FACES)
+        assert set(d["caps_zeroed"]) == set(placement.CAPS)
         assert all(v == 0 for v in d["caps_zeroed"].values())
+        assert d["provenance"]["nproc"]
 
 
 def test_warm_prefix_env_validation(monkeypatch):

@@ -7,7 +7,9 @@ assertion, generalized).
 
 Budgets, by design of each fold:
 
-- x19 (SCD2): :func:`scd2_delta_split` is PURE PLAN CONSTRUCTION —
+- x19 (SCD2): the face itself is a fixed 4 jobs (one-row collect +
+  one grouped kernel pass).  The library fold
+  :func:`scd2_delta_split` is PURE PLAN CONSTRUCTION —
   zero jobs; materializing a fold costs exactly 3: AQE builds the
   anti- and semi-probe broadcast stages (one each — the shared
   delivery-keys frame is not exchange-reused across join types) plus
@@ -32,9 +34,10 @@ from pyspark.sql import functions as F
 
 
 @contextmanager
-def _job_budget(spark, budget: int, what: str):
+def _job_budget(spark, budget: int, what: str, exact: bool = False):
     """Run the body under a throwaway job group and assert it
-    scheduled at most ``budget`` Spark jobs."""
+    scheduled at most ``budget`` Spark jobs (exactly ``budget`` when
+    ``exact``)."""
     sc = spark.sparkContext
     group = f"hfc-job-budget-{what}"
     sc.setJobGroup(group, what)
@@ -43,7 +46,7 @@ def _job_budget(spark, budget: int, what: str):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= budget, (
+    assert len(jobs) == budget if exact else len(jobs) <= budget, (
         f"{what}: fold scheduled {len(jobs)} jobs "
         f"(budget {budget}): {sorted(jobs)}"
     )
@@ -107,39 +110,25 @@ def test_bm25_fold_job_budget(spark):
     assert dl.count() == 3
 
 
-def test_x19_local_twin_job_budget(spark):
-    """The x19 driver-local one-scan fold schedules exactly 2 jobs
-    when the caller supplies the parquet-footer row-count hint (the
-    Arrow collect + the final local-relation checkpoint), and 4
-    without one (the bounded gate count runs as two incremental-limit
-    jobs) — independent of delivery count (VERDICT r12 #5: a future
-    edit that sneaks a per-delivery job into the twin flips this
-    test, not a bench number)."""
+def test_x19_kernel_job_budget(spark):
+    """The x19 face schedules exactly 4 jobs at sf0.01, independent of
+    delivery count: the one-row ``max(event_id)`` collect (partial
+    aggregate stage + final stage) and the grouped kernel pass
+    (shuffle stage + local checkpoint).  A per-delivery job sneaking
+    in flips this test, not a bench number."""
     from hfcommunity_spark.io import read_table
-    from hfcommunity_spark.operators.mergeops import (
-        _parquet_row_count,
-        _x19_fold_local,
-    )
+    from hfcommunity_spark.operators.etlops import _parquet_row_count
+    from hfcommunity_spark.operators.mergeops import x19_stream_scd2_dim
+    from tests.conftest import SF_ORACLE as sf
 
-    ev = read_table(spark, "/root/testdata/sf0.01", "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
+    ev = read_table(spark, sf, "events")
     ev.schema  # footer/schema job billed to the read, not the fold
-    hint = _parquet_row_count("/root/testdata/sf0.01/events.parquet")
-    # the hint is EXACT: footer metadata equals the real count
-    assert hint == ev.count()
-    with _job_budget(spark, 2, "x19-local-twin-hinted"):
-        out = _x19_fold_local(spark, ev, 8, n_rows_hint=hint)
-    assert out is not None and len(out.columns) == 5
-    with _job_budget(spark, 4, "x19-local-twin-unhinted"):
-        out2 = _x19_fold_local(spark, ev, 8)
-    assert out2 is not None
-    # an over-cap hint gates out with ZERO jobs (the 100 TB shape)
-    with _job_budget(spark, 0, "x19-local-twin-overcap"):
-        assert _x19_fold_local(
-            spark, ev, 8, n_rows_hint=10**12
-        ) is None
-    # unreadable/remote paths yield no hint, never a wrong one
+    with _job_budget(spark, 4, "x19-kernel", exact=True):
+        out = x19_stream_scd2_dim(spark, sf)
+    assert len(out.columns) == 5
+    # the footer count is EXACT: it equals the real count
+    assert _parquet_row_count(f"{sf}/events.parquet") == ev.count()
+    # unreadable/remote paths yield no count, never a wrong one
     assert _parquet_row_count("/nonexistent/events.parquet") is None
 
 

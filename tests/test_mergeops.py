@@ -10,7 +10,6 @@ import duckdb
 import pandas as pd
 import pytest
 
-from hfcommunity_spark.operators import placement
 from hfcommunity_spark.operators.mergeops import (
     insert_ignore,
     partial_update,
@@ -153,63 +152,18 @@ def _x19_events(spark, rows):
     )
 
 
-def test_x19_local_fold_matches_distributed(spark, tmp_path, monkeypatch):
-    """The round-12 one-scan driver-local x19 twin must produce the
-    exact distributed lifecycle output (X19_LOCAL_ROW_MAX pinned to 0
-    forces the fallback) — runs, retro-closures, per-delivery
-    snapshots, schema and all."""
-    from hfcommunity_spark.queries import all_queries
-
-    spec = all_queries()["x19_stream_scd2_dim"]
-    sf = "/root/testdata/sf0.01"
-    local = spec.spark(spark, sf)
-    assert [f.name for f in local.schema.fields] == [
-        "delivery_id", "user_id", "state", "valid_from", "valid_to"
-    ]
-    local_rows = {tuple(r) for r in local.collect()}
-    with monkeypatch.context() as mp:
-        mp.setitem(placement.CAPS, "X19_LOCAL_ROW_MAX", 0)
-        dist = spec.spark(spark, sf)
-        dist_rows = {tuple(r) for r in dist.collect()}
-        assert [f.dataType for f in local.schema.fields] == [
-            f.dataType for f in dist.schema.fields
-        ]
-    assert local_rows == dist_rows and len(local_rows) > 0
-
-
-def test_x19_local_fold_job_budget(spark):
-    """The one-scan twin's whole lifecycle — base build, three folds,
-    three serves — schedules at most FOUR Spark jobs: the bounded
-    gate count (up to two under AQE's staged limit execution), the
-    Arrow collect, and the final local-relation checkpoint."""
-    from hfcommunity_spark.io import read_table
-    from hfcommunity_spark.operators.mergeops import _x19_fold_local
-
-    ev = read_table(spark, "/root/testdata/sf0.01", "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    sc = spark.sparkContext
-    group = "hfc-x19-local-budget"
-    sc.setJobGroup(group, "x19 local fold")
-    try:
-        out = _x19_fold_local(spark, ev, 4)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert out is not None
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 4, sorted(jobs)
-    assert out.count() > 0
-
-
-def test_x19_local_fold_guard_raises_like_distributed(spark):
+def test_x19_kernel_guard_raises(spark, tmp_path):
     """An out-of-order delivery (an event timestamped before its
-    key's fold watermark) must RAISE from the local twin — never fall
-    back silently — exactly as the distributed fold's map-side
-    assert_true does.  Key 1's base run starts at ts=100 (watermark
-    100); its delivery-0 event at ts=50 violates the contract."""
-    import pytest
+    key's fold watermark) raises: ``ValueError`` from the kernel
+    itself, a ``PythonException`` through the face's grouped plan.
+    Key 1's base run starts at ts=100 (watermark 100); its
+    delivery-0 event at ts=50 violates the contract."""
+    from pyspark.errors import PythonException
 
-    from hfcommunity_spark.operators.mergeops import _x19_fold_local
+    from hfcommunity_spark.operators.mergeops import (
+        _x19_kernel,
+        x19_stream_scd2_dim,
+    )
 
     # n_top = 8 -> cuts [0,2,4,6,8]: base ids {0,1}, deliveries
     # {2,3}, {4,5}, {6,7}
@@ -221,7 +175,10 @@ def test_x19_local_fold_guard_raises_like_distributed(spark):
         (1, 400, 6, "b"), (2, 40, 7, "b"),
     ])
     with pytest.raises(ValueError, match="in-order.*contract"):
-        _x19_fold_local(spark, ev, 4)
+        _x19_kernel(ev.toArrow(), 8)
+    ev.write.parquet(str(tmp_path / "events.parquet"))
+    with pytest.raises(PythonException, match="in-order.*contract"):
+        x19_stream_scd2_dim(spark, str(tmp_path))
     # and a clean in-order feed folds fine
     ok = _x19_events(spark, [
         (1, 100, 0, "a"), (2, 10, 1, "a"),
@@ -229,11 +186,11 @@ def test_x19_local_fold_guard_raises_like_distributed(spark):
         (1, 300, 4, "a"), (2, 30, 5, "a"),
         (1, 400, 6, "b"), (2, 40, 7, "b"),
     ])
-    out = _x19_fold_local(spark, ok, 4)
-    rows = {(r.delivery_id, r.user_id, r.state,
-             r.valid_from.microsecond, 
-             r.valid_to.microsecond if r.valid_to else None)
-            for r in out.collect()}
+    out = _x19_kernel(ok.toArrow(), 8)
+    rows = {(r["delivery_id"], r["user_id"], r["state"],
+             r["valid_from"].microsecond,
+             r["valid_to"].microsecond if r["valid_to"] else None)
+            for r in out.to_pylist()}
     # delivery 0 closes key 1's 'a' run at 150 and opens 'b'
     assert (0, 1, "a", 100, 150) in rows
     assert (0, 1, "b", 150, None) in rows

@@ -470,7 +470,7 @@ def test_scd2_delta_equals_rebuild_any_split(spark):
 
 
 def test_scd2_split_lifecycle_equals_rebuild_every_prefix(spark):
-    """The round-11 SPLIT lifecycle (x19's shape): maintain open rows
+    """The SPLIT lifecycle: maintain open rows
     plus append-only closed pieces through scd2_delta_split, with the
     tracked fold watermark, and assert open ∪ pieces equals the
     one-shot scd2_history AT EVERY PREFIX — including that rows closed

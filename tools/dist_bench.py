@@ -1,24 +1,24 @@
 #!/usr/bin/env python
 """Caps-zeroed bench arm (VERDICT r13 ask #1): per-round perf evidence
-for the DISTRIBUTED plans behind the six twin-gated faces.
+for the DISTRIBUTED plans behind the five twin-gated faces.
 
-Six faces take gated driver-local fast paths at bench scale
+Five faces take gated driver-local fast paths at bench scale
 (g_merge_base, g_commit_ancestors, g_pagerank_fixed_iter,
-x19_stream_scd2_dim, x15_stream_maintained_clusters,
-x17_stream_maintained_spans).  Their distributed plans — the ones the
-100 TB story depends on — are parity-locked for CORRECTNESS with the
-caps pinned to 0, but before r14 their PERFORMANCE had no per-round
-recording: the in-suite and solo numbers are twin numbers, so a silent
+x15_stream_maintained_clusters, x17_stream_maintained_spans).  Their
+distributed plans — the ones the 100 TB story depends on — are
+parity-locked for CORRECTNESS with the caps pinned to 0, but before
+r14 their PERFORMANCE had no per-round recording: the in-suite and solo numbers are twin numbers, so a silent
 distributed-path regression stayed invisible until the next sporadic
 scale rehearsal.
 
 This tool runs each face in a fresh subprocess session with EVERY
 driver-local cap pinned to 0 (``placement.distributed()``, the
 configuration tests/test_placement.py checks against the oracles), times it best-of-2 at $SPARK_GRAFT_SF_DIR (default sf0.1), and
-writes BENCH_DIST.json with the same calibration block as bench.py —
+writes BENCH_DIST.json with the same calibration block as bench.py
+and the provenance block of tools/etl_bench.py (git sha, nproc, ...) —
 one artifact per round, shape-locked by tests/test_bench_contract.py.
 
-Usage:  python tools/dist_bench.py            # all six, writes artifact
+Usage:  python tools/dist_bench.py            # all five, writes artifact
         python tools/dist_bench.py --only g_merge_base   # subset, stdout only
         python tools/dist_bench.py --worker NAME         # (internal)
 """
@@ -40,7 +40,6 @@ DIST_FACES = (
     "g_pagerank_fixed_iter",
     "x15_stream_maintained_clusters",
     "x17_stream_maintained_spans",
-    "x19_stream_scd2_dim",
 )
 
 
@@ -65,6 +64,7 @@ def _worker(name: str) -> None:
     from hfcommunity_spark.operators import placement
     from hfcommunity_spark.queries import all_queries
     from hfcommunity_spark.session import get_spark
+    from tools.etl_bench import _provenance
 
     spark = get_spark(app_name="hfcommunity-bench-dist")
     spark.sparkContext.setLogLevel("ERROR")
@@ -91,6 +91,7 @@ def _worker(name: str) -> None:
         "attempts": attempts,
         "calibration": cal,
         "caps_zeroed": pinned,
+        "provenance": _provenance(spark),
     }))
     spark.stop()
 
@@ -144,6 +145,7 @@ def build_dist_payload(rows: list[dict], sf_val,
                 rows, key=lambda r: r["name"]) if r.get("attempts")
         },
         "caps_zeroed": rows[0]["caps_zeroed"] if rows else {},
+        "provenance": rows[0].get("provenance") if rows else None,
         "regime": (
             "one fresh-session subprocess per face; every driver-"
             "local cap pinned to 0 (the distributed plans the 100 TB "

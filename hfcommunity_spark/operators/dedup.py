@@ -1862,32 +1862,41 @@ _X15_PAIRS_FORCED: set = set()
        survey="X7,D3,D4,J5,S13,X-UD5")
 def x15_stream_maintained_clusters(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    """The maintained near-dup CLUSTER assignment held as a
-    CATALOG-registered, bucket-partitioned table and served after EACH
-    of three streamed deliveries — the full 100 TB maintained-table
-    lifecycle as driver evidence: per delivery, the arriving batch's
+    """The maintained near-dup CLUSTER assignment held as two
+    CATALOG-registered, bucket-partitioned tables and served after EACH
+    of three streamed deliveries — the maintained-table lifecycle a
+    daily 100 TB deployment runs.  Per delivery, the arriving batch's
     τ-pairs come from :func:`jaccard_pair_delta` (delivery-bounded
-    probe of the standing posting index), endpoint labels resolve via
-    partition-pruned CATALOG reads of the vertex layout
-    (``component_merge_plan_pruned``), and BOTH persisted projections
-    are rewritten in place (``apply_relabel_in_place`` /
-    ``apply_changes_vertex_layout``) with their partition METADATA
-    kept in step through ``ALTER TABLE ADD/DROP PARTITION``
-    (``graph._sync_catalog_partitions``).  The metadata sync is
-    load-bearing: a delivery's fresh vertices land in previously
-    ABSENT v_buckets, so if the writer failed to register them, the
-    NEXT delivery's catalog-pruned endpoint lookup would miss those
-    rows, re-treat the vertices as fresh, and diverge from the oracle.
+    probe of the standing posting index) and
+    :func:`graph.fold_components_delivery` folds them into both
+    projections in place — the component layout (``c_bucket``) and the
+    vertex layout (``v_bucket``, the endpoint lookups) — deciding once
+    per delivery whether the fold runs on the driver or as the
+    distributed chain.  Either way the fold keeps both tables'
+    partition METADATA in step through ``ALTER TABLE ADD/DROP
+    PARTITION``.  The metadata sync is load-bearing: a delivery's fresh
+    vertices land in previously ABSENT v_buckets, and the distributed
+    chain resolves the next delivery's endpoints through the catalog,
+    so a missed ADD would re-treat those vertices as fresh and diverge
+    from the oracle.
+
+    One guarded scan of the pair state splits the whole stream into
+    per-delivery edge rows (at most 3 × ``QUOTIENT_LOCAL_EDGE_MAX``
+    edges in all; above that each fold gets a lazy per-delivery
+    filter).
+    Each delivery's state is served as it stands after its fold: a
+    driver-local pyarrow read of the component layout under
+    ``SERVE_LOCAL_ROW_MAX``, else a flat hardlink snapshot of its
+    files read lazily.
 
     The oracle restates each prefix corpus as a from-scratch
     recursive-CTE closure — hash equality proves the catalog-table
-    fold chain equals a rebuild AT EVERY DELIVERY.  The same fold body
-    runs under a real Structured Streaming ``foreachBatch`` in
-    ``tests/test_graph.py`` (the x10–x14 twin convention).
+    fold chain equals a rebuild AT EVERY DELIVERY.  The same fold runs
+    under a real Structured Streaming ``foreachBatch`` in
+    ``tests/test_graph.py``.
 
     Reference parity: the reference re-imports the full dump per run
-    (``extractor/databaseImport.py`` has no incremental story); this
-    face is the scale extension a daily 100 TB deployment runs.
+    (``extractor/databaseImport.py`` has no incremental story).
     Re-invoking is idempotent by construction — each invocation folds
     into a fresh private copy of the pristine base table."""
     import os
@@ -1895,11 +1904,12 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     import tempfile
     import uuid
 
+    import pyarrow as pa
+
     from hfcommunity_spark.session import default_parallelism
     from hfcommunity_spark.operators.graph import (
-        apply_changes_vertex_layout,
-        apply_relabel_in_place,
-        component_merge_plan_pruned,
+        _sync_catalog_partitions,
+        fold_components_delivery,
         materialize_and_free,
         pinned_block_ids,
     )
@@ -1914,7 +1924,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     # (app, sf_dir): after the first force the session persist
     # (MEMORY_AND_DISK in one JVM — spills, never drops) holds the
     # blocks, so re-counting per invocation was a pure fixed-cost job
-    # (~0.23 s/invocation measured, VERDICT r12 #6).
+    # (~0.23 s/invocation measured).
     pairs = _delta_post_jaccard_pairs(spark, sf_dir)
     fkey = (spark.sparkContext.applicationId, sf_dir)
     if fkey not in _X15_PAIRS_FORCED:
@@ -1931,23 +1941,16 @@ def x15_stream_maintained_clusters(spark: SparkSession,
         )
 
     # ONE pairs scan splits the whole stream into per-delivery edge
-    # sets (round 11): deriving each fold's edges lazily re-scanned
-    # the corpus-scale cached pair frame once per delivery (~1 s/fold
-    # at sf3).  The guarded collect is bounded by the per-delivery
-    # contract × the delivery count; if it overflows, edges_by_k
-    # stays None and each fold falls back to the lazy per-fold filter
-    # (the distributed plan's own guard then applies per delivery).
-    from hfcommunity_spark.operators.graph import _local_frame
-    from pyspark.sql import types as T
-
+    # rows: deriving each fold's edges lazily re-scanned the
+    # corpus-scale cached pair frame once per delivery (~1 s/fold at
+    # sf3).  The guarded collect is bounded by the per-delivery
+    # contract × the delivery count; if it overflows, edges_by_k stays
+    # None and each fold gets the lazy per-delivery filter.  A cap of
+    # 0 skips the collect; a Row collect, not bounded_arrow: a limited
+    # collect() and a limited toArrow() schedule differently
     quot_cap = placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]
     edge_cap = X15_DELIVERIES * quot_cap + 1
     edges_by_k: dict[int, list] | None = None
-    # cap pinned to 0 means "never local": skip the guarded collect
-    # outright instead of running a limit(1) job whose answer is
-    # already known (r14 — one wasted job in the caps-zeroed arm).  A
-    # Row collect, not bounded_arrow: a limited collect() and a
-    # limited toArrow() schedule differently
     if quot_cap > 0:
         split_rows = (
             pairs.filter(thr)
@@ -1966,10 +1969,6 @@ def x15_stream_maintained_clusters(spark: SparkSession,
             edges_by_k = {}
             for r in split_rows:
                 edges_by_k.setdefault(r.k, []).append((r.src, r.dst))
-    edge_schema = T.StructType([
-        T.StructField("src", T.LongType()),
-        T.StructField("dst", T.LongType()),
-    ])
 
     run = uuid.uuid4().hex[:12]
     work = tempfile.mkdtemp(prefix=f"hfc_x15_work_{run}_")
@@ -1985,10 +1984,6 @@ def x15_stream_maintained_clusters(spark: SparkSession,
 
     served: list[DataFrame] = []
     try:
-        from hfcommunity_spark.operators.graph import (
-            _sync_catalog_partitions,
-        )
-
         for tname, tdir, pcol in (
             (ctab, cdir, "c_bucket"), (vtab, vdir, "v_bucket"),
         ):
@@ -2005,14 +2000,11 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                 added=list(bucketed.bucket_files(tdir, pcol)),
                 dropped=(),
             )
-        import pyarrow as pa
 
         local_serves: list = []  # Arrow tables, delivery-tagged
         for k in range(X15_DELIVERIES):
             if edges_by_k is not None:
-                new_edges = _local_frame(
-                    spark, edges_by_k.get(k, []), edge_schema
-                )
+                new_edges = edges_by_k.get(k, [])
             else:
                 new_edges = pairs.filter(thr).filter(
                     F.greatest(_arrival("doc_a"), _arrival("doc_b")) == k
@@ -2020,83 +2012,41 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                     F.col("doc_a").alias("src"),
                     F.col("doc_b").alias("dst"),
                 )
-            fresh, relabel = component_merge_plan_pruned(
-                spark, spark.table(vtab), new_edges, X15_BUCKETS,
-                vertex_dir=vdir,
+            fold_components_delivery(
+                spark, cdir, vdir, new_edges, X15_BUCKETS,
+                ctable=ctab, vtable=vtab,
             )
-            # the relabel writer derives the vertex-projection change
-            # set from its own pruned scan (return_changes) — one
-            # partition-pruned read serves both projections
-            changed = apply_relabel_in_place(
-                spark, cdir, relabel, buckets=X15_BUCKETS, fresh=fresh,
-                assign_rel=spark.table(ctab), table_name=ctab,
-                return_changes=True,
+            # serve: the table MUTATES in place next fold, so each
+            # state is captured now — a driver-local pyarrow read of
+            # the layout files
+            st = bucketed.read_table(
+                cdir, "c_bucket", ("vertex", "component"),
+                placement.CAPS["SERVE_LOCAL_ROW_MAX"],
             )
-            # the vertex-projection write and the SERVE are
-            # independent (the serve reads the c layout, the writer
-            # mutates the v layout; ``changed`` is materialized), so
-            # they overlap from a driver thread (guide §2.6) — the
-            # next fold's endpoint lookups read the v layout, so the
-            # write is joined before this iteration ends
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=1) as _ex:
-                vfut = _ex.submit(
-                    apply_changes_vertex_layout,
-                    spark, vdir, changed, X15_BUCKETS,
-                    vertex_rel=spark.table(vtab), table_name=vtab,
+            if st is not None:
+                local_serves.append(st.append_column(
+                    "delivery_id",
+                    pa.array([k] * st.num_rows, pa.int32()),
+                ))
+            else:
+                # failed local gate: freeze this delivery's state as a
+                # flat HARDLINK snapshot and serve it lazily — the
+                # writers only ever replace whole files, so the linked
+                # names keep the old inodes alive through later folds,
+                # the one-directory read lists without a Spark job, and
+                # the final union materializes every serve once
+                snap = os.path.join(work, f"serve{k}")
+                bucketed.flat_snapshot(cdir, "c_bucket", snap)
+                served.append(
+                    spark.read.schema("vertex BIGINT, component BIGINT")
+                    .parquet(snap).select(
+                        F.lit(k).cast("int").alias("delivery_id"),
+                        F.col("vertex").alias("doc_id"),
+                        "component",
+                    # coalesce (no shuffle): serving at session width
+                    # bounds the serve union's tasks per serve
+                    ).coalesce(default_parallelism())
                 )
-                # serve: the table MUTATES in place next fold, so
-                # each state must be captured now.  Driver-local
-                # pyarrow read of the layout files (the x17 probe
-                # applied to the serve side — replaces a 64-partition
-                # catalog scan + eager checkpoint JOB per delivery,
-                # ~0.27 s each measured); a failed gate sends THIS
-                # serve to the catalog read.
-                try:
-                    st = bucketed.read_table(
-                        cdir, "c_bucket", ("vertex", "component"),
-                        placement.CAPS["SERVE_LOCAL_ROW_MAX"],
-                    )
-                    if st is not None:
-                        local_serves.append(st.append_column(
-                            "delivery_id",
-                            pa.array([k] * st.num_rows, pa.int32()),
-                        ))
-                    else:
-                        # failed local gate: freeze this delivery's
-                        # state as a HARDLINK snapshot and serve it
-                        # LAZILY (r15 — the x17 snapshot-serve
-                        # pattern): the writers only ever replace
-                        # whole files, so the linked names keep the
-                        # old inodes alive through later folds'
-                        # dynamic overwrites, and the per-delivery
-                        # eager-checkpoint job the catalog read needed
-                        # for mutation isolation is gone (the final
-                        # union materializes every serve once).
-                        snap = os.path.join(work, f"serve{k}")
-                        bucketed.snapshot(cdir, snap)
-                        served.append(
-                            spark.read.schema(
-                                "vertex BIGINT, component BIGINT, "
-                                "c_bucket INT"
-                            ).parquet(snap).select(
-                                F.lit(k).cast("int").alias("delivery_id"),
-                                F.col("vertex").alias("doc_id"),
-                                "component",
-                            # coalesce (no shuffle): the snapshot read
-                            # carries one partition per bucket dir;
-                            # serving at session width keeps the
-                            # serve union at ~32 tasks per serve
-                            # instead of ~64
-                            ).coalesce(default_parallelism())
-                        )
-                finally:
-                    # ALWAYS surface the threaded vertex write's
-                    # outcome (ADVICE r14): a serve exception would
-                    # otherwise mask a concurrent write failure (the
-                    # fold aborts either way; only the report is lost)
-                    vfut.result()
         if local_serves:
             served.append(spark.createDataFrame(
                 pa.concat_tables(local_serves).select(

@@ -16,7 +16,6 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from hfcommunity_spark.operators import bucketed, placement
 
@@ -307,16 +306,40 @@ def connected_components(edges: DataFrame, src: str = "src",
     return labels
 
 
+def _min_labels(a, b):
+    """Connected components of the undirected int64 edges ``(a[i],
+    b[i])``: returns ``(verts, labels)``, the sorted distinct endpoints
+    and, for each, the minimum id of its component.  Fully vectorized:
+    per round, every vertex takes the min label across its edges (two
+    ``minimum.at`` scatters), then pointer-jumps (``label[label]``) to
+    a fixpoint — label paths halve per jump, so rounds are O(log
+    diameter) and every round is C-speed numpy (a per-edge Python
+    union-find loop would spend minutes at ``CC_LOCAL_EDGE_LIMIT``).
+    Labels are vertex indices in ascending-id order, so the converged
+    label IS the component minimum — identical to the star path.
+    Self-loops and duplicate edges change nothing."""
+    import numpy as np
+
+    verts, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ai, bi = inv[: len(a)], inv[len(a):]
+    label = np.arange(len(verts), dtype=np.int64)
+    while True:
+        prev = label.copy()
+        np.minimum.at(label, ai, label[bi])
+        np.minimum.at(label, bi, label[ai])
+        while True:  # pointer jumping
+            nxt = label[label]
+            if np.array_equal(nxt, label):
+                break
+            label = nxt
+        if np.array_equal(label, prev):
+            break
+    return verts, verts[label]
+
+
 def _local_union_find(e: DataFrame) -> DataFrame:
-    """(vertex, component) over the (already checkpointed) edge frame
-    in a single executor task, fully vectorized: per round, every
-    vertex takes the min label across its edges (two ``minimum.at``
-    scatters), then pointer-jumps (``label[label]``) to a fixpoint —
-    label paths halve per jump, so rounds are O(log diameter) and
-    every round is C-speed numpy over int64 arrays (a per-edge Python
-    union-find loop would spend minutes at the 4M-edge limit).  Labels
-    are vertex indices in ascending-id order, so the converged label
-    IS the component minimum — identical to the star path."""
+    """(vertex, component) over the (already checkpointed) ``(a, b)``
+    edge frame: :func:`_min_labels` in a single executor task."""
 
     def uf(batches):
         import numpy as np
@@ -330,21 +353,8 @@ def _local_union_find(e: DataFrame) -> DataFrame:
              else np.empty(0, np.int64))
         b = (np.concatenate(chunks_b) if chunks_b
              else np.empty(0, np.int64))
-        verts, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-        ai, bi = inv[: len(a)], inv[len(a):]
-        label = np.arange(len(verts), dtype=np.int64)
-        while True:
-            prev = label.copy()
-            np.minimum.at(label, ai, label[bi])
-            np.minimum.at(label, bi, label[ai])
-            while True:  # pointer jumping
-                nxt = label[label]
-                if np.array_equal(nxt, label):
-                    break
-                label = nxt
-            if np.array_equal(label, prev):
-                break
-        yield pd.DataFrame({"vertex": verts, "component": verts[label]})
+        verts, labels = _min_labels(a, b)
+        yield pd.DataFrame({"vertex": verts, "component": labels})
 
     return e.coalesce(1).mapInPandas(uf, "vertex long, component long")
 
@@ -638,60 +648,22 @@ def component_merge_plan(
     relabel = _quotient_relabel(spark, quot)
     # materialize the (delivery-bounded) fresh rows, then free the
     # delivery checkpoint blocks: relabel is already independent of
-    # them (driver rows on the local path, re-checkpointed on the
-    # distributed path), so nothing returned derives from e and a
+    # them (re-checkpointed), so nothing returned derives from e and a
     # caller folding a stream of deliveries must not accumulate pinned
     # blocks per delivery — the same discipline as the pruned variant
-    # below (round-8 review finding).
+    # below.
     fresh, _f_ids = _eager_checkpoint(fresh)
     _free_checkpoint(spark, _e_ids)
     return fresh, relabel
 
 
-def _driver_union_find(edges) -> list[tuple]:
-    """Min-label union-find over an iterable of (a, b) edges, driver
-    side — the bounded-collect workhorse behind both quotient-relabel
-    paths.  Returns the (old_label, new_label) pairs for every label
-    that merges into a smaller one (identity rows omitted)."""
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    labels: dict = {}
-    for v in set(parent):
-        labels.setdefault(find(v), []).append(v)
-    return [
-        (v, root)
-        for root, members in labels.items()
-        for v in members
-        if v != root
-    ]
-
-
 def _quotient_relabel(spark, quot: DataFrame) -> DataFrame | None:
     """Quotient edges → (component, merged) relabel map, or ``None``
-    when nothing merges.  The quotient is delivery-bounded by
-    contract; the local union-find replaces the distributed CC
-    machinery below ``QUOTIENT_LOCAL_EDGE_MAX`` edges (bounded
-    collect, the histogram/codebook discipline).
-
-    r15 job diet (guide §2 — the caps-zeroed arm pays each fixed-cost
-    job per delivery): the dedup checkpoint is LAZY and the count it
-    needs anyway materializes it (one job, was two), and the over-cap
-    branch dispatches the CC machinery INLINE on the already-distinct,
-    already-checkpointed quotient — calling ``connected_components``
-    re-paid a distinct shuffle + checkpoint + count on a frame that
-    just had all three."""
+    when nothing merges.  The dedup checkpoint is lazy and the count it
+    needs anyway materializes it (one job), and the CC machinery runs
+    inline on the already-distinct, already-checkpointed quotient —
+    calling ``connected_components`` would re-pay a distinct shuffle,
+    checkpoint and count on a frame that just had all three."""
     quot, quot_ids = _lazy_checkpoint(
         quot.filter(F.col("src") != F.col("dst")).distinct()
     )
@@ -699,70 +671,40 @@ def _quotient_relabel(spark, quot: DataFrame) -> DataFrame | None:
     if n_quot == 0:
         _free_checkpoint(spark, quot_ids)
         return None
-    if n_quot <= placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]:
-        # the quotient is delivery-bounded BY CONTRACT, and here it is
-        # tiny: a driver-side min-label union-find replaces the full
-        # distributed CC machinery (its per-round shuffles + eager
-        # checkpoints + probe jobs cost ~2 s of fixed overhead at any
-        # data size).  Bounded collect, the histogram/codebook
-        # discipline; the distributed path remains the fallback and is
-        # exercised by tests that pin this threshold to 0.
-        pairs = _driver_union_find(
-            (row.src, row.dst) for row in quot.collect()
-        )
-        _free_checkpoint(spark, quot_ids)
-        if not pairs:
-            return None
-        vt = quot.schema["src"].dataType
-        relabel = spark.createDataFrame(
-            pairs,
-            T.StructType([
-                T.StructField("component", vt),
-                T.StructField("merged", vt),
-            ]),
-        )
+    # connected_components' adaptive dispatch, inlined over the
+    # checkpointed quotient (same integral-types rule and the same
+    # single-task/star split; results identical — distinct of a
+    # distinct frame)
+    integral = all(
+        f.dataType.simpleString()
+        in ("bigint", "int", "smallint", "tinyint")
+        for f in quot.schema.fields
+    )
+    edges = quot.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    if integral and n_quot <= CC_LOCAL_EDGE_LIMIT:
+        labels = _local_union_find(edges)
     else:
-        # connected_components' adaptive dispatch, inlined over the
-        # checkpointed quotient (same integral-types rule and the same
-        # single-task/star split; results identical — distinct of a
-        # distinct frame)
-        integral = all(
-            f.dataType.simpleString()
-            in ("bigint", "int", "smallint", "tinyint")
-            for f in quot.schema.fields
+        labels, _rounds, converged = _star_rounds(
+            spark, edges, quot_ids, n_quot, 25,
         )
-        if integral and n_quot <= CC_LOCAL_EDGE_LIMIT:
-            labels = _local_union_find(
-                quot.select(F.col("src").alias("a"),
-                            F.col("dst").alias("b"))
+        if not converged:
+            raise RuntimeError(
+                "connected_components did not converge in 25 "
+                "large/small-star rounds; raise max_iters"
             )
-        else:
-            labels, _rounds, converged = _star_rounds(
-                spark,
-                quot.select(F.col("src").alias("a"),
-                            F.col("dst").alias("b")),
-                quot_ids, n_quot, 25,
-            )
-            if not converged:
-                raise RuntimeError(
-                    "connected_components did not converge in 25 "
-                    "large/small-star rounds; raise max_iters"
-                )
-        relabel = (
-            labels
-            .filter(F.col("vertex") != F.col("component"))
-            .select(
-                F.col("vertex").alias("component"),
-                F.col("component").alias("merged"),
-            )
+    relabel = (
+        labels
+        .filter(F.col("vertex") != F.col("component"))
+        .select(
+            F.col("vertex").alias("component"),
+            F.col("component").alias("merged"),
         )
-        # the relabel map is small (merged components only): pin it,
-        # then free the quotient checkpoint blocks — the merge path
-        # used to leak them for the session, exactly the storage
-        # growth _free_checkpoint exists to prevent (round-6 review
-        # finding)
-        relabel, _relabel_ids = _eager_checkpoint(relabel)
-        _free_checkpoint(spark, quot_ids)
+    )
+    # the relabel map is small (merged components only): pin it, then
+    # free the quotient checkpoint blocks so a stream of deliveries
+    # pins nothing per delivery
+    relabel, _relabel_ids = _eager_checkpoint(relabel)
+    _free_checkpoint(spark, quot_ids)
     return relabel
 
 
@@ -846,9 +788,10 @@ def _xxh64_long(value: int, seed: int = 42) -> int:
     """``F.xxhash64`` of ONE BIGINT value, driver-side: the standard
     XXH64 single-8-byte-lane path with Spark's default seed 42,
     returned as a signed 64-bit int exactly like the SQL function.
-    Exists so bucket ids of DRIVER-LOCAL frames (relabel maps, fresh
-    rows — bounded by contract) cost zero Spark jobs; parity with the
-    JVM expression is property-locked in tests/test_graph.py, and
+    Exists so the local fold's bucket ids (endpoints, relabel maps,
+    fresh rows — bounded by contract) cost zero Spark jobs; parity
+    with the JVM expression is property-locked in tests/test_graph.py,
+    and
     :func:`_bucket_expr` remains the single source of truth for
     anything distributed."""
     h = (seed + _XXP5 + 8) & _M64
@@ -917,8 +860,8 @@ def _write_tasks(n_buckets: int) -> int:
     return max(1, -(-n_buckets // 16))
 
 
-# The assignment layouts' data columns as the driver-local reader and
-# writer see them (the Spark writer's two-column int64 output).
+# The assignment layouts' data columns as the local fold reads and
+# writes them (the Spark writer's two-column int64 output).
 _ASSIGN_COLS = ("vertex", "component")
 _ASSIGN_FIELDS = tuple((c, pa.int64()) for c in _ASSIGN_COLS)
 
@@ -926,14 +869,14 @@ _ASSIGN_FIELDS = tuple((c, pa.int64()) for c in _ASSIGN_COLS)
 def _sync_catalog_partitions(spark, table_name: str, pcol: str,
                              added, dropped) -> None:
     """Keep a catalog-registered layout's partition METADATA in step
-    with the path-based writers: dynamic overwrite to the LOCATION
-    creates/empties directories the metastore never hears about, so a
+    with the path-based writers: a write to the LOCATION creates and
+    empties directories the metastore never hears about, so a
     catalog-pruned read would miss a fresh bucket or touch a dropped
-    one (round-8 review finding).  Both lists are bounded by the
-    delivery, and each folds into ONE multi-partition ALTER statement
-    (never MSCK's O(buckets) re-listing; the one-statement-per-bucket
-    form cost ~11 ms × 64 churning buckets × deliveries — measured
-    1.8 s of the x15 lifecycle before batching)."""
+    one.  Both lists are bounded by the delivery, and each folds into
+    ONE multi-partition ALTER statement (never MSCK's O(buckets)
+    re-listing; the one-statement-per-bucket form cost ~11 ms × 64
+    churning buckets × deliveries — measured 1.8 s of the x15
+    lifecycle before batching)."""
     if added:
         specs = " ".join(
             f"PARTITION ({pcol}={int(b)})" for b in sorted(added)
@@ -956,168 +899,64 @@ def apply_relabel_in_place(spark, assign_dir: str,
                            table_name: str | None = None,
                            return_changes: bool = False
                            ) -> DataFrame | None:
-    """The maintained-table WRITER: fold a delivery's merge plan —
-    BOTH halves of :func:`component_merge_plan`'s return — into the
-    component-bucketed assignment in place, rewriting ONLY the
-    affected partitions (dynamic partition overwrite).  Relabeled
-    rows move to their merged component's bucket, and ``fresh``
+    """The component-layout stage of the distributed fold: apply a
+    delivery's merge plan — both halves of a merge plan's return —
+    to the component-bucketed assignment in place, rewriting ONLY the
+    affected partitions (dynamic partition overwrite).  Relabeled rows
+    move to their merged component's bucket, and ``fresh``
     (never-seen) vertices land in their post-relabel component's
-    bucket (a fresh vertex can itself be merged by the same
-    delivery), so the touched set is the map's old ∪ new buckets ∪
-    the fresh rows' buckets — all bounded by the delivery.  Untouched
+    bucket (a fresh vertex can itself be merged by the same delivery),
+    so the touched set is the map's old ∪ new buckets ∪ the fresh
+    rows' buckets — all bounded by the delivery.  Untouched
     partitions' files are never opened or replaced (mtime-locked in
     tests).
 
-    Edge handled explicitly: a bucket whose every row moved away
-    produces no output rows, and dynamic overwrite only replaces
-    partitions PRESENT in the output — the emptied bucket's stale
-    files are dropped directly.  When the layout is ALSO registered as
-    a catalog table, pass ``table_name``: the writer then issues
-    ``ALTER TABLE .. ADD/DROP PARTITION`` for the buckets it
-    created/emptied so catalog-pruned readers stay consistent with the
-    directory tree (without it, the metastore would still list a
-    removed partition or miss a fresh one).
+    A bucket whose every row moved away produces no output rows, and
+    dynamic overwrite only replaces partitions PRESENT in the output,
+    so the emptied bucket's directory is dropped directly.  When the
+    layout is also a catalog table, ``table_name`` makes the stage
+    run ``ALTER TABLE .. ADD/DROP PARTITION`` for the buckets it
+    wrote or emptied, so catalog-pruned readers stay consistent with
+    the directory tree.
 
-    With ``return_changes=True`` the writer ALSO returns the
-    delivery's change set for the vertex projection — the
-    :func:`changed_assignment_rows` contract (relabeled rows with
-    their merged labels, plus fresh rows after this delivery's own
-    merges) — derived from the SAME pruned scan + checkpoint the
-    rewrite uses via a flag column, so the two-projection fold pays
-    ONE partition-pruned read instead of two (measured ~1 s/fold of
-    the x15 lifecycle)."""
+    With ``return_changes=True`` the stage also returns the delivery's
+    change set for the vertex projection — relabeled rows with their
+    merged labels, plus fresh rows after this delivery's own merges —
+    derived from the SAME pruned scan and checkpoint the rewrite uses
+    (a flag column), so the two projections pay one partition-pruned
+    read.  It returns None when the delivery changes nothing."""
     import os
     import shutil
 
-    def _empty_changes():
-        if not return_changes:
-            return None
-        df = spark.createDataFrame([], "vertex long, component long")
-        # carry the (empty) rows so a downstream writer's driver-local
-        # fast path can skip its bucket-probe job too
-        df._hfc_rows = []
-        return df
-
-    if relabel is None and fresh is None:
-        return _empty_changes()
-    # fresh rows after applying this delivery's own merges, and the
-    # touched-bucket set.  Fast path: when the merge plan's frames
-    # carry their driver rows (``_hfc_rows``, the bounded local plan),
-    # both compute in Python — zero Spark jobs; a hundred-row local
-    # relation still costs ~0.6 s of job overhead per operation.
-    rel_rows = [] if relabel is None else getattr(
-        relabel, "_hfc_rows", None)
-    fr_in = [] if fresh is None else getattr(fresh, "_hfc_rows", None)
     fresh_rows = None
-    if rel_rows is not None and fr_in is not None:
-        relmap = dict(rel_rows)
-        fr_pairs = [(v, relmap.get(c, c)) for v, c in fr_in]
-        if not relmap and not fr_pairs:
-            return _empty_changes()
-        bkts = sorted({
-            _py_bucket(k, buckets)
-            for k in set(relmap) | set(relmap.values())
-            | {c for _, c in fr_pairs}
-        })
-        # round 11: when the plan is driver-local, the WRITE goes
-        # driver-local too — the touched buckets' contents are bounded
-        # (ASSIGN_ROWS_PER_BUCKET × a delivery-bounded bucket set), so
-        # the whole rewrite (pruned read, relabel, dynamic-overwrite
-        # twin, emptied-bucket drop) runs as filesystem work instead
-        # of ~3 Spark jobs of fixed overhead per fold (measured
-        # ~1.2 s/fold of the x15 lifecycle).  Gates fail BEFORE any
-        # mutation; above the row cap or off the local fs the
-        # distributed path below runs unchanged on the same inputs.
-        vt = (fresh.schema["vertex"].dataType if fresh is not None
-              else relabel.schema["component"].dataType)
-        data = (
-            bucketed.read_rows(assign_dir, "c_bucket", bkts,
-                               _ASSIGN_COLS,
-                               placement.CAPS["WRITER_LOCAL_ROW_MAX"])
-            if vt.simpleString() == "bigint"
-            and os.path.isdir(assign_dir) else None
-        )
-        if data is not None:
-            by_bucket: dict[int, list] = {}
-            changes: list = []
-            for brows in data.values():
-                for v, c in brows:
-                    if c in relmap:
-                        c = relmap[c]
-                        changes.append((v, c))
-                    by_bucket.setdefault(
-                        _py_bucket(c, buckets), []
-                    ).append((v, c))
-            for v, c in fr_pairs:
-                changes.append((v, c))
-                by_bucket.setdefault(
-                    _py_bucket(c, buckets), []
-                ).append((v, c))
-            present = set(by_bucket)
-            emptied = set(bkts) - present
-            # an emptied bucket's empty row list drops its directory
-            bucketed.write_buckets(
-                assign_dir, "c_bucket",
-                {**by_bucket, **dict.fromkeys(sorted(emptied), [])},
-                _ASSIGN_FIELDS,
-            )
-            # Spark's own insert command refreshes cached file
-            # listings for the destination path; the driver-side
-            # writer must do the same or a catalog/path read could
-            # serve the replaced files' stale names
-            spark.catalog.refreshByPath(assign_dir)
-            if table_name is not None:
-                _sync_catalog_partitions(
-                    spark, table_name, "c_bucket",
-                    added=present, dropped=emptied,
-                )
-            if return_changes:
-                return _local_frame(
-                    spark, changes,
-                    T.StructType([
-                        T.StructField("vertex", vt),
-                        T.StructField("component", vt),
-                    ]),
-                )
-            return None
-        if fr_pairs:
-            fresh_rows = spark.createDataFrame(
-                fr_pairs,
-                T.StructType([
-                    T.StructField("vertex", fresh.schema["vertex"].dataType),
-                    T.StructField("component",
-                                  fresh.schema["component"].dataType),
-                ]),
-            )
-    else:
-        if fresh is not None:
-            fresh_rows = fresh
-            if relabel is not None:
-                fresh_rows = fresh.join(
-                    F.broadcast(relabel), "component", "left"
-                ).select(
-                    "vertex",
-                    F.coalesce("merged", "component").alias("component"),
-                )
-            # lazy checkpoint + count (r15): one job materializes the
-            # merged fresh rows AND answers the emptiness probe
-            fresh_rows = fresh_rows.localCheckpoint(eager=False)
-            if fresh_rows.count() == 0:
-                fresh_rows = None
-        if relabel is None and fresh_rows is None:
-            return _empty_changes()
-        # touched buckets: union the key columns FIRST so the bounded
-        # collect is ONE job total, not one per frame
-        keys = []
+    if fresh is not None:
+        fresh_rows = fresh
         if relabel is not None:
-            keys.append(relabel.select(F.col("component").alias("k")))
-            keys.append(relabel.select(F.col("merged").alias("k")))
-        if fresh_rows is not None:
-            keys.append(fresh_rows.select(F.col("component").alias("k")))
-        kdf = keys[0]
-        for part in keys[1:]:
-            kdf = kdf.unionByName(part)
-        bkts = _bucket_ids(kdf, ["k"], buckets)
+            fresh_rows = fresh.join(
+                F.broadcast(relabel), "component", "left"
+            ).select(
+                "vertex",
+                F.coalesce("merged", "component").alias("component"),
+            )
+        # lazy checkpoint + count: one job materializes the merged
+        # fresh rows AND answers the emptiness probe
+        fresh_rows = fresh_rows.localCheckpoint(eager=False)
+        if fresh_rows.count() == 0:
+            fresh_rows = None
+    if relabel is None and fresh_rows is None:
+        return None
+    # touched buckets: union the key columns FIRST so the bounded
+    # collect is ONE job total, not one per frame
+    keys = []
+    if relabel is not None:
+        keys.append(relabel.select(F.col("component").alias("k")))
+        keys.append(relabel.select(F.col("merged").alias("k")))
+    if fresh_rows is not None:
+        keys.append(fresh_rows.select(F.col("component").alias("k")))
+    kdf = keys[0]
+    for part in keys[1:]:
+        kdf = kdf.unionByName(part)
+    bkts = _bucket_ids(kdf, ["k"], buckets)
 
     updated = _assign_rel(spark, assign_rel or assign_dir).filter(
         F.col("c_bucket").isin(bkts)
@@ -1139,10 +978,9 @@ def apply_relabel_in_place(spark, assign_dir: str,
     updated = updated.withColumn(
         "c_bucket", _bucket_expr("component", buckets)
     )
-    # cut lineage from the files about to be replaced — LAZY mark
-    # (r15): the present-buckets collect below is a full pass, so it
-    # materializes the checkpoint in the same job (was two jobs:
-    # eager checkpoint + distinct collect)
+    # cut lineage from the files about to be replaced — a LAZY mark:
+    # the present-buckets collect below is a full pass, so it
+    # materializes the checkpoint in the same job
     rows = updated.localCheckpoint(eager=False)
     present = {r.b for r in rows.select(
         F.col("c_bucket").alias("b")).distinct().collect()}
@@ -1211,174 +1049,33 @@ def resolve_assign_pruned(spark, assign_rel, verts: DataFrame,
     )
 
 
-# Above this many endpoint vertices, the pruned label probe goes back
-# to a broadcast join (an IN-list this long bloats the plan); below
-# it, the filter is a plain isin the scan evaluates with no exchange.
-_RESOLVE_ISIN_MAX = 5_000
-
-
-def _local_frame(spark, rows, schema) -> DataFrame:
-    """A driver-local frame that CARRIES its rows at ``_hfc_rows`` —
-    the advisory seam the partition-pruned writers use to compute
-    bucket ids and fresh-row merges in Python instead of paying a
-    ~0.6 s Spark job per hundred-row local relation (measured on the
-    x15 lifecycle).  The attribute is best-effort: any consumer that
-    ignores it just runs the distributed plan on the same values."""
-    df = spark.createDataFrame(rows, schema)
-    df._hfc_rows = rows
-    return df
-
-
-def _merge_plan_local(spark, vertex_rel, edges, buckets: int,
-                      vt, vertex_dir: str | None = None,
-                      ) -> tuple[DataFrame, DataFrame | None]:
-    """Driver-side merge plan over a bounded, already-collected edge
-    set: one partition-pruned probe resolves the endpoints' standing
-    labels (bucket ids computed in Python — :func:`_py_bucket`), then
-    the fresh set, quotient graph, and union-find all run in Python.
-    Value-identical to the distributed plan (parity-locked by the
-    threshold-pinning tests); returns LOCAL frames, which every
-    consumer only ever broadcasts.
-
-    With ``vertex_dir`` (a local-fs layout directory) the label probe
-    itself goes driver-side: a pyarrow read of the touched v_buckets
-    (:func:`bucketed.read_rows`, same row cap as the writers) — the
-    plan then costs zero Spark jobs.  Any gate failure falls back to
-    the pruned-scan probe below on the same inputs."""
-    import os
-
-    schema = T.StructType([
-        T.StructField("vertex", vt), T.StructField("component", vt),
-    ])
-    edges = {(a, b) for a, b in edges}
-    if not edges:
-        return _local_frame(spark, [], schema), None
-    verts = sorted({v for ab in edges for v in ab})
-    bkts = sorted({_py_bucket(v, buckets) for v in verts})
-    resolved = None
-    if vertex_dir is not None and os.path.isdir(vertex_dir):
-        data = bucketed.read_rows(vertex_dir, "v_bucket", bkts,
-                                  _ASSIGN_COLS,
-                                  placement.CAPS["WRITER_LOCAL_ROW_MAX"])
-        if data is not None:
-            want = set(verts)
-            resolved = {
-                v: c
-                for brows in data.values()
-                for v, c in brows if v in want
-            }
-    if resolved is None:
-        scan = _assign_rel(spark, vertex_rel).filter(
-            F.col("v_bucket").isin(bkts)
-        )
-        if len(verts) <= _RESOLVE_ISIN_MAX:
-            probe = scan.filter(F.col("vertex").isin(verts))
-        else:
-            vdf = spark.createDataFrame(
-                [(v,) for v in verts],
-                T.StructType([T.StructField("vertex", vt)]),
-            )
-            probe = scan.join(F.broadcast(vdf), "vertex")
-        resolved = {
-            r.vertex: r.component
-            for r in probe.select("vertex", "component").collect()
-            # bounded: ≤ |delivery endpoints| rows
-        }
-    look = {v: resolved.get(v, v) for v in verts}
-    quot = {
-        (look[a], look[b]) for a, b in edges if look[a] != look[b]
-    }
-    fresh = _local_frame(
-        spark, [(v, v) for v in verts if v not in resolved], schema
-    )
-    pairs = _driver_union_find(quot)
-    relabel = (
-        _local_frame(
-            spark, pairs,
-            T.StructType([
-                T.StructField("component", vt),
-                T.StructField("merged", vt),
-            ]),
-        )
-        if pairs else None
-    )
-    return fresh, relabel
-
-
 def component_merge_plan_pruned(
     spark, vertex_rel, new_edges: DataFrame, buckets: int,
     src: str = "src", dst: str = "dst",
-    vertex_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """:func:`component_merge_plan` against the PERSISTED
-    vertex-bucketed assignment instead of an in-memory frame: endpoint
-    resolution becomes partition-pruned point lookups (the in-memory
-    plan's two resolution joins and the fresh-vertex anti-join each
-    scan the whole assignment — fine when it is a cached frame, wrong
-    when it is a 100 TB table).  Same return contract, same quotient
-    union-find, value-identical relabel map (parity-locked in
+    """The merge-plan stage of the distributed fold:
+    :func:`component_merge_plan` against the PERSISTED vertex-bucketed
+    assignment instead of an in-memory frame.  Endpoint resolution
+    becomes partition-pruned point lookups (the in-memory plan's two
+    resolution joins and the fresh-vertex anti-join each scan the
+    whole assignment — fine when it is a cached frame, wrong when it
+    is a 100 TB table).  Same return contract, same quotient CC,
+    value-identical relabel map (parity-locked in
     tests/test_graph.py).
 
     Consistency contract: the vertex layout must reflect the SAME
     table version as the component layout the relabel is applied to.
-    A deployment folding several deliveries either updates both
-    projections per delivery or re-resolves endpoint labels through
-    the component layout (what the streaming lifecycle test does);
-    resolving against a stale vertex projection after an unapplied
-    merge yields relabel keys that no longer exist in the table.
-
-    Fast path: the delivery's edge set is bounded by contract, so up
-    to ``QUOTIENT_LOCAL_EDGE_MAX`` edges the whole plan computes
-    driver-side from TWO bounded jobs — one guarded edge collect
-    (``limit(max+1)``, carrying the endpoints' v_bucket keys), one
-    partition-pruned label probe — replacing the distributed path's
-    ~7 jobs of eager checkpoints, distinct shuffles, and anti-joins
-    (measured ~1.5 s/delivery of pure fixed overhead on the x15
-    lifecycle).  Above the bound the distributed path below runs
-    unchanged; pinning the threshold to 0 in tests forces it.
-
-    Two round-11 extensions of the same fast path: an edge frame
-    already carrying its rows (``_hfc_rows``, e.g. a caller that
-    split one pairs scan into per-delivery edge sets) skips the
-    guarded collect job entirely, and passing ``vertex_dir`` (the
-    layout's local-fs directory) lets the local plan's label probe
-    read the touched v_buckets driver-side
-    (:func:`bucketed.read_rows`) instead of running one pruned-scan
-    job per fold — zero Spark jobs for a bounded delivery's whole
-    merge plan."""
-    edge_rows = getattr(new_edges, "_hfc_rows", None)
-    vt = new_edges.schema[src].dataType
-    # the Python bucket twin only covers BIGINT keys (xxhash64's
-    # 8-byte lane; 4-byte types hash through a different XXH64 path);
-    # other vertex types take the distributed plan at any size
-    if vt.simpleString() == "bigint" and edge_rows is not None:
-        pr = [(a, b) for a, b in edge_rows if a != b]
-        if len(pr) <= placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]:
-            return _merge_plan_local(
-                spark, vertex_rel, pr, buckets, vt,
-                vertex_dir=vertex_dir,
-            )
+    :func:`fold_components_delivery` updates both projections per
+    delivery; resolving against a stale vertex projection after an
+    unapplied merge yields relabel keys that no longer exist in the
+    table."""
     e0 = new_edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).filter(F.col("a") != F.col("b"))
-    # cap pinned to 0 means "never local": skip the guarded probe
-    # collect outright instead of running a limit(1) job whose answer
-    # is already known (r14 — one wasted job per fold in the
-    # caps-zeroed distributed arm).  A Row collect, not bounded_arrow:
-    # a limited collect() and a limited toArrow() schedule differently
-    cap = placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]
-    if cap > 0 and vt.simpleString() == "bigint":
-        probe = e0.limit(cap + 1).collect()
-        if len(probe) <= cap:
-            return _merge_plan_local(
-                spark, vertex_rel, [(r.a, r.b) for r in probe],
-                buckets, vt, vertex_dir=vertex_dir,
-            )
-    # lazy checkpoints (r15): e materializes inside the endpoint
-    # probe's bucket-list collect (its first full pass), resolved
-    # inside the quotient count / fresh checkpoint — two dedicated
-    # checkpoint jobs per delivery removed; both blocks are still
-    # freed below once everything derived from them is materialized
+    # lazy checkpoints: e materializes inside the endpoint probe's
+    # bucket-list collect (its first full pass), resolved inside the
+    # quotient count / fresh checkpoint; both blocks are freed below
+    # once everything derived from them is materialized
     e, _e_ids = _lazy_checkpoint(e0)
     verts = (
         e.select(F.col("a").alias("vertex"))
@@ -1408,48 +1105,11 @@ def component_merge_plan_pruned(
     relabel = _quotient_relabel(spark, quot)
     # materialize the (delivery-bounded) fresh rows, then free the
     # intermediate checkpoint blocks: relabel is already independent
-    # of them (driver rows on the local path, re-checkpointed on the
-    # distributed path), so nothing returned derives from e/resolved
-    # and a per-delivery caller must not accumulate pinned blocks
-    # (the round-6 leak class _free_checkpoint exists to prevent)
+    # of them (re-checkpointed), so nothing returned derives from
+    # e/resolved and a per-delivery caller accumulates no pinned blocks
     fresh, _f_ids = _eager_checkpoint(fresh)
     _free_checkpoint(spark, _e_ids + _r_ids)
     return fresh, relabel
-
-
-def changed_assignment_rows(spark, component_rel,
-                            relabel: DataFrame | None,
-                            fresh: DataFrame | None,
-                            buckets: int = ASSIGN_C_BUCKETS) -> DataFrame:
-    """A delivery's full change-set for the VERTEX projection: the
-    relabeled rows (partition-pruned probe of the component layout)
-    plus the fresh rows after this delivery's own merges.  Bounded by
-    the delivery + affected component sizes — what the secondary
-    projection's writer consumes."""
-    parts = []
-    if relabel is not None:
-        parts.append(
-            relabel_affected_buckets(spark, component_rel, relabel,
-                                     buckets)
-        )
-    if fresh is not None:
-        fr = fresh
-        if relabel is not None:
-            fr = fresh.join(
-                F.broadcast(relabel), "component", "left"
-            ).select(
-                "vertex",
-                F.coalesce("merged", "component").alias("component"),
-            )
-        parts.append(fr)
-    if not parts:
-        return spark.createDataFrame(
-            [], "vertex long, component long"
-        )
-    out = parts[0]
-    for pt in parts[1:]:
-        out = out.unionByName(pt)
-    return out
 
 
 def apply_changes_vertex_layout(spark, vertex_dir: str,
@@ -1457,75 +1117,24 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
                                 buckets: int,
                                 vertex_rel=None,
                                 table_name: str | None = None) -> None:
-    """Writer for the vertex-bucketed PRIMARY projection: upsert the
-    delivery's changed rows (vertex, component), reading and
-    rewriting only the v_buckets those vertices land in.  Rows never
-    change bucket (the key is the vertex) and never disappear, so
-    there is no emptied-bucket edge here; fresh vertices are plain
-    inserts into their bucket — which can CREATE a bucket directory,
-    so when the layout is catalog-registered pass ``table_name`` and
-    the writer registers the touched partitions (ADD IF NOT EXISTS,
-    bounded by the delivery).
+    """The vertex-layout stage of the distributed fold: upsert the
+    delivery's changed rows (vertex, component) into the
+    vertex-bucketed PRIMARY projection, reading and rewriting only the
+    v_buckets those vertices land in.  Rows never change bucket (the
+    key is the vertex) and never disappear, so there is no
+    emptied-bucket edge here; fresh vertices are plain inserts into
+    their bucket — which can CREATE a bucket directory, so when the
+    layout is catalog-registered pass ``table_name`` and the stage
+    registers the touched partitions (ADD IF NOT EXISTS, bounded by
+    the delivery).
 
     Contract: ``changed`` must be MATERIALIZED (checkpoint-backed or
-    a local relation) — the writer consumes it twice (bucket probe,
+    a local relation) — the stage consumes it twice (bucket probe,
     broadcast upsert) while overwriting v_bucket files, so a lazy
     lineage THROUGH this layout would re-read files being replaced.
-    Every caller already passes a materialized change set
-    (:func:`apply_relabel_in_place`'s returned rows are
-    checkpoint-backed); the defensive re-checkpoint + isEmpty probe
-    this writer used to run cost two jobs per fold of pure overhead
-    in the x15 lifecycle (round-11 diet), and emptiness now falls out
-    of the bucket probe.
-
-    Driver-local fast path (round 11, the relabel writer's twin): a
-    change set carrying ``_hfc_rows`` upserts the touched v_buckets as
-    filesystem work — pruned pyarrow read, dict upsert, per-bucket
-    rewrite — zero Spark jobs.  Rows never change bucket here (the
-    key is the vertex), so there is no emptied-bucket edge; the same
-    gates (bigint keys, local fs, ``WRITER_LOCAL_ROW_MAX``) fall
-    back to the distributed path below before any mutation."""
-    import os
-
-    ch_rows = getattr(changed, "_hfc_rows", None)
-    if (ch_rows is not None
-            and changed.schema["vertex"].dataType.simpleString()
-            == "bigint"
-            and os.path.isdir(vertex_dir)):
-        if not ch_rows:
-            return
-        lbkts = sorted({_py_bucket(v, buckets) for v, _ in ch_rows})
-        data = bucketed.read_rows(vertex_dir, "v_bucket", lbkts,
-                                  _ASSIGN_COLS,
-                                  placement.CAPS["WRITER_LOCAL_ROW_MAX"])
-        if data is not None:
-            upd = dict(ch_rows)
-            seen: set = set()
-            by_bucket: dict[int, list] = {}
-            for b in lbkts:
-                brows = []
-                for v, c in data.get(b, []):
-                    if v in upd:
-                        c = upd[v]
-                        seen.add(v)
-                    brows.append((v, c))
-                if brows:
-                    by_bucket[b] = brows
-            for v, c in ch_rows:
-                if v not in seen:
-                    seen.add(v)
-                    by_bucket.setdefault(
-                        _py_bucket(v, buckets), []
-                    ).append((v, c))
-            bucketed.write_buckets(vertex_dir, "v_bucket", by_bucket,
-                                   _ASSIGN_FIELDS)
-            spark.catalog.refreshByPath(vertex_dir)
-            if table_name is not None:
-                _sync_catalog_partitions(
-                    spark, table_name, "v_bucket",
-                    added=lbkts, dropped=(),
-                )
-            return
+    :func:`apply_relabel_in_place`'s returned rows are
+    checkpoint-backed, and an empty change set ends at the bucket
+    probe."""
     bkts = _bucket_ids(changed, ["vertex"], buckets)
     if not bkts:
         return
@@ -1539,7 +1148,7 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
         "vertex",
         F.coalesce("new_component", "component").alias("component"),
     ).withColumn("v_bucket", _bucket_expr("vertex", buckets))
-    # LAZY mark (r15): plan truncation at mark time is what breaks the
+    # LAZY mark: plan truncation at mark time is what breaks the
     # self-overwrite cycle; the write itself is the full-pass action
     # that materializes the blocks (deletes only commit after the job,
     # so tasks — including retries — always read intact files).  One
@@ -1556,6 +1165,167 @@ def apply_changes_vertex_layout(spark, vertex_dir: str,
         _sync_catalog_partitions(
             spark, table_name, "v_bucket", added=bkts, dropped=()
         )
+
+
+def _fold_local(spark, cdir: str, vdir: str, edges, buckets: int,
+                ctable: str | None, vtable: str | None) -> bool:
+    """The local fold of :func:`fold_components_delivery`: Python and
+    file IO on the driver, no Spark job.  Every read comes before any
+    write:
+
+    1. the endpoints' v_buckets (their standing labels);
+    2. the union-find over the quotient graph (:func:`_min_labels`),
+       the relabel map and the fresh rows, computed from those labels;
+    3. the touched c_buckets (the map's old and new labels, the fresh
+       rows' labels);
+    4. the changed vertices' v_buckets.
+
+    Each read is :func:`bucketed.read_rows` under
+    ``WRITER_LOCAL_ROW_MAX``; a failed gate returns False with both
+    layouts untouched, and the caller runs the distributed chain on
+    the same inputs.  Then it writes the c layout, the v layout,
+    refreshes Spark's cached listings of both paths and syncs the
+    catalog partitions.  Returns True once the delivery is folded."""
+    import numpy as np
+
+    cap = placement.CAPS["WRITER_LOCAL_ROW_MAX"]
+    pairs = {(a, b) for a, b in edges if a != b}
+    if not pairs:
+        return True
+    verts = sorted({v for ab in pairs for v in ab})
+    vdata = bucketed.read_rows(
+        vdir, "v_bucket", sorted({_py_bucket(v, buckets) for v in verts}),
+        _ASSIGN_COLS, cap,
+    )
+    if vdata is None:
+        return False
+    want = set(verts)
+    look = {v: c for brows in vdata.values() for v, c in brows if v in want}
+    fresh = [v for v in verts if v not in look]
+    look.update((v, v) for v in fresh)
+    quot = [(look[a], look[b]) for a, b in pairs if look[a] != look[b]]
+    relmap: dict = {}
+    if quot:
+        qv, ql = _min_labels(*np.array(quot, dtype=np.int64).T)
+        relmap = {v: c for v, c in zip(qv.tolist(), ql.tolist()) if v != c}
+    fresh_rows = [(v, relmap.get(v, v)) for v in fresh]
+    if not relmap and not fresh_rows:
+        return True
+    cbkts = sorted({
+        _py_bucket(k, buckets)
+        for k in (*relmap, *relmap.values(), *(c for _, c in fresh_rows))
+    })
+    cdata = bucketed.read_rows(cdir, "c_bucket", cbkts, _ASSIGN_COLS, cap)
+    if cdata is None:
+        return False
+    # every touched c_bucket starts empty: one that ends empty has its
+    # directory dropped by write_buckets
+    c_new: dict[int, list] = {b: [] for b in cbkts}
+    changes = []
+    for brows in cdata.values():
+        for v, c in brows:
+            if c in relmap:
+                c = relmap[c]
+                changes.append((v, c))
+            c_new[_py_bucket(c, buckets)].append((v, c))
+    for v, c in fresh_rows:
+        changes.append((v, c))
+        c_new[_py_bucket(c, buckets)].append((v, c))
+    upd = dict(changes)
+    vbkts = sorted({_py_bucket(v, buckets) for v in upd})
+    vold = bucketed.read_rows(vdir, "v_bucket", vbkts, _ASSIGN_COLS, cap)
+    if vold is None:
+        return False
+    stored = {v for brows in vold.values() for v, _ in brows}
+    v_new = {b: [(v, upd.get(v, c)) for v, c in vold[b]] for b in vbkts}
+    for v, c in upd.items():
+        if v not in stored:
+            v_new[_py_bucket(v, buckets)].append((v, c))
+
+    bucketed.write_buckets(cdir, "c_bucket", c_new, _ASSIGN_FIELDS)
+    bucketed.write_buckets(vdir, "v_bucket", v_new, _ASSIGN_FIELDS)
+    # Spark's own insert command refreshes cached file listings for
+    # the destination path; the driver-side writes must do the same
+    # or a catalog/path read could serve the replaced files' names
+    spark.catalog.refreshByPath(cdir)
+    spark.catalog.refreshByPath(vdir)
+    if ctable is not None:
+        present = {b for b, rows in c_new.items() if rows}
+        _sync_catalog_partitions(spark, ctable, "c_bucket",
+                                 added=present,
+                                 dropped=set(cbkts) - present)
+    if vtable is not None:
+        _sync_catalog_partitions(spark, vtable, "v_bucket",
+                                 added=vbkts, dropped=())
+    return True
+
+
+def fold_components_delivery(spark, cdir: str, vdir: str, edges,
+                             buckets: int, ctable: str | None = None,
+                             vtable: str | None = None) -> None:
+    """Fold one edge delivery into the maintained cluster assignment,
+    held as two bucketed parquet layouts: ``cdir`` partitioned by
+    ``c_bucket`` (of the component) and ``vdir`` by ``v_bucket`` (of
+    the vertex), both bucketed ``buckets`` ways.  Components only
+    merge under edge additions, so a delivery relabels the merged
+    components' rows and inserts its never-seen vertices; after the
+    fold both layouts equal connected components over the history
+    plus the delivery, with every label its component's minimum id.
+
+    ``edges`` is the delivery: a DataFrame with ``src``/``dst``
+    columns, or already-collected ``(src, dst)`` bigint rows.
+    ``ctable``/``vtable`` name catalog tables registered over the
+    layouts, if any: the fold keeps their partition metadata in step
+    with the bucket directories it creates or empties, and the
+    distributed chain reads the layouts through them.
+
+    Placement is decided once per delivery.  The local fold
+    (:func:`_fold_local`) runs when its gates hold: bigint keys, both
+    layouts local directories, at most ``QUOTIENT_LOCAL_EDGE_MAX``
+    edges that are not self-loops (one guarded ``limit(cap + 1)``
+    collect of a DataFrame delivery, none at cap 0), and every bucket
+    read under ``WRITER_LOCAL_ROW_MAX`` rows.  It schedules no Spark
+    job.  Otherwise the distributed chain runs on the same inputs:
+    :func:`component_merge_plan_pruned`, :func:`apply_relabel_in_place`
+    and :func:`apply_changes_vertex_layout`."""
+    import os
+
+    cap = placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]
+    rows = None
+    if isinstance(edges, DataFrame):
+        bigint = all(edges.schema[c].dataType.simpleString() == "bigint"
+                     for c in ("src", "dst"))
+        if (bigint and cap > 0
+                and os.path.isdir(cdir) and os.path.isdir(vdir)):
+            # a Row collect, not bounded_arrow: a limited collect() and
+            # a limited toArrow() schedule differently
+            probe = edges.select("src", "dst").filter(
+                F.col("src") != F.col("dst")
+            ).limit(cap + 1).collect()
+            if len(probe) <= cap:
+                rows = [tuple(r) for r in probe]
+    else:
+        edges = list(edges)
+        if (os.path.isdir(cdir) and os.path.isdir(vdir)
+                and sum(a != b for a, b in edges) <= cap):
+            rows = edges
+    if rows is not None and _fold_local(spark, cdir, vdir, rows, buckets,
+                                        ctable, vtable):
+        return
+    if not isinstance(edges, DataFrame):
+        edges = spark.createDataFrame(edges, "src long, dst long")
+    vrel = spark.table(vtable) if vtable is not None else vdir
+    fresh, relabel = component_merge_plan_pruned(
+        spark, vrel, edges, buckets
+    )
+    changed = apply_relabel_in_place(
+        spark, cdir, relabel, buckets=buckets, fresh=fresh,
+        assign_rel=spark.table(ctable) if ctable is not None else None,
+        table_name=ctable, return_changes=True,
+    )
+    if changed is not None:
+        apply_changes_vertex_layout(spark, vdir, changed, buckets,
+                                    vertex_rel=vrel, table_name=vtable)
 
 
 # --- fixed-iteration PageRank (integer arithmetic) -------------------

@@ -35,10 +35,10 @@ CAPS: dict[str, int] = {
     # edges of the PageRank twin's one Arrow collect: two int64
     # columns ≈ 32 MB at the cap
     "PR_LOCAL_EDGE_MAX": 2_000_000,
-    # delivery quotient edges for the driver union-find; the
-    # distributed CC loop costs seconds of fixed per-round overhead
+    # delivery edges of graph.fold_components_delivery's local fold;
+    # the distributed chain costs seconds of fixed per-delivery overhead
     "QUOTIENT_LOCAL_EDGE_MAX": 100_000,
-    # touched-bucket rows the assignment writers hold as Python
+    # rows of each bucket read of that local fold, held as Python
     # tuples: two int64 columns ≈ 8 MB of driver heap at the cap
     "WRITER_LOCAL_ROW_MAX": 512_000,
     # span rows the local span fold holds as Arrow tables end to end:

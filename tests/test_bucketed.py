@@ -218,7 +218,9 @@ def test_snapshot_hardlinks_and_cross_device_copy(tmp_path, monkeypatch):
     """``snapshot`` links every file (same inodes, no bytes); where
     ``os.link`` fails across devices it copies instead — byte-identical,
     new inodes — and says so with a RuntimeWarning.  The bucket-subset
-    form takes only the named buckets and skips missing ones."""
+    form takes only the named buckets and skips missing ones.
+    ``flat_snapshot`` links every data file into one directory, keeping
+    files of different buckets that share a name apart."""
     import warnings
 
     pcol, fields = LAYOUTS["assign"]
@@ -234,6 +236,14 @@ def test_snapshot_hardlinks_and_cross_device_copy(tmp_path, monkeypatch):
         warnings.simplefilter("error")
         bucketed.snapshot(src, linked)
     assert _tree(linked) == want  # same bytes AND same inodes
+
+    flat = str(tmp_path / "flat")
+    bucketed.flat_snapshot(src, pcol, flat)
+    assert _tree(flat) == {
+        f"{b}-part-00000-old.snappy.parquet":
+            want[f"{pcol}={b}/part-00000-old.snappy.parquet"]
+        for b in (0, 1, 2)
+    }
 
     monkeypatch.setattr(os, "link", _exdev)
     copied = str(tmp_path / "copied")

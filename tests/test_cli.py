@@ -417,8 +417,11 @@ LOAD_MODES = {
 LOAD_JOBS = 36
 
 
-def _persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted(spark) -> set:
+    """Ids of the persistent RDDs.  Compare id sets, not counts: the
+    ContextCleaner unpersists earlier tests' dropped RDDs
+    asynchronously, so a count can fall while a load runs."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
 def _load(spark, feeds, base, release, extra=()):
@@ -442,7 +445,7 @@ def test_cli_load_counts_and_rows_match_unpersisted_load(
         _load(spark, feed_dir, base, "r1")
     before = _persisted(spark)
     counts = _load(spark, feed_dir, base, "r2", LOAD_MODES[mode])
-    assert _persisted(spark) == before
+    assert not _persisted(spark) - before
     assert sorted(counts) == sorted(SCHEMAS)
     for name in SCHEMAS:
         assert counts[name] == spark.read.parquet(
@@ -484,8 +487,8 @@ def test_cli_failed_load_leaves_nothing_persisted(
     before = _persisted(spark)
     with pytest.raises(Exception, match="FAILFAST"):
         _load(spark, str(d), str(tmp_path / "snap"), "r1")
-    assert max(cached) > before
-    assert _persisted(spark) == before
+    assert any(c - before for c in cached)
+    assert not _persisted(spark) - before
 
 
 def test_cli_load_job_count(spark, feed_dir, tmp_path):

@@ -132,6 +132,26 @@ def test_x19_kernel_job_budget(spark):
     assert _parquet_row_count("/nonexistent/events.parquet") is None
 
 
+def test_x15_fold_job_budget(spark):
+    """A warm x15 call at smoke scale schedules exactly 2 jobs: every
+    delivery folds locally and serves from the layout files (no job),
+    and the served union's upload and checkpoint are the 2.  Jobs
+    submitted from another thread would escape the job group, so the
+    face's untagged jobs are counted too."""
+    from hfcommunity_spark.operators.dedup import (
+        x15_stream_maintained_clusters,
+    )
+    from tests.conftest import SF_SMOKE
+
+    x15_stream_maintained_clusters(spark, SF_SMOKE).count()
+    tracker = spark.sparkContext.statusTracker()
+    untagged = set(tracker.getJobIdsForGroup(None))
+    with _job_budget(spark, 2, "x15-warm", exact=True):
+        out = x15_stream_maintained_clusters(spark, SF_SMOKE)
+    assert set(tracker.getJobIdsForGroup(None)) == untagged
+    assert out.count() > 0
+
+
 def test_pagerank_local_twin_job_budget(spark):
     """The PageRank driver-local twin is ONE guarded Arrow collect —
     a single job covers gate + transfer (the documented no-pre-gate

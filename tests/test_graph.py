@@ -3,6 +3,11 @@ diamond-merge history, and merge-commit detection."""
 
 from __future__ import annotations
 
+import contextlib
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from hfcommunity_spark.operators import placement
 from hfcommunity_spark.operators.graph import ancestors, merge_commits
 
@@ -242,6 +247,45 @@ def test_local_union_find_empty_edges(spark):
     assert out.count() == 0
 
 
+_IDS = st.one_of(
+    st.integers(-4, 4),
+    st.sampled_from([-(2**63), -(2**63) + 1, 2**63 - 2, 2**63 - 1]),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.tuples(_IDS, _IDS), max_size=24), st.data())
+def test_min_labels_equals_bfs_closure(edges, data):
+    """_min_labels labels every endpoint with the minimum id of its
+    BFS closure, for any int64 ids (negatives and the extremes
+    included), self-loops and duplicate edges."""
+    import numpy as np
+
+    from hfcommunity_spark.operators.graph import _min_labels
+
+    edges = edges + data.draw(
+        st.lists(st.sampled_from(edges), max_size=6) if edges
+        else st.just([])
+    )
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    want = {}
+    for v in adj:
+        seen, todo = {v}, [v]
+        while todo:
+            for w in adj[todo.pop()] - seen:
+                seen.add(w)
+                todo.append(w)
+        want[v] = min(seen)
+    a = np.array([e[0] for e in edges], dtype=np.int64)
+    b = np.array([e[1] for e in edges], dtype=np.int64)
+    verts, labels = _min_labels(a, b)
+    assert verts.tolist() == sorted(want)
+    assert dict(zip(verts.tolist(), labels.tolist())) == want
+
+
 def test_eager_checkpoint_does_not_capture_lazy_caches(spark):
     """Round-5 review: a LAZY persist() whose first materialization
     happens inside a checkpoint job must not be captured as checkpoint
@@ -317,11 +361,11 @@ def test_components_delta_equals_rebuild(spark):
 
 def test_components_delta_distributed_fallback_matches_local(spark,
                                                              monkeypatch):
-    """The quotient merge map has two resolution paths: the bounded
-    driver-side union-find (quotients up to QUOTIENT_LOCAL_EDGE_MAX)
-    and the distributed CC loop above it.  Pinning the threshold to 0
-    forces the distributed path over the same deliveries; both must
-    produce the identical assignment."""
+    """The quotient merge map has two resolution paths: the
+    single-task union-find (quotients up to CC_LOCAL_EDGE_LIMIT) and
+    the star contraction above it.  Pinning the limit to 0 forces the
+    star path over the same deliveries; both must produce the
+    identical assignment."""
     from hfcommunity_spark.operators import graph as G
 
     base_edges = [(0, 1), (1, 2), (10, 11), (11, 12), (20, 21)]
@@ -339,7 +383,7 @@ def test_components_delta_distributed_fallback_matches_local(spark,
         return {(r.vertex, r.component) for r in assign.collect()}
 
     local = run()
-    monkeypatch.setitem(placement.CAPS, "QUOTIENT_LOCAL_EDGE_MAX", 0)
+    monkeypatch.setattr(G, "CC_LOCAL_EDGE_LIMIT", 0)
     assert run() == local
 
 
@@ -704,24 +748,19 @@ def test_relabel_in_place_syncs_catalog_partitions(spark, tmp_path):
 
 
 def test_maintained_table_under_streaming_deliveries(spark, tmp_path):
-    """End-to-end maintained-table lifecycle under REAL micro-batches,
-    on the FULL pruned dual-projection path: each foreachBatch
-    delivery resolves endpoints against the persisted vertex layout
-    (component_merge_plan_pruned), rewrites the component layout in
-    place (apply_relabel_in_place, fresh rows included), and upserts
-    the vertex projection (apply_changes_vertex_layout) so the next
-    delivery's lookups see current labels.  After the stream drains,
-    BOTH layouts equal the one-shot CC over history + all
-    deliveries — including a fresh vertex arriving mid-stream."""
-    from pyspark.sql import functions as F
+    """End-to-end maintained-table lifecycle under REAL micro-batches:
+    each foreachBatch delivery goes through fold_components_delivery,
+    which resolves endpoints against the persisted vertex layout,
+    rewrites the component layout in place (fresh rows included) and
+    upserts the vertex projection so the next delivery's lookups see
+    current labels.  After the stream drains, BOTH layouts equal the
+    one-shot CC over history + all deliveries — including a fresh
+    vertex arriving mid-stream."""
     from pyspark.sql import types as T
 
     from hfcommunity_spark.operators.graph import (
-        apply_changes_vertex_layout,
-        apply_relabel_in_place,
-        changed_assignment_rows,
-        component_merge_plan_pruned,
         connected_components,
+        fold_components_delivery,
         write_component_assign,
         write_vertex_assign,
     )
@@ -743,16 +782,7 @@ def test_maintained_table_under_streaming_deliveries(spark, tmp_path):
     deliveries = [[(9, 10)], [(29, 30), (49, 50)], [(10, 30), (5, 777)]]
 
     def fold(batch_df, batch_id):
-        fresh, relabel = component_merge_plan_pruned(
-            spark, vdir, batch_df, buckets
-        )
-        changed = changed_assignment_rows(
-            spark, cdir, relabel, fresh, buckets
-        ).localCheckpoint()
-        apply_relabel_in_place(
-            spark, cdir, relabel, buckets=buckets, fresh=fresh
-        )
-        apply_changes_vertex_layout(spark, vdir, changed, buckets)
+        fold_components_delivery(spark, cdir, vdir, batch_df, buckets)
 
     for rows in deliveries:
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
@@ -814,280 +844,118 @@ def test_py_xxh64_matches_spark_xxhash64(spark):
         assert _py_bucket(r.v, 7) == r.b7, r.v
 
 
-def test_pruned_merge_plan_local_fast_path_parity(spark, tmp_path,
-                                                  monkeypatch):
-    """The pruned merge plan's driver-local fast path (bounded edge
-    collect + Python union-find) must be value-identical to the
-    distributed plan on the same persisted table — pin the threshold
-    to 0 to force the distributed path and compare both halves."""
+def _layouts(tmp, spark, tag, buckets=8, n=120):
+    """(cdir, vdir): both assignment layouts of CC over n chain edges."""
     from hfcommunity_spark.operators.graph import (
-        component_merge_plan_pruned,
-        connected_components,
-        write_vertex_assign,
-    )
-
-    hist = _chain_edges(spark, 200)
-    assign = connected_components(hist).localCheckpoint()
-    out = str(tmp_path / "vassign")
-    write_vertex_assign(assign, out, buckets=8)
-    delta = spark.createDataFrame(
-        [(9, 10), (29, 30), (5, 100001), (100001, 100002)],
-        "src long, dst long",
-    )
-    f_loc, r_loc = component_merge_plan_pruned(spark, out, delta,
-                                               buckets=8)
-    assert getattr(f_loc, "_hfc_rows", None) is not None  # took fast path
-    # round-11 extensions of the same path: pre-collected edge rows
-    # (skips the guarded collect) and the driver-side label probe
-    # (vertex_dir) must both be value-identical
-    ldelta = delta.localCheckpoint()
-    ldelta._hfc_rows = [(9, 10), (29, 30), (5, 100001),
-                        (100001, 100002)]
-    f_rows, r_rows = component_merge_plan_pruned(
-        spark, out, ldelta, buckets=8, vertex_dir=out
-    )
-    assert getattr(f_rows, "_hfc_rows", None) is not None
-    monkeypatch.setitem(placement.CAPS, "QUOTIENT_LOCAL_EDGE_MAX", 0)
-    f_dist, r_dist = component_merge_plan_pruned(spark, out, delta,
-                                                 buckets=8)
-    assert getattr(f_dist, "_hfc_rows", None) is None  # took distributed
-    want_f = {tuple(r) for r in f_dist.collect()}
-    want_r = {tuple(r) for r in r_dist.collect()}
-    assert {tuple(r) for r in f_loc.collect()} == want_f
-    assert {tuple(r) for r in r_loc.collect()} == want_r
-    assert {tuple(r) for r in f_rows.collect()} == want_f
-    assert {tuple(r) for r in r_rows.collect()} == want_r
-
-
-def test_apply_relabel_fast_path_matches_distributed(spark, tmp_path):
-    """apply_relabel_in_place's driver fast path (local frames carrying
-    _hfc_rows) and the distributed path must leave BYTE-equivalent
-    table content and return the same change set."""
-    from pyspark.sql import functions as F
-
-    from hfcommunity_spark.operators.graph import (
-        _local_frame,
-        apply_relabel_in_place,
         connected_components,
         write_component_assign,
-    )
-    from pyspark.sql import types as T
-
-    hist = _chain_edges(spark, 120)
-    assign = connected_components(hist).localCheckpoint()
-    rel_rows = [(10, 0), (30, 20)]
-    fresh_rows = [(100001, 100001), (100002, 30)]
-    sch2 = T.StructType([
-        T.StructField("vertex", T.LongType()),
-        T.StructField("component", T.LongType()),
-    ])
-    rsch = T.StructType([
-        T.StructField("component", T.LongType()),
-        T.StructField("merged", T.LongType()),
-    ])
-    outs, changes = [], []
-    for tag, mk in (
-        ("fast", lambda rows, sch: _local_frame(spark, rows, sch)),
-        ("dist", lambda rows, sch: spark.createDataFrame(rows, sch)),
-    ):
-        out = str(tmp_path / f"assign_{tag}")
-        write_component_assign(assign, out, buckets=8)
-        ch = apply_relabel_in_place(
-            spark, out,
-            mk(rel_rows, rsch), buckets=8,
-            fresh=mk(fresh_rows, sch2),
-            return_changes=True,
-        )
-        changes.append({tuple(r) for r in ch.collect()})
-        outs.append({
-            tuple(r)
-            for r in spark.read.parquet(out)
-            .select("vertex", "component", "c_bucket").collect()
-        })
-    assert outs[0] == outs[1]
-    assert changes[0] == changes[1]
-    # fresh vertex 100002 lands in its post-merge component (30→20)
-    assert (100002, 20) in changes[0]
-
-
-def test_vertex_layout_local_writer_matches_distributed(spark,
-                                                        tmp_path, monkeypatch):
-    """apply_changes_vertex_layout's driver-local fast path (round 11:
-    the change set carries _hfc_rows, the layout is local-fs) must
-    leave the same table content as the distributed upsert — updates,
-    inserts into existing buckets, and inserts that CREATE a bucket —
-    and pinning WRITER_LOCAL_ROW_MAX to 0 must force the distributed
-    path on the same local frame (the cap fallback)."""
-    from pyspark.sql import types as T
-
-    from hfcommunity_spark.operators.graph import (
-        _local_frame,
-        apply_changes_vertex_layout,
-        connected_components,
         write_vertex_assign,
     )
 
-    hist = _chain_edges(spark, 120)
-    assign = connected_components(hist).localCheckpoint()
-    # updates to existing vertices plus fresh inserts whose v_buckets
-    # may not exist yet at 8 buckets
-    ch_rows = [(10, 0), (31, 20), (70001, 70001), (70002, 20)]
-    sch = T.StructType([
-        T.StructField("vertex", T.LongType()),
-        T.StructField("component", T.LongType()),
-    ])
-    outs = []
-    for tag, mk, cap in (
-        ("local", lambda: _local_frame(spark, ch_rows, sch), None),
-        ("capped", lambda: _local_frame(spark, ch_rows, sch), 0),
-        ("dist", lambda: spark.createDataFrame(ch_rows, sch), None),
-    ):
-        out = str(tmp_path / f"vassign_{tag}")
-        write_vertex_assign(assign, out, 8)
-        with monkeypatch.context() as mp:
-            if cap is not None:
-                mp.setitem(placement.CAPS, "WRITER_LOCAL_ROW_MAX", cap)
-            apply_changes_vertex_layout(spark, out, mk(), 8)
-        outs.append({
-            tuple(r)
-            for r in spark.read.parquet(out)
-            .select("vertex", "component", "v_bucket").collect()
-        })
-    assert outs[0] == outs[1] == outs[2]
-    flat = {(v, c) for v, c, _ in outs[0]}
-    assert {(10, 0), (31, 20), (70001, 70001), (70002, 20)} <= flat
-    assert len(flat) == 122  # 120 existing + 2 inserts, no dup rows
+    assign = connected_components(_chain_edges(spark, n)).localCheckpoint()
+    cdir, vdir = str(tmp / f"c_{tag}"), str(tmp / f"v_{tag}")
+    write_component_assign(assign, cdir, buckets=buckets)
+    write_vertex_assign(assign, vdir, buckets)
+    return cdir, vdir
+
+
+def _assignment(spark, layout):
+    return {
+        (r.vertex, r.component)
+        for r in spark.read.parquet(layout)
+        .select("vertex", "component").collect()
+    }
 
 
 def test_bounded_fold_schedules_zero_spark_jobs(spark, tmp_path):
-    """The round-11 claim, pinned: a bounded delivery's ENTIRE fold —
-    merge plan (pre-collected edges + driver-side label probe via
-    vertex_dir) and both projection rewrites — runs as driver/
-    filesystem work and schedules NO Spark job.  A future change that
-    silently reintroduces a job per fold (the round-10 fixed-cost
-    class) flips this test, not just a bench number."""
-    from pyspark.sql import types as T
+    """A bounded delivery's ENTIRE fold, given collected rows — label
+    probe, union-find and both projection rewrites — runs as driver/
+    filesystem work and schedules NO Spark job.  A change that
+    reintroduces a job per fold flips this test, not just a bench
+    number."""
+    from hfcommunity_spark.operators.graph import fold_components_delivery
 
-    from hfcommunity_spark.operators.graph import (
-        _local_frame,
-        apply_changes_vertex_layout,
-        apply_relabel_in_place,
-        component_merge_plan_pruned,
-        connected_components,
-        write_component_assign,
-        write_vertex_assign,
-    )
-
-    hist = _chain_edges(spark, 120)
-    assign = connected_components(hist).localCheckpoint()
-    cdir = str(tmp_path / "cassign")
-    vdir = str(tmp_path / "vassign")
-    write_component_assign(assign, cdir, buckets=8)
-    write_vertex_assign(assign, vdir, 8)
-    sch = T.StructType([
-        T.StructField("src", T.LongType()),
-        T.StructField("dst", T.LongType()),
-    ])
-    delta = _local_frame(
-        spark, [(9, 10), (29, 30), (5, 200001)], sch
-    )
+    cdir, vdir = _layouts(tmp_path, spark, "zero")
     sc = spark.sparkContext
     group = "hfc-zero-job-fold"
     sc.setJobGroup(group, "bounded fold must not schedule jobs")
     try:
-        fresh, relabel = component_merge_plan_pruned(
-            spark, vdir, delta, buckets=8, vertex_dir=vdir
+        fold_components_delivery(
+            spark, cdir, vdir, [(9, 10), (29, 30), (5, 200001)], 8
         )
-        changed = apply_relabel_in_place(
-            spark, cdir, relabel, buckets=8, fresh=fresh,
-            return_changes=True,
-        )
-        apply_changes_vertex_layout(spark, vdir, changed, 8)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     # and the fold actually happened: the merge + fresh vertex are in
     # the rewritten layouts
-    got = {
-        (r.vertex, r.component)
-        for r in spark.read.parquet(cdir)
-        .select("vertex", "component").collect()
-    }
+    got = _assignment(spark, cdir)
     assert (9, 0) in got and (10, 0) in got      # 0↔10 merged
     assert (200001, 0) in got                    # fresh joins 5's comp
-    vgot = {
-        (r.vertex, r.component)
-        for r in spark.read.parquet(vdir)
-        .select("vertex", "component").collect()
-    }
-    assert got == vgot  # both projections agree
+    assert got == _assignment(spark, vdir)  # both projections agree
 
 
-def test_relabel_local_writer_cap_falls_back(spark, tmp_path, monkeypatch):
-    """apply_relabel_in_place with local frames but a pinned-to-0 row
-    cap must take the distributed write and still produce the exact
-    fast-path content (the gate fails before any mutation)."""
-    from pyspark.sql import types as T
+def test_fold_reads_every_gate_before_any_write(spark, tmp_path,
+                                                monkeypatch):
+    """The local fold checks every gate before it writes: with the
+    last read (the changed vertices' v_buckets) forced over its cap,
+    both layouts' file listings are still the pre-fold listings when
+    the distributed chain starts, and the distributed chain then
+    leaves the same end state as the local fold."""
+    import os
 
-    from hfcommunity_spark.operators.graph import (
-        _local_frame,
-        apply_relabel_in_place,
-        connected_components,
-        write_component_assign,
-    )
+    from hfcommunity_spark.operators import bucketed
+    from hfcommunity_spark.operators import graph as G
 
-    hist = _chain_edges(spark, 120)
-    assign = connected_components(hist).localCheckpoint()
-    rel_rows = [(10, 0), (30, 20)]
-    fresh_rows = [(100001, 100001), (100002, 30)]
-    sch2 = T.StructType([
-        T.StructField("vertex", T.LongType()),
-        T.StructField("component", T.LongType()),
-    ])
-    rsch = T.StructType([
-        T.StructField("component", T.LongType()),
-        T.StructField("merged", T.LongType()),
-    ])
-    outs, changes = [], []
-    for cap in (None, 0):
-        out = str(tmp_path / f"assign_cap{cap}")
-        write_component_assign(assign, out, buckets=8)
-        with monkeypatch.context() as mp:
-            if cap is not None:
-                mp.setitem(placement.CAPS, "WRITER_LOCAL_ROW_MAX", cap)
-            ch = apply_relabel_in_place(
-                spark, out,
-                _local_frame(spark, rel_rows, rsch), buckets=8,
-                fresh=_local_frame(spark, fresh_rows, sch2),
-                return_changes=True,
-            )
-        changes.append({tuple(r) for r in ch.collect()})
-        outs.append({
-            tuple(r)
-            for r in spark.read.parquet(out)
-            .select("vertex", "component", "c_bucket").collect()
-        })
-    assert outs[0] == outs[1]
-    assert changes[0] == changes[1]
+    delivery = [(9, 10), (29, 30), (5, 200001), (200001, 200002)]
+
+    def listing(d):
+        return sorted(
+            os.path.relpath(os.path.join(r, f), d)
+            for r, _, fs in os.walk(d) for f in fs
+        )
+
+    want_c, want_v = _layouts(tmp_path, spark, "local")
+    G.fold_components_delivery(spark, want_c, want_v, delivery, 8)
+
+    cdir, vdir = _layouts(tmp_path, spark, "gated")
+    before = (listing(cdir), listing(vdir))
+    reads, entered = [], []
+    real_read, real_plan = bucketed.read_rows, G.component_merge_plan_pruned
+
+    def read_rows(dir_, pcol, bkts, columns, cap):
+        reads.append((dir_, pcol))
+        return real_read(dir_, pcol, bkts, columns,
+                         0 if len(reads) == 3 else cap)
+
+    def merge_plan(*a, **kw):
+        entered.append((listing(cdir), listing(vdir)))
+        return real_plan(*a, **kw)
+
+    monkeypatch.setattr(bucketed, "read_rows", read_rows)
+    monkeypatch.setattr(G, "component_merge_plan_pruned", merge_plan)
+    G.fold_components_delivery(spark, cdir, vdir, delivery, 8)
+    assert reads == [(vdir, "v_bucket"), (cdir, "c_bucket"),
+                     (vdir, "v_bucket")]
+    assert entered == [before]
+    assert _assignment(spark, cdir) == _assignment(spark, want_c)
+    assert _assignment(spark, vdir) == _assignment(spark, want_v)
+    assert _assignment(spark, cdir) == _assignment(spark, vdir)
 
 
 def test_pruned_merge_plan_property_local_equals_distributed(spark,
-                                                             tmp_path,
-                                                             monkeypatch):
-    """Property version of the fast-path parity lock: across
-    randomized histories and deliveries (merges within the history,
-    merges ACROSS prior deliveries, fresh chains, self-loops,
-    duplicate edges), folding through the driver-local plan and the
-    distributed plan must produce identical maintained assignments.
-    Folds several deliveries so the local path's relabel maps feed
-    back through the PERSISTED layouts — the exact x15 shape."""
+                                                             tmp_path):
+    """Across randomized histories and deliveries (merges within the
+    history, merges ACROSS prior deliveries, fresh chains, self-loops,
+    duplicate edges), fold_components_delivery's local fold and its
+    distributed chain (under placement.distributed()) must produce
+    identical maintained assignments.  Folds several deliveries so
+    each fold's relabel maps feed back through the PERSISTED layouts
+    — the exact x15 shape."""
     import random
 
     from hfcommunity_spark.operators.graph import (
-        apply_changes_vertex_layout,
-        apply_relabel_in_place,
-        component_merge_plan_pruned,
         connected_components,
+        fold_components_delivery,
         write_component_assign,
         write_vertex_assign,
     )
@@ -1134,21 +1002,12 @@ def test_pruned_merge_plan_property_local_equals_distributed(spark,
         assign = connected_components(hist).localCheckpoint()
         write_component_assign(assign, cdir, buckets=buckets)
         write_vertex_assign(assign, vdir, buckets)
-        with monkeypatch.context() as mp:
-            if force_distributed:
-                mp.setitem(placement.CAPS, "QUOTIENT_LOCAL_EDGE_MAX", 0)
+        with (placement.distributed() if force_distributed
+              else contextlib.nullcontext()):
             for d in deliveries:
                 delta = spark.createDataFrame(d, "src long, dst long")
-                fresh, relabel = component_merge_plan_pruned(
-                    spark, spark.read.parquet(vdir), delta, buckets
-                )
-                changed = apply_relabel_in_place(
-                    spark, cdir, relabel, buckets=buckets, fresh=fresh,
-                    return_changes=True,
-                )
-                apply_changes_vertex_layout(
-                    spark, vdir, changed, buckets
-                )
+                fold_components_delivery(spark, cdir, vdir, delta,
+                                         buckets)
         return {
             (r.vertex, r.component)
             for r in spark.read.parquet(cdir)

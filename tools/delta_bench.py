@@ -265,9 +265,9 @@ def main() -> None:
     # chain-bridging merge edges, and a 10x history step.  The rebuild
     # arm re-runs CC over the whole history+delta; the delta arm runs
     # the PERSISTED-layout path a deployment runs — endpoint lookups
-    # partition-pruned against the vertex-bucketed assignment
-    # (component_merge_plan_pruned) and the relabel applied against
-    # the component-bucketed projection (relabel_affected_buckets).
+    # partition-pruned against the vertex-bucketed assignment and the
+    # relabel applied against the component-bucketed projection, both
+    # in place (fold_components_delivery).
     # Bucket COUNT scales with H (constant ASSIGN_ROWS_PER_BUCKET
     # bucket size), so per-delivery IO is bounded by
     # |delivery vertices| x bucket_size — the flatness claim only
@@ -275,9 +275,7 @@ def main() -> None:
     # arm's H values sit at 4e5/4e6 rather than the corpus scales.
     from hfcommunity_spark.operators.graph import (
         ASSIGN_ROWS_PER_BUCKET,
-        apply_changes_vertex_layout,
-        apply_relabel_in_place,
-        component_merge_plan_pruned,
+        fold_components_delivery,
         write_component_assign,
         write_vertex_assign,
     )
@@ -326,8 +324,6 @@ def main() -> None:
                 f"LOCATION '{tdir}'"
             )
             spark.sql(f"MSCK REPAIR TABLE {tname}")
-        vrel = spark.table(f"hfc_db_vassign_{label}")
-        crel = spark.table(f"hfc_db_cassign_{label}")
         # pristine copies: the delta arm runs the REAL writers (the
         # table mutates), so each timed rep starts from the same state
         shutil.copytree(vdir, vdir + "_pristine", dirs_exist_ok=True)
@@ -349,17 +345,10 @@ def main() -> None:
             # the FULL per-delivery write path a deployment runs:
             # pruned endpoint resolution, both projections rewritten
             # in place (component buckets moved, vertex rows upserted)
-            fresh, relabel = component_merge_plan_pruned(
-                spark, vrel, delta_e, buckets, vertex_dir=vdir
-            )
-            changed = apply_relabel_in_place(
-                spark, cdir, relabel, buckets=buckets, fresh=fresh,
-                assign_rel=crel, table_name=f"hfc_db_cassign_{label}",
-                return_changes=True,
-            )
-            apply_changes_vertex_layout(
-                spark, vdir, changed, buckets, vertex_rel=vrel,
-                table_name=f"hfc_db_vassign_{label}",
+            fold_components_delivery(
+                spark, cdir, vdir, delta_e, buckets,
+                ctable=f"hfc_db_cassign_{label}",
+                vtable=f"hfc_db_vassign_{label}",
             )
 
         cluster_history[label] = {

@@ -58,6 +58,7 @@ def main() -> None:
 
     tally: dict = defaultdict(lambda: [0.0, 0])
     _wrap("hfcommunity_spark.operators.graph", [
+        "fold_components_delivery", "_fold_local", "_min_labels",
         "component_merge_plan_pruned", "apply_relabel_in_place",
         "apply_changes_vertex_layout", "_sync_catalog_partitions",
         "materialize_and_free", "_eager_checkpoint", "_lazy_checkpoint",

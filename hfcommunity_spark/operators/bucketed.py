@@ -210,16 +210,17 @@ def snapshot(src: str, dst: str, pcol: str | None = None,
                             copy_function=_link_or_copy)
 
 
-def flat_snapshot(src: str, pcol: str, dst: str) -> None:
-    """Freeze every data file of ``src`` into the ONE new directory
+def flat_snapshot(src: str, pcol: str, dst: str, bkts=None) -> None:
+    """Freeze every data file of ``src`` — or with ``bkts`` only those
+    buckets' files, missing ones skipped — into the ONE new directory
     ``dst`` as hardlinks named ``<bucket>-<file>`` (bucket directories
     may share file names), with :func:`snapshot`'s copy fallback.  For
-    a serve read that needs no partition column: Spark lists a single
+    a read that needs no partition column: Spark lists a single
     directory on the driver, where a read of the bucket tree lists the
     bucket directories in a parallel-listing Spark job once there are
     more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
     (32) of them."""
     os.makedirs(dst)
-    for b, paths in bucket_files(src, pcol).items():
+    for b, paths in bucket_files(src, pcol, bkts).items():
         for p in paths:
             _link_or_copy(p, os.path.join(dst, f"{b}-{os.path.basename(p)}"))

@@ -16,6 +16,8 @@ Scale design (the point of each variant):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -884,11 +886,26 @@ def dup_span_stats_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _span_exploded_frame(docs: DataFrame) -> DataFrame:
+    """(doc_id, h) span rows, one per {NGRAM}-gram occurrence — h is
+    the 8-byte ``xxhash64`` of the gram.  A map-only plan (split,
+    explode, hash; no exchange): the one shingle explode that the
+    postings rollup and the local fold's bounded collect share."""
+    with_words = docs.withColumn(
+        "w", F.split(F.col("text"), " ")
+    ).filter(F.size("w") >= NGRAM)
+    return with_words.select(
+        "doc_id",
+        F.explode(F.expr(_shingle_expr(NGRAM))).alias("shingle"),
+    ).select("doc_id", F.xxhash64("shingle").alias("h"))
+
+
 def span_postings_frame(docs: DataFrame, wide: bool = True) -> DataFrame:
-    """(doc_id, h, c) span postings — h is the 8-byte ``xxhash64`` of
-    each {NGRAM}-gram, c its within-doc multiplicity.  The maintained
-    base state of the span-audit family: per-doc stats derive from it,
-    and a delivery extends it by union (:func:`span_index_delta`).
+    """(doc_id, h, c) span postings: :func:`_span_exploded_frame`
+    counted per (doc_id, h), c being the span's within-doc
+    multiplicity.  The maintained base state of the span-audit family:
+    per-doc stats derive from it, and a delivery extends it by union
+    (:func:`span_index_delta`).
 
     ``wide=True`` (corpus builds) repartitions a narrow input to
     session width so the tokenize/explode parallelizes; delivery
@@ -903,14 +920,7 @@ def span_postings_frame(docs: DataFrame, wide: bool = True) -> DataFrame:
         par = default_parallelism()
         if docs.rdd.getNumPartitions() < par:
             docs = docs.repartition(par)
-    with_words = docs.withColumn(
-        "w", F.split(F.col("text"), " ")
-    ).filter(F.size("w") >= NGRAM)
-    spans = with_words.select(
-        "doc_id",
-        F.explode(F.expr(_shingle_expr(NGRAM))).alias("shingle"),
-    ).select("doc_id", F.xxhash64("shingle").alias("h"))
-    return spans.groupBy("doc_id", "h").agg(
+    return _span_exploded_frame(docs).groupBy("doc_id", "h").agg(
         F.count(F.lit(1)).alias("c")
     )
 
@@ -940,12 +950,12 @@ def span_stats_frame(docs: DataFrame) -> DataFrame:
     return span_stats_from_postings(span_postings_frame(docs))
 
 
-def _span_delta_changed_stats(probe: DataFrame,
-                              batch_postings: DataFrame,
-                              stats: DataFrame) -> DataFrame:
-    """The span delta's arithmetic, given the ONE probe the delivery
-    needs: ``probe`` = the corpus postings rows whose ``h`` occurs in
-    the batch.  Everything per-h the update requires derives from it:
+def _span_changed_rollup(batch_postings: DataFrame,
+                         probe: DataFrame) -> DataFrame:
+    """The span delta's arithmetic as one Spark frame, given the ONE
+    probe the delivery needs: ``probe`` = the corpus postings rows
+    whose ``h`` occurs in the batch.  Everything per-h the update
+    requires derives from it:
 
     - ``nd_old(h)`` (cross-doc count among OLD docs, for exactly the
       batch's hashes) = row count of ``probe`` per h — no second scan
@@ -959,23 +969,21 @@ def _span_delta_changed_stats(probe: DataFrame,
       Docs whose shared hashes were all already duplicated drop out —
       narrower than "shares any hash" and value-identical.
 
-    Returns ONLY the changed stats rows (batch docs + old docs with an
-    increment); the caller carries the rest forward untouched.
+    Returns one row per CHANGED doc — ``(doc_id, is_new, n_spans_new,
+    dup_new, inc)``: a batch doc (``is_new`` 1) with its full stats,
+    or an old doc (``is_new`` 0) with its ``inc`` > 0.
 
-    Plan shape (round-11 restructure): ONE tagged union of batch ∪
-    probe, the two per-h cross-doc counts as WINDOW sums over
-    partitionBy(h) (one shuffle, one pass, no per-h groupBy and no
-    rejoin — the :func:`span_stats_from_postings` idiom), then ONE
-    per-doc rollup — batch docs and old-doc increments fall out of the
-    same rollup via the tag.  The previous shape ran two per-h
-    groupBys, two per-doc groupBys, and three broadcast exchanges over
-    the same delivery-bounded rows; at this size the fold's cost IS
-    its stage count.  Every input is consumed exactly once, so the
-    probe needs no materialization of its own.  Batch doc_ids are
-    disjoint from old doc_ids by the delivery contract, so
-    ``max(tag)`` cleanly classifies each rolled-up doc."""
+    Plan shape: ONE tagged union of batch ∪ probe, the two per-h
+    cross-doc counts as WINDOW sums over partitionBy(h) (one shuffle,
+    no per-h groupBy and no rejoin — the
+    :func:`span_stats_from_postings` idiom), then ONE per-doc rollup;
+    batch docs and old-doc increments fall out of the same rollup via
+    the tag.  Batch doc_ids are disjoint from old doc_ids by the
+    delivery contract, so ``max(tag)`` classifies each doc (a
+    colliding doc counts as a batch doc).  :func:`_span_changed_local`
+    is the same arithmetic on Arrow tables."""
     wh = Window.partitionBy("h")
-    pre = (
+    return (
         batch_postings.withColumn("tag", F.lit(1))
         .unionByName(probe.withColumn("tag", F.lit(0)))
         .withColumn("nd_batch", F.sum("tag").over(wh))
@@ -999,16 +1007,23 @@ def _span_delta_changed_stats(probe: DataFrame,
                 ).otherwise(0)
             ).alias("inc"),
         )
-        # materialized once (delivery-bounded): BOTH output arms read
-        # it, and the caller checkpoints the final changed rows too —
-        # without this the union+window+rollup pipeline runs once per
-        # arm inside that single materialization.  (r14 re-measured:
-        # removing this checkpoint does NOT let ReuseExchange dedupe
-        # the two arms — the old-docs arm consumes ``pre`` through a
-        # BROADCAST build, and exchange reuse does not cross a
-        # broadcast boundary, so the window pipeline ran twice and
-        # the fold got slower; the checkpoint stays.)
-    ).localCheckpoint()
+        .filter((F.col("is_new") == 1) | (F.col("inc") > 0))
+    )
+
+
+def _span_delta_changed_stats(probe: DataFrame,
+                              batch_postings: DataFrame,
+                              stats: DataFrame) -> DataFrame:
+    """The changed stats rows ``(doc_id, n_spans, n_dup_spans)`` of a
+    delivery — batch docs and old docs with an increment — from
+    :func:`_span_changed_rollup`; the caller carries the rest forward
+    untouched."""
+    # materialized once (delivery-bounded): BOTH output arms read it.
+    # Exchange reuse does not dedupe the two arms — the old-docs arm
+    # consumes it through a BROADCAST build, and exchange reuse does
+    # not cross a broadcast boundary — so without this the window
+    # pipeline runs twice
+    pre = _span_changed_rollup(batch_postings, probe).localCheckpoint()
     batch_stats = pre.filter(F.col("is_new") == 1).select(
         "doc_id",
         F.col("n_spans_new").alias("n_spans"),
@@ -1016,8 +1031,7 @@ def _span_delta_changed_stats(probe: DataFrame,
     )
     old_changed = stats.join(
         F.broadcast(
-            pre.filter((F.col("is_new") == 0) & (F.col("inc") > 0))
-            .select("doc_id", "inc")
+            pre.filter(F.col("is_new") == 0).select("doc_id", "inc")
         ),
         "doc_id",
     ).select(
@@ -1048,8 +1062,8 @@ def span_index_delta(postings: DataFrame, stats: DataFrame,
       touched-h cross-doc recount).  All per-h arithmetic derives from
       that probe — see :func:`_span_delta_changed_stats`.
 
-    Against a PERSISTED bucketed postings table, use
-    :func:`span_index_delta_bucketed` — same arithmetic with the probe
+    Against the PERSISTED bucketed layouts, use
+    :func:`span_fold_in_place` — same arithmetic with the probe
     partition-pruned to the batch's h-buckets.  Exactness is locked by
     the delta-vs-rebuild property test (``tests/test_llmops.py``): any
     split of a corpus into base + deliveries, applied sequentially,
@@ -1078,59 +1092,24 @@ def span_index_delta(postings: DataFrame, stats: DataFrame,
     return merged, carried.unionByName(changed)
 
 
-# Explicit read schemas for the two maintained span layouts
-# (r14, guide §5/§6: every ``spark.read.parquet`` of a bucketed layout
-# pays a driver-side footer-inference pass over the ≤64 bucket files
-# before any job runs — measured 0.26 s/read on the stats layout and
-# ~0.23 s on the postings probe at sf0.1; the layouts' schemas are
-# pinned by their writers, so inference re-derives a constant).  The
-# partition column rides in the schema, which skips the footer read
-# while leaving partition discovery (and therefore pruning) intact.
+SPAN_H_BUCKETS = 64
+# above this many distinct batch hashes the probe's scan predicate
+# falls back from a driver-side InSet literal to a broadcast semi-join
+_SPAN_PROBE_INSET_MAX = 100_000
+
+# Explicit read schemas for the two maintained span layouts: every
+# ``spark.read.parquet`` of a bucketed layout otherwise pays a
+# driver-side footer-inference pass over the bucket files before any
+# job runs (measured 0.26 s/read on the stats layout and ~0.23 s on
+# the postings probe at sf0.1), and the writers pin the schemas.  With
+# the partition column in the schema, partition discovery (and so
+# pruning) still runs; the flat schema reads a flat snapshot.
 _SPAN_POSTINGS_READ_SCHEMA = (
     "doc_id BIGINT, h BIGINT, c BIGINT, h_bucket INT"
 )
-_SPAN_STATS_READ_SCHEMA = (
-    "doc_id BIGINT, n_spans BIGINT, n_dup_spans BIGINT, d_bucket INT"
-)
-
-
-def span_index_delta_bucketed(spark: SparkSession, postings_dir: str,
-                              stats: DataFrame,
-                              arriving_docs: DataFrame,
-                              buckets: int = None,
-                              ) -> tuple[DataFrame, DataFrame]:
-    """The span delta against the MATERIALIZED bucketed postings
-    layout (:func:`write_span_postings`) — the measured deployment
-    path: the single probe reads only the parquet partitions whose
-    ``h_bucket`` the batch's hashes land in (Catalyst partition
-    pruning) and broadcast-semi-joins on h, so probe IO is the touched
-    fraction of the table and all downstream arithmetic is bounded by
-    the delivery + the (tiny) probe result.
-
-    Returns ``(batch_postings, changed_stats)`` — the two frames a
-    deployment actually MATERIALIZES per delivery (the batch partition
-    appended to the postings table; the changed rows upserted into the
-    doc-partitioned stats table).  Untouched postings/stats rows are
-    never read, rewritten, or recounted."""
-    if buckets is None:
-        buckets = SPAN_H_BUCKETS
-    # LAZY checkpoint (r15): the probe gate's distinct-h collect fully
-    # materializes the batch in its map stage (see
-    # :func:`_span_fold_distributed`)
-    batch_postings = span_postings_frame(
-        arriving_docs, wide=False
-    ).localCheckpoint(eager=False)
-    # the probe stays LAZY (r15): it is consumed exactly once — inside
-    # the ``pre`` rollup that :func:`_span_delta_changed_stats`
-    # eagerly checkpoints — so the partition-pruned parquet scan runs
-    # once either way and the probe's own checkpoint was one pure
-    # fixed-cost job per delivery (the r14 comment claiming the scan
-    # would run once per output arm predated ``pre``'s checkpoint)
-    probe = _bucketed_span_probe(
-        spark, postings_dir, batch_postings, buckets
-    )
-    changed = _span_delta_changed_stats(probe, batch_postings, stats)
-    return batch_postings, changed
+_SPAN_STATS_COLS = ("doc_id", "n_spans", "n_dup_spans")
+_SPAN_STATS_SCHEMA = "doc_id BIGINT, n_spans BIGINT, n_dup_spans BIGINT"
+_SPAN_STATS_READ_SCHEMA = _SPAN_STATS_SCHEMA + ", d_bucket INT"
 
 
 def _bucketed_span_probe(spark: SparkSession, postings_dir: str,
@@ -2134,10 +2113,9 @@ def _span_probe_local(postings_dir: str, hit, h_want,
     """Driver-side twin of :func:`_bucketed_span_probe`: read the
     touched h-buckets' files with pyarrow and keep rows whose ``h``
     is in the batch's hash array (returned as an Arrow table) — a
-    vectorized ``is_in`` kernel, NOT a
-    |h_set|-literal Spark In() (whose py4j marshalling + analysis cost
-    seconds per fold at ~10k hashes; the round-2 INSET lesson at 4×
-    the size).  Gates — all before any mutation anywhere: total file
+    vectorized ``is_in`` kernel, NOT a |h_set|-literal Spark In()
+    (whose py4j marshalling + analysis cost seconds per fold at ~10k
+    hashes).  Gates — all before any mutation anywhere: total file
     bytes over ``SPAN_LOCAL_READ_BYTE_MAX``, filtered rows over
     ``cap``, unreadable/corrupt files → None (distributed probe
     runs)."""
@@ -2204,7 +2182,7 @@ def _span_fold_write_marker(postings_dir: str,
     """Journal the pre-fold state of every h-bucket this fold will
     append into: the sorted file listing per touched bucket.  Written
     BEFORE either layout mutates; removed after both writes land.
-    Written ATOMICALLY (temp file + rename, ADVICE r13): a crash
+    Written ATOMICALLY (temp file + rename): a crash
     mid-marker-write must not leave a truncated JSON that breaks
     :func:`recover_span_fold` itself — and because the rename is the
     publish point, a missing-or-unparseable marker always means "no
@@ -2241,6 +2219,23 @@ def _span_fold_write_marker(postings_dir: str,
         pass
 
 
+@contextmanager
+def _span_fold_journal(postings_dir: str, touched_buckets):
+    """Bracket a fold's two layout writes: the marker
+    (:func:`_span_fold_write_marker`) is written before the body and
+    removed after it.  If the body raises, the marker stays, and every
+    later fold refuses until :func:`recover_span_fold` has run.  A
+    no-op where the postings layout is not a local directory."""
+    import os
+
+    journal = os.path.isdir(postings_dir)
+    if journal:
+        _span_fold_write_marker(postings_dir, touched_buckets)
+    yield
+    if journal:
+        os.unlink(_span_fold_marker_path(postings_dir))
+
+
 def recover_span_fold(spark, postings_dir: str, stats_dir: str,
                       stats_buckets: int = SPAN_STATS_BUCKETS) -> bool:
     """Recover the span layouts from a fold that died between its two
@@ -2260,16 +2255,14 @@ def recover_span_fold(spark, postings_dir: str, stats_dir: str,
     3. Remove the marker (last — a crash mid-recovery re-runs it).
 
     The interrupted delivery itself was never recorded as folded, so
-    the caller re-folds it afterwards.  BOTH fold paths journal this
-    window on local filesystems (r14): the driver-local path's two
-    plain-file writes have no commit protocol of their own, and while
-    the DISTRIBUTED path's individual writes go through Spark's
-    output-commit protocol (visible files appear only at job commit),
-    its stats overwrite and postings append are still two separate
-    jobs — the same marker brackets them, and the same rollback +
-    derived-stats rebuild recovers (test-locked for both paths in
-    tests/test_llmops.py).  On object storage the local marker probe
-    is a no-op and recovery is step 2 plus a batch-presence probe."""
+    the caller re-folds it afterwards.  Both fold paths journal this
+    window on local filesystems with :func:`_span_fold_journal`: the
+    local fold's two plain-file writes have no commit protocol of
+    their own, and the distributed chain's stats overwrite and
+    postings append each commit through Spark's output-commit protocol
+    but are still two separate jobs.  On object storage the local
+    marker probe is a no-op and recovery is step 2 plus a
+    batch-presence probe."""
     import json
     import os
 
@@ -2283,13 +2276,11 @@ def recover_span_fold(spark, postings_dir: str, stats_dir: str,
         # Unparseable marker.  The marker is published by an atomic
         # rename AFTER its full content is fsynced, and always BEFORE
         # any layout mutation — so a corrupt one can only mean
-        # filesystem damage after the fact, or a marker written by a
-        # pre-r14 build (plain open/json.dump) that crashed mid-write,
-        # i.e. before anything mutated.  Either way the defensible
-        # recovery is: leave postings as they stand, rebuild stats
-        # from them (stats are derived state), drop the marker
-        # (ADVICE r13 — the old behavior crashed on json.load here,
-        # wedging the documented recovery path itself).
+        # filesystem damage after the fact, or a non-atomic marker
+        # write that crashed before anything mutated.  Either way:
+        # leave postings as they stand, rebuild stats from them (stats
+        # are derived state) and drop the marker, rather than wedge
+        # the recovery path itself on json.load.
         snapshot = {}
     for b, keep in snapshot.items():
         keep_set = set(keep)
@@ -2308,73 +2299,19 @@ def recover_span_fold(spark, postings_dir: str, stats_dir: str,
     return True
 
 
-def _span_exploded_frame(docs: DataFrame) -> DataFrame:
-    """(doc_id, h) span rows WITHOUT the per-doc rollup — the local
-    fold's collect plan: split/explode/xxhash64 run JVM-side as a
-    map-only job (no exchange), the (doc, h) -> c rollup happens in
-    the driver dict.  Must stay in lockstep with
-    :func:`span_postings_frame`'s shingle arithmetic."""
-    with_words = docs.withColumn(
-        "w", F.split(F.col("text"), " ")
-    ).filter(F.size("w") >= NGRAM)
-    return with_words.select(
-        "doc_id",
-        F.explode(F.expr(_shingle_expr(NGRAM))).alias("shingle"),
-    ).select("doc_id", F.xxhash64("shingle").alias("h"))
-
-
-def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
-                          batch_tbl, buckets: int,
-                          stats_buckets: int) -> bool:
-    """The driver-local fold over an ALREADY-COLLECTED batch of
-    (doc_id, h) span rows (a pyarrow Table, one row per exploded
-    span) — the seam the x17 lifecycle uses to split ONE whole-stream
-    collect into per-delivery folds (the x15 one-scan lesson), making
-    each fold pure compute + file IO with zero Spark jobs.  Nothing
-    collected is ever re-uploaded into a Spark plan (the round-trip
-    trap, ARCHITECTURE.md §5r); serving reads the layout as parquet.
-
-    Returns False — before ANY mutation — when a gate fails (row cap
-    ``SPAN_LOCAL_ROW_MAX`` resolved at call time, probe byte budget,
-    non-local/unreadable layout); the caller then runs the
-    distributed fold on the same inputs.  At 100 TB the layouts live
-    on object storage, ``isdir`` fails, and the distributed path is
-    the one that runs.
-
-    The _span_delta_changed_stats arithmetic runs on Arrow kernels —
-    group_by rollups + hash joins in C++ — because the per-delivery
-    streams are ~10k rows at sf0.1 but ~300k at sf1.0, where Python
-    dict rollups made the driver-local fold LOSE to the distributed
-    plan it replaces (measured 5.9 vs 13.4 s warm favors local at
-    sf1.0 only because of this vectorization); only the delivery-
-    bounded RESULTS (per-doc stats, increments) land in Python."""
-    import os
-
+def _span_changed_local(batch, probe):
+    """:func:`_span_changed_rollup` on Arrow tables: from the batch
+    postings ``batch`` and the ``probe`` rows (the corpus postings
+    whose ``h`` occurs in the batch), both ``(doc_id, h, c)``, the
+    batch docs' stats ``(doc_id, n_spans, n_dup_spans)`` and the old
+    docs' increments ``(doc_id, inc)``, every ``inc`` > 0.  Group-by
+    rollups and hash joins run in C++; only the delivery-bounded
+    results reach Python.  Pure — no Spark, no IO."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from hfcommunity_spark.operators import graph as G
-
-    cap = placement.CAPS["SPAN_LOCAL_ROW_MAX"]
-    if not (os.path.isdir(postings_dir) and os.path.isdir(stats_dir)):
-        return False
-    # an in-flight marker means a previous fold died between its two
-    # layout mutations — folding on top would double-count (ADVICE
-    # r12); contract violations RAISE, never silently fall back
-    _span_fold_check_marker(postings_dir)
-    if batch_tbl.num_rows == 0:
-        return True  # empty delivery: nothing to fold
-    # (doc_id, h) -> c rollup; per-h ROLLED row counts are the
-    # cross-doc occurrence counts (rows unique per (doc_id, h))
-    batch = batch_tbl.group_by(["doc_id", "h"]).aggregate(
-        [([], "count_all")]
-    ).rename_columns(["doc_id", "h", "c"])
-    h_arr = pc.unique(batch.column("h"))
-    h_set = h_arr.to_pylist()
-    hit = sorted({h % buckets for h in h_set})
-    probe = _span_probe_local(postings_dir, hit, h_arr, cap)
-    if probe is None:
-        return False
+    # rows are unique per (doc_id, h), so per-h row counts are the
+    # cross-doc occurrence counts
     nd_b = batch.group_by("h").aggregate(
         [([], "count_all")]
     ).rename_columns(["h", "nd_batch"])
@@ -2390,328 +2327,273 @@ def _span_fold_local_rows(spark, postings_dir: str, stats_dir: str,
         ),
         b2.column("c"), pa.scalar(0, pa.int64()),
     )
-    bs = b2.append_column("dup_c", dup_c).group_by("doc_id").aggregate(
+    new = b2.append_column("dup_c", dup_c).group_by("doc_id").aggregate(
         [("c", "sum"), ("dup_c", "sum")]
-    )
-    batch_stats = {
-        r["doc_id"]: [r["c_sum"], r["dup_c_sum"]]
-        for r in bs.to_pylist()
-    }
-    # an OLD doc increments only via hashes transitioning nd 1 -> >=2:
-    # exactly its probe rows with nd_old == 1
-    ones = nd_o.filter(
-        pc.equal(nd_o.column("nd_old"), 1)
-    ).column("h")
-    inc = {
-        r["doc_id"]: r["c_sum"]
-        for r in probe.filter(
-            pc.is_in(probe.column("h"), value_set=ones)
-        ).group_by("doc_id").aggregate([("c", "sum")]).to_pylist()
-    }
-    batch_rows = list(
-        zip(batch.column("doc_id").to_pylist(),
-            batch.column("h").to_pylist(),
-            batch.column("c").to_pylist())
-    )
-    # pruned read of the touched stats buckets — the LAST gate, still
-    # before any mutation
-    touched = set(batch_stats) | set(inc)
-    sbkts = sorted({G._py_bucket(d, stats_buckets) for d in touched})
+    ).rename_columns(list(_SPAN_STATS_COLS))
+    # an OLD doc increments only via hashes moving nd 1 -> >=2: exactly
+    # its probe rows with nd_old == 1; a doc in both counts as a batch
+    # doc, as in the Spark rollup
+    ones = nd_o.filter(pc.equal(nd_o.column("nd_old"), 1)).column("h")
+    old = probe.filter(
+        pc.is_in(probe.column("h"), value_set=ones)
+    ).group_by("doc_id").aggregate([("c", "sum")])
+    old = old.filter(pc.invert(
+        pc.is_in(old.column("doc_id"), value_set=new.column("doc_id"))
+    )).rename_columns(["doc_id", "inc"])
+    return new, old
+
+
+def _span_fold_local(postings_dir: str, stats_dir: str, spans,
+                     buckets: int, stats_buckets: int) -> bool:
+    """The local fold of :func:`span_fold_in_place` over the
+    delivery's collected ``(doc_id, h)`` span rows: Arrow kernels and
+    file IO on the driver, no Spark job.  Every gate runs before any
+    write — at most ``SPAN_LOCAL_ROW_MAX`` span rows, the probe of the
+    touched h-buckets under its byte and row caps
+    (:func:`_span_probe_local`), the touched stats buckets' read under
+    the row cap — and a failed gate returns False with both layouts
+    untouched.  Then the journaled writes: the stats buckets rewritten
+    (staged commit), the batch postings appended one new file per
+    h-bucket.  Returns True once the delivery is folded."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from hfcommunity_spark.operators.graph import _py_bucket
+
+    cap = placement.CAPS["SPAN_LOCAL_ROW_MAX"]
+    if spans.num_rows > cap:
+        return False
+    if spans.num_rows == 0:
+        return True  # an empty delivery changes neither layout
+    batch = spans.group_by(["doc_id", "h"]).aggregate(
+        [([], "count_all")]
+    ).rename_columns(["doc_id", "h", "c"])
+    h_arr = pc.unique(batch.column("h"))
+    hit = sorted({h % buckets for h in h_arr.to_pylist()})
+    probe = _span_probe_local(postings_dir, hit, h_arr, cap)
+    if probe is None:
+        return False
+    new, old = _span_changed_local(batch, probe)
+    ids, ns, nd = (new.column(c).to_pylist() for c in _SPAN_STATS_COLS)
+    batch_stats = dict(zip(ids, zip(ns, nd)))
+    inc = dict(zip(old.column("doc_id").to_pylist(),
+                   old.column("inc").to_pylist()))
+    sbkts = sorted({
+        _py_bucket(d, stats_buckets) for d in (*batch_stats, *inc)
+    })
     data = bucketed.read_rows(
-        stats_dir, "d_bucket", sbkts,
-        ("doc_id", "n_spans", "n_dup_spans"), cap,
+        stats_dir, "d_bucket", sbkts, _SPAN_STATS_COLS, cap
     )
     if data is None:
         return False
-    stats_out: dict[int, list] = {}
-    for b, rows in data.items():
-        out = []
-        for d, ns, nd in rows:
-            if d in inc:
-                out.append((d, ns, nd + inc[d]))
-            elif d not in batch_stats:
-                out.append((d, ns, nd))
-            # a batch doc_id colliding with an existing stats row
-            # would violate the delivery contract; the fresh row
-            # below wins, matching the distributed upsert's anti-join
-        stats_out[b] = out
+    # a batch doc_id colliding with a stored row would violate the
+    # delivery contract; the batch row wins, as in the distributed
+    # upsert
+    stats_out = {
+        b: [(d, ns, nd + inc.get(d, 0)) for d, ns, nd in rows
+            if d not in batch_stats]
+        for b, rows in data.items()
+    }
     for d, (ns, nd) in batch_stats.items():
-        stats_out.setdefault(
-            G._py_bucket(d, stats_buckets), []
-        ).append((d, ns, nd))
-    # gates all passed — mutate: stats buckets rewritten (staged
-    # commit), batch postings appended one new file per h-bucket.
-    # The two layouts mutate NON-atomically, so the cross-layout
-    # window is journaled (ADVICE r12): a pre-mutation marker records
-    # each touched h-bucket's file listing; a crash between the writes
-    # leaves the marker, the next fold attempt RAISES, and
-    # :func:`recover_span_fold` rolls the postings back to the
-    # snapshot and rebuilds stats from them — after which the same
-    # delivery can be re-folded without double-counting.
-    import pyarrow as pa
-
-    i64 = pa.int64()
+        stats_out[_py_bucket(d, stats_buckets)].append((d, ns, nd))
     post_out: dict[int, list] = {}
-    for d, h, c in batch_rows:
+    for d, h, c in zip(*(batch.column(col).to_pylist()
+                         for col in ("doc_id", "h", "c"))):
         post_out.setdefault(h % buckets, []).append((d, h, c))
-    _span_fold_write_marker(postings_dir, post_out)
-    bucketed.write_buckets(
-        stats_dir, "d_bucket", stats_out,
-        (("doc_id", i64), ("n_spans", i64), ("n_dup_spans", i64)),
-    )
-    bucketed.write_buckets(
-        postings_dir, "h_bucket", post_out,
-        (("doc_id", i64), ("h", i64), ("c", i64)),
-        append=True,
-    )
-    os.unlink(_span_fold_marker_path(postings_dir))
+    i64 = pa.int64()
+    with _span_fold_journal(postings_dir, post_out):
+        bucketed.write_buckets(
+            stats_dir, "d_bucket", stats_out,
+            tuple((c, i64) for c in _SPAN_STATS_COLS),
+        )
+        bucketed.write_buckets(
+            postings_dir, "h_bucket", post_out,
+            (("doc_id", i64), ("h", i64), ("c", i64)),
+            append=True,
+        )
     return True
+
+
+def _span_stats_upsert(spark, carried: DataFrame, ch,
+                       stats_buckets: int) -> DataFrame:
+    """The distributed stats upsert's write frame: the ``carried``
+    stats rows of the touched d-buckets with the changed-docs table
+    ``ch`` (:func:`_span_changed_rollup`'s columns, collected) applied,
+    keyed by ``d_bucket`` for a dynamic partition overwrite.  ``ch``
+    goes up as ONE local relation, broadcast once: a left join adds
+    the old docs' increments and drops stored rows of batch doc_ids
+    (a batch row wins), and the batch docs' rows are unioned in."""
+    from hfcommunity_spark.operators.graph import _bucket_expr
+
+    rel = spark.createDataFrame(ch)
+    return (
+        carried.select(*_SPAN_STATS_COLS)
+        .join(F.broadcast(rel.select("doc_id", "is_new", "inc")),
+              "doc_id", "left")
+        .filter(F.coalesce(F.col("is_new"), F.lit(0)) == 0)
+        .select(
+            "doc_id",
+            "n_spans",
+            (
+                F.col("n_dup_spans")
+                + F.coalesce(F.col("inc"), F.lit(0).cast("bigint"))
+            ).alias("n_dup_spans"),
+        )
+        .unionByName(rel.filter(F.col("is_new") == 1).select(
+            "doc_id",
+            F.col("n_spans_new").alias("n_spans"),
+            F.col("dup_new").alias("n_dup_spans"),
+        ))
+        .withColumn("d_bucket", _bucket_expr("doc_id", stats_buckets))
+    )
 
 
 def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
                            arriving_docs: DataFrame, buckets: int,
                            stats_buckets: int) -> None:
-    """The distributed span fold as a FUSED job chain (r15, guide §2:
-    the caps-zeroed arm measured ~1.8 s/delivery of per-job fixed cost
-    across the old probe→delta→append→overwrite sequence — 8-9 driver
-    actions per delivery).  Four actions remain:
+    """The distributed chain of :func:`span_fold_in_place`, from the
+    arriving documents:
 
-    1. batch postings checkpoint (three consumers: probe gate, delta
-       union, append);
-    2. the probe-gate Arrow collect (unchanged — builds the pushed
-       InSet + bucket prune list driver-side, r14);
-    3. ONE ``toArrow`` collect that runs the whole delta pipeline —
-       union(batch ∪ pruned probe scan) → per-h window counts → per-doc
-       rollup, the exact :func:`_span_delta_changed_stats` arithmetic —
-       filtered to the CHANGED doc set (batch docs + old docs with an
-       increment).  The collected set is the same delivery-bounded
-       population the old shape broadcast twice (``changed.doc_id``
-       anti-join build + the inc rows), so driver boundedness is
-       unchanged in class; what disappears is the ``pre`` checkpoint,
-       the ``changed`` checkpoint, and the ``_bucket_ids`` collect —
-       three fixed-cost jobs per delivery.
-    4. the stats upsert as ONE job: carried rows read from a HARDLINK
-       SNAPSHOT of the touched d_buckets (same inodes, different
-       names — the dynamic overwrite's deletes can't invalidate the
-       scan, so the pre-write ``localCheckpoint`` that existed only to
-       break the self-overwrite cycle is gone), inc applied via a
-       broadcast left join of a local relation, batch rows unioned as
-       a local relation (batch wins over a contract-violating
-       collision, matching the old anti-join and the driver-local
-       twin), dynamic partition overwrite exactly as before —
-       overlapped with the postings append (r14).
+    1. the batch postings, checkpointed lazily — the probe gate's
+       distinct-h collect runs a map stage over every batch partition,
+       so it materializes the checkpoint in its own job;
+    2. the probe gate (:func:`_bucketed_span_probe`): one Arrow
+       collect of the batch's hash set, driver-side bucket list, a
+       partition-pruned postings scan with a pushed InSet on h;
+    3. ONE ``toArrow`` collect of :func:`_span_changed_rollup` — the
+       changed docs, a delivery-bounded set;
+    4. the stats upsert (:func:`_span_stats_upsert`) as one dynamic
+       partition overwrite of the touched d-buckets.  Its carried rows
+       are read from a flat HARDLINK snapshot of those buckets (same
+       inodes, other names, so the overwrite's deletes cannot pull
+       files from under the scan, and one directory lists without a
+       Spark job); a stats layout that is not a local directory is
+       read pruned and checkpointed before the overwrite instead;
+    5. the postings append (:func:`append_span_postings`).
 
-    Layout contents are bit-identical to the old shape (parity-locked
-    local ≡ distributed ≡ rebuild in tests/test_llmops.py); on a
-    non-local stats layout (no snapshot possible) the carried read
-    falls back to the isin-pruned scan + checkpoint."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+    Steps 4 and 5 run in turn on the calling thread, inside the
+    journal bracket.  An empty delivery writes nothing."""
+    import os
+    import shutil
+    import tempfile
 
-    import pyarrow as pa
+    from hfcommunity_spark.operators.graph import _py_bucket, _write_tasks
 
-    from hfcommunity_spark.operators.graph import (
-        _bucket_expr,
-        _py_bucket,
-        _write_tasks,
-    )
-
-    # LAZY checkpoint (r15): the probe gate's distinct-h collect runs
-    # a map stage over EVERY batch partition (the limit only
-    # short-circuits the reduce), so it materializes the checkpoint in
-    # the same job — the dedicated eager-checkpoint job is gone
     batch_postings = span_postings_frame(
         arriving_docs, wide=False
     ).localCheckpoint(eager=False)
     probe = _bucketed_span_probe(
         spark, postings_dir, batch_postings, buckets
     )
-    wh = Window.partitionBy("h")
-    ch = (
-        batch_postings.withColumn("tag", F.lit(1))
-        .unionByName(probe.withColumn("tag", F.lit(0)))
-        .withColumn("nd_batch", F.sum("tag").over(wh))
-        .withColumn("nd_old", F.sum(1 - F.col("tag")).over(wh))
-        .groupBy("doc_id")
-        .agg(
-            F.max("tag").alias("is_new"),
-            F.sum(F.when(F.col("tag") == 1, F.col("c")).otherwise(0))
-            .alias("n_spans_new"),
-            F.sum(
-                F.when(
-                    (F.col("tag") == 1)
-                    & (F.col("nd_old") + F.col("nd_batch") >= 2),
-                    F.col("c"),
-                ).otherwise(0)
-            ).alias("dup_new"),
-            F.sum(
-                F.when(
-                    (F.col("tag") == 0) & (F.col("nd_old") == 1),
-                    F.col("c"),
-                ).otherwise(0)
-            ).alias("inc"),
-        )
-        .filter((F.col("is_new") == 1) | (F.col("inc") > 0))
-        .toArrow()
-    )
-    new_mask = [v == 1 for v in ch.column("is_new").to_pylist()]
-    ids = ch.column("doc_id").to_pylist()
-    nsn = ch.column("n_spans_new").to_pylist()
-    dpn = ch.column("dup_new").to_pylist()
-    inc = ch.column("inc").to_pylist()
-    batch_rel = spark.createDataFrame(pa.table({
-        "doc_id": pa.array(
-            [d for d, n in zip(ids, new_mask) if n], pa.int64()),
-        "n_spans": pa.array(
-            [v for v, n in zip(nsn, new_mask) if n], pa.int64()),
-        "n_dup_spans": pa.array(
-            [v for v, n in zip(dpn, new_mask) if n], pa.int64()),
-    }))
-    inc_rel = spark.createDataFrame(pa.table({
-        "doc_id": pa.array(
-            [d for d, n in zip(ids, new_mask) if not n], pa.int64()),
-        "inc": pa.array(
-            [v for v, n in zip(inc, new_mask) if not n], pa.int64()),
-    }))
-    sbkts = sorted({_py_bucket(d, stats_buckets) for d in ids})
-
-    snapshot = None
-    rows = None
-    if ch.num_rows:
-        if _os.path.isdir(stats_dir):
-            # hardlink snapshot of the touched buckets: the carried
-            # read scans these NAMES while the dynamic overwrite
-            # replaces the originals — same inodes, so no checkpoint
-            # is needed to cut lineage from the files being replaced
-            snapshot = _tempfile.mkdtemp(prefix="hfc_spanstats_snap_")
-            bucketed.snapshot(stats_dir, snapshot, "d_bucket", sbkts)
-            pruned = spark.read.schema(
-                _SPAN_STATS_READ_SCHEMA
-            ).parquet(snapshot)
-        else:
-            pruned = spark.read.schema(
-                _SPAN_STATS_READ_SCHEMA
-            ).parquet(stats_dir).filter(
-                F.col("d_bucket").isin(sbkts)
-            )
-        out = (
-            pruned.select("doc_id", "n_spans", "n_dup_spans")
-            .join(F.broadcast(batch_rel.select("doc_id")),
-                  "doc_id", "left_anti")
-            .join(F.broadcast(inc_rel), "doc_id", "left")
-            .select(
-                "doc_id",
-                "n_spans",
-                (
-                    F.col("n_dup_spans")
-                    + F.coalesce(F.col("inc"), F.lit(0).cast("bigint"))
-                ).alias("n_dup_spans"),
-            )
-            .unionByName(batch_rel)
-            .withColumn("d_bucket", _bucket_expr("doc_id", stats_buckets))
-        )
-        if snapshot is None:
-            # non-local layout: no snapshot names to read through —
-            # materialize before overwriting the files being read
-            out = out.localCheckpoint()
-        rows = out
-
-    journal = _os.path.isdir(postings_dir)
-    if journal:
-        _span_fold_write_marker(postings_dir, range(buckets))
+    ch = _span_changed_rollup(batch_postings, probe).toArrow()
+    if ch.num_rows == 0:
+        return
+    sbkts = sorted({
+        _py_bucket(d, stats_buckets) for d in ch.column("doc_id").to_pylist()
+    })
+    snap_root = None
     try:
-        # the two layout writes stay overlapped (r14, guide §2.6); the
-        # crash-journal window is unchanged — marker before either
-        # write, removed only after both (ADVICE r14: the threaded
-        # stats write's outcome is ALWAYS surfaced)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _stats_write() -> None:
-            if rows is None:
-                return
+        if os.path.isdir(stats_dir):
+            snap_root = tempfile.mkdtemp(prefix="hfc_spanstats_snap_")
+            snap = os.path.join(snap_root, "stats")
+            bucketed.flat_snapshot(stats_dir, "d_bucket", snap, sbkts)
+            carried = spark.read.schema(_SPAN_STATS_SCHEMA).parquet(snap)
+        else:
+            carried = spark.read.schema(
+                _SPAN_STATS_READ_SCHEMA
+            ).parquet(stats_dir).filter(F.col("d_bucket").isin(sbkts))
+        rows = _span_stats_upsert(spark, carried, ch, stats_buckets)
+        if snap_root is None:
+            rows = rows.localCheckpoint()
+        with _span_fold_journal(postings_dir, range(buckets)):
             (
-                rows.repartition(
-                    _write_tasks(len(sbkts)), F.col("d_bucket")
-                )
+                rows.repartition(_write_tasks(len(sbkts)), F.col("d_bucket"))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("d_bucket")
                 .parquet(stats_dir)
             )
-
-        with ThreadPoolExecutor(max_workers=1) as ex:
-            fut = ex.submit(_stats_write)
-            try:
-                append_span_postings(
-                    batch_postings, postings_dir, buckets
-                )
-            finally:
-                fut.result()
+            append_span_postings(batch_postings, postings_dir, buckets)
     finally:
-        if snapshot is not None:
-            _shutil.rmtree(snapshot, ignore_errors=True)
-    if journal:
-        _os.unlink(_span_fold_marker_path(postings_dir))
+        if snap_root is not None:
+            shutil.rmtree(snap_root, ignore_errors=True)
 
 
 def span_fold_in_place(spark, postings_dir: str, stats_dir: str,
-                       arriving_docs: DataFrame,
-                       buckets: int = None,
+                       arriving_docs: DataFrame, spans=None,
+                       buckets: int = SPAN_H_BUCKETS,
                        stats_buckets: int = SPAN_STATS_BUCKETS) -> None:
-    """Fold a delivery into the PERSISTED span layouts in place — the
-    maintained-table writer for the span-audit family: postings append
-    into their h-buckets, changed per-doc stats upsert into their
-    d-buckets, untouched rows never read or rewritten.  Driver-local
-    fast path when the layouts are local files and the delivery is
-    bounded (:func:`_span_fold_local_rows` over one bounded collect of
-    the batch's exploded spans); otherwise the distributed
-    fold: :func:`span_index_delta_bucketed` computes the same two
-    frames, the stats upsert runs as a partition-pruned dynamic
-    overwrite, and :func:`append_span_postings` lands the batch
-    partition-aligned.  Parity between the paths is
-    test-locked (``tests/test_llmops.py``).
+    """Fold one delivery of ``(doc_id, text)`` documents into the
+    persisted span layouts in place: the postings append into their
+    h-buckets (:func:`write_span_postings`), the changed per-doc stats
+    are upserted into their d-buckets (:func:`write_span_stats`), and
+    untouched rows are never read or rewritten.  After the fold the
+    layouts equal a rebuild over the history plus the delivery.
 
-    Crash safety: a fold interrupted between the stats upsert and the
-    postings append leaves the two layouts inconsistent; BOTH paths
-    journal the window on local filesystems (see
-    :func:`recover_span_fold`; distributed coverage added r14, ADVICE
-    r13) and this entry point REFUSES to fold over a layout carrying
-    an in-flight marker.  (On object storage the local-file marker
-    probe is a no-op — the distributed writers' job-commit protocol
-    plus the recovery discipline documented in
-    :func:`recover_span_fold` apply there.)"""
-    import os as _os
+    ``spans`` is the delivery's already-collected ``(doc_id, h)`` span
+    rows (an Arrow table of :func:`_span_exploded_frame`), if the
+    caller has them; otherwise the fold collects them with one
+    bounded collect of at most ``SPAN_LOCAL_ROW_MAX`` rows.
 
-    if _os.path.isdir(postings_dir):
-        _span_fold_check_marker(postings_dir)
-    if buckets is None:
-        buckets = SPAN_H_BUCKETS
-    spans = None
-    if _os.path.isdir(postings_dir) and _os.path.isdir(stats_dir):
-        # the batch's EXPLODED spans (map-only job, no shuffle); the
-        # per-doc rollup runs on Arrow kernels in the local fold
+    A layout carrying an in-flight marker (a fold that died between
+    its two writes) is refused with a ``RuntimeError`` naming
+    :func:`recover_span_fold`.  Then placement is decided once.  The
+    local fold (:func:`_span_fold_local`) runs when both layouts are
+    local directories, the spans are in hand, and its gates hold; it
+    schedules no Spark job.  Otherwise the distributed chain
+    (:func:`_span_fold_distributed`) runs from ``arriving_docs``;
+    collected spans are never uploaded back into Spark.  Both paths
+    bracket their two writes with the same journal
+    (:func:`_span_fold_journal`); on object storage the marker is a
+    no-op and each distributed write goes through Spark's
+    output-commit protocol."""
+    import os
+
+    _span_fold_check_marker(postings_dir)
+    local = os.path.isdir(postings_dir) and os.path.isdir(stats_dir)
+    if local and spans is None:
         spans = placement.bounded_arrow(
             _span_exploded_frame(arriving_docs),
             placement.CAPS["SPAN_LOCAL_ROW_MAX"],
         )
-    if spans is None or not _span_fold_local_rows(
-        spark, postings_dir, stats_dir, spans, buckets, stats_buckets,
-    ):
-        # Journaling note (ADVICE r13, unchanged by the r15 fusion):
-        # each distributed write individually goes through Spark's
-        # output-commit protocol, but the stats overwrite and the
-        # postings append are still two separate jobs — on local
-        # filesystems the pre-mutation marker covers the cross-layout
-        # window (all ≤``buckets`` h-bucket listings, a bounded
-        # driver-side listdir); on object storage isdir is False and
-        # the marker stays a no-op, as documented.
+    if not (local and spans is not None and _span_fold_local(
+        postings_dir, stats_dir, spans, buckets, stats_buckets,
+    )):
         _span_fold_distributed(
             spark, postings_dir, stats_dir, arriving_docs,
             buckets, stats_buckets,
         )
+    # the driver-side writes bypass Spark's insert command, which
+    # refreshes cached file listings itself
     spark.catalog.refreshByPath(postings_dir)
     spark.catalog.refreshByPath(stats_dir)
+
+
+def _span_stats_serve(spark, stats_dir: str, snap: str):
+    """The stats layout as it stands, with ``dup_ratio``: an Arrow
+    table read on the driver when the layout holds at most
+    ``SERVE_LOCAL_ROW_MAX`` rows (no Spark job), else a lazy DataFrame
+    over a flat hardlink snapshot at ``snap``.  The writers replace
+    whole files, so the snapshot keeps this state through later folds,
+    and its one directory lists without a Spark job.  ``dup_ratio`` is
+    IEEE double division either way, bit-identical between the two."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    st = bucketed.read_table(
+        stats_dir, "d_bucket", _SPAN_STATS_COLS,
+        placement.CAPS["SERVE_LOCAL_ROW_MAX"],
+    )
+    if st is not None:
+        return st.append_column("dup_ratio", pc.divide(
+            st.column("n_dup_spans").cast(pa.float64()),
+            st.column("n_spans").cast(pa.float64()),
+        ))
+    bucketed.flat_snapshot(stats_dir, "d_bucket", snap)
+    return spark.read.schema(_SPAN_STATS_SCHEMA).parquet(snap).withColumn(
+        "dup_ratio",
+        F.col("n_dup_spans").cast("double") / F.col("n_spans"),
+    )
 
 
 def _x17_pristine_layouts(spark: SparkSession, sf_dir: str) -> str:
@@ -2748,20 +2630,17 @@ def _x17_pristine_layouts(spark: SparkSession, sf_dir: str) -> str:
        survey="X-UD5,D3,D4")
 def dd_span_fold_in_place_parity(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    """The PUBLIC maintained-span-table writer as driver-hash
-    evidence: fold the whole arriving slice into a private copy of
-    the persisted bucketed layouts via :func:`span_fold_in_place` —
-    the gates pick the driver-local pyarrow upsert here (bounded
-    delivery, local fs) and the distributed partition-pruned writers
-    on object storage — then serve the per-doc stats from the stats
-    LAYOUT.  The oracle is the from-scratch
+    """The public maintained-span writer, :func:`span_fold_in_place`,
+    as oracle evidence: fold the whole arriving slice into a private
+    copy of the persisted bucketed layouts as ONE delivery, then serve
+    the per-doc stats from the stats layout
+    (:func:`_span_stats_serve`).  The oracle is the from-scratch
     :func:`dup_span_stats_sql` over the full corpus, so hash equality
-    proves the in-place fold (postings append + stats upsert) equals
-    a rebuild.  Distinct from ``x17``: that face drives the streamed
-    one-scan lifecycle through the internal rows seam; this one
-    exercises the single-delivery writer API end-to-end, including
-    its gate dispatch.  Re-invocation is idempotent by construction
-    (fresh pristine copy per run — the D4 discipline)."""
+    proves the in-place fold (postings append + stats upsert) equals a
+    rebuild, under whichever placement the entry picks.  ``x17``
+    drives the same entry through a stream of deliveries.
+    Re-invocation is idempotent: each run folds into a fresh copy of
+    the pristine layouts."""
     import os
     import shutil
     import tempfile
@@ -2785,15 +2664,12 @@ def dd_span_fold_in_place_parity(spark: SparkSession,
     bucketed.snapshot(os.path.join(pristine, "stats"), sdir)
     try:
         span_fold_in_place(spark, pdir, sdir, arriving)
-        out = spark.read.schema(
-            _SPAN_STATS_READ_SCHEMA
-        ).parquet(sdir).select(
-            "doc_id", "n_spans", "n_dup_spans",
-            (
-                F.col("n_dup_spans").cast("double") / F.col("n_spans")
-            ).alias("dup_ratio"),
-        ).coalesce(default_parallelism())
-        return materialize_and_free(spark, before, out)
+        out = _span_stats_serve(spark, sdir, os.path.join(work, "serve"))
+        if not isinstance(out, DataFrame):
+            out = spark.createDataFrame(out)
+        return materialize_and_free(
+            spark, before, out.coalesce(default_parallelism())
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -2819,38 +2695,37 @@ def _x17_oracle() -> str:
 def x17_stream_maintained_spans(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """The exact-substring span-audit table maintained under a STREAM
-    of deliveries and served after each one — the third member of the
-    streamed maintained-index convention (x14 BM25, x15 clusters, x16
-    ANN), for the family whose measured delta path was the round-6→8
-    saga (`DELTA_BENCH.json` span arms).  Each of three micro-batch
-    deliveries folds into the standing (postings, stats) pair with
-    :func:`span_index_delta`: the batch's postings append, and the
-    changed per-doc stats come from ONE probe of the maintained
-    postings keyed by the batch's span hashes.  The oracle restates
-    each prefix corpus from scratch via :func:`dup_span_stats_sql` —
-    hash equality proves the fold chain equals a rebuild at every
-    delivery, including the cross-doc occurrence flips (a base doc's
-    span becoming duplicated because the delivery re-used it).
+    of deliveries and served after each one — the streamed
+    maintained-index convention of x14 (BM25), x15 (clusters) and x16
+    (ANN) for the span audit.  The standing state is the two persisted
+    bucketed layouts (h-bucketed postings, d-bucketed stats), copied
+    as hardlinks from a once-per-process pristine build into a private
+    working directory.  Each of three deliveries folds through
+    :func:`span_fold_in_place`, the one entry that decides placement,
+    and is served as it stands after its fold
+    (:func:`_span_stats_serve`).
 
-    Serving the WHOLE stats table per delivery is the test-scale
-    oracle contract; a deployment upserts the changed rows into the
-    doc-partitioned audit table and queries it in place.
+    One bounded collect of the whole stream's exploded spans (at most
+    ``SPAN_LOCAL_ROW_MAX`` rows, none at cap 0) is split by arrival
+    and handed to each fold as its ``spans``; the fold then schedules
+    no Spark job.  The local serves upload as one local relation, the
+    snapshot serves are unioned to it, and the union is materialized
+    once.
 
-    Round-12 lifecycle (VERDICT r11 #5 — the x15 lesson, files as the
-    interface): the standing state is the two PERSISTED bucketed
-    layouts (h-bucketed postings, d-bucketed stats), copied from a
-    once-per-process pristine build into a private working dir; each
-    delivery folds via :func:`span_fold_in_place` — the driver-local
-    pyarrow upsert when the delivery is bounded and the layout local,
-    the partition-pruned distributed writers otherwise — and serving
-    is ONE flat parquet scan of the stats layout per delivery.  No
-    union-of-pieces plan deepens across folds, no corpus-sized cached
-    frame is re-scanned per serve, and per-fold cost is bounded by
-    the delivery regardless of accumulated history."""
+    The oracle restates each prefix corpus from scratch via
+    :func:`dup_span_stats_sql`, so hash equality proves the fold chain
+    equals a rebuild at every delivery, including the cross-doc
+    occurrence flips (a base doc's span becoming duplicated because a
+    delivery re-used it).  Serving the WHOLE stats table per delivery
+    is the test-scale oracle contract; a deployment queries the
+    upserted table in place."""
     import os
     import shutil
     import tempfile
     import uuid
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from hfcommunity_spark.operators.graph import (
         materialize_and_free,
@@ -2871,103 +2746,44 @@ def x17_stream_maintained_spans(spark: SparkSession,
     # layout is safe
     bucketed.snapshot(os.path.join(pristine, "postings"), pdir)
     bucketed.snapshot(os.path.join(pristine, "stats"), sdir)
-    width = default_parallelism()
-    # ONE whole-stream collect splits every delivery's exploded spans
-    # by arrival (the x15 one-scan lesson): each fold then runs as
-    # pure Arrow compute + file IO (zero Spark jobs).  Guarded by the
-    # same row cap as the per-fold path; on overflow spans_by_k stays
-    # None and each fold falls back to span_fold_in_place, which
-    # re-gates per delivery.
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    spans_by_k = None
+    arrival = F.expr(f"(doc_id DIV {_DELTA_SPLIT_MOD}) % {X17_DELIVERIES}")
     tagged = placement.bounded_arrow(
         _span_exploded_frame(arriving).select(
-            "doc_id", "h",
-            F.expr(
-                f"(doc_id DIV {_DELTA_SPLIT_MOD}) % {X17_DELIVERIES}"
-            ).cast("int").alias("k"),
+            "doc_id", "h", arrival.cast("int").alias("k"),
         ),
         placement.CAPS["SPAN_LOCAL_ROW_MAX"],
     )
-    if tagged is not None:
-        spans_by_k = {
-            k: tagged.filter(
-                pc.equal(tagged.column("k"), k)
-            ).select(["doc_id", "h"])
-            for k in range(X17_DELIVERIES)
-        }
+    spans_by_k = {} if tagged is None else {
+        k: tagged.filter(pc.equal(tagged.column("k"), k))
+        .select(["doc_id", "h"])
+        for k in range(X17_DELIVERIES)
+    }
 
     served: list[DataFrame] = []
     local_serves: list = []  # Arrow tables, delivery-tagged
     try:
         for k in range(X17_DELIVERIES):
-            folded = (
-                _span_fold_local_rows(
-                    spark, pdir, sdir, spans_by_k[k],
-                    SPAN_H_BUCKETS, SPAN_STATS_BUCKETS,
-                )
-                if spans_by_k is not None else False
+            span_fold_in_place(
+                spark, pdir, sdir, arriving.filter(arrival == k),
+                spans=spans_by_k.get(k),
             )
-            if not folded:
-                # gates failed before any mutation — the distributed
-                # fold runs on the same delivery
-                span_fold_in_place(
-                    spark, pdir, sdir,
-                    arriving.filter(
-                        F.expr(
-                            f"(doc_id DIV {_DELTA_SPLIT_MOD}) "
-                            f"% {X17_DELIVERIES}"
-                        ) == k
-                    ),
-                )
-            # serve: driver-local pyarrow read of the stats layout
-            # (round 13, the x15 serve pattern) — each
-            # spark.read.parquet(snapshot) plan cost ~0.25 s of
-            # driver-side footer inference over the 64 bucket files
-            # before any job ran; the local read is ~15 ms and all
-            # three states upload as ONE local relation.  A failed
-            # gate falls back to the hardlink snapshot (~ms; the
-            # staged-commit writers replace whole files, so linked
-            # snapshots keep the old inodes) + distributed read.
-            st = bucketed.read_table(
-                sdir, "d_bucket", ("doc_id", "n_spans", "n_dup_spans"),
-                placement.CAPS["SERVE_LOCAL_ROW_MAX"],
+            st = _span_stats_serve(
+                spark, sdir, os.path.join(work, f"serve{k}")
             )
-            if st is not None:
-                # dup_ratio as IEEE double division, bit-identical to
-                # the JVM's
+            if isinstance(st, DataFrame):
+                served.append(st.select(
+                    F.lit(k).cast("int").alias("delivery_id"),
+                    *_SPAN_STATS_COLS, "dup_ratio",
+                ))
+            else:
                 local_serves.append(st.append_column(
-                    "dup_ratio",
-                    pc.divide(
-                        st.column("n_dup_spans").cast(pa.float64()),
-                        st.column("n_spans").cast(pa.float64()),
-                    ),
-                ).append_column(
                     "delivery_id",
                     pa.array([k] * st.num_rows, pa.int32()),
                 ))
-            else:
-                snap = os.path.join(work, f"serve{k}")
-                bucketed.snapshot(sdir, snap)
-                served.append(
-                    spark.read.schema(
-                        _SPAN_STATS_READ_SCHEMA
-                    ).parquet(snap).select(
-                        F.lit(k).cast("int").alias("delivery_id"),
-                        "doc_id", "n_spans", "n_dup_spans",
-                        (
-                            F.col("n_dup_spans").cast("double")
-                            / F.col("n_spans")
-                        ).alias("dup_ratio"),
-                    )
-                )
         if local_serves:
             served.append(spark.createDataFrame(
                 pa.concat_tables(local_serves).select([
-                    "delivery_id", "doc_id", "n_spans",
-                    "n_dup_spans", "dup_ratio",
+                    "delivery_id", *_SPAN_STATS_COLS, "dup_ratio",
                 ])
             ))
         out = served[0]
@@ -2977,7 +2793,7 @@ def x17_stream_maintained_spans(spark: SparkSession,
         # blocks, so the working dir (and any snapshots) can go in
         # the finally
         return materialize_and_free(
-            spark, before, out.coalesce(width)
+            spark, before, out.coalesce(default_parallelism())
         )
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -3287,12 +3103,7 @@ def dd_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- bucketed span-postings layout (round 6) ------------------------
-
-SPAN_H_BUCKETS = 64
-# above this many distinct batch hashes the probe's scan predicate
-# falls back from a driver-side InSet literal to a broadcast semi-join
-_SPAN_PROBE_INSET_MAX = 100_000
+# --- bucketed span-postings layout ---------------------------------
 
 
 def write_span_postings(postings: DataFrame, out_dir: str,

@@ -24,6 +24,9 @@ Budgets, by design of each fold:
 - x16 (IVF): :func:`ivf_index_delta` materializes the DELIVERY's
   assigned piece (by contract — every serve consumes it twice), so
   the fold budget is the checkpoint's single job.
+- x17 (span audit): every job of :func:`span_fold_in_place` runs on
+  the calling thread, so the face's exact count holds under both
+  placements with no untagged job.
 """
 
 from __future__ import annotations
@@ -31,6 +34,13 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark.sql import functions as F
+
+# a warm caps-0 x17 call at smoke scale: per delivery 12 — the probe
+# gate's collect (3 AQE stages), the postings layout's partition
+# listing (64 bucket directories), the changed-doc collect (3), the
+# stats upsert (broadcast, shuffle, write) and the postings append
+# (shuffle, write) — plus the served union's checkpoint
+X17_DISTRIBUTED_JOBS = 3 * 12 + 1
 
 
 @contextmanager
@@ -149,6 +159,48 @@ def test_x15_fold_job_budget(spark):
     with _job_budget(spark, 2, "x15-warm", exact=True):
         out = x15_stream_maintained_clusters(spark, SF_SMOKE)
     assert set(tracker.getJobIdsForGroup(None)) == untagged
+    assert out.count() > 0
+
+
+def test_x17_fold_job_budget(spark):
+    """A warm x17 call at smoke scale schedules exactly 2 jobs: the
+    whole-stream span collect, then the served union's checkpoint —
+    every delivery folds locally and serves from the layout files.
+    Forced onto the distributed chain it schedules exactly
+    X17_DISTRIBUTED_JOBS.  Jobs submitted from another thread would
+    escape the job group, so neither placement may add untagged
+    jobs."""
+    from hfcommunity_spark.operators import placement
+    from hfcommunity_spark.operators.dedup import (
+        x17_stream_maintained_spans,
+    )
+    from tests.conftest import SF_SMOKE
+
+    x17_stream_maintained_spans(spark, SF_SMOKE).count()
+    tracker = spark.sparkContext.statusTracker()
+    untagged = set(tracker.getJobIdsForGroup(None))
+    with _job_budget(spark, 2, "x17-warm", exact=True):
+        x17_stream_maintained_spans(spark, SF_SMOKE)
+    with placement.distributed():
+        with _job_budget(spark, X17_DISTRIBUTED_JOBS,
+                         "x17-warm-distributed", exact=True):
+            out = x17_stream_maintained_spans(spark, SF_SMOKE)
+    assert set(tracker.getJobIdsForGroup(None)) == untagged
+    assert out.count() > 0
+
+
+def test_span_fold_in_place_parity_job_budget(spark):
+    """A warm ``dd_span_fold_in_place_parity`` call schedules exactly
+    2 jobs: the fold entry's bounded span collect and the served
+    table's checkpoint (the stats layout is read on the driver)."""
+    from hfcommunity_spark.operators.dedup import (
+        dd_span_fold_in_place_parity,
+    )
+    from tests.conftest import SF_SMOKE
+
+    dd_span_fold_in_place_parity(spark, SF_SMOKE).count()
+    with _job_budget(spark, 2, "dd-span-warm", exact=True):
+        out = dd_span_fold_in_place_parity(spark, SF_SMOKE)
     assert out.count() > 0
 
 

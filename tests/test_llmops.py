@@ -626,10 +626,14 @@ def test_bigint_in_expr_matches_isin(spark):
     assert "IN" in plan.upper()
 
 
-def test_span_index_delta_bucketed_tolerates_empty_delivery(spark, tmp_path):
-    """The bucketed span delta under an empty drop: no changed stats,
-    no batch postings, and the empty bucket/hash lists must not break
-    the pruned-scan construction (isin over empty lists)."""
+def test_span_fold_in_place_tolerates_empty_delivery(spark, tmp_path):
+    """An empty drop through the fold entry, under both placements:
+    both layouts keep every data file unchanged and no in-flight
+    marker is left behind (the empty hash and bucket lists must not
+    break the pruned-scan construction either)."""
+    import os
+    from contextlib import nullcontext
+
     from pyspark.sql import functions as F
 
     from hfcommunity_spark.operators import dedup as dd
@@ -638,14 +642,27 @@ def test_span_index_delta_bucketed_tolerates_empty_delivery(spark, tmp_path):
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text")
     postings = dd.span_postings_frame(docs)
-    stats = dd.span_stats_from_postings(postings).localCheckpoint()
-    out = str(tmp_path / "layout")
-    dd.write_span_postings(postings, out)
-    bp, changed = dd.span_index_delta_bucketed(
-        spark, out, stats, docs.filter(F.lit(False))
-    )
-    assert bp.count() == 0
-    assert changed.count() == 0
+
+    def files(root):
+        return sorted(
+            (os.path.relpath(os.path.join(dp, fn), root),
+             os.stat(os.path.join(dp, fn)).st_ino)
+            for dp, _dns, fns in os.walk(root) for fn in fns
+            if fn.endswith(".parquet")
+        )
+
+    for tag, placed in (("local", nullcontext),
+                        ("dist", placement.distributed)):
+        pdir = str(tmp_path / tag / "postings")
+        sdir = str(tmp_path / tag / "stats")
+        dd.write_span_postings(postings, pdir)
+        dd.write_span_stats(dd.span_stats_from_postings(postings), sdir)
+        before = files(pdir), files(sdir)
+        with placed():
+            dd.span_fold_in_place(spark, pdir, sdir,
+                                  docs.filter(F.lit(False)))
+        assert (files(pdir), files(sdir)) == before, tag
+        assert not os.path.exists(dd._span_fold_marker_path(pdir)), tag
 
 
 def test_bucketed_span_postings_probe_is_partition_pruned(spark, tmp_path):
@@ -714,48 +731,6 @@ def test_bucketed_span_postings_probe_is_partition_pruned(spark, tmp_path):
         .select("h_bucket").distinct().collect()
     }
     assert read_buckets <= hit
-
-
-def test_span_index_delta_bucketed_equals_rebuild(spark, tmp_path):
-    """The measured deployment path: span_index_delta_bucketed against
-    a persisted bucketed postings table must reproduce the
-    from-scratch build exactly — (disk ∪ batch) postings equal the
-    rebuild postings, and (carried ∪ changed) stats equal the rebuild
-    stats.  This is the DELTA_BENCH span arm's correctness lock."""
-    from pyspark.sql import functions as F
-
-    from hfcommunity_spark.operators import dedup as dd
-
-    sf = "/root/testdata/sf0.01"
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    delivery = docs.filter(F.col("doc_id") % 5 == 0)
-    postings = dd.span_postings_frame(corpus)
-    stats = dd.span_stats_from_postings(postings).localCheckpoint()
-    out = str(tmp_path / "postings_bucketed")
-    dd.write_span_postings(postings, out)
-
-    batch_postings, changed = dd.span_index_delta_bucketed(
-        spark, out, stats, delivery
-    )
-    merged = (
-        spark.read.parquet(out).select("doc_id", "h", "c")
-        .unionByName(batch_postings)
-    )
-    carried = stats.join(
-        changed.select("doc_id"), "doc_id", "left_anti"
-    )
-    got_stats = {tuple(r) for r in carried.unionByName(changed).collect()}
-    want_stats = {tuple(r) for r in dd.span_stats_frame(docs).collect()}
-    assert got_stats == want_stats
-    got_p = {tuple(r) for r in merged.collect()}
-    want_p = {tuple(r) for r in dd.span_postings_frame(docs).collect()}
-    assert got_p == want_p
-    # the changed set is genuinely narrow: strictly fewer rows than
-    # the corpus has docs (untouched docs are never rewritten)
-    assert changed.count() < stats.count() + delivery.count()
 
 
 def test_span_postings_layout_file_count_bounded(spark, tmp_path):
@@ -1284,10 +1259,12 @@ def test_recover_span_fold_tolerates_truncated_marker(
     dd.span_fold_in_place(spark, pdir, sdir, delivery)
 
 
-def test_span_fold_local_rows_schedules_zero_jobs(spark, tmp_path):
+def test_span_fold_in_place_with_spans_schedules_zero_jobs(spark,
+                                                          tmp_path):
     """The x17 fold discipline, pinned like the graph fold
-    (tests/test_graph.py): a pre-collected delivery folds into the
-    span layouts as pure Python + file IO — ZERO Spark jobs."""
+    (tests/test_graph.py): a delivery whose spans are already
+    collected folds through the entry as Arrow compute + file IO —
+    ZERO Spark jobs."""
     from pyspark.sql import functions as F
 
     from hfcommunity_spark.operators import dedup as dd
@@ -1297,26 +1274,24 @@ def test_span_fold_local_rows_schedules_zero_jobs(spark, tmp_path):
         "doc_id", "text"
     )
     base = docs.filter(F.col("doc_id") % 3 == 0)
+    delivery = docs.filter(F.col("doc_id") % 3 == 1)
     pdir = str(tmp_path / "postings")
     sdir = str(tmp_path / "stats")
     dd.write_span_postings(dd.span_postings_frame(base), pdir)
     dd.write_span_stats(
         dd.span_stats_from_postings(dd.span_postings_frame(base)), sdir
     )
-    exploded = dd._span_exploded_frame(
-        docs.filter(F.col("doc_id") % 3 == 1)
-    ).toArrow().select(["doc_id", "h"])
+    exploded = dd._span_exploded_frame(delivery).toArrow().select(
+        ["doc_id", "h"]
+    )
     sc = spark.sparkContext
     group = "hfc-span-zero-job-fold"
     sc.setJobGroup(group, "span fold must not schedule jobs")
     try:
-        ok = dd._span_fold_local_rows(
-            spark, pdir, sdir, exploded,
-            dd.SPAN_H_BUCKETS, dd.SPAN_STATS_BUCKETS,
-        )
+        dd.span_fold_in_place(spark, pdir, sdir, delivery,
+                              spans=exploded)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert ok
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     # and it actually folded: the delivery's docs are in the stats
     got = {r.doc_id for r in spark.read.parquet(sdir).collect()}

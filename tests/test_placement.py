@@ -30,7 +30,11 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", DIST_FACES)
+# the single-delivery span writer is not a bench face, but its
+# distributed chain is the same one x17 runs, from one entry call
+@pytest.mark.parametrize(
+    "name", (*DIST_FACES, "dd_span_fold_in_place_parity")
+)
 def test_distributed_face_matches_oracle(spark, duck, name):
     """Every twin-gated face, forced onto its distributed plan, still
     equals its DuckDB oracle."""

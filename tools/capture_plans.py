@@ -6,8 +6,9 @@ For the maintained-lifecycle faces the declared function's returned
 frame is a materialized union (the fold work happens in jobs before
 it), so alongside the face plan this also captures the load-bearing
 INTERNAL plans the round's claims reference:
-  - x17/span: the bucketed probe (PartitionFilters + pushed In) and
-    the changed-stats delta plan over the pristine layouts
+  - x17/span: the bucketed probe (PartitionFilters + pushed In), the
+    changed-doc rollup and the stats-upsert write frame of the
+    distributed fold chain, over the pristine layouts
   - x15: the pruned endpoint-resolution plan over the vertex layout
 
 Usage: python tools/capture_plans.py <tag> <suffix> <query> [...]
@@ -74,84 +75,21 @@ def main() -> None:
                 " on h_bucket + pushed In on h) ==\n"
             )
             parts.append(_explain(probe))
-            _sch = getattr(dd, "_SPAN_STATS_READ_SCHEMA", None)
-            rd = (spark.read.schema(_sch) if _sch is not None
-                  else spark.read)
-            stats = rd.parquet(sdir).select(
-                "doc_id", "n_spans", "n_dup_spans"
-            )
-            changed = dd._span_delta_changed_stats(
-                probe.localCheckpoint(), batch, stats
-            )
+            changed = dd._span_changed_rollup(batch, probe)
             parts.append(
-                "\n== internal: changed-stats delta frame ==\n"
+                "\n== internal: changed-doc rollup (the distributed"
+                " chain's one toArrow collect) ==\n"
             )
             parts.append(_explain(changed))
-            # r15 fused fold: the ONE-collect delta rollup (the frame
-            # _span_fold_distributed collects) and the snapshot-read
-            # stats-upsert write frame — the two plans the fusion's
-            # claims rest on
-            from pyspark.sql import Window as _W
-
-            import pyarrow as _pa
-
-            wh = _W.partitionBy("h")
-            pre = (
-                batch.withColumn("tag", F.lit(1))
-                .unionByName(probe.withColumn("tag", F.lit(0)))
-                .withColumn("nd_batch", F.sum("tag").over(wh))
-                .withColumn("nd_old", F.sum(1 - F.col("tag")).over(wh))
-                .groupBy("doc_id")
-                .agg(
-                    F.max("tag").alias("is_new"),
-                    F.sum(F.when(F.col("tag") == 1, F.col("c"))
-                          .otherwise(0)).alias("n_spans_new"),
-                    F.sum(F.when(
-                        (F.col("tag") == 1)
-                        & (F.col("nd_old") + F.col("nd_batch") >= 2),
-                        F.col("c")).otherwise(0)).alias("dup_new"),
-                    F.sum(F.when(
-                        (F.col("tag") == 0) & (F.col("nd_old") == 1),
-                        F.col("c")).otherwise(0)).alias("inc"),
-                )
-                .filter((F.col("is_new") == 1) | (F.col("inc") > 0))
+            stats = spark.read.schema(
+                dd._SPAN_STATS_READ_SCHEMA
+            ).parquet(sdir)
+            upsert = dd._span_stats_upsert(
+                spark, stats, changed.toArrow(), dd.SPAN_STATS_BUCKETS
             )
             parts.append(
-                "\n== internal (r15): one-collect changed-doc rollup"
-                " (the _span_fold_distributed toArrow frame) ==\n"
-            )
-            parts.append(_explain(pre))
-            from hfcommunity_spark.operators.graph import _bucket_expr
-            batch_rel = spark.createDataFrame(_pa.table({
-                "doc_id": _pa.array([1], _pa.int64()),
-                "n_spans": _pa.array([1], _pa.int64()),
-                "n_dup_spans": _pa.array([0], _pa.int64()),
-            }))
-            inc_rel = spark.createDataFrame(_pa.table({
-                "doc_id": _pa.array([2], _pa.int64()),
-                "inc": _pa.array([1], _pa.int64()),
-            }))
-            upsert = (
-                stats
-                .join(F.broadcast(batch_rel.select("doc_id")),
-                      "doc_id", "left_anti")
-                .join(F.broadcast(inc_rel), "doc_id", "left")
-                .select(
-                    "doc_id", "n_spans",
-                    (F.col("n_dup_spans")
-                     + F.coalesce(F.col("inc"),
-                                  F.lit(0).cast("bigint")))
-                    .alias("n_dup_spans"),
-                )
-                .unionByName(batch_rel)
-                .withColumn("d_bucket",
-                            _bucket_expr("doc_id",
-                                         dd.SPAN_STATS_BUCKETS))
-            )
-            parts.append(
-                "\n== internal (r15): snapshot-read stats-upsert write"
-                " frame (broadcast local relations; no pre-write"
-                " checkpoint) ==\n"
+                "\n== internal: stats-upsert write frame (broadcast"
+                " local relations) ==\n"
             )
             parts.append(_explain(upsert))
         if name.startswith("x15"):

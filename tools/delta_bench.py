@@ -45,7 +45,7 @@ OUT = os.path.join(REPO, "DELTA_BENCH.json")
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from hfcommunity_spark.operators import bucketed
+    from hfcommunity_spark.operators import bucketed, placement
     from hfcommunity_spark.operators import dedup as dd
     from hfcommunity_spark.operators.graph import (
         components_delta,
@@ -114,61 +114,35 @@ def main() -> None:
                 for df in dd.minhash_band_delta(bands, pairs, delivery)
             ]),
         }
-        # span arm (round 8): the delta is measured against the
-        # PERSISTED bucketed postings layout a deployment holds —
-        # write_span_postings is corpus-side state (uncharged, like
-        # bands/postings/assign above); the charged delta work is the
-        # pruned probe + the two frames a delivery materializes (batch
-        # partition append + changed-stats upsert rows).  Untouched
-        # postings/stats are never read or recounted — the previous
-        # in-memory arm's three corpus-wide probe scans (and the
-        # corpus-sized merged.count()) were exactly what made the span
-        # delta track the corpus (DELTA_BENCH r6/r7 note).
+        # span arms: both time span_fold_in_place, the maintained-table
+        # writer, against private copies of the PERSISTED bucketed
+        # postings and stats layouts (corpus-side state, uncharged like
+        # bands/postings/assign above).  Per-rep setup re-copies the
+        # pristine layouts (hardlinks, untimed) because the fold
+        # MUTATES them; the rebuild arms re-tokenize the full corpus.
+        # span_stats forces the distributed chain (the deployment
+        # path: a partition-pruned probe keyed by the batch's hashes,
+        # then delivery-bounded arithmetic, writing only the batch
+        # postings and the changed stats rows); span_fold lets the
+        # entry pick, which is the driver-local fold at these scales.
+        # Bucket counts stay at the x17 convention (64/64): table-sized
+        # bucket counts were measured here and LOST at this scale (300+
+        # tiny file writes per local fold).
         span_dir = os.path.join(
             tempfile.gettempdir(), f"hfc_delta_bench_span_{label}"
         )
         dd.write_span_postings(postings, span_dir)
-        scale["span_stats"] = {
-            "rebuild_s": timed(lambda: dd.span_stats_frame(docs).count()),
-            "delta_s": timed(lambda: [
-                df.count()
-                for df in dd.span_index_delta_bucketed(
-                    spark, span_dir, stats, delivery
-                )
-            ]),
-        }
-        # span_fold arm (round 12): the FULL in-place writer —
-        # span_fold_in_place against private copies of BOTH persisted
-        # layouts (the public maintained-table API; the gates pick the
-        # driver-local pyarrow path at these scales, exactly what a
-        # single-node deployment runs).  Per-rep setup re-copies the
-        # pristine layouts (hardlinks, untimed) because the fold
-        # MUTATES the table; the rebuild arm re-tokenizes the full
-        # corpus and rewrites both layouts from scratch.
-        # Bucket counts stay at the x17 convention (64/64): the
-        # driver-local fold reads its tiny layouts in ONE dataset
-        # scan, so its delta advantage is avoiding corpus
-        # re-tokenization, NOT partition pruning — table-sized bucket
-        # counts (the distributed deployment rule) were measured here
-        # and LOST at this scale (300+ tiny file writes per fold);
-        # the pruning regime belongs to the distributed writers,
-        # whose InSet/PartitionFilters plan shape is asserted in
-        # tests/test_llmops.py (the cluster_history-arm argument:
-        # each regime is measured where it actually operates).
-        fold_sbkts = dd.SPAN_STATS_BUCKETS
-        fold_pbkts = dd.SPAN_H_BUCKETS
-        fold_span_dir = span_dir
         sstats_dir = os.path.join(
             tempfile.gettempdir(), f"hfc_delta_bench_sstats_{label}"
         )
-        dd.write_span_stats(stats, sstats_dir, buckets=fold_sbkts)
+        dd.write_span_stats(stats, sstats_dir)
         fold_work: dict = {"d": None}
 
         def _fold_setup():
             if fold_work["d"]:
                 shutil.rmtree(fold_work["d"], ignore_errors=True)
             w = tempfile.mkdtemp(prefix=f"hfc_db_fold_{label}_")
-            bucketed.snapshot(fold_span_dir, os.path.join(w, "postings"))
+            bucketed.snapshot(span_dir, os.path.join(w, "postings"))
             bucketed.snapshot(sstats_dir, os.path.join(w, "stats"))
             fold_work["d"] = w
 
@@ -178,23 +152,29 @@ def main() -> None:
                 os.path.join(fold_work["d"], "postings"),
                 os.path.join(fold_work["d"], "stats"),
                 delivery,
-                buckets=fold_pbkts, stats_buckets=fold_sbkts,
             )
+
+        def _fold_delta_distributed():
+            with placement.distributed():
+                _fold_delta()
 
         def _fold_rebuild():
             w = tempfile.mkdtemp(prefix=f"hfc_db_foldrb_{label}_")
             try:
                 p = dd.span_postings_frame(docs).localCheckpoint()
-                dd.write_span_postings(p, os.path.join(w, "postings"),
-                                       buckets=fold_pbkts)
+                dd.write_span_postings(p, os.path.join(w, "postings"))
                 dd.write_span_stats(
                     dd.span_stats_from_postings(p),
-                    os.path.join(w, "stats"), buckets=fold_sbkts,
+                    os.path.join(w, "stats"),
                 )
                 p.unpersist()
             finally:
                 shutil.rmtree(w, ignore_errors=True)
 
+        scale["span_stats"] = {
+            "rebuild_s": timed(lambda: dd.span_stats_frame(docs).count()),
+            "delta_s": timed(_fold_delta_distributed, setup=_fold_setup),
+        }
         scale["span_fold"] = {
             "rebuild_s": timed(_fold_rebuild),
             "delta_s": timed(_fold_delta, setup=_fold_setup),
@@ -438,7 +418,7 @@ def main() -> None:
                  "the maintained family's reason to exist.  Measured "
                  "shape: minhash pairs show it cleanly (rebuild ~3x "
                  "vs delta ~0.9x), and since round 8 the span arm "
-                 "does too: the delta runs span_index_delta_bucketed "
+                 "does too: the delta runs the distributed fold "
                  "against a PERSISTED h-bucketed postings table — ONE "
                  "partition-pruned probe keyed by the batch's hashes, "
                  "then delivery-bounded arithmetic, materializing "

@@ -47,19 +47,6 @@ def map_fetch(keys: DataFrame, key_col: str, fetch: FetchFn,
     return keys.select(key_col).mapInPandas(gen, out_schema)
 
 
-def hub_unavailable_fetcher(key: object) -> Iterable[dict]:
-    """Default production fetcher seam — requires network + the
-    ``huggingface_hub`` client, neither present in this container.
-    The real adapters live in ``etl.hub_live`` (list_repo_rows /
-    make_repo_info_fetcher / make_discussions_fetcher) and plug into
-    this same ``map_fetch`` seam once the library is installed."""
-    raise NotImplementedError(
-        "live Hub API fetch not available offline; inject a fixture "
-        "fetcher or an etl.hub_live adapter (requested key="
-        f"{key!r})"
-    )
-
-
 # --- S7/S8: git history scan ------------------------------------------------
 
 GIT_COMMIT_SCHEMA = T.StructType(

@@ -83,16 +83,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return build()
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def write_snapshot(df: DataFrame, base_dir: str, table: str, release: str,
                    partition_by: list[str] | None = None) -> str:
     """Write an immutable snapshot dir ``{base}/{table}/release={release}``.

@@ -4,9 +4,10 @@ same tree Spark's ``partitionBy(pcol)`` writer produces and reads.
 
 This module is the ONE driver-side implementation of that format —
 listing, pruned row reads, whole-table serve reads, the staged-commit
-bucket writer and the hardlink snapshot — shared by the x15 cluster
-assignment (``graph`` writers, ``c_bucket``/``v_bucket``) and the x17
-span layouts (``dedup`` fold, ``h_bucket``/``d_bucket``).
+bucket writer, the hardlink snapshot and the per-delivery serve —
+shared by the x15 cluster assignment (``graph`` writers,
+``c_bucket``/``v_bucket``) and the x17 span layouts (``dedup`` fold,
+``h_bucket``/``d_bucket``).
 
 Rules every function here keeps:
 
@@ -117,6 +118,49 @@ def read_table(dir_: str, pcol: str, columns, cap: int):
     except (OSError, pa.lib.ArrowException):
         return None
     return t if t.num_rows <= cap else None
+
+
+def serve(spark, dir_: str, pcol: str, columns, schema: str, snap: str):
+    """The layout as it stands, for a face that serves it after a
+    fold: an Arrow table read on the driver (:func:`read_table`) when
+    it holds at most ``SERVE_LOCAL_ROW_MAX`` rows, else a lazy
+    DataFrame with the DDL ``schema`` over a :func:`flat_snapshot` at
+    ``snap``.  The writers replace whole files, so the snapshot keeps
+    this state through later folds, and its one directory lists
+    without a Spark job."""
+    from hfcommunity_spark.operators import placement
+
+    t = read_table(dir_, pcol, columns,
+                   placement.CAPS["SERVE_LOCAL_ROW_MAX"])
+    if t is not None:
+        return t
+    flat_snapshot(dir_, pcol, snap)
+    return spark.read.schema(schema).parquet(snap)
+
+
+def union_serves(spark, serves):
+    """One frame of the ``(delivery_id, serve)`` pairs of a delivery
+    stream, ``delivery_id`` (int) first, then the serves' columns, at
+    session width: the Arrow serves of :func:`serve` upload as ONE
+    local relation and the lazy ones are unioned onto it."""
+    from pyspark.sql import functions as F
+
+    from hfcommunity_spark.session import default_parallelism
+
+    local = [
+        t.add_column(0, "delivery_id",
+                     pa.repeat(pa.scalar(k, pa.int32()), t.num_rows))
+        for k, t in serves if isinstance(t, pa.Table)
+    ]
+    frames = [spark.createDataFrame(pa.concat_tables(local))] if local else []
+    frames += [
+        df.select(F.lit(k).cast("int").alias("delivery_id"), *df.columns)
+        for k, df in serves if not isinstance(df, pa.Table)
+    ]
+    out = frames[0]
+    for df in frames[1:]:
+        out = out.unionByName(df)
+    return out.coalesce(default_parallelism())
 
 
 def write_buckets(dir_: str, pcol: str, by_bucket: dict[int, list],

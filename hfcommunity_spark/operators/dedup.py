@@ -520,18 +520,6 @@ def neardup_gate(incoming: DataFrame, band_index: DataFrame,
     )
 
 
-def minhash_lsh_pairs(docs: DataFrame,
-                      hash_mode: str = "xxhash64") -> DataFrame:
-    """Uncached one-shot form for callers holding a DataFrame (tests,
-    ad-hoc corpora); table-backed queries go through
-    ``minhash_band_index`` instead."""
-    sigs = minhash_signatures(docs, hash_mode=hash_mode)
-    bands = cap_bucket_size(
-        _minhash_bands(sigs, hash_mode), ["band", "bhash"], MAX_BUCKET
-    )
-    return minhash_lsh_pairs_from_bands(bands)
-
-
 _MINHASH_SHINGLE_CTE = f"""
     toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     sh AS (SELECT DISTINCT doc_id, {shingle_unnest_sql(NGRAM)} AS shingle
@@ -804,14 +792,6 @@ def dd_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash_near_dups(docs: DataFrame,
-                      hash_mode: str = "xxhash64") -> DataFrame:
-    """Uncached one-shot form for callers holding a DataFrame."""
-    return simhash_pairs_from_chunks(
-        _simhash_chunks(simhash_signatures(docs, hash_mode=hash_mode))
-    )
-
-
 # --- exact-substring duplication audit (round 5) -------------------
 
 
@@ -904,8 +884,8 @@ def span_postings_frame(docs: DataFrame, wide: bool = True) -> DataFrame:
     """(doc_id, h, c) span postings: :func:`_span_exploded_frame`
     counted per (doc_id, h), c being the span's within-doc
     multiplicity.  The maintained base state of the span-audit family:
-    per-doc stats derive from it, and a delivery extends it by union
-    (:func:`span_index_delta`).
+    per-doc stats derive from it, and a delivery appends to it
+    (:func:`span_fold_in_place`).
 
     ``wide=True`` (corpus builds) repartitions a narrow input to
     session width so the tokenize/explode parallelizes; delivery
@@ -948,148 +928,6 @@ def span_stats_frame(docs: DataFrame) -> DataFrame:
     :func:`dup_span_stats_sql`, shared by the persisted index and the
     streaming hygiene twin (before/after populations)."""
     return span_stats_from_postings(span_postings_frame(docs))
-
-
-def _span_changed_rollup(batch_postings: DataFrame,
-                         probe: DataFrame) -> DataFrame:
-    """The span delta's arithmetic as one Spark frame, given the ONE
-    probe the delivery needs: ``probe`` = the corpus postings rows
-    whose ``h`` occurs in the batch.  Everything per-h the update
-    requires derives from it:
-
-    - ``nd_old(h)`` (cross-doc count among OLD docs, for exactly the
-      batch's hashes) = row count of ``probe`` per h — no second scan
-      and no maintained count table;
-    - a BATCH doc's n_dup_spans sums c where nd_old + nd_batch ≥ 2
-      (every hash of a batch doc is in the batch's h set by
-      definition, so the probe covers them all);
-    - an OLD doc's n_dup_spans can only GROW, and only via hashes that
-      transition nd 1 → ≥2: exactly its probe rows with nd_old == 1
-      (nd_old ≥ 2 was already counted; h ∉ batch_h is unchanged).
-      Docs whose shared hashes were all already duplicated drop out —
-      narrower than "shares any hash" and value-identical.
-
-    Returns one row per CHANGED doc — ``(doc_id, is_new, n_spans_new,
-    dup_new, inc)``: a batch doc (``is_new`` 1) with its full stats,
-    or an old doc (``is_new`` 0) with its ``inc`` > 0.
-
-    Plan shape: ONE tagged union of batch ∪ probe, the two per-h
-    cross-doc counts as WINDOW sums over partitionBy(h) (one shuffle,
-    no per-h groupBy and no rejoin — the
-    :func:`span_stats_from_postings` idiom), then ONE per-doc rollup;
-    batch docs and old-doc increments fall out of the same rollup via
-    the tag.  Batch doc_ids are disjoint from old doc_ids by the
-    delivery contract, so ``max(tag)`` classifies each doc (a
-    colliding doc counts as a batch doc).  :func:`_span_changed_local`
-    is the same arithmetic on Arrow tables."""
-    wh = Window.partitionBy("h")
-    return (
-        batch_postings.withColumn("tag", F.lit(1))
-        .unionByName(probe.withColumn("tag", F.lit(0)))
-        .withColumn("nd_batch", F.sum("tag").over(wh))
-        .withColumn("nd_old", F.sum(1 - F.col("tag")).over(wh))
-        .groupBy("doc_id")
-        .agg(
-            F.max("tag").alias("is_new"),
-            F.sum(F.when(F.col("tag") == 1, F.col("c")).otherwise(0))
-            .alias("n_spans_new"),
-            F.sum(
-                F.when(
-                    (F.col("tag") == 1)
-                    & (F.col("nd_old") + F.col("nd_batch") >= 2),
-                    F.col("c"),
-                ).otherwise(0)
-            ).alias("dup_new"),
-            F.sum(
-                F.when(
-                    (F.col("tag") == 0) & (F.col("nd_old") == 1),
-                    F.col("c"),
-                ).otherwise(0)
-            ).alias("inc"),
-        )
-        .filter((F.col("is_new") == 1) | (F.col("inc") > 0))
-    )
-
-
-def _span_delta_changed_stats(probe: DataFrame,
-                              batch_postings: DataFrame,
-                              stats: DataFrame) -> DataFrame:
-    """The changed stats rows ``(doc_id, n_spans, n_dup_spans)`` of a
-    delivery — batch docs and old docs with an increment — from
-    :func:`_span_changed_rollup`; the caller carries the rest forward
-    untouched."""
-    # materialized once (delivery-bounded): BOTH output arms read it.
-    # Exchange reuse does not dedupe the two arms — the old-docs arm
-    # consumes it through a BROADCAST build, and exchange reuse does
-    # not cross a broadcast boundary — so without this the window
-    # pipeline runs twice
-    pre = _span_changed_rollup(batch_postings, probe).localCheckpoint()
-    batch_stats = pre.filter(F.col("is_new") == 1).select(
-        "doc_id",
-        F.col("n_spans_new").alias("n_spans"),
-        F.col("dup_new").alias("n_dup_spans"),
-    )
-    old_changed = stats.join(
-        F.broadcast(
-            pre.filter(F.col("is_new") == 0).select("doc_id", "inc")
-        ),
-        "doc_id",
-    ).select(
-        "doc_id",
-        "n_spans",
-        (F.col("n_dup_spans") + F.col("inc")).alias("n_dup_spans"),
-    )
-    return batch_stats.unionByName(old_changed)
-
-
-def span_index_delta(postings: DataFrame, stats: DataFrame,
-                     arriving_docs: DataFrame,
-                     ) -> tuple[DataFrame, DataFrame]:
-    """Incremental maintenance of the span-audit state under a
-    delivery — the 100 TB path, where rebuilding per-doc stats over
-    the full corpus on every crawl delivery is the thing you must
-    never do.  Given the maintained ``postings`` (doc_id, h, c) and
-    derived ``stats`` frames plus an arriving (doc_id, text) batch,
-    returns the updated (postings, stats) pair touching only what the
-    delivery can change:
-
-    - new postings = old ∪ batch postings (disjoint doc_ids — append,
-      no rewrite);
-    - changed stats come from ONE probe of the maintained postings,
-      keyed by the batch's span hashes (broadcast semi-join — the
-      round-8 restructure; the previous shape ran THREE corpus-wide
-      passes: affected-docs semi-join, touched-postings re-read, and a
-      touched-h cross-doc recount).  All per-h arithmetic derives from
-      that probe — see :func:`_span_delta_changed_stats`.
-
-    Against the PERSISTED bucketed layouts, use
-    :func:`span_fold_in_place` — same arithmetic with the probe
-    partition-pruned to the batch's h-buckets.  Exactness is locked by
-    the delta-vs-rebuild property test (``tests/test_llmops.py``): any
-    split of a corpus into base + deliveries, applied sequentially,
-    must equal the from-scratch build on the union."""
-    batch_postings = span_postings_frame(
-        arriving_docs, wide=False
-    ).localCheckpoint()
-    # semi-join build sides are set-semantic: no distinct (it cost a
-    # shuffle stage per fold for nothing)
-    batch_h = batch_postings.select("h")
-    # the one probe: corpus rows sharing a hash with the batch —
-    # referenced ONCE since the round-11 single-pass restructure, so
-    # it stays lazy and runs inside the changed-stats job
-    probe = postings.join(F.broadcast(batch_h), "h", "left_semi")
-    # changed is consumed TWICE (the carried anti-join's build side
-    # and the union arm) AND feeds every later fold's stats chain —
-    # materialize it once, delivery-bounded, so the probe/window/
-    # rollup pipeline cannot re-evaluate across folds
-    changed = _span_delta_changed_stats(
-        probe, batch_postings, stats
-    ).localCheckpoint()
-    merged = postings.unionByName(batch_postings)
-    carried = stats.join(
-        F.broadcast(changed.select("doc_id")), "doc_id", "left_anti"
-    )
-    return merged, carried.unionByName(changed)
 
 
 SPAN_H_BUCKETS = 64
@@ -1348,7 +1186,7 @@ def jaccard_pair_delta(postings: DataFrame, pairs: DataFrame,
                        ) -> tuple[DataFrame, DataFrame]:
     """Incremental maintenance of the n-gram Jaccard pair index under
     a delivery — the same 100 TB discipline as
-    :func:`span_index_delta`, for the most expensive maintained
+    :func:`span_fold_in_place`, for the most expensive maintained
     artifact: pairwise Jaccard depends ONLY on the two documents' own
     shingle sets, so existing pairs never change and the delta is
     exactly the pairs that touch the arriving batch.
@@ -1423,7 +1261,7 @@ def minhash_band_delta(bands: DataFrame, pairs: DataFrame,
                        ) -> tuple[DataFrame, DataFrame]:
     """Incremental maintenance of the MinHash band index and its LSH
     candidate-pair index under a delivery — completing the maintained
-    family (:func:`span_index_delta`, :func:`jaccard_pair_delta`) with
+    family (:func:`span_fold_in_place`, :func:`jaccard_pair_delta`) with
     its probabilistic member.
 
     A document's signature and band hashes depend only on its own
@@ -1883,9 +1721,6 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     import tempfile
     import uuid
 
-    import pyarrow as pa
-
-    from hfcommunity_spark.session import default_parallelism
     from hfcommunity_spark.operators.graph import (
         _sync_catalog_partitions,
         fold_components_delivery,
@@ -1961,7 +1796,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     bucketed.snapshot(os.path.join(pristine, "vassign"), vdir)
     ctab, vtab = f"hfc_x15_c_{run}", f"hfc_x15_v_{run}"
 
-    served: list[DataFrame] = []
+    serves: list = []  # (delivery_id, bucketed.serve result)
     try:
         for tname, tdir, pcol in (
             (ctab, cdir, "c_bucket"), (vtab, vdir, "v_bucket"),
@@ -1980,7 +1815,6 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                 dropped=(),
             )
 
-        local_serves: list = []  # Arrow tables, delivery-tagged
         for k in range(X15_DELIVERIES):
             if edges_by_k is not None:
                 new_edges = edges_by_k.get(k, [])
@@ -1996,49 +1830,15 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                 ctable=ctab, vtable=vtab,
             )
             # serve: the table MUTATES in place next fold, so each
-            # state is captured now — a driver-local pyarrow read of
-            # the layout files
-            st = bucketed.read_table(
-                cdir, "c_bucket", ("vertex", "component"),
-                placement.CAPS["SERVE_LOCAL_ROW_MAX"],
-            )
-            if st is not None:
-                local_serves.append(st.append_column(
-                    "delivery_id",
-                    pa.array([k] * st.num_rows, pa.int32()),
-                ))
-            else:
-                # failed local gate: freeze this delivery's state as a
-                # flat HARDLINK snapshot and serve it lazily — the
-                # writers only ever replace whole files, so the linked
-                # names keep the old inodes alive through later folds,
-                # the one-directory read lists without a Spark job, and
-                # the final union materializes every serve once
-                snap = os.path.join(work, f"serve{k}")
-                bucketed.flat_snapshot(cdir, "c_bucket", snap)
-                served.append(
-                    spark.read.schema("vertex BIGINT, component BIGINT")
-                    .parquet(snap).select(
-                        F.lit(k).cast("int").alias("delivery_id"),
-                        F.col("vertex").alias("doc_id"),
-                        "component",
-                    # coalesce (no shuffle): serving at session width
-                    # bounds the serve union's tasks per serve
-                    ).coalesce(default_parallelism())
-                )
-        if local_serves:
-            served.append(spark.createDataFrame(
-                pa.concat_tables(local_serves).select(
-                    ["delivery_id", "vertex", "component"]
-                ).rename_columns(["delivery_id", "doc_id", "component"])
-            ))
-        out = served[0]
-        for s in served[1:]:
-            out = out.unionByName(s)
-        # materialize the union, then free every checkpoint block this
-        # invocation created (fold plans, change sets, any per-fold
-        # serving snapshots): the returned frame reads only its own
-        # blocks, repeated invocations pin nothing on top
+            # state is captured now
+            serves.append((k, bucketed.serve(
+                spark, cdir, "c_bucket", ("vertex", "component"),
+                "vertex BIGINT, component BIGINT",
+                os.path.join(work, f"serve{k}"),
+            )))
+        out = bucketed.union_serves(spark, serves).withColumnRenamed(
+            "vertex", "doc_id"
+        )
         return materialize_and_free(spark, _blocks_before, out)
     finally:
         # the serving blocks are EAGER checkpoints (block-manager
@@ -2300,13 +2100,26 @@ def recover_span_fold(spark, postings_dir: str, stats_dir: str,
 
 
 def _span_changed_local(batch, probe):
-    """:func:`_span_changed_rollup` on Arrow tables: from the batch
-    postings ``batch`` and the ``probe`` rows (the corpus postings
-    whose ``h`` occurs in the batch), both ``(doc_id, h, c)``, the
-    batch docs' stats ``(doc_id, n_spans, n_dup_spans)`` and the old
-    docs' increments ``(doc_id, inc)``, every ``inc`` > 0.  Group-by
-    rollups and hash joins run in C++; only the delivery-bounded
-    results reach Python.  Pure — no Spark, no IO."""
+    """The span delta's arithmetic — the one copy, which the local
+    fold runs on the driver and the distributed chain runs once per
+    hash group in executors (:func:`_span_changed_frame`).  From the
+    batch postings ``batch`` and the ``probe`` rows (the corpus
+    postings whose ``h`` occurs in the batch), both ``(doc_id, h,
+    c)``, it returns the batch docs' stats ``(doc_id, n_spans,
+    n_dup_spans)`` and the old docs' increments ``(doc_id, inc)``,
+    every ``inc`` > 0:
+
+    - ``nd_old(h)``, the cross-doc count among OLD docs, is the probe's
+      row count per h, and ``nd_batch(h)`` the batch's (rows are
+      unique per (doc_id, h));
+    - a BATCH doc's n_dup_spans sums c where nd_old + nd_batch ≥ 2
+      (every hash of a batch doc is in the batch's h set, so the probe
+      covers them all);
+    - an OLD doc's n_dup_spans only grows, via hashes moving nd 1 →
+      ≥2: exactly its probe rows with nd_old == 1.
+
+    Group-by rollups and hash joins run in C++; only the
+    delivery-bounded results reach Python.  Pure — no Spark, no IO."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -2330,9 +2143,7 @@ def _span_changed_local(batch, probe):
     new = b2.append_column("dup_c", dup_c).group_by("doc_id").aggregate(
         [("c", "sum"), ("dup_c", "sum")]
     ).rename_columns(list(_SPAN_STATS_COLS))
-    # an OLD doc increments only via hashes moving nd 1 -> >=2: exactly
-    # its probe rows with nd_old == 1; a doc in both counts as a batch
-    # doc, as in the Spark rollup
+    # a doc in both counts as a batch doc
     ones = nd_o.filter(pc.equal(nd_o.column("nd_old"), 1)).column("h")
     old = probe.filter(
         pc.is_in(probe.column("h"), value_set=ones)
@@ -2341,6 +2152,80 @@ def _span_changed_local(batch, probe):
         pc.is_in(old.column("doc_id"), value_set=new.column("doc_id"))
     )).rename_columns(["doc_id", "inc"])
     return new, old
+
+
+_SPAN_CHANGED_SCHEMA = (
+    "doc_id BIGINT, is_new INT, n_spans_new BIGINT, dup_new BIGINT, "
+    "inc BIGINT"
+)
+# how the per-group rows of one doc merge: a doc is a batch doc if any
+# group says so (a colliding doc counts as one), and every count adds
+_SPAN_CHANGED_MERGE = (
+    ("is_new", "max"), ("n_spans_new", "sum"), ("dup_new", "sum"),
+    ("inc", "sum"),
+)
+
+
+def _span_changed_group(t):
+    """:func:`_span_changed_local` on one hash group of the tagged union
+    of batch (``tag`` 1) and probe (``tag`` 0) rows, as
+    :data:`_SPAN_CHANGED_SCHEMA` rows: the batch docs with ``is_new``
+    1, the old docs' increments with ``is_new`` 0."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cols = ["doc_id", "h", "c"]
+    is_batch = pc.equal(t.column("tag"), 1)
+    new, old = _span_changed_local(
+        t.filter(is_batch).select(cols),
+        t.filter(pc.invert(is_batch)).select(cols),
+    )
+
+    def const(v, typ, n):
+        return pa.repeat(pa.scalar(v, typ), n)
+
+    i64, i32 = pa.int64(), pa.int32()
+    n, m = new.num_rows, old.num_rows
+    return pa.concat_tables([
+        pa.table({
+            "doc_id": new.column("doc_id"),
+            "is_new": const(1, i32, n),
+            "n_spans_new": new.column("n_spans"),
+            "dup_new": new.column("n_dup_spans"),
+            "inc": const(0, i64, n),
+        }),
+        pa.table({
+            "doc_id": old.column("doc_id"),
+            "is_new": const(0, i32, m),
+            "n_spans_new": const(0, i64, m),
+            "dup_new": const(0, i64, m),
+            "inc": old.column("inc"),
+        }),
+    ])
+
+
+def _span_changed_frame(batch_postings: DataFrame,
+                        probe: DataFrame) -> DataFrame:
+    """The changed docs of a delivery as a Spark frame, one row per
+    doc ``(doc_id, is_new, n_spans_new, dup_new, inc)``: the batch
+    postings and the ``probe`` rows go up as one tagged union,
+    :func:`_span_changed_group` runs once per hash group, and the
+    per-group rows merge per doc by :data:`_SPAN_CHANGED_MERGE`.
+    Exact because every row of a given ``h`` lands in one group; every
+    per-group row is a changed doc, so every merged row is one.  There
+    are session-width groups, not one per h-bucket: each kernel call
+    costs ~4 ms of fixed Arrow overhead, so 64 groups measured ~0.2 s
+    slower per delivery than 4 at sf0.01."""
+    from hfcommunity_spark.session import default_parallelism
+
+    return (
+        batch_postings.withColumn("tag", F.lit(1))
+        .unionByName(probe.withColumn("tag", F.lit(0)))
+        .groupBy(F.pmod(F.col("h"), F.lit(default_parallelism())))
+        .applyInArrow(_span_changed_group, _SPAN_CHANGED_SCHEMA)
+        .groupBy("doc_id")
+        .agg(*(getattr(F, fn)(c).alias(c) for c, fn in _SPAN_CHANGED_MERGE))
+    )
 
 
 def _span_fold_local(postings_dir: str, stats_dir: str, spans,
@@ -2418,7 +2303,7 @@ def _span_stats_upsert(spark, carried: DataFrame, ch,
                        stats_buckets: int) -> DataFrame:
     """The distributed stats upsert's write frame: the ``carried``
     stats rows of the touched d-buckets with the changed-docs table
-    ``ch`` (:func:`_span_changed_rollup`'s columns, collected) applied,
+    ``ch`` (:func:`_span_changed_frame`'s columns, collected) applied,
     keyed by ``d_bucket`` for a dynamic partition overwrite.  ``ch``
     goes up as ONE local relation, broadcast once: a left join adds
     the old docs' increments and drops stored rows of batch doc_ids
@@ -2460,7 +2345,7 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
     2. the probe gate (:func:`_bucketed_span_probe`): one Arrow
        collect of the batch's hash set, driver-side bucket list, a
        partition-pruned postings scan with a pushed InSet on h;
-    3. ONE ``toArrow`` collect of :func:`_span_changed_rollup` — the
+    3. ONE ``toArrow`` collect of :func:`_span_changed_frame` — the
        changed docs, a delivery-bounded set;
     4. the stats upsert (:func:`_span_stats_upsert`) as one dynamic
        partition overwrite of the touched d-buckets.  Its carried rows
@@ -2485,7 +2370,7 @@ def _span_fold_distributed(spark, postings_dir: str, stats_dir: str,
     probe = _bucketed_span_probe(
         spark, postings_dir, batch_postings, buckets
     )
-    ch = _span_changed_rollup(batch_postings, probe).toArrow()
+    ch = _span_changed_frame(batch_postings, probe).toArrow()
     if ch.num_rows == 0:
         return
     sbkts = sorted({
@@ -2570,30 +2455,23 @@ def span_fold_in_place(spark, postings_dir: str, stats_dir: str,
 
 
 def _span_stats_serve(spark, stats_dir: str, snap: str):
-    """The stats layout as it stands, with ``dup_ratio``: an Arrow
-    table read on the driver when the layout holds at most
-    ``SERVE_LOCAL_ROW_MAX`` rows (no Spark job), else a lazy DataFrame
-    over a flat hardlink snapshot at ``snap``.  The writers replace
-    whole files, so the snapshot keeps this state through later folds,
-    and its one directory lists without a Spark job.  ``dup_ratio`` is
-    IEEE double division either way, bit-identical between the two."""
+    """:func:`bucketed.serve` of the stats layout with ``dup_ratio``
+    added: IEEE double division either way, bit-identical between the
+    Arrow table and the DataFrame."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    st = bucketed.read_table(
-        stats_dir, "d_bucket", _SPAN_STATS_COLS,
-        placement.CAPS["SERVE_LOCAL_ROW_MAX"],
-    )
-    if st is not None:
-        return st.append_column("dup_ratio", pc.divide(
-            st.column("n_dup_spans").cast(pa.float64()),
-            st.column("n_spans").cast(pa.float64()),
-        ))
-    bucketed.flat_snapshot(stats_dir, "d_bucket", snap)
-    return spark.read.schema(_SPAN_STATS_SCHEMA).parquet(snap).withColumn(
-        "dup_ratio",
-        F.col("n_dup_spans").cast("double") / F.col("n_spans"),
-    )
+    st = bucketed.serve(spark, stats_dir, "d_bucket", _SPAN_STATS_COLS,
+                        _SPAN_STATS_SCHEMA, snap)
+    if isinstance(st, DataFrame):
+        return st.withColumn(
+            "dup_ratio",
+            F.col("n_dup_spans").cast("double") / F.col("n_spans"),
+        )
+    return st.append_column("dup_ratio", pc.divide(
+        st.column("n_dup_spans").cast(pa.float64()),
+        st.column("n_spans").cast(pa.float64()),
+    ))
 
 
 def _x17_pristine_layouts(spark: SparkSession, sf_dir: str) -> str:
@@ -2708,9 +2586,8 @@ def x17_stream_maintained_spans(spark: SparkSession,
     One bounded collect of the whole stream's exploded spans (at most
     ``SPAN_LOCAL_ROW_MAX`` rows, none at cap 0) is split by arrival
     and handed to each fold as its ``spans``; the fold then schedules
-    no Spark job.  The local serves upload as one local relation, the
-    snapshot serves are unioned to it, and the union is materialized
-    once.
+    no Spark job.  :func:`bucketed.union_serves` puts the three serves
+    in one frame, and the union is materialized once.
 
     The oracle restates each prefix corpus from scratch via
     :func:`dup_span_stats_sql`, so hash equality proves the fold chain
@@ -2724,14 +2601,12 @@ def x17_stream_maintained_spans(spark: SparkSession,
     import tempfile
     import uuid
 
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     from hfcommunity_spark.operators.graph import (
         materialize_and_free,
         pinned_block_ids,
     )
-    from hfcommunity_spark.session import default_parallelism
 
     pristine = _x17_pristine_layouts(spark, sf_dir)
     arriving = _delta_arriving_docs(spark, sf_dir)
@@ -2759,41 +2634,21 @@ def x17_stream_maintained_spans(spark: SparkSession,
         for k in range(X17_DELIVERIES)
     }
 
-    served: list[DataFrame] = []
-    local_serves: list = []  # Arrow tables, delivery-tagged
+    serves: list = []  # (delivery_id, _span_stats_serve result)
     try:
         for k in range(X17_DELIVERIES):
             span_fold_in_place(
                 spark, pdir, sdir, arriving.filter(arrival == k),
                 spans=spans_by_k.get(k),
             )
-            st = _span_stats_serve(
+            serves.append((k, _span_stats_serve(
                 spark, sdir, os.path.join(work, f"serve{k}")
-            )
-            if isinstance(st, DataFrame):
-                served.append(st.select(
-                    F.lit(k).cast("int").alias("delivery_id"),
-                    *_SPAN_STATS_COLS, "dup_ratio",
-                ))
-            else:
-                local_serves.append(st.append_column(
-                    "delivery_id",
-                    pa.array([k] * st.num_rows, pa.int32()),
-                ))
-        if local_serves:
-            served.append(spark.createDataFrame(
-                pa.concat_tables(local_serves).select([
-                    "delivery_id", *_SPAN_STATS_COLS, "dup_ratio",
-                ])
-            ))
-        out = served[0]
-        for s in served[1:]:
-            out = out.unionByName(s)
+            )))
         # ONE materialization; the returned frame reads only its own
         # blocks, so the working dir (and any snapshots) can go in
         # the finally
         return materialize_and_free(
-            spark, before, out.coalesce(default_parallelism())
+            spark, before, bucketed.union_serves(spark, serves)
         )
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -1040,6 +1040,8 @@ def _fixture_dag_local_reach(spark: SparkSession, sf_dir: str):
     sha -> {ancestor_sha: min_hops, ...} INCLUDING self at hop 0, or
     None on any gate failure (commit/work caps, unreadable repo) —
     the caller then runs its distributed plan unchanged."""
+    from hfcommunity_spark.operators.graph import _bfs_hops
+
     base = _fixture_dag_repo(spark, sf_dir)
     repo = os.path.join(base, "fixture")
     cap = placement.CAPS["ANC_LOCAL_WORK_MAX"]
@@ -1055,21 +1057,10 @@ def _fixture_dag_local_reach(spark: SparkSession, sf_dir: str):
     if len(rows) * n_edges > cap:
         return None
     msg_of_sha = {r["sha"]: r["message"] for r in rows}
-    reach: dict[str, dict[str, int]] = {}
-    for start in msg_of_sha:
-        hops = {start: 0}
-        frontier = [start]
-        for hop in range(1, _ANCESTOR_MAX_HOPS + 1):
-            nxt = []
-            for node in frontier:
-                for p in parents_of.get(node, ()):
-                    if p not in hops:
-                        hops[p] = hop
-                        nxt.append(p)
-            if not nxt:
-                break
-            frontier = nxt
-        reach[start] = hops
+    reach = {
+        start: _bfs_hops(parents_of, start, _ANCESTOR_MAX_HOPS)
+        for start in msg_of_sha
+    }
     return msg_of_sha, reach
 
 

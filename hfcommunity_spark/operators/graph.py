@@ -117,11 +117,31 @@ def materialize_and_free(spark: SparkSession, before: set,
     return out
 
 
+def _bfs_hops(parents: dict, start, max_hops: int) -> dict:
+    """``{node: min hops}`` of every ancestor of ``start`` within
+    ``max_hops`` over the ``{node: [parent, ...]}`` map, ``start``
+    itself at 0, in discovery order: a level-order BFS, so the first
+    hop a node is reached at is its minimum."""
+    hops = {start: 0}
+    frontier = [start]
+    for hop in range(1, max_hops + 1):
+        nxt = []
+        for node in frontier:
+            for p in parents.get(node, ()):
+                if p not in hops:
+                    hops[p] = hop
+                    nxt.append(p)
+        if not nxt:
+            break
+        frontier = nxt
+    return hops
+
+
 def _ancestors_local(commit_parents: DataFrame, start_shas: DataFrame,
                      max_hops: int) -> DataFrame | None:
     """Driver-local twin of :func:`ancestors`: a compact Arrow collect
     of the start set, a bounded COUNT pre-gate on the edge list, then
-    plain level-order BFS per start with min-hop dedup —
+    :func:`_bfs_hops` per start —
     value-identical to the per-hop frontier joins (BFS order gives the
     same minimal hop counts).
 
@@ -155,21 +175,12 @@ def _ancestors_local(commit_parents: DataFrame, start_shas: DataFrame,
     for c, p in zip(et.column("commit_sha").to_pylist(),
                     et.column("parent_sha").to_pylist()):
         parents.setdefault(c, []).append(p)
-    rows = []
-    for start in starts:
-        hops = {start: 0}
-        frontier = [start]
-        for hop in range(1, max_hops + 1):
-            nxt = []
-            for node in frontier:
-                for p in parents.get(node, ()):
-                    if p not in hops:
-                        hops[p] = hop
-                        nxt.append(p)
-                        rows.append((start, p, hop))
-            if not nxt:
-                break
-            frontier = nxt
+    rows = [
+        (start, p, hop)
+        for start in starts
+        for p, hop in _bfs_hops(parents, start, max_hops).items()
+        if hop > 0
+    ]
     spark = commit_parents.sparkSession
     return spark.createDataFrame(
         rows, "sha string, ancestor_sha string, hops int"

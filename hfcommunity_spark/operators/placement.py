@@ -27,13 +27,21 @@ if TYPE_CHECKING:
 CAPS: dict[str, int] = {
     # |starts| x |edges| steps of the driver-side multi-source BFS
     # (graph.ancestors, and the merge-base/commit-ancestors reach sets,
-    # whose pre-gate is n·(n−1) commits)
+    # whose pre-gate is n·(n−1) commits).  Margin, warm, 4 cores,
+    # sf0.01 / sf0.1: g_commit_ancestors 0.29 / 0.33 s and 1 job, vs
+    # 1.26 / 1.45 s and 12 jobs with only its face twin off, vs
+    # 1.97 / 2.20 s and 28 jobs at cap 0
     "ANC_LOCAL_WORK_MAX": 2_000_000,
     # documents rows of the merge-base twin's footer-gated read: two
-    # int64 columns ≈ 80 MB of driver memory at the cap
+    # int64 columns ≈ 80 MB of driver memory at the cap.  Margin, as
+    # above: g_merge_base 0.32 / 0.33 s and 1 job, vs 2.19 / 2.74 s and
+    # 15–16 jobs with only its face twin off, vs 2.55 / 3.15 s and 31
+    # jobs with every cap at 0
     "MB_DOC_LOCAL_ROW_MAX": 5_000_000,
     # edges of the PageRank twin's one Arrow collect: two int64
-    # columns ≈ 32 MB at the cap
+    # columns ≈ 32 MB at the cap.  Margin, as above:
+    # g_pagerank_fixed_iter 0.42 / 1.65 s and 4 jobs, vs 1.04 / 3.31 s
+    # and 11 jobs at cap 0
     "PR_LOCAL_EDGE_MAX": 2_000_000,
     # delivery edges of graph.fold_components_delivery's local fold;
     # the distributed chain costs seconds of fixed per-delivery overhead

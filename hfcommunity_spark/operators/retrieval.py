@@ -27,7 +27,7 @@ displayed ordering is exactly reproducible from the displayed values.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hfcommunity_spark.io import read_table
@@ -134,13 +134,11 @@ def _bm25_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     return tf, dl, st
 
 
-def _bm25_scored_from(tf: DataFrame, dl: DataFrame,
-                      st: DataFrame) -> DataFrame:
-    """(doc_id, score_rounded) from prepared index frames — the Spark
-    twin of the ``scored`` CTE.  ``dfreq`` and ``st`` are broadcast
-    k-row/1-row sides; the one data-sized shuffle is the tf ⋈ dl
-    equi-join."""
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+def _bm25_term_score() -> Column:
+    """A (doc, term) row's BM25 score ``s`` over the columns ``tf``,
+    ``dl``, ``df``, ``n`` and ``sum_dl`` — the ``scored`` CTE's
+    expression tree: avgdl one exact int/int double division, then
+    idf, then the saturated tf."""
     avgdl = F.col("sum_dl").cast("double") / F.col("n")
     idf = F.log(
         (F.col("n").cast("double") - F.col("df") + 0.5)
@@ -150,17 +148,12 @@ def _bm25_scored_from(tf: DataFrame, dl: DataFrame,
     denom = F.col("tf") + K1 * (
         1.0 - B + B * (F.col("dl") / avgdl)
     )
-    scored_t = (
-        tf.join(dl, "doc_id")
-        .join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(st))
-        .select(
-            "doc_id",
-            "term",
-            (idf * (F.col("tf") * (K1 + 1.0)) / denom).alias("s"),
-        )
-    )
-    # Fixed-order per-term sum: same literal order as the oracle.
+    return (idf * (F.col("tf") * (K1 + 1.0)) / denom).alias("s")
+
+
+def _bm25_score_rounded() -> Column:
+    """A doc's ``score_rounded`` aggregate over its (term, s) rows:
+    the fixed-order per-term sum, in the oracle's literal order."""
     per_term = [
         F.coalesce(
             F.max(F.when(F.col("term") == t, F.col("s"))), F.lit(0.0)
@@ -170,9 +163,23 @@ def _bm25_scored_from(tf: DataFrame, dl: DataFrame,
     total = per_term[0]
     for p in per_term[1:]:
         total = total + p
-    return scored_t.groupBy("doc_id").agg(
-        F.round(total, 4).alias("score_rounded")
+    return F.round(total, 4).alias("score_rounded")
+
+
+def _bm25_scored_from(tf: DataFrame, dl: DataFrame,
+                      st: DataFrame) -> DataFrame:
+    """(doc_id, score_rounded) from prepared index frames — the Spark
+    twin of the ``scored`` CTE.  ``dfreq`` and ``st`` are broadcast
+    k-row/1-row sides; the one data-sized shuffle is the tf ⋈ dl
+    equi-join."""
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    scored_t = (
+        tf.join(dl, "doc_id")
+        .join(F.broadcast(dfreq), "term")
+        .crossJoin(F.broadcast(st))
+        .select("doc_id", "term", _bm25_term_score())
     )
+    return scored_t.groupBy("doc_id").agg(_bm25_score_rounded())
 
 
 def bm25_scored(docs: DataFrame) -> DataFrame:
@@ -506,34 +513,13 @@ def x14_stream_maintained_index(spark: SparkSession,
     dfreq_k = tf_k.groupBy("k", "term").agg(
         F.count(F.lit(1)).alias("df")
     )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n")
-    idf = F.log(
-        (F.col("n").cast("double") - F.col("df") + 0.5)
-        / (F.col("df") + 0.5)
-        + 1.0
-    )
-    denom = F.col("tf") + K1 * (1.0 - B + B * (F.col("dl") / avgdl))
     scored_t = (
         tf_k.join(dl_k, ["doc_id", "k"])
         .join(F.broadcast(dfreq_k), ["k", "term"])
         .join(F.broadcast(st_k), "k")
-        .select(
-            "k", "doc_id", "term",
-            (idf * (F.col("tf") * (K1 + 1.0)) / denom).alias("s"),
-        )
+        .select("k", "doc_id", "term", _bm25_term_score())
     )
-    per_term = [
-        F.coalesce(
-            F.max(F.when(F.col("term") == t, F.col("s"))), F.lit(0.0)
-        )
-        for t in BM25_TERMS
-    ]
-    total = per_term[0]
-    for p in per_term[1:]:
-        total = total + p
-    scored = scored_t.groupBy("k", "doc_id").agg(
-        F.round(total, 4).alias("score_rounded")
-    )
+    scored = scored_t.groupBy("k", "doc_id").agg(_bm25_score_rounded())
     w = Window.partitionBy("k").orderBy(
         F.desc("score_rounded"), F.asc("doc_id")
     )

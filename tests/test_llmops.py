@@ -334,51 +334,6 @@ def test_rarity_hapax_consistency(spark):
         assert r.mean_word_freq >= r.rarest_freq >= 1
 
 
-def test_span_index_delta_equals_rebuild(spark):
-    """Incremental span-audit maintenance: splitting the corpus into a
-    base plus two sequential deliveries and applying span_index_delta
-    per delivery must reproduce the from-scratch stats on the union
-    EXACTLY — including docs whose classification flips only because a
-    later delivery duplicated their spans."""
-    from pyspark.sql import functions as F
-
-    from hfcommunity_spark.operators import dedup as dd
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    base = docs.filter(F.col("doc_id") % 3 == 0)
-    d1 = docs.filter(F.col("doc_id") % 3 == 1)
-    d2 = docs.filter(F.col("doc_id") % 3 == 2)
-
-    postings = dd.span_postings_frame(base)
-    stats = dd.span_stats_from_postings(postings)
-    for delivery in (d1, d2):
-        postings, stats = dd.span_index_delta(postings, stats, delivery)
-
-    want = {
-        tuple(r)
-        for r in dd.span_stats_frame(docs).collect()
-    }
-    got = {tuple(r) for r in stats.collect()}
-    assert got == want
-    # the maintained postings equal the from-scratch postings too
-    want_p = {tuple(r) for r in dd.span_postings_frame(docs).collect()}
-    assert {tuple(r) for r in postings.collect()} == want_p
-    # sanity: the deliveries actually flipped somebody (cross-slice
-    # duplicate spans exist in the testdata)
-    base_stats = {
-        r.doc_id: r.n_dup_spans
-        for r in dd.span_stats_frame(base).collect()
-    }
-    flipped = [
-        r for r in stats.collect()
-        if r.doc_id in base_stats and r.n_dup_spans != base_stats[r.doc_id]
-    ]
-    assert flipped, "testdata should contain cross-slice duplicate spans"
-
-
 def test_jaccard_pair_delta_equals_rebuild(spark):
     """Incremental pair-index maintenance: base + two sequential
     deliveries through jaccard_pair_delta must equal the from-scratch

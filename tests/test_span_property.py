@@ -1,8 +1,10 @@
-"""Property-based check (hypothesis) for the span fold's Arrow kernel:
+"""Property-based checks (hypothesis) for the span fold's Arrow kernel:
 for ANY base postings and ANY delivery of new docs, the batch stats
 and old-doc increments of ``_span_changed_local`` equal a brute-force
 from-scratch rollup over base ∪ batch postings, restricted to the docs
-the delivery changed.  Pure Arrow and Python — no Spark session."""
+the delivery changed; and the kernel run per group of ``h`` values,
+as the distributed chain runs it, merges to the kernel run on the
+whole.  Pure Arrow and Python — no Spark session."""
 
 from __future__ import annotations
 
@@ -12,7 +14,11 @@ import pyarrow as pa
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from hfcommunity_spark.operators.dedup import _span_changed_local
+from hfcommunity_spark.operators.dedup import (
+    _SPAN_CHANGED_MERGE,
+    _span_changed_group,
+    _span_changed_local,
+)
 
 # a small hash domain so a hash's cross-doc count moves 0→1, 1→2 and
 # 2→3 across a delivery; the int64 extremes and negatives are in it
@@ -75,3 +81,57 @@ def test_span_changed_local_equals_rebuild(base, batch):
     assert all(v > 0 for v in inc.values())
     assert {d: (before[d][0], before[d][1] + v)
             for d, v in inc.items()} == want_old
+
+
+def _split(rows: dict, tag: int, hs) -> list:
+    return [(d, h, c, tag) for (d, h), c in rows.items() if h in hs]
+
+
+# a group per hash value, out of four; batch doc_ids may collide with
+# base doc_ids, which the merge must count as batch docs
+_GROUP_OF = st.fixed_dictionaries(
+    {h: st.integers(min_value=0, max_value=3)
+     for h in (_LO, -7, 0, 1, 7, _HI)}
+)
+_BATCH_ANY = st.dictionaries(
+    st.tuples(st.sampled_from([4, 5, 100, 101]), _H), _C, max_size=10,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(base=_BASE, batch=_BATCH_ANY, group_of=_GROUP_OF)
+@example(base={(0, 7): 1, (1, 1): 2},  # group 2: batch rows, no probe
+         batch={(100, 7): 2, (100, 0): 1, (101, 0): 3},
+         group_of={_LO: 0, -7: 0, 0: 2, 1: 1, 7: 1, _HI: 0})
+@example(base={(4, 7): 1}, batch={(4, 1): 2, (100, 7): 1},  # collision
+         group_of={_LO: 0, -7: 0, 0: 0, 1: 1, 7: 2, _HI: 0})
+def test_span_changed_per_group_merge_equals_whole(base, batch, group_of):
+    batch_h = {h for _, h in batch}
+    probe = {k: c for k, c in base.items() if k[1] in batch_h}
+    new_t, old_t = _span_changed_local(_table(batch), _table(probe))
+    want_new = {r["doc_id"]: (r["n_spans"], r["n_dup_spans"])
+                for r in new_t.to_pylist()}
+    want_old = {r["doc_id"]: r["inc"] for r in old_t.to_pylist()}
+
+    # group 4 is always empty
+    parts = []
+    i64 = pa.int64()
+    for g in range(5):
+        hs = {h for h, gg in group_of.items() if gg == g}
+        rows = _split(batch, 1, hs) + _split(probe, 0, hs)
+        parts.append(_span_changed_group(pa.table({
+            "doc_id": pa.array([r[0] for r in rows], i64),
+            "h": pa.array([r[1] for r in rows], i64),
+            "c": pa.array([r[2] for r in rows], i64),
+            "tag": pa.array([r[3] for r in rows], pa.int32()),
+        })))
+    merged = pa.concat_tables(parts).group_by("doc_id").aggregate(
+        list(_SPAN_CHANGED_MERGE)
+    ).to_pylist()
+    got_new = {r["doc_id"]: (r["n_spans_new_sum"], r["dup_new_sum"])
+               for r in merged if r["is_new_max"] == 1}
+    got_old = {r["doc_id"]: r["inc_sum"]
+               for r in merged if r["is_new_max"] == 0}
+    assert len(got_new) + len(got_old) == len(merged)
+    assert got_new == want_new
+    assert got_old == want_old

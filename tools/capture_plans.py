@@ -7,8 +7,9 @@ frame is a materialized union (the fold work happens in jobs before
 it), so alongside the face plan this also captures the load-bearing
 INTERNAL plans the round's claims reference:
   - x17/span: the bucketed probe (PartitionFilters + pushed In), the
-    changed-doc rollup and the stats-upsert write frame of the
-    distributed fold chain, over the pristine layouts
+    changed-doc frame (the span kernel per hash group, merged per doc)
+    and the stats-upsert write frame of the distributed fold chain,
+    over the pristine layouts
   - x15: the pruned endpoint-resolution plan over the vertex layout
 
 Usage: python tools/capture_plans.py <tag> <suffix> <query> [...]
@@ -75,10 +76,11 @@ def main() -> None:
                 " on h_bucket + pushed In on h) ==\n"
             )
             parts.append(_explain(probe))
-            changed = dd._span_changed_rollup(batch, probe)
+            changed = dd._span_changed_frame(batch, probe)
             parts.append(
-                "\n== internal: changed-doc rollup (the distributed"
-                " chain's one toArrow collect) ==\n"
+                "\n== internal: changed-doc frame (the span kernel per"
+                " hash group, merged per doc; the distributed chain's"
+                " one toArrow collect) ==\n"
             )
             parts.append(_explain(changed))
             stats = spark.read.schema(

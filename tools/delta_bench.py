@@ -1,6 +1,6 @@
 """Delta-vs-rebuild economics for the maintained-index family.
 
-The incremental maintenance functions (``span_index_delta``,
+The incremental maintenance functions (``span_fold_in_place``,
 ``jaccard_pair_delta``, ``minhash_band_delta``, ``components_delta``)
 exist so a deployment pays per-DELIVERY cost instead of per-CORPUS
 cost on every crawl drop.  A single-scale timing cannot show that —

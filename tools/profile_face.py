@@ -67,11 +67,11 @@ def main() -> None:
     ], tally)
     _wrap("hfcommunity_spark.operators.bucketed", [
         "read_rows", "read_table", "write_buckets", "snapshot",
-        "flat_snapshot",
+        "flat_snapshot", "serve", "union_serves",
     ], tally)
     _wrap("hfcommunity_spark.operators.dedup", [
         "span_fold_in_place", "_span_fold_local", "_span_fold_distributed",
-        "_bucketed_span_probe", "_span_stats_serve",
+        "_bucketed_span_probe", "_span_changed_frame", "_span_stats_serve",
         "append_span_postings", "_x15_pristine_layouts",
         "_x17_pristine_layouts", "_delta_post_jaccard_pairs",
         "_delta_base_span_postings", "_delta_base_span_stats",

@@ -19,12 +19,14 @@ this entry point reads the five JSONL feeds (``sources/hub_feeds.py``
 — the landed-dump scale path; ``etl/hub_live.py`` produces the same
 rows from the live API when ``huggingface_hub`` is installed), builds
 all 17 tables as one declarative plan (``etl/pipeline.run_offline``),
-and writes immutable release snapshots (``io.write_snapshot`` —
+and writes immutable release snapshots (``io.write_release`` —
 directory-commit idempotency instead of INSERT IGNORE).  A load reads
-its input once and writes its output once: each feed is parsed once
-and kept persisted for all 17 table writes, and each table's row count
-is observed as its snapshot is written, not read back.  The closing
-wall-clock report mirrors :946-951.
+its input once and writes its output once, in two waves of concurrent
+Spark jobs on one scheduler: first each feed the selection reads is
+parsed into its persisted cache (one thread per feed), then all 17
+table snapshots are written at once from those caches (one thread per
+table), each table's row count observed as its snapshot is written,
+not read back.  The closing wall-clock report mirrors :946-951.
 
 Usage:
   python -m hfcommunity_spark.cli --feeds DIR --base DIR --release R \\
@@ -39,11 +41,15 @@ import sys
 import time
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hfcommunity_spark.etl import pipeline
-from hfcommunity_spark.io import write_snapshot
+from hfcommunity_spark.io import concurrently, write_release
+# Unused here but kept bound: the traced benchmark swaps this name for
+# a wrapper that switches one span shared by the whole load, so the
+# writer threads call io's own write_snapshot, not this one.
+from hfcommunity_spark.io import write_snapshot  # noqa: F401
 from hfcommunity_spark.schema import SCHEMAS
 from hfcommunity_spark.sources import hub_feeds
 
@@ -109,20 +115,41 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict[str, int]:
     """The populate lifecycle (:828 main body).  Returns per-table row
     counts (the :946-951 report data).
 
-    Each feed is parsed once: the five feed frames are persisted
-    (MEMORY_AND_DISK) before any filter, so the 17 table writes share
-    one JSON parse, and they are unpersisted on the way out whether
-    the load succeeds or fails.  Each table's row count is observed
-    while its snapshot is written (``DataFrame.observe``), so no
-    snapshot is read back to be counted."""
+    A load runs in two waves of concurrent jobs:
+
+    1. Each feed is parsed once: the five feed frames are persisted
+       (MEMORY_AND_DISK) before any filter, and the caches of the
+       feeds the selection reads are filled at once, one ``noop``
+       write per feed on its own thread (jobs described
+       ``feeds.cache.<kind>``).  ``-t model`` fills no dataset or
+       space cache.  Filled first, no table write plans a fill of its
+       own, so the job count does not depend on the writes' timing.
+    2. All 17 tables are written at once from those caches
+       (``io.write_release``), each table's row count observed while
+       its snapshot is written, so no snapshot is read back.
+
+    Each wave waits for every job it started before it raises the
+    first failure, and the feeds are unpersisted on the way out
+    whether the load succeeds or fails."""
     feeds = hub_feeds.read_all_feeds(spark, args.feeds)
     parsed = [df.persist(StorageLevel.MEMORY_AND_DISK)
               for df in feeds.values()]
     try:
+        unread = _unselected_feeds(args.type)
+        concurrently(spark, [
+            (f"feeds.cache.{kind}",
+             lambda df=df: df.write.format("noop").mode("overwrite").save())
+            for kind, df in feeds.items() if kind not in unread
+        ])
         return _load(spark, args, feeds)
     finally:
         for df in parsed:
             df.unpersist()
+
+
+def _unselected_feeds(repo_type: str) -> set[str]:
+    """The repository feeds a ``-t`` selection does not read."""
+    return {f"{t}s" for t in REPO_TYPES if repo_type not in ("all", t)}
 
 
 def _load(spark: SparkSession, args: argparse.Namespace,
@@ -133,11 +160,8 @@ def _load(spark: SparkSession, args: argparse.Namespace,
     # ("models/org/x"), so they are pruned by the SAME selection —
     # otherwise an unselected type's commits would land as orphan
     # rows against an empty repository set (round-5 review finding)
-    selected = REPO_TYPES if args.type == "all" else (args.type,)
-    for kind, t in (("models", "model"), ("datasets", "dataset"),
-                    ("spaces", "space")):
-        if t not in selected:
-            feeds[kind] = feeds[kind].limit(0)
+    for kind in _unselected_feeds(args.type):
+        feeds[kind] = feeds[kind].limit(0)
     if args.type != "all":
         pref = f"{args.type}s/"
         for kind in ("commits", "discussions"):
@@ -173,8 +197,8 @@ def _load(spark: SparkSession, args: argparse.Namespace,
 
         wm = F.lit(limit_date_value(args.months))
         stale_id_frames = []
-        for kind, t in (("models", "model"), ("datasets", "dataset"),
-                        ("spaces", "space")):
+        for t in REPO_TYPES:
+            kind = f"{t}s"
             feeds[kind], stale_feed = split_by_watermark(feeds[kind], wm)
             cols = ["likes"] + (
                 ["downloads"] if t in ("model", "dataset") else []
@@ -215,13 +239,7 @@ def _load(spark: SparkSession, args: argparse.Namespace,
             prev_tables, tables, stale_updates
         )
 
-    counts: dict[str, int] = {}
-    for name, df in tables.items():
-        obs = Observation(f"rows.{name}")
-        write_snapshot(df.observe(obs, F.count(F.lit(1)).alias("rows")),
-                       args.base, name, args.release)
-        counts[name] = obs.get["rows"]
-    return counts
+    return write_release(tables, args.base, args.release)
 
 
 def main(argv: list[str] | None = None) -> int:

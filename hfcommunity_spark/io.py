@@ -11,10 +11,13 @@ idempotent re-runs.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 # Driver-generated synthetic tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -98,6 +101,56 @@ def write_snapshot(df: DataFrame, base_dir: str, table: str, release: str,
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return path
+
+
+R = TypeVar("R")
+
+
+def concurrently(spark: SparkSession,
+                 calls: list[tuple[str, Callable[[], R]]]) -> list[R]:
+    """Run each ``(description, call)`` on its own thread, all at once,
+    and return their results in order.
+
+    Each thread keeps the caller's local properties, its job group
+    among them (``inheritable_thread_target``), and sets
+    ``description`` as its jobs' description.  Every call is waited
+    for, even after one has failed; then the first failure in
+    submission order is raised, so no job a call started is still
+    running when the caller sees it."""
+    sc = spark.sparkContext
+
+    def described(description: str, call: Callable[[], R]) -> R:
+        sc.setJobDescription(description)
+        return call()
+
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(described), d, c)
+            for d, c in calls
+        ]
+    return [f.result() for f in futures]
+
+
+def write_release(tables: dict[str, DataFrame], base_dir: str,
+                  release: str) -> dict[str, int]:
+    """Write every table's snapshot of one release at once
+    (:func:`write_snapshot`, one thread per table, jobs described
+    ``io.write.<table>``) and return each table's row count.  A count
+    is observed while its snapshot is written (``DataFrame.observe``),
+    so no snapshot is read back to be counted."""
+
+    def write(name: str, df: DataFrame) -> int:
+        obs = Observation(f"rows.{name}")
+        write_snapshot(df.observe(obs, F.count(F.lit(1)).alias("rows")),
+                       base_dir, name, release)
+        return obs.get["rows"]
+
+    spark = next(iter(tables.values())).sparkSession
+    counts = concurrently(spark, [
+        (f"io.write.{name}", lambda name=name, df=df: write(name, df))
+        for name, df in tables.items()
+    ])
+    return dict(zip(tables, counts))
 
 
 SNAPSHOT_FORMATS = ("parquet", "orc", "json", "csv")

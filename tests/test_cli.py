@@ -412,9 +412,16 @@ LOAD_MODES = {
     "incremental": ["--prev-release", "r1", "-i", "1"],
 }
 
-# Spark jobs of one `-t all` load of the feed_dir fixture.  A feed
-# parsed again or a snapshot read back to be counted adds jobs.
-LOAD_JOBS = 36
+# Spark jobs of one `-t all` load of the feed_dir fixture: one cache
+# fill per feed, then the 17 table writes (34 jobs).  A feed parsed
+# again, a write planning its own cache fill or a snapshot read back
+# to be counted adds jobs.
+LOAD_JOBS = 39
+# The same under `-t model`, which fills three caches.  Its author
+# write runs 5 or 6 adaptive-execution jobs from one load to the next
+# (as it did when the tables were written one at a time), so the count
+# is pinned to those two values.
+MODEL_LOAD_JOBS = (34, 35)
 
 
 def _persisted(spark) -> set:
@@ -429,6 +436,25 @@ def _load(spark, feeds, base, release, extra=()):
         ["--feeds", feeds, "--base", base, "--release", release, *extra]
     )
     return cli.run(spark, ns)
+
+
+def _settle(spark) -> None:
+    """Wait until the status store has seen every posted job event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def _load_jobs(spark, feeds, base, release, extra=()) -> list[int]:
+    """Ids of the Spark jobs of one load, run under its own job
+    group; the load's threads inherit the group."""
+    sc = spark.sparkContext
+    group = f"hfc-cli-load-{base}-{release}"
+    sc.setJobGroup(group, "cli.run")
+    try:
+        _load(spark, feeds, base, release, extra)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _settle(spark)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("mode", sorted(LOAD_MODES))
@@ -477,28 +503,103 @@ def test_cli_failed_load_leaves_nothing_persisted(
     with open(d / "commits.jsonl", "w") as f:
         f.write(json.dumps(COMMITS[0]) + "\n{not json\n")
     cached = []
-    write = cli.write_snapshot
+    wave = cli.concurrently
 
     def spy(*a, **kw):
-        cached.append(_persisted(spark))
-        return write(*a, **kw)
+        try:
+            return wave(*a, **kw)
+        finally:
+            cached.append(_persisted(spark))
 
-    monkeypatch.setattr(cli, "write_snapshot", spy)
+    monkeypatch.setattr(cli, "concurrently", spy)
     before = _persisted(spark)
     with pytest.raises(Exception, match="FAILFAST"):
         _load(spark, str(d), str(tmp_path / "snap"), "r1")
-    assert any(c - before for c in cached)
+    # the load failed in its first wave, the cache fills, with the
+    # parsed feeds cached; every job it started has ended, and the
+    # cache is released
+    assert len(cached) == 1 and cached[0] - before
     assert not _persisted(spark) - before
+    _settle(spark)
+    assert not list(spark.sparkContext.statusTracker().getActiveJobsIds())
 
 
 def test_cli_load_job_count(spark, feed_dir, tmp_path):
-    """The load's job count is deterministic, so it is pinned."""
+    """The load's job count is pinned.  Each selection loads twice:
+    the waves run their jobs at once, and an overlap that let a write
+    plan its own cache fill would move the count from one load to the
+    next.  `-t model` reads neither the dataset nor the space feed, so
+    it fills two caches fewer."""
+    def jobs(mode, release):
+        return len(_load_jobs(spark, feed_dir, str(tmp_path / mode),
+                              release, LOAD_MODES[mode]))
+
+    assert [jobs("all", r) for r in ("r1", "r2")] == [LOAD_JOBS] * 2
+    for release in ("r1", "r2"):
+        assert jobs("model", release) in MODEL_LOAD_JOBS
+    assert max(MODEL_LOAD_JOBS) < LOAD_JOBS
+
+
+def test_cli_load_jobs_name_a_table_or_a_feed(spark, feed_dir, tmp_path):
+    """Every job of a load is described by the table it writes or the
+    feed it caches, so the overlapped jobs stay attributable; each
+    table and each feed has at least one."""
+    from hfcommunity_spark.sources.hub_feeds import FEED_SCHEMAS
+
+    jobs = _load_jobs(spark, feed_dir, str(tmp_path / "snap"), "r1")
+    store = spark.sparkContext._jsc.sc().statusStore()
+    names = set()
+    for job in jobs:
+        desc = store.job(job).description()
+        names.add(desc.get() if desc.isDefined() else None)
+    want = ({f"io.write.{t}" for t in SCHEMAS}
+            | {f"feeds.cache.{k}" for k in FEED_SCHEMAS})
+    assert names == want
+
+
+def test_concurrently_waits_for_every_call_then_raises_the_first(spark):
+    """More calls than cores, two of them failing: every call still
+    runs to its end, the failure raised is the first in submission
+    order though the other fails sooner, and each call's job keeps the
+    caller's job group and carries the call's own description."""
+    import sys
+    import threading
+    import time
+
+    from hfcommunity_spark.io import concurrently
+
     sc = spark.sparkContext
-    group = "hfc-cli-load-jobs"
-    sc.setJobGroup(group, "cli.run -t all")
+    group = "hfc-concurrently"
+    ended, lock = set(), threading.Lock()
+
+    def call(i):
+        def go():
+            if i == 3:
+                time.sleep(0.5)
+                raise ValueError("call 3")
+            if i == 5:
+                raise ValueError("call 5")
+            n = spark.range(i + 1).count()
+            with lock:
+                ended.add(i)
+            return n
+        return go
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    sc.setJobGroup(group, "concurrently")
     try:
-        _load(spark, feed_dir, str(tmp_path / "snap"), "r1")
+        with pytest.raises(ValueError, match="call 3"):
+            concurrently(spark, [(f"call.{i}", call(i)) for i in range(12)])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        sys.setswitchinterval(interval)
+    assert ended == set(range(12)) - {3, 5}
+    _settle(spark)
+    store = sc._jsc.sc().statusStore()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == LOAD_JOBS, sorted(jobs)
+    assert {store.job(j).description().get() for j in jobs} == {
+        f"call.{i}" for i in ended}
+    assert not list(sc.statusTracker().getActiveJobsIds())
+    results = concurrently(spark, [("one", lambda: 1), ("two", lambda: 2)])
+    assert results == [1, 2]

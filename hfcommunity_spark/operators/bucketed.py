@@ -4,7 +4,8 @@ same tree Spark's ``partitionBy(pcol)`` writer produces and reads.
 
 This module is the ONE driver-side implementation of that format —
 listing, pruned row reads, whole-table serve reads, the staged-commit
-bucket writer, the hardlink snapshot and the per-delivery serve —
+bucket writer, the hardlink snapshot, the private working copy and the
+per-delivery serve —
 shared by the x15 cluster assignment (``graph`` writers,
 ``c_bucket``/``v_bucket``) and the x17 span layouts (``dedup`` fold,
 ``h_bucket``/``d_bucket``).
@@ -25,8 +26,10 @@ Rules every function here keeps:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+import tempfile
 import uuid
 import warnings
 
@@ -252,6 +255,22 @@ def snapshot(src: str, dst: str, pcol: str | None = None,
         if os.path.isdir(d):
             shutil.copytree(d, os.path.join(dst, f"{pcol}={b}"),
                             copy_function=_link_or_copy)
+
+
+@contextlib.contextmanager
+def working_copy(src: str, names):
+    """A private copy of the pristine layouts ``<src>/<name>``: each
+    is :func:`snapshot`-ed (hardlinks) to ``<work>/<name>`` in a fresh
+    temp dir ``work``, which is yielded and removed on exit.  A fold
+    may mutate the copy freely; the pristine files are never
+    modified, because writers replace whole files."""
+    work = tempfile.mkdtemp(prefix="hfc_work_")
+    try:
+        for name in names:
+            snapshot(os.path.join(src, name), os.path.join(work, name))
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def flat_snapshot(src: str, pcol: str, dst: str, bkts=None) -> None:

@@ -1349,6 +1349,31 @@ def _delta_split(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return base, arriving
 
 
+# The streamed faces (x15, x17) deliver the arriving slice in
+# DELTA_DELIVERIES parts, by (doc_id DIV _DELTA_SPLIT_MOD).
+DELTA_DELIVERIES = 3
+
+
+def _delta_arrival(col: str = "doc_id") -> Column:
+    """The delivery a document id arrives in (0 .. DELTA_DELIVERIES-1),
+    or -1 for a base-slice id."""
+    return F.expr(
+        f"CASE WHEN {col} % {_DELTA_SPLIT_MOD} = 0 THEN "
+        f"({col} DIV {_DELTA_SPLIT_MOD}) % {DELTA_DELIVERIES} "
+        f"ELSE -1 END"
+    )
+
+
+def _delta_prefix_sql(k: int, sep: str = " ") -> str:
+    """The oracles' DuckDB predicate for the corpus as of delivery
+    ``k``: the base slice plus deliveries 0..k (``sep`` joins the two
+    terms)."""
+    return (
+        f"doc_id % {_DELTA_SPLIT_MOD} <> 0{sep}OR "
+        f"(doc_id // {_DELTA_SPLIT_MOD}) % {DELTA_DELIVERIES} <= {k}"
+    )
+
+
 def _delta_base_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return _delta_split(docs)[0]
@@ -1595,8 +1620,6 @@ def dd_maintained_components_parity(spark: SparkSession,
 # --- round 9: the maintained cluster assignment as a CATALOG table
 # --- under a STREAM of deliveries (the full writer lifecycle) --------
 
-X15_DELIVERIES = 3
-
 # Fixed bucket count for the catalog-lifecycle face: deliberately
 # larger than the base assignment needs, so deliveries CREATE
 # partitions (fresh vertices landing in previously-empty buckets) and
@@ -1615,13 +1638,13 @@ def _x15_oracle() -> str:
     ``x14`` convention."""
     jac = JACCARD_THRESHOLD_CTES.replace("FROM documents", "FROM corpus")
     arms = []
-    for k in range(X15_DELIVERIES):
+    for k in range(DELTA_DELIVERIES):
+        pred = _delta_prefix_sql(k, sep="\n           ")
         arms.append(f"""
     SELECT CAST({k} AS INTEGER) AS delivery_id, doc_id, component FROM (
       WITH RECURSIVE corpus AS (
         SELECT * FROM documents
-        WHERE doc_id % {_DELTA_SPLIT_MOD} <> 0
-           OR (doc_id // {_DELTA_SPLIT_MOD}) % {X15_DELIVERIES} <= {k}
+        WHERE {pred}
       ),
       {jac},
       und AS (SELECT doc_a AS a, doc_b AS b FROM jac
@@ -1638,37 +1661,29 @@ def _x15_oracle() -> str:
 
 
 def _x15_pristine_layouts(spark: SparkSession, sf_dir: str) -> str:
-    """Base-slice assignment materialized ONCE per (process, sf_dir) as
-    the two bucketed layouts (component- and vertex-keyed), published
-    atomically — the standing table a deployment holds beside the
-    corpus.  Invocations copy it to a private working dir (the fold
-    MUTATES the table; the delta-bench pristine-reset discipline)."""
+    """Base-slice assignment materialized ONCE per sf_dir content as
+    the two bucketed layouts (component- and vertex-keyed) — the
+    standing table a deployment holds beside the corpus.  Invocations
+    fold into a :func:`bucketed.working_copy` of it (the fold MUTATES
+    the table; the delta-bench pristine-reset discipline)."""
     import os
-    import tempfile
 
-    from hfcommunity_spark.operators.etlops import (
-        _publish_scratch_dir,
-        _stable_scratch_dir,
-    )
+    from hfcommunity_spark.operators.etlops import _stable_scratch_dir
     from hfcommunity_spark.operators.graph import (
         write_component_assign,
         write_vertex_assign,
     )
 
-    final, built = _stable_scratch_dir("hfc_x15_assign_", sf_dir)
-    if built:
-        return final
-    assign = _delta_base_assign(spark, sf_dir)
-    base = tempfile.mkdtemp(
-        prefix="hfc_x15_assign_tmp_", dir=os.path.dirname(final)
-    )
-    write_component_assign(
-        assign, os.path.join(base, "cassign"), buckets=X15_BUCKETS
-    )
-    write_vertex_assign(
-        assign, os.path.join(base, "vassign"), X15_BUCKETS
-    )
-    return _publish_scratch_dir(base, final)
+    def build(out: str) -> None:
+        assign = _delta_base_assign(spark, sf_dir)
+        write_component_assign(
+            assign, os.path.join(out, "cassign"), buckets=X15_BUCKETS
+        )
+        write_vertex_assign(
+            assign, os.path.join(out, "vassign"), X15_BUCKETS
+        )
+
+    return _stable_scratch_dir("hfc_x15_assign_", sf_dir, build)
 
 
 # (app, sf_dir) pairs whose standing pair state has been forced this
@@ -1717,8 +1732,6 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     Re-invoking is idempotent by construction — each invocation folds
     into a fresh private copy of the pristine base table."""
     import os
-    import shutil
-    import tempfile
     import uuid
 
     from hfcommunity_spark.operators.graph import (
@@ -1746,13 +1759,7 @@ def x15_stream_maintained_clusters(spark: SparkSession,
         _X15_PAIRS_FORCED.add(fkey)
     thr = F.col("jaccard") >= JACCARD_CLUSTER_THRESHOLD
     _blocks_before = pinned_block_ids(spark)
-
-    def _arrival(col: str) -> F.Column:
-        return F.expr(
-            f"CASE WHEN {col} % {_DELTA_SPLIT_MOD} = 0 THEN "
-            f"({col} DIV {_DELTA_SPLIT_MOD}) % {X15_DELIVERIES} "
-            f"ELSE -1 END"
-        )
+    edge_k = F.greatest(_delta_arrival("doc_a"), _delta_arrival("doc_b"))
 
     # ONE pairs scan splits the whole stream into per-delivery edge
     # rows: deriving each fold's edges lazily re-scanned the
@@ -1763,15 +1770,13 @@ def x15_stream_maintained_clusters(spark: SparkSession,
     # 0 skips the collect; a Row collect, not bounded_arrow: a limited
     # collect() and a limited toArrow() schedule differently
     quot_cap = placement.CAPS["QUOTIENT_LOCAL_EDGE_MAX"]
-    edge_cap = X15_DELIVERIES * quot_cap + 1
+    edge_cap = DELTA_DELIVERIES * quot_cap + 1
     edges_by_k: dict[int, list] | None = None
     if quot_cap > 0:
         split_rows = (
             pairs.filter(thr)
             .select(
-                F.greatest(
-                    _arrival("doc_a"), _arrival("doc_b")
-                ).alias("k"),
+                edge_k.alias("k"),
                 F.col("doc_a").alias("src"),
                 F.col("doc_b").alias("dst"),
             )
@@ -1785,73 +1790,67 @@ def x15_stream_maintained_clusters(spark: SparkSession,
                 edges_by_k.setdefault(r.k, []).append((r.src, r.dst))
 
     run = uuid.uuid4().hex[:12]
-    work = tempfile.mkdtemp(prefix=f"hfc_x15_work_{run}_")
-    cdir = os.path.join(work, "cassign")
-    vdir = os.path.join(work, "vassign")
-
+    ctab, vtab = f"hfc_x15_c_{run}", f"hfc_x15_v_{run}"
     # the working copy starts as HARDLINKS to the pristine files: the
     # fold only ever replaces whole files, so the pristine layout is
     # safe and the copy is O(files) metadata
-    bucketed.snapshot(os.path.join(pristine, "cassign"), cdir)
-    bucketed.snapshot(os.path.join(pristine, "vassign"), vdir)
-    ctab, vtab = f"hfc_x15_c_{run}", f"hfc_x15_v_{run}"
-
-    serves: list = []  # (delivery_id, bucketed.serve result)
-    try:
-        for tname, tdir, pcol in (
-            (ctab, cdir, "c_bucket"), (vtab, vdir, "v_bucket"),
-        ):
-            spark.sql(
-                f"CREATE TABLE {tname} (vertex BIGINT, component BIGINT) "
-                f"USING parquet PARTITIONED BY ({pcol} INT) "
-                f"LOCATION '{tdir}'"
-            )
-            # register the pristine partitions in ONE batched ALTER —
-            # the directory names are already in hand from the
-            # hardlink copy, so MSCK's re-listing job is pure overhead
-            _sync_catalog_partitions(
-                spark, tname, pcol,
-                added=list(bucketed.bucket_files(tdir, pcol)),
-                dropped=(),
-            )
-
-        for k in range(X15_DELIVERIES):
-            if edges_by_k is not None:
-                new_edges = edges_by_k.get(k, [])
-            else:
-                new_edges = pairs.filter(thr).filter(
-                    F.greatest(_arrival("doc_a"), _arrival("doc_b")) == k
-                ).select(
-                    F.col("doc_a").alias("src"),
-                    F.col("doc_b").alias("dst"),
+    with bucketed.working_copy(pristine, ("cassign", "vassign")) as work:
+        cdir = os.path.join(work, "cassign")
+        vdir = os.path.join(work, "vassign")
+        serves: list = []  # (delivery_id, bucketed.serve result)
+        try:
+            for tname, tdir, pcol in (
+                (ctab, cdir, "c_bucket"), (vtab, vdir, "v_bucket"),
+            ):
+                spark.sql(
+                    f"CREATE TABLE {tname} (vertex BIGINT, component "
+                    f"BIGINT) USING parquet PARTITIONED BY ({pcol} INT) "
+                    f"LOCATION '{tdir}'"
                 )
-            fold_components_delivery(
-                spark, cdir, vdir, new_edges, X15_BUCKETS,
-                ctable=ctab, vtable=vtab,
+                # register the pristine partitions in ONE batched
+                # ALTER — the directory names are already in hand from
+                # the hardlink copy, so MSCK's re-listing job is pure
+                # overhead
+                _sync_catalog_partitions(
+                    spark, tname, pcol,
+                    added=list(bucketed.bucket_files(tdir, pcol)),
+                    dropped=(),
+                )
+
+            for k in range(DELTA_DELIVERIES):
+                if edges_by_k is not None:
+                    new_edges = edges_by_k.get(k, [])
+                else:
+                    new_edges = pairs.filter(thr).filter(
+                        edge_k == k
+                    ).select(
+                        F.col("doc_a").alias("src"),
+                        F.col("doc_b").alias("dst"),
+                    )
+                fold_components_delivery(
+                    spark, cdir, vdir, new_edges, X15_BUCKETS,
+                    ctable=ctab, vtable=vtab,
+                )
+                # serve: the table MUTATES in place next fold, so each
+                # state is captured now
+                serves.append((k, bucketed.serve(
+                    spark, cdir, "c_bucket", ("vertex", "component"),
+                    "vertex BIGINT, component BIGINT",
+                    os.path.join(work, f"serve{k}"),
+                )))
+            out = bucketed.union_serves(spark, serves).withColumnRenamed(
+                "vertex", "doc_id"
             )
-            # serve: the table MUTATES in place next fold, so each
-            # state is captured now
-            serves.append((k, bucketed.serve(
-                spark, cdir, "c_bucket", ("vertex", "component"),
-                "vertex BIGINT, component BIGINT",
-                os.path.join(work, f"serve{k}"),
-            )))
-        out = bucketed.union_serves(spark, serves).withColumnRenamed(
-            "vertex", "doc_id"
-        )
-        return materialize_and_free(spark, _blocks_before, out)
-    finally:
-        # the serving blocks are EAGER checkpoints (block-manager
-        # resident), so the catalog entries and working files can go
-        # before the caller consumes the result
-        for tname in (ctab, vtab):
-            spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        shutil.rmtree(work, ignore_errors=True)
+            return materialize_and_free(spark, _blocks_before, out)
+        finally:
+            # the serving blocks are EAGER checkpoints (block-manager
+            # resident), so the catalog entries and working files can
+            # go before the caller consumes the result
+            for tname in (ctab, vtab):
+                spark.sql(f"DROP TABLE IF EXISTS {tname}")
 
 
 # --- round 9 #2: the span-audit table under a STREAM of deliveries ---
-
-X17_DELIVERIES = 3
 
 
 def _delta_base_span_postings(spark: SparkSession,
@@ -2475,33 +2474,25 @@ def _span_stats_serve(spark, stats_dir: str, snap: str):
 
 
 def _x17_pristine_layouts(spark: SparkSession, sf_dir: str) -> str:
-    """Base-slice span layouts materialized ONCE per (process, sf_dir)
-    — h-bucketed postings + d-bucketed stats, published atomically;
-    invocations copy to a private working dir because the fold
-    MUTATES the table (the x15 pristine-reset discipline)."""
+    """Base-slice span layouts materialized ONCE per sf_dir content —
+    h-bucketed postings + d-bucketed stats; invocations fold into a
+    :func:`bucketed.working_copy` because the fold MUTATES the table
+    (the x15 pristine-reset discipline)."""
     import os
-    import tempfile
 
-    from hfcommunity_spark.operators.etlops import (
-        _publish_scratch_dir,
-        _stable_scratch_dir,
-    )
+    from hfcommunity_spark.operators.etlops import _stable_scratch_dir
 
-    final, built = _stable_scratch_dir("hfc_x17_span_", sf_dir)
-    if built:
-        return final
-    base = tempfile.mkdtemp(
-        prefix="hfc_x17_span_tmp_", dir=os.path.dirname(final)
-    )
-    write_span_postings(
-        _delta_base_span_postings(spark, sf_dir),
-        os.path.join(base, "postings"),
-    )
-    write_span_stats(
-        _delta_base_span_stats(spark, sf_dir),
-        os.path.join(base, "stats"),
-    )
-    return _publish_scratch_dir(base, final)
+    def build(out: str) -> None:
+        write_span_postings(
+            _delta_base_span_postings(spark, sf_dir),
+            os.path.join(out, "postings"),
+        )
+        write_span_stats(
+            _delta_base_span_stats(spark, sf_dir),
+            os.path.join(out, "stats"),
+        )
+
+    return _stable_scratch_dir("hfc_x17_span_", sf_dir, build)
 
 
 @query("dd_span_fold_in_place_parity", _DUP_SPAN_ORACLE,
@@ -2520,9 +2511,6 @@ def dd_span_fold_in_place_parity(spark: SparkSession,
     Re-invocation is idempotent: each run folds into a fresh copy of
     the pristine layouts."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from hfcommunity_spark.operators.graph import (
         materialize_and_free,
@@ -2533,32 +2521,23 @@ def dd_span_fold_in_place_parity(spark: SparkSession,
     pristine = _x17_pristine_layouts(spark, sf_dir)
     arriving = _delta_arriving_docs(spark, sf_dir)
     before = pinned_block_ids(spark)
-    work = tempfile.mkdtemp(
-        prefix=f"hfc_spanfold_{uuid.uuid4().hex[:12]}_"
-    )
-    pdir = os.path.join(work, "postings")
-    sdir = os.path.join(work, "stats")
-    bucketed.snapshot(os.path.join(pristine, "postings"), pdir)
-    bucketed.snapshot(os.path.join(pristine, "stats"), sdir)
-    try:
-        span_fold_in_place(spark, pdir, sdir, arriving)
+    with bucketed.working_copy(pristine, ("postings", "stats")) as work:
+        sdir = os.path.join(work, "stats")
+        span_fold_in_place(
+            spark, os.path.join(work, "postings"), sdir, arriving
+        )
         out = _span_stats_serve(spark, sdir, os.path.join(work, "serve"))
         if not isinstance(out, DataFrame):
             out = spark.createDataFrame(out)
         return materialize_and_free(
             spark, before, out.coalesce(default_parallelism())
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _x17_oracle() -> str:
     arms = []
-    for k in range(X17_DELIVERIES):
-        pred = (
-            f"doc_id % {_DELTA_SPLIT_MOD} <> 0 OR "
-            f"(doc_id // {_DELTA_SPLIT_MOD}) % {X17_DELIVERIES} <= {k}"
-        )
+    for k in range(DELTA_DELIVERIES):
+        pred = _delta_prefix_sql(k)
         arms.append(
             f"""
     SELECT CAST({k} AS INTEGER) AS delivery_id, doc_id, n_spans,
@@ -2576,9 +2555,9 @@ def x17_stream_maintained_spans(spark: SparkSession,
     of deliveries and served after each one — the streamed
     maintained-index convention of x14 (BM25), x15 (clusters) and x16
     (ANN) for the span audit.  The standing state is the two persisted
-    bucketed layouts (h-bucketed postings, d-bucketed stats), copied
-    as hardlinks from a once-per-process pristine build into a private
-    working directory.  Each of three deliveries folds through
+    bucketed layouts (h-bucketed postings, d-bucketed stats): a
+    pristine build made once per sf_dir content, folded into through
+    a :func:`bucketed.working_copy`.  Each of three deliveries folds through
     :func:`span_fold_in_place`, the one entry that decides placement,
     and is served as it stands after its fold
     (:func:`_span_stats_serve`).
@@ -2597,9 +2576,6 @@ def x17_stream_maintained_spans(spark: SparkSession,
     is the test-scale oracle contract; a deployment queries the
     upserted table in place."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     import pyarrow.compute as pc
 
@@ -2612,16 +2588,7 @@ def x17_stream_maintained_spans(spark: SparkSession,
     arriving = _delta_arriving_docs(spark, sf_dir)
     before = pinned_block_ids(spark)
 
-    run = uuid.uuid4().hex[:12]
-    work = tempfile.mkdtemp(prefix=f"hfc_x17_work_{run}_")
-    pdir = os.path.join(work, "postings")
-    sdir = os.path.join(work, "stats")
-    # hardlinks: the fold only ever ADDS files (postings append) or
-    # replaces whole files (stats staged commit), so the pristine
-    # layout is safe
-    bucketed.snapshot(os.path.join(pristine, "postings"), pdir)
-    bucketed.snapshot(os.path.join(pristine, "stats"), sdir)
-    arrival = F.expr(f"(doc_id DIV {_DELTA_SPLIT_MOD}) % {X17_DELIVERIES}")
+    arrival = _delta_arrival()
     tagged = placement.bounded_arrow(
         _span_exploded_frame(arriving).select(
             "doc_id", "h", arrival.cast("int").alias("k"),
@@ -2631,12 +2598,17 @@ def x17_stream_maintained_spans(spark: SparkSession,
     spans_by_k = {} if tagged is None else {
         k: tagged.filter(pc.equal(tagged.column("k"), k))
         .select(["doc_id", "h"])
-        for k in range(X17_DELIVERIES)
+        for k in range(DELTA_DELIVERIES)
     }
 
-    serves: list = []  # (delivery_id, _span_stats_serve result)
-    try:
-        for k in range(X17_DELIVERIES):
+    # hardlinks: the fold only ever ADDS files (postings append) or
+    # replaces whole files (stats staged commit), so the pristine
+    # layout is safe
+    with bucketed.working_copy(pristine, ("postings", "stats")) as work:
+        pdir = os.path.join(work, "postings")
+        sdir = os.path.join(work, "stats")
+        serves: list = []  # (delivery_id, _span_stats_serve result)
+        for k in range(DELTA_DELIVERIES):
             span_fold_in_place(
                 spark, pdir, sdir, arriving.filter(arrival == k),
                 spans=spans_by_k.get(k),
@@ -2645,13 +2617,11 @@ def x17_stream_maintained_spans(spark: SparkSession,
                 spark, sdir, os.path.join(work, f"serve{k}")
             )))
         # ONE materialization; the returned frame reads only its own
-        # blocks, so the working dir (and any snapshots) can go in
-        # the finally
+        # blocks, so the working copy (and any snapshots) can go on
+        # exit
         return materialize_and_free(
             spark, before, bucketed.union_serves(spark, serves)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # --- source/domain hygiene gate (round 6) ---------------------------

@@ -22,6 +22,7 @@ from __future__ import annotations
 import os
 import subprocess
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -532,17 +533,20 @@ def s4_lateral_repo_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _GIT_FIXTURE_DOCS = 6
-_GIT_FIXTURE_CACHE: dict[str, str] = {}
 
 
-def _stable_scratch_dir(prefix: str, sf_dir: str) -> tuple[str, bool]:
-    """Deterministic per-(prefix, sf_dir) scratch location, REUSED
-    across processes — mkdtemp-per-process leaked a fresh git repo /
-    snapshot / feed dump into /tmp on every driver invocation
-    (round-6 review finding).  Returns (path, already_built); builders
-    create content in a unique tmp dir and publish it with the atomic
-    :func:`_publish_scratch_dir` so a concurrent builder cannot
-    observe a half-built fixture.
+def _stable_scratch_dir(prefix: str, sf_dir: str,
+                        build: Callable[[str], None]) -> str:
+    """The build-once fixture: a deterministic per-(prefix, sf_dir)
+    scratch directory, REUSED across processes — mkdtemp-per-process
+    leaked a fresh git repo / snapshot / feed dump into /tmp on every
+    driver invocation (round-6 review finding).  If
+    ``<root>/<prefix><digest>/_COMPLETE`` exists the directory is
+    returned as is; otherwise ``build(tmp)`` fills a fresh temp dir
+    inside the scratch root, which is then renamed into place (atomic:
+    same directory, so a concurrent builder never sees a half-built
+    fixture; after a lost race ours is discarded and the winner's
+    used).  A ``build`` that raises leaves nothing behind.
 
     Two hardenings (ADVICE r6): scratch roots live under a 0700
     per-user directory whose ownership is verified (a fixed name in
@@ -552,6 +556,8 @@ def _stable_scratch_dir(prefix: str, sf_dir: str) -> tuple[str, bool]:
     files, so regenerated testdata at the same path gets a fresh
     fixture instead of silently reusing a stale one."""
     import hashlib
+    import shutil
+    import stat as _stat
 
     h = hashlib.sha256(sf_dir.encode())
     try:
@@ -571,8 +577,6 @@ def _stable_scratch_dir(prefix: str, sf_dir: str) -> tuple[str, bool]:
     # follow-symlinks uid check; and a pre-existing REAL dir must be
     # private (0700) before its _COMPLETE markers are trusted
     # (ADVICE r7)
-    import stat as _stat
-
     st = os.lstat(root)
     if _stat.S_ISLNK(st.st_mode) or not _stat.S_ISDIR(st.st_mode):
         raise RuntimeError(
@@ -587,35 +591,33 @@ def _stable_scratch_dir(prefix: str, sf_dir: str) -> tuple[str, bool]:
     if _stat.S_IMODE(st.st_mode) != 0o700:
         os.chmod(root, 0o700)
     final = os.path.join(root, f"{prefix}{digest}")
-    return final, os.path.exists(os.path.join(final, "_COMPLETE"))
-
-
-def _publish_scratch_dir(tmp: str, final: str) -> str:
-    """Atomically promote a fully-built tmp dir to its final name; on
-    a lost race, discard ours and use the winner's."""
-    import shutil
-
-    open(os.path.join(tmp, "_COMPLETE"), "w").close()
+    if os.path.exists(os.path.join(final, "_COMPLETE")):
+        return final
+    tmp = tempfile.mkdtemp(prefix=f"{prefix}tmp_", dir=root)
     try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+        build(tmp)
+        open(os.path.join(tmp, "_COMPLETE"), "w").close()
+        try:
+            os.rename(tmp, final)
+        except OSError:
+            if not os.path.exists(os.path.join(final, "_COMPLETE")):
+                raise
+            # lost the race: the winner's directory stands
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)  # gone once renamed
     return final
 
 
-def _fixture_git_repo(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir per process) a deterministic git repo
-    whose history derives from the first ``_GIT_FIXTURE_DOCS`` rows of
-    ``documents``: commit i adds ``doc_<id>.txt`` containing the text
-    one word per line.  One ``git fast-import`` stream with pinned
-    identities/dates — bit-stable across rebuilds."""
-    cached = _GIT_FIXTURE_CACHE.get(sf_dir)
-    if cached and os.path.isdir(cached):
-        return cached
-    final, built = _stable_scratch_dir("hfc_git_fixture_", sf_dir)
-    if built:
-        _GIT_FIXTURE_CACHE[sf_dir] = final
-        return final
+def _build_fixture_repo(spark: SparkSession, sf_dir: str, out: str,
+                        label: str, file_prefix: str, edges) -> None:
+    """Write ``<out>/fixture``: a git repo whose commit at rank i (the
+    first ``_GIT_FIXTURE_DOCS`` non-empty ``documents`` rows by
+    doc_id), with message ``<label> <doc_id>``, adds
+    ``<file_prefix>_<doc_id>.txt`` holding the text one word per line,
+    with the parents ``edges`` ((child_rank, parent_rank) pairs)
+    prescribes (merge commits via fast-import ``from``/``merge``
+    marks).  One ``git fast-import`` stream with pinned identities and
+    dates — bit-stable across rebuilds."""
     rows = (
         read_table(spark, sf_dir, "documents")
         .filter(F.col("n_chars") > 0)
@@ -624,8 +626,10 @@ def _fixture_git_repo(spark: SparkSession, sf_dir: str) -> str:
         .select("doc_id", "text")
         .collect()  # bounded: _GIT_FIXTURE_DOCS rows
     )
-    base = tempfile.mkdtemp(prefix="hfc_git_fixture_")
-    repo = os.path.join(base, "fixture")
+    parents_of: dict[int, list[int]] = {}
+    for child, parent in edges:
+        parents_of.setdefault(child, []).append(parent)
+    repo = os.path.join(out, "fixture")
     os.makedirs(repo)
     subprocess.run(["git", "init", "-q", repo], check=True)
     subprocess.run(
@@ -635,19 +639,27 @@ def _fixture_git_repo(spark: SparkSession, sf_dir: str) -> str:
     stream = bytearray()
     for i, row in enumerate(rows):
         content = row.text.replace(" ", "\n").encode("utf-8") + b"\n"
-        msg = f"add doc {row.doc_id}".encode()
+        msg = f"{label} {row.doc_id}".encode()
         ident = f"Fixture Bot <bot@example.invalid> {1 + i} +0000"
         stream += b"blob\nmark :%d\ndata %d\n%s\n" % (
-            i + 1,
-            len(content),
-            content,
+            2 * i + 1, len(content), content,
         )
+        ps = parents_of.get(i, [])
+        parent_lines = b""
+        if ps:
+            parent_lines += b"from :%d\n" % (2 * ps[0] + 2)
+            for extra in ps[1:]:
+                parent_lines += b"merge :%d\n" % (2 * extra + 2)
         stream += (
             b"commit refs/heads/main\n"
+            + b"mark :%d\n" % (2 * i + 2)
             + b"author %s\n" % ident.encode()
             + b"committer %s\n" % ident.encode()
             + b"data %d\n%s\n" % (len(msg), msg)
-            + b"M 100644 :%d doc_%d.txt\n\n" % (i + 1, row.doc_id)
+            + parent_lines
+            + b"M 100644 :%d %s_%d.txt\n\n" % (
+                2 * i + 1, file_prefix.encode(), row.doc_id,
+            )
         )
     subprocess.run(
         ["git", "-C", repo, "fast-import", "--quiet"],
@@ -655,9 +667,27 @@ def _fixture_git_repo(spark: SparkSession, sf_dir: str) -> str:
         check=True,
         capture_output=True,
     )
-    base = _publish_scratch_dir(base, final)
-    _GIT_FIXTURE_CACHE[sf_dir] = base
-    return base
+
+
+# the s7 fixture is a linear history: commit i's parent is commit i-1
+_LINEAR_EDGES_BY_RANK = tuple(
+    (i, i - 1) for i in range(1, _GIT_FIXTURE_DOCS)
+)
+
+
+def _build_git_fixture(spark: SparkSession, sf_dir: str,
+                       out: str) -> None:
+    _build_fixture_repo(spark, sf_dir, out, "add doc", "doc",
+                        _LINEAR_EDGES_BY_RANK)
+
+
+def _fixture_git_repo(spark: SparkSession, sf_dir: str) -> str:
+    """The s7 fixture repo (built once per sf_dir content): commit i
+    adds ``doc_<id>.txt`` with message ``add doc <id>``."""
+    return _stable_scratch_dir(
+        "hfc_git_fixture_", sf_dir,
+        lambda out: _build_git_fixture(spark, sf_dir, out),
+    )
 
 
 @query(
@@ -720,72 +750,15 @@ _ANCESTOR_MAX_HOPS = 3
 
 
 def _fixture_dag_repo(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir) a deterministic BRANCHING git repo:
-    commit at rank i adds ``dag_<doc_id>.txt`` and has the parents
-    ``_DAG_EDGES_BY_RANK`` prescribes (merge commits via fast-import
-    ``from``/``merge`` marks).  Same scratch-dir discipline as
-    ``_fixture_git_repo``."""
-    cached = _GIT_FIXTURE_CACHE.get(("dag", sf_dir))
-    if cached and os.path.isdir(cached):
-        return cached
-    final, built = _stable_scratch_dir("hfc_dag_fixture_", sf_dir)
-    if built:
-        _GIT_FIXTURE_CACHE[("dag", sf_dir)] = final
-        return final
-    rows = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("n_chars") > 0)
-        .orderBy("doc_id")
-        .limit(_GIT_FIXTURE_DOCS)
-        .select("doc_id", "text")
-        .collect()  # bounded: _GIT_FIXTURE_DOCS rows
+    """The BRANCHING fixture repo (built once per sf_dir content):
+    commit at rank i adds ``dag_<doc_id>.txt`` with message ``dag doc
+    <id>`` and has the parents ``_DAG_EDGES_BY_RANK`` prescribes."""
+    return _stable_scratch_dir(
+        "hfc_dag_fixture_", sf_dir,
+        lambda out: _build_fixture_repo(
+            spark, sf_dir, out, "dag doc", "dag", _DAG_EDGES_BY_RANK
+        ),
     )
-    parents_of: dict[int, list[int]] = {}
-    for child, parent in _DAG_EDGES_BY_RANK:
-        parents_of.setdefault(child, []).append(parent)
-    base = tempfile.mkdtemp(prefix="hfc_dag_fixture_")
-    repo = os.path.join(base, "fixture")
-    os.makedirs(repo)
-    subprocess.run(["git", "init", "-q", repo], check=True)
-    subprocess.run(
-        ["git", "-C", repo, "symbolic-ref", "HEAD", "refs/heads/main"],
-        check=True,
-    )
-    stream = bytearray()
-    commit_mark = {}
-    for i, row in enumerate(rows):
-        content = row.text.replace(" ", "\n").encode("utf-8") + b"\n"
-        msg = f"dag doc {row.doc_id}".encode()
-        ident = f"Fixture Bot <bot@example.invalid> {1 + i} +0000"
-        blob_mark = 2 * i + 1
-        commit_mark[i] = 2 * i + 2
-        stream += b"blob\nmark :%d\ndata %d\n%s\n" % (
-            blob_mark, len(content), content,
-        )
-        ps = parents_of.get(i, [])
-        parent_lines = b""
-        if ps:
-            parent_lines += b"from :%d\n" % commit_mark[ps[0]]
-            for extra in ps[1:]:
-                parent_lines += b"merge :%d\n" % commit_mark[extra]
-        stream += (
-            b"commit refs/heads/main\n"
-            + b"mark :%d\n" % commit_mark[i]
-            + b"author %s\n" % ident.encode()
-            + b"committer %s\n" % ident.encode()
-            + b"data %d\n%s\n" % (len(msg), msg)
-            + parent_lines
-            + b"M 100644 :%d dag_%d.txt\n\n" % (blob_mark, row.doc_id)
-        )
-    subprocess.run(
-        ["git", "-C", repo, "fast-import", "--quiet"],
-        input=bytes(stream),
-        check=True,
-        capture_output=True,
-    )
-    base = _publish_scratch_dir(base, final)
-    _GIT_FIXTURE_CACHE[("dag", sf_dir)] = base
-    return base
 
 
 _DAG_EDGE_VALUES = ", ".join(
@@ -1333,8 +1306,6 @@ def s11_catalog_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S14 — snapshot export + read-back (docs/download.html:196-271)
 # ---------------------------------------------------------------------------
 
-_SNAPSHOT_CACHE: dict[str, str] = {}
-
 _S14_AGG_SQL = """
     SELECT n.n_regionkey AS regionkey,
            n.n_name,
@@ -1364,6 +1335,15 @@ def _s14_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _build_snapshot(spark: SparkSession, sf_dir: str, out: str) -> None:
+    agg = _s14_aggregate(spark, sf_dir)
+    for _ in range(2):  # D4: idempotent monthly re-run
+        write_snapshot(
+            agg, out, "customer_stats", "2026-08",
+            partition_by=["regionkey"],
+        )
+
+
 @query(
     "s14_snapshot_roundtrip",
     _S14_AGG_SQL,
@@ -1378,23 +1358,11 @@ def s14_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned frame is the READ-BACK of the snapshot (S15 parquet
     round-trip), so the driver's value hash covers write + partition
     layout + read, not just the in-memory aggregate."""
-    path = _SNAPSHOT_CACHE.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        final, built = _stable_scratch_dir("hfc_snapshot_", sf_dir)
-        rel = os.path.join("customer_stats", "release=2026-08")
-        if built:
-            path = os.path.join(final, rel)
-        else:
-            agg = _s14_aggregate(spark, sf_dir)
-            base = tempfile.mkdtemp(prefix="hfc_snapshot_")
-            for _ in range(2):  # D4: idempotent monthly re-run
-                path = write_snapshot(
-                    agg, base, "customer_stats", "2026-08",
-                    partition_by=["regionkey"],
-                )
-            published = _publish_scratch_dir(base, final)
-            path = os.path.join(published, rel)
-        _SNAPSHOT_CACHE[sf_dir] = path
+    base = _stable_scratch_dir(
+        "hfc_snapshot_", sf_dir,
+        lambda out: _build_snapshot(spark, sf_dir, out),
+    )
+    path = os.path.join(base, "customer_stats", "release=2026-08")
     return spark.read.parquet(path).select(
         F.col("regionkey").cast("int").alias("regionkey"),
         "n_name",
@@ -1407,19 +1375,22 @@ def s14_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S1-S3 — hub listing scan: sorted dump + source-side limit pushdown
 # ---------------------------------------------------------------------------
 
-_FEED_CACHE: dict[str, str] = {}
 _FEED_LIMIT = 100
 
 
 def _models_feed_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf_dir per process) a ``models.jsonl``
+    """Materialize (once per sf_dir content) a ``models.jsonl``
     dump derived from ``documents``, pre-sorted desc by the synthetic
     ``last_modified`` — the on-disk shape of the reference's
     server-side ``sort="lastModified", direction=-1`` listing
     (databaseImport.py:597)."""
-    cached = _FEED_CACHE.get(sf_dir)
-    if cached and os.path.exists(os.path.join(cached, "models.jsonl")):
-        return cached
+    return _stable_scratch_dir(
+        "hfc_feed_", sf_dir,
+        lambda out: _build_models_feed(spark, sf_dir, out),
+    )
+
+
+def _build_models_feed(spark: SparkSession, sf_dir: str, out: str) -> None:
     docs = read_table(spark, sf_dir, "documents")
     feed = docs.select(
         F.to_json(
@@ -1440,11 +1411,6 @@ def _models_feed_dir(spark: SparkSession, sf_dir: str) -> str:
         ).alias("value"),
         F.col("doc_id"),
     )
-    final, built = _stable_scratch_dir("hfc_feed_", sf_dir)
-    if built:
-        _FEED_CACHE[sf_dir] = final
-        return final
-    out = tempfile.mkdtemp(prefix="hfc_feed_")
     tmp = os.path.join(out, "_spark_text")
     (
         feed.repartition(1)
@@ -1458,9 +1424,6 @@ def _models_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     os.replace(
         os.path.join(tmp, parts[0]), os.path.join(out, "models.jsonl")
     )
-    out = _publish_scratch_dir(out, final)
-    _FEED_CACHE[sf_dir] = out
-    return out
 
 
 @query(

@@ -42,6 +42,11 @@ from pyspark.sql import functions as F
 # (shuffle, write) — plus the served union's checkpoint
 X17_DISTRIBUTED_JOBS = 3 * 12 + 1
 
+# a warm caps-0 x15 call at smoke scale: three deliveries' distributed
+# fold chains and snapshot serves, plus the served union's checkpoint
+# (a measured count)
+X15_DISTRIBUTED_JOBS = 94
+
 
 @contextmanager
 def _job_budget(spark, budget: int, what: str, exact: bool = False):
@@ -60,6 +65,13 @@ def _job_budget(spark, budget: int, what: str, exact: bool = False):
         f"{what}: fold scheduled {len(jobs)} jobs "
         f"(budget {budget}): {sorted(jobs)}"
     )
+
+
+def _new_untagged(tracker, before: set) -> set:
+    """Untagged jobs that are not in ``before``.  Spark's status store
+    drops its oldest jobs in chunks past ``spark.ui.retainedJobs``, so
+    ids in ``before`` may be gone by now; only new ids count."""
+    return set(tracker.getJobIdsForGroup(None)) - before
 
 
 def test_scd2_fold_job_budget(spark):
@@ -158,7 +170,28 @@ def test_x15_fold_job_budget(spark):
     untagged = set(tracker.getJobIdsForGroup(None))
     with _job_budget(spark, 2, "x15-warm", exact=True):
         out = x15_stream_maintained_clusters(spark, SF_SMOKE)
-    assert set(tracker.getJobIdsForGroup(None)) == untagged
+    assert _new_untagged(tracker, untagged) == set()
+    assert out.count() > 0
+
+
+def test_x15_distributed_fold_job_budget(spark):
+    """Forced onto the distributed chain, a warm x15 call at smoke
+    scale schedules exactly X15_DISTRIBUTED_JOBS jobs, none of them
+    outside the caller's job group."""
+    from hfcommunity_spark.operators import placement
+    from hfcommunity_spark.operators.dedup import (
+        x15_stream_maintained_clusters,
+    )
+    from tests.conftest import SF_SMOKE
+
+    x15_stream_maintained_clusters(spark, SF_SMOKE).count()
+    tracker = spark.sparkContext.statusTracker()
+    untagged = set(tracker.getJobIdsForGroup(None))
+    with placement.distributed():
+        with _job_budget(spark, X15_DISTRIBUTED_JOBS,
+                         "x15-warm-distributed", exact=True):
+            out = x15_stream_maintained_clusters(spark, SF_SMOKE)
+    assert _new_untagged(tracker, untagged) == set()
     assert out.count() > 0
 
 
@@ -185,7 +218,7 @@ def test_x17_fold_job_budget(spark):
         with _job_budget(spark, X17_DISTRIBUTED_JOBS,
                          "x17-warm-distributed", exact=True):
             out = x17_stream_maintained_spans(spark, SF_SMOKE)
-    assert set(tracker.getJobIdsForGroup(None)) == untagged
+    assert _new_untagged(tracker, untagged) == set()
     assert out.count() > 0
 
 

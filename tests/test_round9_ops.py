@@ -313,7 +313,7 @@ def test_x17_serves_every_prefix(spark):
     the DuckDB oracle) — including base docs whose spans BECOME
     duplicated because a delivery re-used them."""
     from hfcommunity_spark.operators.dedup import (
-        X17_DELIVERIES,
+        DELTA_DELIVERIES as X17_DELIVERIES,
         _DELTA_SPLIT_MOD,
         _delta_arriving_docs,
         _delta_base_docs,
@@ -661,7 +661,7 @@ def test_x15_serves_every_prefix_and_syncs_catalog(spark):
     diverge."""
     from hfcommunity_spark.operators.dedup import (
         JACCARD_CLUSTER_THRESHOLD,
-        X15_DELIVERIES,
+        DELTA_DELIVERIES as X15_DELIVERIES,
         _DELTA_SPLIT_MOD,
         _delta_base_docs,
         _delta_arriving_docs,

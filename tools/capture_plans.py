@@ -55,15 +55,13 @@ def main() -> None:
         parts = [f"== {name} @ {sf} — declared-face final frame ==\n"]
         parts.append(_explain(specs[name].spark(spark, sf)))
         if name.startswith(("x17", "dd_span")):
-            from pyspark.sql import functions as F
             from hfcommunity_spark.operators import dedup as dd
 
             pristine = dd._x17_pristine_layouts(spark, sf)
             pdir = os.path.join(pristine, "postings")
             sdir = os.path.join(pristine, "stats")
             arriving = dd._delta_arriving_docs(spark, sf).filter(
-                F.expr(f"(doc_id DIV {dd._DELTA_SPLIT_MOD}) "
-                       f"% {dd.X17_DELIVERIES}") == 0
+                dd._delta_arrival() == 0
             )
             batch = dd.span_postings_frame(
                 arriving, wide=False

@@ -23,6 +23,7 @@ Usage: python tools/delta_bench.py
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -131,20 +132,16 @@ def main() -> None:
         span_dir = os.path.join(
             tempfile.gettempdir(), f"hfc_delta_bench_span_{label}"
         )
-        dd.write_span_postings(postings, span_dir)
-        sstats_dir = os.path.join(
-            tempfile.gettempdir(), f"hfc_delta_bench_sstats_{label}"
-        )
-        dd.write_span_stats(stats, sstats_dir)
+        dd.write_span_postings(postings, os.path.join(span_dir, "postings"))
+        dd.write_span_stats(stats, os.path.join(span_dir, "stats"))
+        fold_copy = contextlib.ExitStack()
         fold_work: dict = {"d": None}
 
         def _fold_setup():
-            if fold_work["d"]:
-                shutil.rmtree(fold_work["d"], ignore_errors=True)
-            w = tempfile.mkdtemp(prefix=f"hfc_db_fold_{label}_")
-            bucketed.snapshot(span_dir, os.path.join(w, "postings"))
-            bucketed.snapshot(sstats_dir, os.path.join(w, "stats"))
-            fold_work["d"] = w
+            fold_copy.close()  # the previous rep's copy
+            fold_work["d"] = fold_copy.enter_context(
+                bucketed.working_copy(span_dir, ("postings", "stats"))
+            )
 
         def _fold_delta():
             dd.span_fold_in_place(
@@ -179,8 +176,7 @@ def main() -> None:
             "rebuild_s": timed(_fold_rebuild),
             "delta_s": timed(_fold_delta, setup=_fold_setup),
         }
-        if fold_work["d"]:
-            shutil.rmtree(fold_work["d"], ignore_errors=True)
+        fold_copy.close()
 
         # bm25 arm (round 8): index maintenance economics for the
         # retrieval member.  The rebuild arm re-tokenizes the corpus

@@ -542,10 +542,11 @@ def build_payloads(timings: dict[str, float], sf_val,
             "anneal, so their scan scale matches the END "
             "calibration's fully-JIT'd reading, not the start one"
         )
+        # the cpu readings stay in BENCH_FULL's calibration_bands: the
+        # line carries only the scan readings the norm values divide by
         payload["bands"] = {
             "n": BAND_SIZE,
             "scan": [p["scan"] for p in band_probes],
-            "cpu": [p["cpu"] for p in band_probes],
         }
     if band_norm:
         full["queries_band_norm"] = band_norm
@@ -602,13 +603,15 @@ def build_payloads(timings: dict[str, float], sf_val,
     slowest = sorted(timings.items(), key=lambda kv: -kv[1])
     # the normalized values ride as an ARRAY aligned with the queries
     # map's key order (a second named map would halve how many slow
-    # queries fit the tail budget; ~7 chars/entry vs ~35)
+    # queries fit the tail budget; ~6 chars/entry vs ~35), at 2 dp
+    # like the seconds beside them; BENCH_FULL keeps 3 dp
     norm_vals = payload.setdefault("queries_band_norm_vals", []) \
         if band_norm else None
     for k, v in slowest:
         payload["queries"][k] = round(v, 2)
         if norm_vals is not None:
-            norm_vals.append(band_norm.get(k))
+            nv = band_norm.get(k)
+            norm_vals.append(None if nv is None else round(nv, 2))
         if len(json.dumps(payload, separators=(",", ":"))) > TAIL_BUDGET:
             break
     while payload["queries"]:

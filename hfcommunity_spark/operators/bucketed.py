@@ -257,14 +257,42 @@ def snapshot(src: str, dst: str, pcol: str | None = None,
                             copy_function=_link_or_copy)
 
 
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # another user's live process
+    return True
+
+
+def pid_mkdtemp(prefix: str, dir: str | None = None) -> str:
+    """``tempfile.mkdtemp`` named ``<prefix><pid>_<random>`` after the
+    creating process.  A killed process never runs its cleanup, so
+    first every ``<prefix><pid>_*`` directory beside it whose pid is
+    no longer alive is removed; a live process's directory is kept."""
+    parent = dir or tempfile.gettempdir()
+    try:
+        names = os.listdir(parent)
+    except OSError:
+        names = []
+    for name in names:
+        pid, sep, _ = name[len(prefix):].partition("_")
+        if (name.startswith(prefix) and sep and pid.isdigit()
+                and not _pid_alive(int(pid))):
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{prefix}{os.getpid()}_", dir=parent)
+
+
 @contextlib.contextmanager
 def working_copy(src: str, names):
     """A private copy of the pristine layouts ``<src>/<name>``: each
     is :func:`snapshot`-ed (hardlinks) to ``<work>/<name>`` in a fresh
-    temp dir ``work``, which is yielded and removed on exit.  A fold
-    may mutate the copy freely; the pristine files are never
-    modified, because writers replace whole files."""
-    work = tempfile.mkdtemp(prefix="hfc_work_")
+    :func:`pid_mkdtemp` dir ``work``, which is yielded and removed on
+    exit.  A fold may mutate the copy freely; the pristine files are
+    never modified, because writers replace whole files."""
+    work = pid_mkdtemp("hfc_work_")
     try:
         for name in names:
             snapshot(os.path.join(src, name), os.path.join(work, name))

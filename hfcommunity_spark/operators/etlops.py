@@ -546,7 +546,9 @@ def _stable_scratch_dir(prefix: str, sf_dir: str,
     inside the scratch root, which is then renamed into place (atomic:
     same directory, so a concurrent builder never sees a half-built
     fixture; after a lost race ours is discarded and the winner's
-    used).  A ``build`` that raises leaves nothing behind.
+    used).  A ``build`` that raises leaves nothing behind, and a
+    build dir left by a killed process is removed by the next build
+    (:func:`bucketed.pid_mkdtemp`).
 
     Two hardenings (ADVICE r6): scratch roots live under a 0700
     per-user directory whose ownership is verified (a fixed name in
@@ -558,6 +560,8 @@ def _stable_scratch_dir(prefix: str, sf_dir: str,
     import hashlib
     import shutil
     import stat as _stat
+
+    from hfcommunity_spark.operators.bucketed import pid_mkdtemp
 
     h = hashlib.sha256(sf_dir.encode())
     try:
@@ -593,7 +597,7 @@ def _stable_scratch_dir(prefix: str, sf_dir: str,
     final = os.path.join(root, f"{prefix}{digest}")
     if os.path.exists(os.path.join(final, "_COMPLETE")):
         return final
-    tmp = tempfile.mkdtemp(prefix=f"{prefix}tmp_", dir=root)
+    tmp = pid_mkdtemp(f"{prefix}tmp_", root)  # sweeps killed builds
     try:
         build(tmp)
         open(os.path.join(tmp, "_COMPLETE"), "w").close()

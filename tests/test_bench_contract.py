@@ -344,7 +344,9 @@ def test_band_probes_ride_both_payloads_and_fit_budget():
     d = json.loads(line)
     assert d["bands"]["n"] == BAND_SIZE
     assert d["bands"]["scan"] == [p["scan"] for p in probes]
-    assert d["bands"]["cpu"] == [p["cpu"] for p in probes]
+    # the cpu readings ride BENCH_FULL only
+    assert "cpu" not in d["bands"]
+    assert full["calibration_bands"] == probes
     # the full map covers every query; normalization is the mean of
     # the band's two bracketing scan probes
     norm = full["queries_band_norm"]
@@ -354,11 +356,12 @@ def test_band_probes_ride_both_payloads_and_fit_budget():
         b = min(idx // BAND_SIZE, len(probes) - 2)
         scan = (probes[b]["scan"] + probes[b + 1]["scan"]) / 2
         assert norm[names[idx]] == round(timings[names[idx]] / scan, 3)
-    # line values align 1:1 with the (slowest-first) queries map
+    # line values align 1:1 with the (slowest-first) queries map, at
+    # 2 dp where BENCH_FULL keeps 3
     vals = d["queries_band_norm_vals"]
     assert len(vals) == len(d["queries"])
     for k, v in zip(d["queries"], vals):
-        assert v == norm[k]
+        assert v == round(norm[k], 2)
     assert d["value_band_norm"] == round(sum(norm.values()), 2)
     # without probes neither payload grows the keys (solo workers)
     full2, line2 = build_payloads(timings, 0.1, None, cal)
@@ -381,3 +384,23 @@ def test_band_norm_follows_timed_order_not_alphabetical():
     norm = _band_norm(timings, probes)
     assert all(norm[n] == round(1.0 / 1.0, 3) for n in names[:BAND_SIZE])
     assert all(norm[n] == round(1.0 / 3.0, 3) for n in names[BAND_SIZE:])
+
+
+def test_line_lists_at_least_40_of_181_queries_with_band_probes():
+    """Listing depth: with the calibration and the band probes in the
+    payload, the line still lists >=40 of a 181-query inventory whose
+    names are as long as the inventory's on average (22 chars)."""
+    from bench import BAND_SIZE
+
+    timings = {f"fake_query_{i:03d}".ljust(22, "_"): 0.1 + (i % 37) * 0.13
+               for i in range(181)}
+    probes = [{"cpu": round(0.3 + 0.01 * i, 4),
+               "scan": round(0.1 + 0.02 * (i % 3), 4)}
+              for i in range(181 // BAND_SIZE + 2)]
+    cal = {"cpu_loop_sec": 0.31, "cpu_loop_n": 1,
+           "spark_scan_sec": 0.18, "spark_scan_rows": 1}
+    _, line = build_payloads(timings, 0.1, None, cal, None, probes)
+    assert len(line) <= TAIL_BUDGET + 1
+    d = json.loads(line)
+    assert len(d["queries"]) >= 40
+    assert d["queries_omitted_fastest"] == 181 - len(d["queries"])

@@ -1,7 +1,8 @@
 """The bucketed parquet layout's driver-side I/O
 (``hfcommunity_spark.operators.bucketed``): the gates every reader
 keeps, the staged commit and whole-file rule of the writer, and the
-hardlink snapshot with its cross-device fallback.
+hardlink snapshot with its cross-device fallback, and the sweep of
+temp dirs a killed process left behind.
 
 The reader/writer contracts run over both schemas the maintained faces
 store: the x15 assignment layout (two int64 columns, ``c_bucket``) and
@@ -11,6 +12,9 @@ from __future__ import annotations
 
 import errno
 import os
+import subprocess
+import sys
+import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -286,3 +290,42 @@ def test_x17_snapshot_serve_across_devices_matches_local(spark,
             dd.x17_stream_maintained_spans(spark, sf).collect()
         )
     assert local == copied
+
+
+def test_temp_dirs_of_dead_pids_are_swept(tmp_path, monkeypatch):
+    """A killed process leaves its working copy and its half-built
+    fixture behind.  Both are named after the creating pid, and the
+    next call removes those whose pid is dead and keeps a live one's."""
+    from hfcommunity_spark.operators import etlops
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait(timeout=60)
+    live = subprocess.Popen([sys.executable, "-c",
+                             "import time; time.sleep(600)"])
+    try:
+        assert live.poll() is None
+        root = etlops._stable_scratch_dir(
+            "hfc_swept_", str(tmp_path / "sf"), lambda out: None)
+        parent = os.path.dirname(root)
+        left = {}
+        for where, prefix in ((str(tmp_path), "hfc_work_"),
+                              (parent, "hfc_sweep_tmp_")):
+            for who, pid in (("dead", dead.pid), ("live", live.pid)):
+                d = os.path.join(where, f"{prefix}{pid}_x1")
+                os.makedirs(os.path.join(d, "layout"))
+                left[where, who] = d
+        src = tmp_path / "pristine" / "layout"
+        src.mkdir(parents=True)
+        with bucketed.working_copy(str(tmp_path / "pristine"),
+                                   ("layout",)) as work:
+            assert os.path.basename(work).startswith(
+                f"hfc_work_{os.getpid()}_")
+        etlops._stable_scratch_dir("hfc_sweep_", str(tmp_path / "sf"),
+                                   lambda out: None)
+        for (where, who), d in left.items():
+            assert os.path.isdir(d) == (who == "live"), (where, who)
+        assert not os.path.exists(work)
+    finally:
+        live.kill()
+        live.wait(timeout=60)

@@ -540,6 +540,20 @@ def test_cli_load_job_count(spark, feed_dir, tmp_path):
     assert max(MODEL_LOAD_JOBS) < LOAD_JOBS
 
 
+def test_cli_warm_load_compiles_no_class(spark, feed_dir, tmp_path):
+    """Every plan of a load is compiled once per JVM: a second load of
+    the same feeds finds each generated class in Spark's codegen cache
+    and compiles none.  With the cache at Spark's default of 100
+    entries, smaller than one load's ~150 classes, each warm load
+    recompiled ~150; with the stage id in the class name, up to 14."""
+    from hfcommunity_spark.session import codegen_compiles
+
+    _load(spark, feed_dir, str(tmp_path / "snap"), "r1")
+    before, _ = codegen_compiles(spark)
+    _load(spark, feed_dir, str(tmp_path / "snap"), "r2")
+    assert codegen_compiles(spark)[0] - before == 0
+
+
 def test_cli_load_jobs_name_a_table_or_a_feed(spark, feed_dir, tmp_path):
     """Every job of a load is described by the table it writes or the
     feed it caches, so the overlapped jobs stay attributable; each

@@ -137,6 +137,7 @@ def _write_feeds(d: str, n_repos: int, seed: int = 11) -> None:
 
 def _one_scale(spark, work: str, n_repos: int) -> dict:
     from hfcommunity_spark import cli
+    from hfcommunity_spark.session import codegen_compiles
 
     feeds = os.path.join(work, f"feeds_{n_repos}")
     base = os.path.join(work, f"snap_{n_repos}")
@@ -147,15 +148,21 @@ def _one_scale(spark, work: str, n_repos: int) -> dict:
     ns = cli._parser().parse_args(
         ["--feeds", feeds, "--base", base, "--release", "bench"]
     )
+    c0, cs0 = codegen_compiles(spark)
     t1 = time.monotonic()
     counts = cli.run(spark, ns)
     load_s = time.monotonic() - t1
+    c1, cs1 = codegen_compiles(spark)
     rows = sum(counts.values())
     return {
         "repos": n_repos,
         "rows_total": rows,
         "feed_gen_seconds": round(gen_s, 1),
         "load_seconds": round(load_s, 1),
+        # classes Janino compiled during the load, and the seconds it
+        # spent on them (0 once every plan is in the codegen cache)
+        "codegen_compiles": c1 - c0,
+        "codegen_compile_seconds": round(cs1 - cs0, 2),
         "rows_per_sec": round(rows / load_s, 1),
         "per_table": counts,
     }
@@ -207,10 +214,13 @@ def main() -> None:
     payload = {
         **{k: head[k] for k in ("repos", "rows_total",
                                 "feed_gen_seconds", "load_seconds",
+                                "codegen_compiles",
+                                "codegen_compile_seconds",
                                 "rows_per_sec", "per_table")},
         "series": [
             {k: r[k] for k in ("repos", "rows_total", "load_seconds",
-                               "rows_per_sec")}
+                               "codegen_compiles",
+                               "codegen_compile_seconds", "rows_per_sec")}
             for r in runs
         ],
         "reference": {
